@@ -201,6 +201,13 @@ def test_remove_frequent_lines_counts_distinct_docs(spark):
     assert out[1]["clean_text"] == "other text"
 
 
+def test_remove_frequent_lines_rejects_min_docs_below_2(spark):
+    df = spark.createDataFrame([(0, "a line")], "doc_id int, text string")
+    for min_docs in (1, 0):
+        with pytest.raises(ValueError, match="min_docs"):
+            dedup.remove_frequent_lines(df, min_docs=min_docs)
+
+
 def test_bigram_lm_perplexity_hand_computed(spark):
     """MLE bigram model over ['a b a b', 'a b c']: p(b|a)=1,
     p(a|b)=p(c|b)=1/2, so ppl(doc0)=2^(1/3), ppl(doc1)=sqrt(2).
@@ -279,6 +286,50 @@ def test_simhash_properties(token_df):
     ham12 = bin((codes[1] ^ codes[2]) & (2**64 - 1)).count("1")
     ham15 = bin((codes[1] ^ codes[5]) & (2**64 - 1)).count("1")
     assert ham12 < ham15          # near-dup closer than unrelated
+
+
+def test_simhash_rejects_bit_counts_outside_1_to_64(token_df):
+    for n_bits in (0, -1, 65):
+        with pytest.raises(ValueError, match="n_bits"):
+            dedup.simhash(token_df, n_bits=n_bits)
+    assert dedup.simhash(token_df, n_bits=1).count() == 5
+
+
+def test_minhash_rejects_degenerate_bands_and_threshold(token_df):
+    # bands > n_hashes would make rows_per_band 0 (one bucket per band);
+    # a non-divisor would leave hashes silently unused
+    for bands in (0, 33, 5):
+        with pytest.raises(ValueError, match="bands"):
+            dedup.minhash_lsh_pairs(token_df, n_hashes=32, bands=bands)
+    for threshold in (0, -0.1, 1.5):
+        with pytest.raises(ValueError, match="threshold"):
+            dedup.minhash_lsh_pairs(token_df, threshold=threshold)
+    dedup.minhash_lsh_pairs(token_df, n_hashes=32, bands=32, threshold=1.0)
+
+
+def test_minhash_band_join_exchange_reuse(spark):
+    """Both sides of the band self-join are one (band, bucket) exchange.
+    AQE reuses it over an uncached input, so the input is scanned once;
+    over a cached input it does not (no exchange above a cached-table
+    scan is reused), so the input is scanned and shingled twice."""
+    from watertower_spark.operators.pipeline import _ws_tokens
+
+    rows = [(i, " ".join(f"w{(i * 7 + j) % 50}" for j in range(30))) for i in range(40)]
+    raw = spark.createDataFrame(rows, "doc_id long, text string")
+    cached = spark.createDataFrame(rows, "doc_id long, text string").persist()
+    cached.count()
+
+    def final_plan(docs):
+        pairs = dedup.minhash_lsh_pairs(_ws_tokens(docs))
+        pairs.collect()
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    plan = final_plan(raw)
+    assert plan.count("ReusedExchange") == 1 and plan.count("Scan ExistingRDD") == 1, plan
+    plan = final_plan(cached)
+    assert plan.count("ReusedExchange") == 0 and plan.count("InMemoryTableScan") == 2, plan
+    cached.unpersist()
 
 
 def test_simhash_near_pairs(token_df):
@@ -1011,6 +1062,182 @@ def test_clean_corpus_transitive_near_dedup(spark):
     transitive, _ = clean_corpus(docs, near_dup_transitive=True, **kw)
     assert {r["doc_id"] for r in greedy.collect()} == {10, 20}
     assert {r["doc_id"] for r in transitive.collect()} == {10}
+
+
+def _reference_clean_corpus(docs, *, min_line_docs=2, apply_gopher=True, apply_pii=True,
+                            near_dup_threshold=0.8, near_dup_transitive=False,
+                            minhash_hashes=32, minhash_bands=8):
+    """The join-based composition of the public operators that
+    clean_corpus replaced: each stage joins its result back to its
+    input (Gopher flags, exact-dedup keepers, near-dup victims)."""
+    from watertower_spark.operators.pii import redact_pii
+    from watertower_spark.operators.pipeline import _ws_tokens
+    from watertower_spark.operators.quality import gopher_quality_signals
+
+    other_cols = [c for c in docs.columns if c not in ("text", "doc_id")]
+    stages = {}
+    lined = dedup.remove_frequent_lines(docs.select("doc_id", "text"), min_docs=min_line_docs)
+    cur = lined.select("doc_id", F.col("clean_text").alias("text"))
+    stages["line_dedup"] = cur
+    if apply_gopher:
+        flags = gopher_quality_signals(cur)
+        cur = cur.join(flags.where("gopher_flag").select("doc_id"), "doc_id")
+        stages["gopher_filter"] = cur
+    if apply_pii:
+        cur = redact_pii(cur).select("doc_id", F.col("clean_text").alias("text"))
+        stages["pii_scrub"] = cur
+    keepers = cur.groupBy(F.md5("text").alias("h")).agg(F.min("doc_id").alias("doc_id"))
+    cur = cur.join(keepers.select("doc_id"), "doc_id")
+    stages["exact_dedup"] = cur
+    pairs = dedup.minhash_lsh_pairs(_ws_tokens(cur), n_hashes=minhash_hashes,
+                                    bands=minhash_bands, threshold=near_dup_threshold)
+    if near_dup_transitive:
+        comp = dedup.connected_components(pairs)
+        victims = comp.where(F.col("node") != F.col("component")).select(
+            F.col("node").alias("doc_id"))
+    else:
+        victims = pairs.select(F.greatest("da", "db").alias("doc_id")).distinct()
+    cur = cur.join(victims, "doc_id", "left_anti")
+    stages["near_dedup"] = cur
+    if other_cols:
+        cur = cur.join(docs.select("doc_id", *other_cols), "doc_id")
+    return cur.select("doc_id", *other_cols, "text"), stages
+
+
+@pytest.fixture(scope="module")
+def planted_corpus(spark):
+    """Seeded corpus with one victim class per cleaning stage: a
+    boilerplate line in a third of the docs, exact twins that differ
+    only in boilerplate, near twins (last word changed), PII and
+    sub-50-word docs, plus a passthrough ``src`` column."""
+    import random
+
+    rnd = random.Random(20261017)
+    vocab = [f"{a}{b}" for a in ("lor", "ips", "dol", "sit", "amet", "cons") for b in
+             ("a", "e", "i", "o", "u", "ar", "en", "is")]
+    boiler = "subscribe to our newsletter for weekly updates"
+    pii = ["mail me at ann.lee@example.org today", "server 10.0.0.12 is up",
+           "call +1 555 123 4567 now"]
+
+    def body(n_words):
+        words = [rnd.choice(vocab) for _ in range(n_words)]
+        return "\n".join(" ".join(words[i:i + 12]) for i in range(0, n_words, 12))
+
+    rows, doc_id = [], 0
+
+    def add(text):
+        nonlocal doc_id
+        doc_id += 1
+        rows.append((doc_id, text, f"s{doc_id % 3}"))
+
+    for i in range(24):
+        text = body(rnd.randint(55, 90))
+        if i % 4 == 0:
+            text += "\n" + pii[i % 3]
+        add(boiler + "\n" + text if i % 3 == 0 else text)
+        if i % 6 == 1:
+            add(text + "\n" + boiler)                           # exact twin after line dedup
+        if i % 6 == 2:
+            add(text.rsplit(" ", 1)[0] + " " + rnd.choice(vocab) + "zz")  # near twin
+    for _ in range(4):
+        add(body(rnd.randint(10, 40)) + "\n" + boiler)          # fails Gopher (< 50 words)
+    rnd.shuffle(rows)
+    docs = spark.createDataFrame(rows, "doc_id long, text string, src string").persist()
+    yield docs
+    docs.unpersist()
+
+
+@pytest.mark.parametrize("kw", [
+    {},
+    {"apply_gopher": False},
+    {"apply_pii": False},
+    {"near_dup_transitive": True},
+], ids=["defaults", "no_gopher", "no_pii", "transitive"])
+def test_clean_corpus_equals_join_based_reference(planted_corpus, kw):
+    """clean_corpus (one pass per stage) returns exactly the rows of
+    the join-based composition, for the final output and every stage."""
+    from watertower_spark.operators.pipeline import clean_corpus
+
+    kw = {"min_line_docs": 5, **kw}
+    clean, stages = clean_corpus(planted_corpus, **kw)
+    ref, ref_stages = _reference_clean_corpus(planted_corpus, **kw)
+    assert clean.columns == ref.columns == ["doc_id", "src", "text"]
+    assert list(stages) == list(ref_stages)
+    for name in stages:
+        assert sorted(stages[name].collect()) == sorted(ref_stages[name].collect()), name
+    got = sorted(clean.collect())
+    assert got == sorted(ref.collect())
+    # every planted victim class is caught by its own stage
+    n = {name: df.count() for name, df in stages.items()}
+    assert n["line_dedup"] == planted_corpus.count()      # every doc keeps a row
+    if "gopher_filter" in n:
+        assert n["gopher_filter"] < n["line_dedup"]
+    names = list(n)
+    assert n["exact_dedup"] < n[names[names.index("exact_dedup") - 1]]
+    assert n["near_dedup"] < n["exact_dedup"]
+    leaked = any("@example.org" in r["text"] for r in got)
+    assert leaked == (kw.get("apply_pii") is False)
+
+
+def test_clean_corpus_plan_shape(spark):
+    """Each stage consumes its predecessor once: the Gopher filter and
+    exact dedup add no join, and the initial executed plan stays within
+    the exchange and cached-scan counts of the one-pass composition
+    (the join-based reference has about three times as many)."""
+    from watertower_spark.operators.pipeline import clean_corpus
+
+    words = [f"w{i:02d}" for i in range(60)]
+    rows = [(i, "footer line\n" + " ".join(words[i % 7:] + words[:i % 7]), "en")
+            for i in range(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string").persist()
+    docs.count()
+    clean, stages = clean_corpus(docs, min_line_docs=3)
+
+    def nodes(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        names = [ln.lstrip(" :+-|*").split(" ")[0].split("(")[0] for ln in plan.splitlines()]
+        return {k: sum(n == k for n in names) for k in (
+            "Exchange", "BroadcastExchange", "InMemoryTableScan",
+            "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")}
+
+    def joins(n):
+        return n["SortMergeJoin"] + n["BroadcastHashJoin"] + n["ShuffledHashJoin"]
+
+    assert joins(nodes(stages["gopher_filter"])) == joins(nodes(stages["line_dedup"]))
+    assert joins(nodes(stages["exact_dedup"])) == joins(nodes(stages["pii_scrub"]))
+    final = nodes(clean)
+    ref = nodes(_reference_clean_corpus(docs, min_line_docs=3)[0])
+    n_exchanges = final["Exchange"] + final["BroadcastExchange"]
+    assert n_exchanges <= 22 and final["InMemoryTableScan"] <= 7, final
+    # the join-based composition: 65 exchanges and 25 scans here
+    assert 2 * n_exchanges < ref["Exchange"] + ref["BroadcastExchange"], ref
+    assert 2 * final["InMemoryTableScan"] < ref["InMemoryTableScan"], ref
+    docs.unpersist()
+    # uncached, AQE reuses the exact-dedup and band exchanges, so near
+    # dedup's three consumers share one derivation of its input: two
+    # scans for line_dedup, one for the passthrough join
+    clean, _ = clean_corpus(spark.createDataFrame(rows, docs.schema), min_line_docs=3)
+    clean.collect()
+    plan = clean._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert plan.count("Scan ExistingRDD") == 3 and "ReusedExchange" in plan, plan
+
+
+def test_clean_corpus_rejects_degenerate_parameters(spark):
+    from watertower_spark.operators.pipeline import clean_corpus
+
+    docs = spark.createDataFrame([(1, "a b c d", "en")], "doc_id long, text string, lang string")
+    bad = [
+        ({"min_line_docs": 1}, "min_docs"),
+        ({"minhash_bands": 0}, "bands"),
+        ({"minhash_bands": 64}, "bands"),           # > minhash_hashes
+        ({"minhash_bands": 6}, "bands"),            # does not divide 32
+        ({"minhash_hashes": 16, "minhash_bands": 32}, "bands"),
+        ({"near_dup_threshold": 0.0}, "threshold"),
+        ({"near_dup_threshold": 1.01}, "threshold"),
+    ]
+    for kw, what in bad:
+        with pytest.raises(ValueError, match=what):
+            clean_corpus(docs, **kw)
 
 
 def test_ngram_repetition_hand_computed(spark):

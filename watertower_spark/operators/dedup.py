@@ -131,13 +131,17 @@ def minhash_lsh_pairs(
     boilerplate) are dropped with a count, not exploded.
 
     The per-doc hset array computed by ``_shingle_sets`` rides THROUGH
-    the banding self-join (both sides of one exchange, which Spark
-    reuses), so every candidate pair emerges with both shingle sets
-    attached and verification is a columnar ``array_intersect`` after a
-    (da, db) dedup — the whole operator is ONE token-stream pass plus
-    three narrow shuffles (doc groupBy, band-bucket exchange, pair
-    dedup), with NO pair×shingle expansion anywhere (the r1
-    boilerplate-explosion class of failure is structurally impossible).
+    the banding self-join, so every candidate pair emerges with both
+    shingle sets attached and verification is a columnar
+    ``array_intersect`` after a (da, db) dedup — three narrow shuffles
+    (doc groupBy, band-bucket exchange, pair dedup), with NO
+    pair×shingle expansion anywhere (the r1 boilerplate-explosion class
+    of failure is structurally impossible).  Both join sides are the
+    same (band, bucket) exchange: over an uncached input AQE reuses it
+    and the token stream is derived ONCE; over a cached input it is
+    derived TWICE, because AQE does not reuse an exchange that sits
+    above a cached-table scan (its TableCacheQueryStage is never
+    shared), so each side re-reads and re-shingles the input.
     The band exchange carries each doc's hset once per band
     (``carry_hsets=True``, the default); at CC scale that is bands× the
     shingle bytes, the trade for eliminating two verification joins
@@ -148,6 +152,13 @@ def minhash_lsh_pairs(
     exchange, one extra token-stream derivation.  Same pairs, same
     jaccard values, measured head-to-head in bench_minhash_ab.py.
     """
+    if not 1 <= bands <= n_hashes or n_hashes % bands:
+        raise ValueError(
+            f"bands must divide n_hashes and lie in 1..n_hashes; got bands={bands}, "
+            f"n_hashes={n_hashes}"
+        )
+    if not 0 < threshold <= 1:
+        raise ValueError(f"threshold must lie in (0, 1]; got {threshold}")
     rows_per_band = n_hashes // bands
     hs = _shingle_sets(tokens, k)
     sig = _signatures_from_sets(hs, n_hashes, seed, keep_hset=carry_hsets)
@@ -171,10 +182,11 @@ def minhash_lsh_pairs(
     # tokens→shingles→signatures pipeline for the build side instead of
     # reusing the probe side's exchange (measured r06: the entire
     # subtree appeared twice in the plan and q_minhash paid ~2× the
-    # shingle cost).  As a sort-merge join both aliases hang off ONE
-    # ReusedExchange on (band, bucket) — the same exchange the bucket-
-    # cap Window already needs — so the token stream is derived exactly
-    # once (guide §2.4: remove shuffles/recomputes outright).  At CC
+    # shingle cost).  As a sort-merge join both aliases read the same
+    # (band, bucket) exchange — the one the bucket-cap Window already
+    # needs — which AQE turns into one ReusedExchange when the input is
+    # not cached (pinned by test_minhash_band_join_exchange_reuse); a
+    # cached input still derives it twice (see the docstring).  At CC
     # scale broadcast was never viable for this fat relation anyway.
     joined = (
         sized.alias("x")
@@ -419,6 +431,11 @@ def remove_frequent_lines(
     codegen'd array aggregate.  Key space = distinct lines, far below
     token count; no Python anywhere.
     """
+    if min_docs < 2:
+        raise ValueError(
+            f"min_docs must be >= 2 (every line occurs in at least one doc, so "
+            f"min_docs={min_docs} would empty every document)"
+        )
     lines = docs.select(
         F.col(doc_col), F.posexplode(F.split(F.col(text_col), line_sep)).alias("pos", "line")
     )
@@ -446,8 +463,11 @@ def simhash(tokens: DataFrame, n_bits: int = 64) -> DataFrame:
 
     Bit-parallel columnar formulation: per doc and bit position, sum
     +w/-w by term frequency, take sign.  Expressed as 64 conditional
-    sums over xxhash64(term) — stays in whole-stage codegen.
+    sums over xxhash64(term) — stays in whole-stage codegen.  ``n_bits``
+    takes the low bits of that hash, so it must lie in 1..64.
     """
+    if not 1 <= n_bits <= 64:
+        raise ValueError(f"n_bits must lie in 1..64; got {n_bits}")
     tf = tokens.groupBy("doc_id", "term").agg(F.count("*").alias("w"))
     tf = tf.withColumn("h", F.xxhash64("term"))
     # each aggregate / the OR fold is ONE parsed SQL expression: the

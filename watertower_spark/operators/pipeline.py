@@ -4,18 +4,42 @@ Composes the individually-oracled cleaning operators in the order real
 web-corpus pipelines run them (C4 / CCNet / MassiveText lineage):
 
 1. boilerplate-line removal  (``dedup.remove_frequent_lines`` — C4 §2.2)
-2. quality filtering         (``quality.gopher_quality_signals`` — Gopher A1.1)
+2. quality filtering         (``quality.gopher_keep`` — Gopher A1.1)
 3. PII scrub                 (``pii.redact_pii`` — ROOTS-style)
 4. exact deduplication       (md5 groups, keep the smallest doc_id)
 5. near-deduplication        (``dedup.minhash_lsh_pairs`` — MinHash+LSH)
 
 Every stage is lazy — ``clean_corpus`` returns the cleaned DataFrame
 plus a dict of the intermediate DataFrames, and nothing is computed
-until the caller acts.  Scale posture is inherited from the stages:
-the line pass is two bounded-key shuffles, the quality filter and PII
-scrub are zero-shuffle narrow maps, exact dedup is one hash groupBy,
-and MinHash is a capped band join — no stage is quadratic and nothing
-collects to the driver, so the composition runs at crawl scale.
+until the caller acts.  Each stage consumes its predecessor once, so
+no stage inlines a second copy of the stages before it:
+
+- line_dedup: 3 exchanges (two-phase distinct-doc count per line, then
+  per-doc reassembly) plus a broadcast of the line counts; the line
+  stream feeds both the counts and their join, so it reads the input
+  twice.
+- gopher_filter, pii_scrub: no exchange — an in-row ``Filter`` and a
+  narrow ``Project`` (the Gopher flag is ``quality.gopher_keep``, the
+  same expressions ``gopher_quality_signals`` reports, with no join
+  back).
+- exact_dedup: 1 exchange — ``min(struct(doc_id, text))`` per md5
+  group keeps the winning row itself, with no join back.
+- near_dedup: a doc_id token groupBy and a (band, bucket) exchange on
+  each side of the band self-join, the victim distinct, and a doc_id
+  exchange when the anti-join is planned as a sort-merge join.  It
+  derives its input three times: both self-join sides and the
+  anti-join.  Over an uncached input AQE reuses the exact-dedup and
+  band exchanges, so the three share one computation (the whole plan
+  reads the input 3 times: twice for line_dedup, once for the
+  passthrough join).  Over a cached input, the usual case for a batch,
+  it reuses nothing, because AQE never reuses an exchange above a
+  cached-table scan.
+- the passthrough columns are joined once, at the end.
+
+On the 800-doc ingest batch of ``perfbench`` (cached input) the
+initial executed plan has 22 exchanges (18 shuffle, 4 broadcast) and
+7 scans of the input.  No stage is quadratic and nothing collects to
+the driver, so the composition runs at crawl scale.
 
 Near-dup removal keeps, for every LSH-verified pair, the smaller
 doc_id: a doc is dropped iff it pairs with ANY smaller surviving-stage
@@ -41,7 +65,7 @@ from watertower_spark.operators.dedup import (
     remove_frequent_lines,
 )
 from watertower_spark.operators.pii import redact_pii
-from watertower_spark.operators.quality import gopher_quality_signals
+from watertower_spark.operators.quality import gopher_keep
 
 
 def _ws_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -74,7 +98,10 @@ def clean_corpus(
     columns with ``text_col`` replaced by the fully cleaned text, and
     ``stages`` maps stage name → the lazy DataFrame it produced
     (inspect/count them for a lineage report).  All non-text columns
-    pass through untouched.
+    pass through untouched.  Degenerate parameters raise ValueError:
+    ``min_line_docs < 2`` (every line would be boilerplate),
+    ``minhash_bands`` outside 1..``minhash_hashes`` or not dividing it,
+    ``near_dup_threshold`` outside (0, 1].
     """
     other_cols = [c for c in docs.columns if c not in (text_col, "doc_id")]
     stages: dict = {}
@@ -85,10 +112,10 @@ def clean_corpus(
     cur = lined.select("doc_id", F.col("clean_text").alias("text"))
     stages["line_dedup"] = cur
 
-    # 2. Gopher surface-statistics filter: keep flagged docs only.
+    # 2. Gopher surface-statistics filter, in-row: the same test as
+    # gopher_quality_signals(...).gopher_flag, with no join back.
     if apply_gopher:
-        flags = gopher_quality_signals(cur, text_col="text")
-        cur = cur.join(flags.where("gopher_flag").select("doc_id"), "doc_id")
+        cur = cur.where(gopher_keep("text"))
         stages["gopher_filter"] = cur
 
     # 3. PII scrub (after filtering: no point scrubbing dropped docs).
@@ -98,14 +125,14 @@ def clean_corpus(
         )
         stages["pii_scrub"] = cur
 
-    # 4. exact dedup on the cleaned text: keep the smallest doc_id per
-    # md5 group (one map-side-combinable min aggregate, no windows).
-    keepers = (
-        cur.groupBy(F.md5("text").alias("h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+    # 4. exact dedup on the cleaned text: the smallest doc_id per md5
+    # group keeps its row — one map-side-combinable min(struct), no
+    # join back.
+    cur = (
+        cur.groupBy(F.md5("text"))
+        .agg(F.min(F.struct("doc_id", "text")).alias("k"))
+        .select("k.doc_id", "k.text")
     )
-    cur = cur.join(keepers, "doc_id")
     stages["exact_dedup"] = cur
 
     # 5. MinHash+LSH near-dup: drop docs pairing with a smaller doc_id.

@@ -27,7 +27,7 @@ corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def gopher_quality_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -56,15 +56,32 @@ def gopher_quality_signals(docs: DataFrame, text_col: str = "text") -> DataFrame
     groupBy: per-doc state never leaves its row), so at crawl scale
     the filter is a free rider on the ingest scan.  Docs with no
     words or no lines cannot be scored and are not returned.
+    ``gopher_keep`` is the same test as a single filter expression.
     """
-    t = F.col(text_col)
+    sig = _gopher_signals(F.col(text_col))
+    out = docs.select("doc_id", *[e.alias(n) for n, e in sig.items()])
+    cols = {n: F.col(n) for n in sig}
+    return out.where(_scoreable(cols)).withColumn("gopher_flag", _gopher_flag(cols))
+
+
+def gopher_keep(text_col: str = "text") -> Column:
+    """True iff ``gopher_quality_signals`` would return the doc with
+    ``gopher_flag`` set — the same expressions and thresholds as one
+    boolean, for an in-row ``where`` (no signal columns, no join)."""
+    s = _gopher_signals(F.col(text_col))
+    return _scoreable(s) & _gopher_flag(s)
+
+
+def _gopher_signals(t: Column) -> dict:
+    """signal name -> expression over the text column ``t``, in the
+    output order of ``gopher_quality_signals``."""
     words = F.filter(F.split(t, r"\s+"), lambda x: x != F.lit(""))
     lines = F.filter(F.split(t, "\n"), lambda x: F.trim(x) != F.lit(""))
     nw = F.size(words).cast("long")
     nl = F.size(lines).cast("long")
-    # try_divide, not /: zero-word/zero-line docs are filtered out
-    # below, but ANSI mode (Spark 4 default) evaluates the projection
-    # alongside the filter, so a plain division would still throw.
+    # try_divide, not /: zero-word/zero-line docs are filtered out, but
+    # ANSI mode (Spark 4 default) may evaluate the ratios alongside that
+    # filter, so a plain division would still throw.
     mean_wl = F.round(
         F.try_divide(
             F.aggregate(words, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)),
@@ -102,29 +119,37 @@ def gopher_quality_signals(docs: DataFrame, text_col: str = "text") -> DataFrame
         ),
         4,
     )
-    out = docs.select(
-        "doc_id",
-        nw.alias("n_words"),
-        mean_wl.alias("mean_word_len"),
-        frac_alpha.alias("frac_alpha_words"),
-        sym_ratio.alias("symbol_word_ratio"),
-        nl.alias("n_lines"),
-        dup_line.alias("dup_line_frac"),
-        bullet.alias("frac_bullet_lines"),
-        ellipsis.alias("frac_ellipsis_lines"),
-    ).where((F.col("n_words") > 0) & (F.col("n_lines") > 0))
-    flag = (
-        (F.col("n_words") >= 50)
-        & (F.col("n_words") <= 100000)
-        & (F.col("mean_word_len") >= 3)
-        & (F.col("mean_word_len") <= 10)
-        & (F.col("frac_alpha_words") >= 0.8)
-        & (F.col("symbol_word_ratio") <= 0.1)
-        & (F.col("dup_line_frac") <= 0.3)
-        & (F.col("frac_bullet_lines") <= 0.9)
-        & (F.col("frac_ellipsis_lines") <= 0.3)
+    return {
+        "n_words": nw,
+        "mean_word_len": mean_wl,
+        "frac_alpha_words": frac_alpha,
+        "symbol_word_ratio": sym_ratio,
+        "n_lines": nl,
+        "dup_line_frac": dup_line,
+        "frac_bullet_lines": bullet,
+        "frac_ellipsis_lines": ellipsis,
+    }
+
+
+def _scoreable(s: dict) -> Column:
+    return (s["n_words"] > 0) & (s["n_lines"] > 0)
+
+
+def _gopher_flag(s: dict) -> Column:
+    """The Gopher thresholds over signal columns/expressions ``s``.
+    Cheap word-count bounds come first: ``&`` short-circuits, so docs
+    outside them never reach the regex signals."""
+    return (
+        (s["n_words"] >= 50)
+        & (s["n_words"] <= 100000)
+        & (s["mean_word_len"] >= 3)
+        & (s["mean_word_len"] <= 10)
+        & (s["frac_alpha_words"] >= 0.8)
+        & (s["symbol_word_ratio"] <= 0.1)
+        & (s["dup_line_frac"] <= 0.3)
+        & (s["frac_bullet_lines"] <= 0.9)
+        & (s["frac_ellipsis_lines"] <= 0.3)
     )
-    return out.withColumn("gopher_flag", flag)
 
 
 def ngram_repetition_signals(
