@@ -696,6 +696,37 @@ def test_msearch_over_http(served):
     assert hits2 and all("highlight" in h for h in hits2)
     # total.value per line, ES-shaped
     assert body["responses"][0]["hits"]["total"]["value"] == 3
+    # range, search_after and from lines run in the batch and answer
+    # exactly what _search answers for each line alone
+    must = {"must": {"match_phrase": {"content": {"query": "request"}}}}
+    code, p1 = _post(f"{base}/indexes/default/_search?mode=bm25",
+                     {"query": {"bool": must}, "size": 2})
+    last = p1["hits"]["hits"][-1]
+    line_bodies = [
+        {"query": {"bool": dict(must, filter=[{"range": {"warc_ts": {
+            "lt": "2020-01-01 00:00:03"}}}])}, "size": 5},
+        {"query": {"bool": must}, "size": 2,
+         "search_after": [last["_score"], last["_id"]]},
+        {"query": {"bool": must}, "size": 2, "from": 1},
+        {"query": {"bool": dict(must, filter={"range": {"warc_ts": {
+            "gte": "2030-01-01"}}})}},
+    ]
+    code, body = _ndpost(f"{base}/indexes/default/_msearch?mode=bm25",
+                         [line for b in line_bodies for line in ({}, b)])
+    assert code == 200
+    for b, r in zip(line_bodies, body["responses"]):
+        code, alone = _post(f"{base}/indexes/default/_search?mode=bm25", b)
+        assert code == 200
+        assert [(h["_id"], h["_score"]) for h in r["hits"]["hits"]] \
+            == [(h["_id"], h["_score"]) for h in alone["hits"]["hits"]]
+    assert body["responses"][0]["hits"]["hits"]
+    assert body["responses"][1]["hits"]["hits"]
+    assert body["responses"][3]["hits"]["hits"] == []  # empty range
+    # a bad range field in a batched line → 400
+    code, body = _ndpost(f"{base}/indexes/default/_msearch?mode=bm25", [
+        {}, {"query": {"bool": dict(must, filter={"range": {"nope": {
+            "lt": 1}}})}}])
+    assert code == 400 and "nope" in body["message"]
     # odd line count → 400
     code, body = _ndpost(f"{base}/indexes/default/_msearch", [{}])
     assert code == 400 and "pairs" in body["message"]

@@ -68,8 +68,9 @@ def _wrap_hits(hits: list, took_ms: int) -> dict:
 
 def msearch_response(engine, specs: list, index_name: str = "default") -> dict:
     """ES ``_msearch``: run every line's query in ONE Spark DAG
-    (``SearchEngine.msearch`` — one grouped exchange per kernel family,
-    one doc_store materialization join for the whole batch) and shape
+    (``SearchEngine.msearch`` — one grouped kernel exchange for every
+    line, AND and OR alike, and one doc_store materialization join for
+    the whole batch) and shape
     one search-response dict per line, in line order.  ``took`` is the
     batch wall time, repeated per line (the lines shared one job)."""
     t0 = time.time()

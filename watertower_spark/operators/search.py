@@ -1,13 +1,22 @@
 """Query engine over the sharded index.
 
 Re-expresses the reference's read path (search.go:16-111; SURVEY.md §3.1)
-as one DataFrame DAG:
+as one DataFrame DAG, built for every entry point by ONE query compiler
+(``SearchEngine._compile``) from a list of ``QuerySpec``s:
 
-    query string ── analyze (driver-side, tiny) ─┐
-    postings (term ∈ query terms)                ├─ ONE unified grouped
-    tags     (tag ∈ filter tags)    ── unioned ──┤  exchange → per-shard
-    doc_len  (per-shard dl arrays) ──────────────┘  applyInPandas kernel
-        → (doc_id, score) → global sort [+ limit k] → doc_store join
+    query strings ── analyze (driver-side, tiny) ──┐
+    postings (term ∈ any query's terms)            │ each scanned ONCE,
+    tags     (tag ∈ any query's tags)              ├─ fanned out to (qid,
+    doc_len  (per-shard dl arrays)                 │ kind) by a literal map
+    doc_store (range filters, when asked) ─────────┘
+        → ONE grouped exchange keyed by (qid, shard) → per-query kernel
+        → (qid, doc_id, score) → finishing step → doc_store join
+
+    ``search()`` finishes its single query with a global sort [+ offset
+    + limit k]; ``msearch()`` with one per-qid window.  The plan's shape
+    does not depend on how many queries share it: the term/tag/shard
+    filters and the fan-out maps are single SQL expressions, so its
+    scans and exchanges do not grow with the batch width.
 
     Doc ids are dense per shard, so the shard's document lengths pack
     into ONE int32 array row (doc_len table): BM25 dl lookup is array
@@ -30,14 +39,16 @@ Semantics preserved from the reference:
   tie-break, per-shard top-k inside the kernel then global top-k.
 
 Scale notes: postings are read with a pushed-down term filter (files are
-sorted by term within shard partitions → row-group pruning); the kernel
-fans out per shard with no postings shuffle; the final materialization
-broadcasts the (small) result set against the shard-partitioned
-doc_store.
+sorted by term within shard partitions → row-group pruning) and a shard
+partition filter; the kernel fans out per shard with no postings
+shuffle; the final materialization broadcasts the (small) result set
+against the shard-partitioned doc_store.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import math
 
 import numpy as np
@@ -48,26 +59,113 @@ from .index_build import BM25_B, BM25_K1, load_manifest
 
 _WRAP = 1 << 32  # uint32 arithmetic in the reference's phrase algebra
 
-
-def _null_blob_cols4() -> list:
-    """The 4-column null tail of the OR-kernel's non-posting rows."""
-    return [
-        F.lit(None).cast("binary").alias(c)
-        for c in ("tf_blob", "block_off", "block_max_tf", "block_min_dl")
-    ]
-
-
-def _null_blob_cols() -> list:
-    """The 8 null binary sidecar columns non-posting rows carry through
-    the unified kernel exchange (built once per engine via _const_cols)."""
-    return [
-        F.lit(None).cast("binary").alias(c)
-        for c in ("tf_blob", "pos_blob", "block_off", "block_last",
-                  "block_tf_off", "block_pos_off", "block_max_tf",
-                  "block_min_dl")
-    ]
-
 RESULT_SCHEMA = "doc_id long, shard int, score double"
+QID_RESULT_SCHEMA = "qid int, " + RESULT_SCHEMA
+
+# the posting sidecars only the AND kernel reads: OR-query rows carry
+# them as NULL, so no position data crosses the exchange for OR queries
+_AND_ONLY_BLOBS = ("pos_blob", "block_last", "block_tf_off", "block_pos_off")
+_SHARED_BLOBS = ("tf_blob", "block_off", "block_max_tf", "block_min_dl")
+
+
+def _kernel_cols(generated: tuple = (), **src) -> list:
+    """The kernels' grouped input row — qid, kind, name, shard, df,
+    doc_blob and the 8 posting sidecars — less the ``generated``
+    columns a generator in the same select yields.  ``src`` gives a
+    column's source; the others pass through by name, absent sidecars
+    as NULL."""
+    null = F.lit(None).cast("binary")
+    return [
+        src.get(c, null if c in _SHARED_BLOBS + _AND_ONLY_BLOBS else F.col(c)).alias(c)
+        for c in ("qid", "kind", "name", "shard", "df", "doc_blob")
+        + _SHARED_BLOBS + _AND_ONLY_BLOBS
+        if c not in generated
+    ]
+
+
+def _pack_range(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One (qid, shard) group's in-range doc ids as a synthetic tag row
+    in the tag sidecar's exact encoding (codec.encode_sorted)."""
+    from watertower_spark.functions import codec
+
+    ids = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
+    return pd.DataFrame({
+        "qid": pd.Series([int(pdf["qid"].iloc[0])], dtype="int32"),
+        "shard": pd.Series([int(pdf["shard"].iloc[0])], dtype="int32"),
+        "n": pd.Series([int(ids.size)], dtype="int32"),
+        "doc_blob": pd.Series([codec.encode_sorted(ids)], dtype="object"),
+    })
+
+
+def _sql_str(s: str) -> str:
+    """A SQL string literal for any (user-supplied) string: its UTF-8
+    bytes in hex, so no quote, backslash or non-ASCII character can end
+    or change the literal.  Constant-folded, so an ``IN`` over these
+    still pushes down as ``In(col, […])``."""
+    return f"decode(X'{s.encode('utf-8').hex()}', 'UTF-8')"
+
+
+def _sql_in(col: str, values) -> str:
+    """``col IN (…)`` over ints as ONE SQL expression: ``Column.isin``
+    costs a py4j round trip per literal, and ints embed safely."""
+    return f"{col} IN ({', '.join(str(int(v)) for v in sorted(values))})"
+
+
+def _sql_map(entries: dict, key=str, value=str) -> str:
+    """A literal SQL ``map(…)`` of ``entries`` (never empty)."""
+    return "map(" + ", ".join(f"{key(k)}, {value(v)}"
+                              for k, v in entries.items()) + ")"
+
+
+@dataclasses.dataclass
+class QuerySpec:
+    """One query as the compiler sees it — what every search entry point
+    (``search``, ``search_prefix``/``search_fuzzy``, ``msearch``)
+    reduces its arguments to.
+
+    ``tokens`` maps each scored term to its query positions (the
+    analyzer's output); ``tags`` are conjunctive filters; ``excl`` and
+    ``excl_tags`` are must_not terms and tags; ``ranges`` is the
+    compiled doc_store range predicate (``SearchEngine._compile_ranges``)
+    or None.  ``mode`` is ``parity``|``bm25``, ``op`` ``and``|``or``.
+    ``k``/``offset``/``after`` are the page: top ``k`` after skipping
+    ``offset``, or strictly after the ``(score, doc_id)`` cursor
+    ``after``.  Parity mode is unbounded by contract and ignores
+    ``offset``.  ``k=0`` is the defined empty result."""
+
+    tokens: dict
+    tags: list = dataclasses.field(default_factory=list)
+    excl: set = dataclasses.field(default_factory=set)
+    excl_tags: list = dataclasses.field(default_factory=list)
+    ranges: object = None
+    mode: str = "bm25"
+    op: str = "and"
+    k: int | None = 10
+    offset: int = 0
+    after: tuple | None = None
+
+    def __post_init__(self):
+        if self.k is not None and self.k < 0:
+            raise ValueError(f"k (size) must be >= 0, got {self.k}")
+        if self.offset < 0:
+            raise ValueError(f"offset (from) must be >= 0, got {self.offset}")
+        if self.after is not None:
+            if self.mode != "bm25" or self.k is None:
+                raise ValueError("search_after requires mode='bm25' and k")
+            if self.offset:
+                raise ValueError("search_after and offset (from) are "
+                                 "mutually exclusive")
+            self.after = (float(self.after[0]), int(self.after[1]))
+        if self.op == "or":
+            if self.mode != "bm25":
+                raise ValueError("operator='or' supports mode='bm25' only")
+            if self.k is None:
+                self.k = 10
+            # an excluded term knocks itself out of the scored
+            # disjunction: any doc containing it is excluded, so it can
+            # never contribute
+            self.tokens = {t: p for t, p in self.tokens.items()
+                           if t not in self.excl}
 
 
 def _phrase_relative_positions(doc_positions: np.ndarray, query_positions: list) -> np.ndarray:
@@ -657,25 +755,11 @@ class SearchEngine:
                 stacklevel=2,
             )
 
-    @staticmethod
-    def _shard_in(shards) -> "F.Column":
-        """``shard IN (…)`` as ONE SQL expression.  ``Column.isin``
-        issues a py4j round trip per literal — a 65-shard candidate set
-        cost ~100 ms of driver socket chatter per query (profiled r06:
-        ~1,230 py4j commands per search() call, isin the largest
-        single contributor).  Values are ints, so string embedding is
-        injection-safe and yields the identical In(shard, …) predicate.
-        Every call site guards against an empty set; belt-and-braces,
-        an empty set compiles to FALSE rather than invalid SQL."""
-        if not shards:
-            return F.lit(False)
-        return F.expr("shard IN (" + ",".join(str(int(s)) for s in shards) + ")")
-
     def _const_cols(self, key: str, builder) -> list:
-        """Memoized constant Column lists (the kind/name/null-blob
-        projections are identical for every query this engine answers;
-        Columns are immutable, so building them once removes ~30 py4j
-        round trips per part per query)."""
+        """Memoized constant Column lists (the kernel-input projections
+        and sort orders are identical for every query this engine
+        answers; Columns are immutable, so building them once removes
+        ~30 py4j round trips per part per query)."""
         cache = self.__dict__.setdefault("_cc", {})
         cols = cache.get(key)
         if cols is None:
@@ -683,17 +767,18 @@ class SearchEngine:
         return cols
 
     def _empty_result(self) -> DataFrame:
-        """Memoized empty (doc_id, shard, score) frame — ``search()``
-        built a fresh one on EVERY call (a py4j/schema round trip paid
-        even by queries that return rows); DataFrames are immutable, so
-        one instance serves every query this engine answers."""
+        """Memoized empty (qid, doc_id, shard, score) frame — the
+        compiled result when no query can match; DataFrames are
+        immutable, so one instance serves every query this engine
+        answers."""
         e = self.__dict__.get("_empty_df")
         if e is None:
-            e = self._empty_df = self.spark.createDataFrame([], RESULT_SCHEMA)
+            e = self._empty_df = self.spark.createDataFrame([], QID_RESULT_SCHEMA)
         return e
 
-    def _kernel_partitions(self, cand_shards=None) -> int:
-        """Explicit partition count for the grouped kernel exchange.
+    def _kernel_partitions(self, n_groups: int | None = None) -> int:
+        """Explicit partition count for a grouped kernel exchange of
+        ``n_groups`` (qid, shard) groups (default: one per shard).
 
         AQE's byte-based partition coalescing sees only the few MB of
         posting/tag blobs a query touches and collapses the kernel's
@@ -702,12 +787,10 @@ class SearchEngine:
         stage ran as one ~380 ms task instead of 32 parallel ones; the
         same trap CLAUDE.md pins for the build's Python-CPU stages).  A
         user-specified repartition N is exempt from coalescing, so the
-        kernel exchange is pinned to the candidate fan-out capped by
-        the LIVE parallelism — scale-adaptive, never a constant."""
-        n_groups = (len(cand_shards) if cand_shards
-                    else int(self.manifest.get("n_shards") or 1))
-        return max(1, min(int(n_groups),
-                          self.spark.sparkContext.defaultParallelism))
+        kernel exchange is pinned to the group fan-out capped by the
+        LIVE parallelism — scale-adaptive, never a constant."""
+        n = n_groups or int(self.manifest.get("n_shards") or 1)
+        return max(1, min(int(n), self.spark.sparkContext.defaultParallelism))
 
     def _resolve_terms(self, terms: list) -> dict:
         """term → (df, shard list) from the global term_stats table,
@@ -729,6 +812,238 @@ class SearchEngine:
                 self._stats_cache[t] = found.get(t)
         return {t: self._stats_cache[t] for t in terms}
 
+    # ----------------------------------------------------- query compiler
+
+    def _spec(self, word: str = "", tags: list | None = None, lang: str = "",
+              mode: str = "bm25", k: int | None = None, operator: str = "and",
+              offset: int = 0, exclude_words: str = "",
+              exclude_tags: list | None = None,
+              search_after: tuple | None = None,
+              ranges: dict | None = None) -> QuerySpec:
+        """Analyze one query's words with the index's analyzer and
+        validate it into a ``QuerySpec``.  The parameter names are
+        ``msearch``'s entry keys."""
+        from watertower_spark.analyzers import analyze_query
+
+        default_lang = self.manifest.get("default_lang") or ""
+        analyzer_lang = self.manifest.get("analyzer_lang") or lang or ""
+
+        def analyze(text):
+            return analyze_query(text, analyzer_lang, default_lang) if text else {}
+
+        return QuerySpec(
+            tokens=analyze(word), tags=list(tags or []),
+            excl=set(analyze(exclude_words)),
+            excl_tags=list(exclude_tags or []),
+            # validated loudly up front, before any plan is built
+            ranges=self._compile_ranges(ranges) if ranges else None,
+            mode=mode, op=operator, k=k, offset=offset or 0,
+            after=search_after)
+
+    def _compile(self, specs: list) -> DataFrame:
+        """The one query compiler: ``specs`` → (qid, doc_id, shard,
+        score) rows, qid = position in ``specs``, each query's rows
+        bounded per shard by its kernel (top ``k + offset`` in bm25).
+        Every search entry point runs through here; only the finishing
+        step (global sort/limit, or a per-qid window) is theirs.
+
+        Plan: postings, tags and doc_len are each scanned ONCE with
+        pushed term/tag IN and shard IN filters over every query's
+        inputs, and each row fans out to its (qid, kind) with
+        ``inline(element_at(<literal map>, term))`` — no broadcast
+        join, no driver-side DataFrame.  A per-qid shard filter keeps
+        each query to its own candidate shards.  Range filters add one
+        doc_store scan whose in-range doc ids are packed per (qid,
+        shard) into synthetic tag rows.  Everything unions into ONE
+        grouped exchange keyed by (qid, shard) that dispatches each
+        group to its query's kernel (``_make_kernel`` for AND,
+        ``wand.make_or_kernel`` for OR).  Filters and maps are single
+        SQL expressions, so plan size and driver cost stay flat as the
+        batch grows.  A query that cannot match (k=0, an unknown
+        required term, no shard holding every term, …) contributes no
+        input at all."""
+        from .wand import make_or_kernel
+
+        m = self.manifest
+        n_docs, avgdl = int(m["doc_count"]), float(m["avgdl"])
+        dps = int(m["docs_per_shard"])
+        terms = sorted({t for s in specs for t in (*s.tokens, *s.excl)})
+        resolved = self._resolve_terms(terms) if terms else {}
+
+        kernels: dict = {}  # qid -> kernel factory with its arguments
+        shards: dict = {}   # qid -> candidate shard set (None: every shard)
+        post: dict = {}     # term -> [(qid, kind, wide)]
+        tagm: dict = {}     # tag -> [(qid, kind, wide)]
+        lens: dict = {}     # shard -> [qid] needing its dl array
+        rng: list = []      # (qid, range predicate)
+        for qid, s in enumerate(specs):
+            if s.k == 0 or (s.tags and self.tags is None) \
+                    or set(s.tags) & set(s.excl_tags):
+                continue
+            req = sorted(s.tokens)
+            if s.op == "or":
+                req = [t for t in req if resolved[t] is not None]
+                if not req:  # no scored term exists anywhere
+                    continue
+                cand = set().union(*(resolved[t][1] for t in req))
+            else:
+                if not (req or s.tags or s.ranges is not None) \
+                        or s.excl & set(req) \
+                        or any(resolved[t] is None for t in req):
+                    continue
+                # AND candidates live only where EVERY term appears
+                cand = set.intersection(
+                    *(set(resolved[t][1]) for t in req)) if req else None
+                if cand is not None and not cand:
+                    continue
+            # exclusion only matters where candidates can live; excluded
+            # terms/tags absent from the index exclude nothing
+            excl = [t for t in sorted(s.excl) if resolved[t] is not None
+                    and (cand is None or cand & set(resolved[t][1]))]
+            excl_tags = s.excl_tags if self.tags is not None else []
+            wide = s.op == "and"
+            for fan, keys, kind in ((post, req, "term"), (post, excl, "not"),
+                                    (tagm, s.tags, "tag"),
+                                    (tagm, excl_tags, "nottag")):
+                for key in dict.fromkeys(keys):
+                    fan.setdefault(key, []).append((qid, kind, wide))
+            if s.ranges is not None:
+                rng.append((qid, s.ranges))
+            if req and (s.op == "or" or s.mode == "bm25"):
+                for sh in cand:
+                    lens.setdefault(int(sh), []).append(qid)
+            shards[qid] = cand
+            df_global = {t: resolved[t][0] for t in req}
+            n_tags = len(set(s.tags)) + (s.ranges is not None)
+            k = None if s.k is None else s.k + s.offset
+            # a factory partial pickles the factory by reference; a
+            # built kernel closure pickles by value (~3 ms each), which
+            # made plan construction grow with the batch width
+            kernels[qid] = (
+                functools.partial(make_or_kernel, s.tokens, df_global, n_docs,
+                                  avgdl, k, n_tags=n_tags, docs_per_shard=dps,
+                                  after=s.after)
+                if s.op == "or" else
+                functools.partial(_make_kernel, s.tokens, df_global, n_docs,
+                                  avgdl, s.mode, k, n_tags=n_tags,
+                                  docs_per_shard=dps,
+                                  has_excl=bool(excl or excl_tags),
+                                  after=s.after if s.mode == "bm25" else None))
+        if not kernels:
+            return self._empty_result()
+
+        def shard_filter(qids) -> str:
+            """A scan's shard IN over the union of ``qids``' shards."""
+            sets = [shards[q] for q in qids]
+            if any(x is None for x in sets):
+                return "true"
+            return _sql_in("shard", set().union(*sets))
+
+        restricted = {q: sh for q, sh in shards.items() if sh is not None}
+
+        def own_shards(qid: str) -> str:
+            """Keep a row only in its query's own candidate shards."""
+            if not restricted:
+                return "true"
+            qmap = _sql_map(restricted, value=lambda sh: f"array({', '.join(map(str, sorted(sh)))})")
+            return f"coalesce(array_contains(element_at({qmap}, {qid}), shard), true)"
+
+        def fan_out(table: DataFrame, col: str, fan: dict, per_copy: tuple,
+                    cols: list) -> DataFrame:
+            """Scan ``table`` once for every key of ``fan`` and give each
+            row one copy per (qid, kind) that asked for its key: the
+            generator yields qid, kind and the ``per_copy`` columns (x is
+            the copy's map entry), ``cols`` the rest of the row."""
+            qids = {q for entries in fan.values() for q, _, _ in entries}
+            fmap = _sql_map(fan, key=_sql_str, value=lambda es: "array(" + ", ".join(
+                f"named_struct('qid', {q}, 'kind', '{kind}', 'wide', {str(w).lower()})"
+                for q, kind, w in es) + ")")
+            copy = "".join(f", '{c}', {sql}" for c, sql in per_copy)
+            return (
+                table.where(F.expr(f"{col} IN ({', '.join(map(_sql_str, fan))}) "
+                                   f"AND {shard_filter(qids)}"))
+                .select(F.expr(
+                    f"inline(transform(filter(element_at({fmap}, {col}), "
+                    f"x -> {own_shards('x.qid')}), "
+                    f"x -> named_struct('qid', x.qid, 'kind', x.kind{copy})))"),
+                    *cols))
+
+        n_part = self._kernel_partitions(sum(
+            len(sh) if sh is not None else int(m.get("n_shards") or 1)
+            for sh in shards.values()))
+
+        parts = []
+        if post:
+            parts.append(fan_out(
+                self.postings, "term", post,
+                tuple((c, f"IF(x.wide, {c}, NULL)") for c in _AND_ONLY_BLOBS),
+                self._const_cols("k_post", lambda: _kernel_cols(
+                    ("qid", "kind") + _AND_ONLY_BLOBS, name=F.col("term"),
+                    **{c: F.col(c) for c in _SHARED_BLOBS}))))
+        if tagm:
+            parts.append(fan_out(
+                self.tags, "tag", tagm, (),
+                self._const_cols("k_tag", lambda: _kernel_cols(
+                    ("qid", "kind"), name=F.col("tag"), df=F.col("n")))))
+        if lens:
+            parts.append(
+                self.doc_len.where(F.expr(_sql_in("shard", lens)))
+                .select(F.expr("explode(element_at(" + _sql_map(
+                    lens, value=lambda qs: f"array({', '.join(map(str, qs))})")
+                    + ", shard)) AS qid"),
+                    *self._const_cols("k_len", lambda: _kernel_cols(
+                        ("qid",), kind=F.lit("len"), name=F.lit(""),
+                        df=F.col("n"), doc_blob=F.col("dl_blob")))))
+        if rng:
+            # the in-range doc set rides the exchange as ONE synthetic
+            # tag row per (qid, shard) — the kernels' conjunctive tag
+            # intersection (and shard veto for shards with no in-range
+            # docs) applies unchanged
+            pred = rng[0][1]
+            for _, p in rng[1:]:
+                pred = pred | p
+            hits = F.filter(F.array(*[F.when(p, F.lit(q)) for q, p in rng]),
+                            lambda x: x.isNotNull())
+            parts.append(
+                self.doc_store.where(F.expr(shard_filter([q for q, _ in rng])) & pred)
+                .select("shard", "doc_id", F.explode(hits).alias("qid"))
+                .where(F.expr(own_shards("qid")))
+                .repartition(n_part, "qid", "shard").groupBy("qid", "shard")
+                .applyInPandas(_pack_range, "qid int, shard int, n int, doc_blob binary")
+                .select(*self._const_cols("k_range", lambda: _kernel_cols(
+                    kind=F.lit("tag"), name=F.lit("\x00range"),
+                    df=F.col("n")))))
+        groups = parts[0]
+        for p in parts[1:]:
+            groups = groups.unionByName(p)
+
+        def dispatch(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            qid = int(key[0])
+            out = kernels[qid]()((key[1],), pdf)
+            out.insert(0, "qid", np.full(len(out), qid, dtype="int32"))
+            return out
+
+        return groups.repartition(n_part, "qid", "shard").groupBy(
+            "qid", "shard").applyInPandas(dispatch, schema=QID_RESULT_SCHEMA)
+
+    def _top(self, spec: QuerySpec, materialize: bool) -> DataFrame:
+        """Finish ONE compiled query: the global order of its mode, then
+        offset and limit (bm25), then optionally the doc_store join."""
+        res = self._compile([spec])
+        if spec.mode == "bm25":
+            res = res.orderBy(*self._const_cols("o_bm25", lambda: [
+                F.col("score").desc(), F.col("doc_id").asc()]))
+            if spec.offset:
+                res = res.offset(spec.offset)
+            if spec.k is not None:
+                res = res.limit(spec.k)
+        else:
+            res = res.orderBy(*self._const_cols("o_parity", lambda: [
+                F.col("score").asc(), F.col("doc_id").asc()]))
+        if not materialize:
+            return res.drop("qid")
+        return self._materialize(res, spec.mode, bounded=spec.k is not None)
+
     # ------------------------------------------------------------- search
 
     def search(
@@ -747,9 +1062,11 @@ class SearchEngine:
         ranges: dict | None = None,
     ) -> DataFrame:
         """Reference Search() semantics (mode='parity') or BM25 top-k
-        (mode='bm25').  ``operator='or'`` (bm25 only, no tags/phrase)
-        switches to disjunctive top-k with vectorized maxscore pruning.
-        Returns a DataFrame ordered by the mode's contract.
+        (mode='bm25').  ``operator='or'`` (bm25 only; k defaults to 10)
+        switches to disjunctive top-k with vectorized maxscore pruning;
+        filter tags stay conjunctive.  Returns a DataFrame ordered by
+        the mode's contract.  ``k=0`` returns the empty result; a
+        negative ``k`` or ``offset`` raises ValueError.
 
         ``offset`` pages BM25 results ES-style (``from``/``size``):
         page n of size k is ``k=k, offset=n*k``.  The per-shard kernels
@@ -795,199 +1112,11 @@ class SearchEngine:
         candidate shards — never a second cogroup or a driver
         round-trip.
         """
-        if search_after is not None:
-            if mode != "bm25" or k is None:
-                raise ValueError("search_after requires mode='bm25' and k")
-            if offset:
-                raise ValueError("search_after and offset (from) are "
-                                 "mutually exclusive")
-            search_after = (float(search_after[0]), int(search_after[1]))
         if search_word and search_word.startswith("unique_key:"):
             return self.find_by_key(search_word[len("unique_key:"):])
-        if ranges:
-            self._compile_ranges(ranges)  # validate loudly up front
-        if operator == "or":
-            if mode != "bm25":
-                raise ValueError("operator='or' supports mode='bm25' only")
-            return self._search_or(search_word, list(tags or []), lang,
-                                   k or 10, materialize, offset=offset,
-                                   exclude_words=exclude_words,
-                                   exclude_tags=exclude_tags,
-                                   search_after=search_after,
-                                   ranges=ranges)
-        from watertower_spark.analyzers import analyze_query
-
-        spark = self.spark
-        default_lang = self.manifest.get("default_lang") or ""
-        analyzer_lang = self.manifest.get("analyzer_lang")
-        query_tokens = analyze_query(
-            search_word, analyzer_lang or lang, default_lang
-        ) if search_word else {}
-        tags = list(tags or [])
-        exclude_tags = list(exclude_tags or [])
-        excl_tokens = analyze_query(
-            exclude_words, analyzer_lang or lang, default_lang
-        ) if exclude_words else {}
-
-        empty = self._empty_result()
-        if not query_tokens and not tags and not ranges:
-            return self._materialize(empty, mode, bounded=True) if materialize else empty
-        if set(excl_tokens) & set(query_tokens) or (set(exclude_tags) & set(tags)):
-            # a required term/tag is also excluded ⇒ nothing can match
-            return self._materialize(empty, mode, bounded=True) if materialize else empty
-
-        terms = sorted(query_tokens)
-
-        # global df per term + candidate shard set from the memoized
-        # term_stats lookup (zero jobs for warm terms)
-        df_global: dict = {}
-        cand_shards: set = set()
-        sel = None
-        if terms:
-            resolved = self._resolve_terms(terms)
-            if any(resolved[t] is None for t in terms):
-                # some term matches nothing anywhere → AND result is empty
-                return self._materialize(empty, mode, bounded=True) if materialize else empty
-            for t in terms:
-                df_global[t] = resolved[t][0]
-                cand_shards.update(resolved[t][1])
-            # AND candidates live only in shards where EVERY term appears
-            and_shards = set(resolved[terms[0]][1])
-            for t in terms[1:]:
-                and_shards &= set(resolved[t][1])
-            if not and_shards:
-                # no shard contains every query term ⇒ no doc can either
-                return self._materialize(empty, mode, bounded=True) if materialize else empty
-            cand_shards = and_shards
-            sel = self.postings.where(
-                F.col("term").isin(terms)
-                & self._shard_in(and_shards)
-            )
-
-        parts = []
-        if sel is not None:
-            parts.append(
-                sel.select(*self._const_cols("p_term", lambda: [
-                    F.lit("term").alias("kind"), F.col("term").alias("name"),
-                    F.col("shard"), F.col("df"), F.col("doc_blob"),
-                    F.col("tf_blob"), F.col("pos_blob"), F.col("block_off"),
-                    F.col("block_last"), F.col("block_tf_off"),
-                    F.col("block_pos_off"), F.col("block_max_tf"),
-                    F.col("block_min_dl")]))
-            )
-        if tags:
-            if self.tags is None:
-                return self._materialize(empty, mode, bounded=True) if materialize else empty
-            # no global existence check needed: a tag absent from a shard
-            # vetoes that shard in the kernel, so a tag absent everywhere
-            # yields the empty result without an extra driver job
-            tag_sel = self.tags.where(F.col("tag").isin(tags))
-            parts.append(
-                tag_sel.select(*self._const_cols("p_tag", lambda: [
-                    F.lit("tag").alias("kind"), F.col("tag").alias("name"),
-                    F.col("shard"), F.col("n").alias("df"), F.col("doc_blob")]
-                    + self._const_cols("p_nulls", _null_blob_cols)))
-            )
-        if ranges:
-            # the in-range doc set rides the exchange as ONE synthetic
-            # tag row per shard — the kernel's conjunctive tag
-            # intersection (and shard veto for shards with no in-range
-            # docs) applies unchanged
-            rng = self._range_rows(ranges,
-                                   cand_shards if terms else None)
-            parts.append(
-                rng.select(*self._const_cols("p_range", lambda: [
-                    F.lit("tag").alias("kind"),
-                    F.lit("\x00range").alias("name"),
-                    F.col("shard"), F.col("n").alias("df"), F.col("doc_blob")]
-                    + self._const_cols("p_nulls", _null_blob_cols)))
-            )
-        # must_not inputs ride the SAME exchange: excluded-term postings
-        # as kind='not' rows (shard-restricted to the AND candidate set —
-        # exclusion only matters where candidates can live) and excluded
-        # tags as kind='nottag' rows.  Terms/tags absent from the index
-        # resolve to nothing and exclude nothing.
-        has_excl = False
-        excl_terms = sorted(excl_tokens)
-        if excl_terms:
-            eres = self._resolve_terms(excl_terms)
-            present = [t for t in excl_terms if eres[t] is not None]
-            if terms:  # restrict to shards where candidates exist
-                present = [
-                    t for t in present
-                    if set(eres[t][1]) & cand_shards
-                ]
-            if present:
-                has_excl = True
-                not_sel = self.postings.where(F.col("term").isin(present))
-                if terms:
-                    not_sel = not_sel.where(
-                        self._shard_in(cand_shards)
-                    )
-                parts.append(
-                    not_sel.select(*self._const_cols("p_not", lambda: [
-                        F.lit("not").alias("kind"), F.col("term").alias("name"),
-                        F.col("shard"), F.col("df"), F.col("doc_blob"),
-                        F.col("tf_blob"), F.col("pos_blob"), F.col("block_off"),
-                        F.col("block_last"), F.col("block_tf_off"),
-                        F.col("block_pos_off"), F.col("block_max_tf"),
-                        F.col("block_min_dl")]))
-                )
-        if exclude_tags and self.tags is not None:
-            has_excl = True
-            nottag_sel = self.tags.where(F.col("tag").isin(exclude_tags))
-            parts.append(
-                nottag_sel.select(*self._const_cols("p_nottag", lambda: [
-                    F.lit("nottag").alias("kind"), F.col("tag").alias("name"),
-                    F.col("shard"), F.col("n").alias("df"), F.col("doc_blob")]
-                    + self._const_cols("p_nulls", _null_blob_cols)))
-            )
-        # BM25 needs per-doc lengths: the shard's dense dl array rides the
-        # SAME exchange as the postings (kind='len' row, partition-pruned
-        # to candidate shards) — no second cogroup input, no doc_stats
-        # scan at query time.
-        if mode == "bm25" and terms and cand_shards:
-            len_sel = self.doc_len.where(
-                self._shard_in(cand_shards)
-            )
-            parts.append(
-                len_sel.select(*self._const_cols("p_len", lambda: [
-                    F.lit("len").alias("kind"), F.lit("").alias("name"),
-                    F.col("shard"), F.col("n").alias("df"),
-                    F.col("dl_blob").alias("doc_blob")]
-                    + self._const_cols("p_nulls", _null_blob_cols)))
-            )
-        groups_df = parts[0]
-        for p in parts[1:]:
-            groups_df = groups_df.unionByName(p)
-
-        # per-tag global presence already checked; per-shard AND happens in
-        # the kernel.  Tags present globally but absent in a shard must veto
-        # that shard: pass expected tag count via closure.
-        k_eff = (k + offset) if (k is not None and mode == "bm25") else k
-        kernel = _make_kernel(
-            query_tokens, df_global, int(self.manifest["doc_count"]),
-            float(self.manifest["avgdl"]), mode, k_eff,
-            n_tags=len(set(tags)) + (1 if ranges else 0),
-            docs_per_shard=int(self.manifest["docs_per_shard"]),
-            has_excl=has_excl,
-            after=search_after if mode == "bm25" else None,
-        )
-        results = groups_df.repartition(
-            self._kernel_partitions(cand_shards), "shard"
-        ).groupBy("shard").applyInPandas(
-            kernel, schema=RESULT_SCHEMA
-        )
-
-        if mode == "bm25":
-            results = results.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            if offset:
-                results = results.offset(offset)
-            if k is not None:
-                results = results.limit(k)
-        else:
-            results = results.orderBy(F.col("score").asc(), F.col("doc_id").asc())
-        return self._materialize(results, mode, bounded=k is not None) if materialize else results
+        spec = self._spec(search_word, tags, lang, mode, k, operator, offset,
+                          exclude_words, exclude_tags, search_after, ranges)
+        return self._top(spec, materialize)
 
     def find_by_key(self, url: str) -> DataFrame:
         """Exact unique-key lookup (Q10; FindDocumentByKey,
@@ -1096,61 +1225,6 @@ class SearchEngine:
         m2 = remove_documents(self.spark, self.index_dir, urls)
         return before - int(m2["doc_count"])
 
-    def _search_or(self, search_word: str, tags: list, lang: str, k: int,
-                   materialize: bool, offset: int = 0,
-                   exclude_words: str = "",
-                   exclude_tags: list | None = None,
-                   search_after: tuple | None = None,
-                   ranges: dict | None = None) -> DataFrame:
-        """Disjunctive BM25 top-k (operators/wand.py kernel); filter tags
-        stay conjunctive (ES bool-filter semantics); ``exclude_words``/
-        ``exclude_tags`` apply ES ``bool.must_not`` exclusion at posting-
-        decode time (before the maxscore θ bootstrap, so pruning stays
-        exact over the excluded corpus)."""
-        from watertower_spark.analyzers import analyze_query
-
-        spark = self.spark
-        default_lang = self.manifest.get("default_lang") or ""
-        analyzer_lang = self.manifest.get("analyzer_lang")
-        query_tokens = analyze_query(
-            search_word, analyzer_lang or lang, default_lang
-        ) if search_word else {}
-        excl_tokens = analyze_query(
-            exclude_words, analyzer_lang or lang, default_lang
-        ) if exclude_words else {}
-        exclude_tags = list(exclude_tags or [])
-        # an excluded term knocks itself out of the scored disjunction:
-        # any doc containing it is excluded, so it can never contribute
-        query_tokens = {t: p for t, p in query_tokens.items()
-                        if t not in excl_tokens}
-        empty = self._empty_result()
-        if not query_tokens or (tags and self.tags is None) \
-                or (set(exclude_tags) & set(tags)):
-            return self._materialize(empty, "bm25", bounded=True) if materialize else empty
-
-        terms = sorted(query_tokens)
-        resolved = self._resolve_terms(terms)
-        df_global = {t: v[0] for t, v in resolved.items() if v is not None}
-        cand_shards: set = set()
-        for v in resolved.values():
-            if v is not None:
-                cand_shards.update(v[1])
-        if not df_global:  # no query term exists anywhere (OR → empty)
-            return self._materialize(empty, "bm25", bounded=True) if materialize else empty
-        excl_terms = None
-        if excl_tokens:
-            eres = self._resolve_terms(sorted(excl_tokens))
-            excl_terms = [
-                t for t, v in eres.items()
-                if v is not None and set(v[1]) & cand_shards
-            ] or None
-        return self._run_or(query_tokens, df_global, cand_shards, tags, k,
-                            materialize, offset=offset,
-                            excl_terms=excl_terms,
-                            excl_tags=exclude_tags or None,
-                            search_after=search_after,
-                            ranges=ranges)
-
     def search_prefix(self, prefix: str, tags: list | None = None,
                       k: int = 10, max_expansions: int = 50,
                       materialize: bool = True, offset: int = 0) -> DataFrame:
@@ -1177,12 +1251,10 @@ class SearchEngine:
         kernel fan-in; at 100 TB the dictionary scan stays a metadata-
         sized job and no step depends on corpus row count.
         """
-        spark = self.spark
-        empty = self._empty_result()
+        spec = QuerySpec({}, list(tags or []), op="or", k=k, offset=offset)
         prefix = (prefix or "").strip().lower().rstrip("*")
-        tags = list(tags or [])
-        if not prefix or (tags and self.tags is None):
-            return self._materialize(empty, "bm25", bounded=True) if materialize else empty
+        if not prefix:
+            return self._top(spec, materialize)
         if self.term_stats is not None:
             dic = self.term_stats
         else:  # pre-term_stats index: derive the dictionary per query
@@ -1196,17 +1268,16 @@ class SearchEngine:
             .limit(max_expansions)
             .collect()
         )
-        if not rows:
-            return self._materialize(empty, "bm25", bounded=True) if materialize else empty
-        query_tokens = {r["term"]: [0] for r in rows}
-        df_global = {r["term"]: int(r["df"]) for r in rows}
-        cand_shards: set = set()
-        for r in rows:
-            cand_shards.update(r["shards"])
+        return self._top_expanded(spec, rows, materialize)
+
+    def _top_expanded(self, spec: QuerySpec, rows: list,
+                      materialize: bool) -> DataFrame:
+        """Score term-dictionary expansion ``rows`` (term, df, shards) as
+        the disjunctive ``spec``; no rows is the empty result."""
         for r in rows:  # expansion rows double as warm term-stat cache
             self._stats_cache.setdefault(r["term"], (int(r["df"]), list(r["shards"])))
-        return self._run_or(query_tokens, df_global, cand_shards, tags, k,
-                            materialize, offset=offset)
+        spec = dataclasses.replace(spec, tokens={r["term"]: [0] for r in rows})
+        return self._top(spec, materialize)
 
     def search_fuzzy(self, word: str, tags: list | None = None,
                      max_edits: int = 1, k: int = 10,
@@ -1232,12 +1303,10 @@ class SearchEngine:
         is lowercased but NOT stemmed.  At 100 TB the dictionary scan is
         metadata-sized and the fan-in stays bounded by the cap.
         """
-        spark = self.spark
-        empty = self._empty_result()
+        spec = QuerySpec({}, list(tags or []), op="or", k=k, offset=offset)
         word = (word or "").strip().lower()
-        tags = list(tags or [])
-        if not word or (tags and self.tags is None):
-            return self._materialize(empty, "bm25", bounded=True) if materialize else empty
+        if not word:
+            return self._top(spec, materialize)
         if self.term_stats is not None:
             dic = self.term_stats
         else:  # pre-term_stats index: derive the dictionary per query
@@ -1256,16 +1325,7 @@ class SearchEngine:
             .limit(max_expansions)
             .collect()
         )
-        if not rows:
-            return self._materialize(empty, "bm25", bounded=True) if materialize else empty
-        query_tokens = {r["term"]: [0] for r in rows}
-        df_global = {r["term"]: int(r["df"]) for r in rows}
-        cand_shards: set = set()
-        for r in rows:
-            cand_shards.update(r["shards"])
-            self._stats_cache.setdefault(r["term"], (int(r["df"]), list(r["shards"])))
-        return self._run_or(query_tokens, df_global, cand_shards, tags, k,
-                            materialize, offset=offset)
+        return self._top_expanded(spec, rows, materialize)
 
     def count(self, search_word: str, tags: list | None = None,
               lang: str = "", exclude_words: str = "",
@@ -1329,36 +1389,6 @@ class SearchEngine:
                         f"range {field!r}: value {val!r} is not valid for "
                         f"the column's type")
         return pred
-
-    def _range_rows(self, ranges: dict, cand_shards: set | None) -> DataFrame:
-        """The in-range doc set as synthetic per-shard tag rows
-        (shard, n, doc_blob) in the tag sidecar's exact encoding
-        (codec.encode_sorted), ready to ride the kernels' grouped
-        exchange.  The doc_store scan is predicate-pushed (column
-        min/max row-group pruning applies — warc_ts correlates with
-        doc_id, which shards are ranged by) and partition-pruned to the
-        candidate shards when the query's terms bound them."""
-        pred = self._compile_ranges(ranges)
-        src = self.doc_store
-        if cand_shards is not None:
-            src = src.where(self._shard_in(cand_shards))
-        sel = src.where(pred).select("shard", "doc_id")
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            from watertower_spark.functions import codec
-
-            ids = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
-            return pd.DataFrame({
-                "shard": pd.Series([int(pdf["shard"].iloc[0])], dtype="int32"),
-                "n": pd.Series([int(ids.size)], dtype="int32"),
-                "doc_blob": pd.Series([codec.encode_sorted(ids)],
-                                      dtype="object"),
-            })
-
-        return sel.repartition(
-            self._kernel_partitions(cand_shards), "shard"
-        ).groupBy("shard").applyInPandas(
-            pack, "shard int, n int, doc_blob binary")
 
     def search_sorted(self, search_word: str, tags: list | None = None,
                       lang: str = "", field: str = "warc_ts",
@@ -1618,109 +1648,30 @@ class SearchEngine:
             "degraded_shards": list(self.degraded_shards),
         }
 
-    def _run_or(self, query_tokens: dict, df_global: dict, cand_shards: set,
-                tags: list, k: int, materialize: bool,
-                offset: int = 0, excl_terms: list | None = None,
-                excl_tags: list | None = None,
-                search_after: tuple | None = None,
-                ranges: dict | None = None) -> DataFrame:
-        """Shared disjunctive execution: one grouped exchange (postings ∪
-        tags ∪ dense dl arrays) → per-shard maxscore kernel → global
-        top-k.  Callers supply resolved per-term global df (term_stats)
-        and the candidate shard set.  ``excl_terms``/``excl_tags`` ride
-        the same exchange as kind='not'/'nottag' rows (shard-restricted
-        to the candidate set) for must_not exclusion inside the kernel."""
-        from .wand import make_or_kernel
-
-        terms = sorted(query_tokens)
-        sel = self.postings.where(F.col("term").isin(terms))
-        groups_df = sel.select(*self._const_cols("o_term", lambda: [
-            F.lit("term").alias("kind"), F.col("term").alias("name"),
-            F.col("shard"), F.col("df"), F.col("doc_blob"), F.col("tf_blob"),
-            F.col("block_off"), F.col("block_max_tf"), F.col("block_min_dl")]))
-        if excl_terms:
-            not_sel = self.postings.where(
-                F.col("term").isin(list(excl_terms))
-                & self._shard_in(cand_shards)
-            )
-            groups_df = groups_df.unionByName(
-                not_sel.select(*self._const_cols("o_not", lambda: [
-                    F.lit("not").alias("kind"), F.col("term").alias("name"),
-                    F.col("shard"), F.col("df"), F.col("doc_blob"),
-                    F.col("tf_blob"), F.col("block_off"),
-                    F.col("block_max_tf"), F.col("block_min_dl")]))
-            )
-        if excl_tags and self.tags is not None:
-            nottag_sel = self.tags.where(F.col("tag").isin(list(excl_tags)))
-            groups_df = groups_df.unionByName(
-                nottag_sel.select(*self._const_cols("o_nottag", lambda: [
-                    F.lit("nottag").alias("kind"), F.col("tag").alias("name"),
-                    F.col("shard"), F.col("n").alias("df"), F.col("doc_blob")]
-                    + self._const_cols("o_nulls", _null_blob_cols4)))
-            )
-        if tags:
-            tag_sel = self.tags.where(F.col("tag").isin(tags))
-            groups_df = groups_df.unionByName(
-                tag_sel.select(*self._const_cols("o_tag", lambda: [
-                    F.lit("tag").alias("kind"), F.col("tag").alias("name"),
-                    F.col("shard"), F.col("n").alias("df"), F.col("doc_blob")]
-                    + self._const_cols("o_nulls", _null_blob_cols4)))
-            )
-        if ranges:
-            rng = self._range_rows(ranges, cand_shards)
-            groups_df = groups_df.unionByName(
-                rng.select(*self._const_cols("o_range", lambda: [
-                    F.lit("tag").alias("kind"),
-                    F.lit("\x00range").alias("name"),
-                    F.col("shard"), F.col("n").alias("df"), F.col("doc_blob")]
-                    + self._const_cols("o_nulls", _null_blob_cols4)))
-            )
-        len_sel = self.doc_len.where(
-            self._shard_in(cand_shards)
-        )
-        groups_df = groups_df.unionByName(
-            len_sel.select(*self._const_cols("o_len", lambda: [
-                F.lit("len").alias("kind"), F.lit("").alias("name"),
-                F.col("shard"), F.col("n").alias("df"),
-                F.col("dl_blob").alias("doc_blob")]
-                + self._const_cols("o_nulls", _null_blob_cols4)))
-        )
-        kernel = make_or_kernel(
-            query_tokens, df_global, int(self.manifest["doc_count"]),
-            float(self.manifest["avgdl"]), k + offset,
-            n_tags=len(set(tags)) + (1 if ranges else 0),
-            docs_per_shard=int(self.manifest["docs_per_shard"]),
-            after=search_after,
-        )
-        results = groups_df.repartition(
-            self._kernel_partitions(cand_shards), "shard"
-        ).groupBy("shard").applyInPandas(
-            kernel, schema=RESULT_SCHEMA
-        ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        if offset:
-            results = results.offset(offset)
-        results = results.limit(k)
-        return self._materialize(results, "bm25", bounded=True) if materialize else results
-
     # ------------------------------------------------------------ msearch
+
+    _ENTRY_KEYS = ("word", "tags", "lang", "mode", "k", "operator", "offset",
+                   "exclude_words", "exclude_tags", "search_after", "ranges")
 
     def msearch(self, queries: list, materialize: bool = True) -> DataFrame:
         """N independent queries in ONE Spark DAG — the ES ``_msearch``
         batch API re-expressed Spark-first (flagged extension; the
         reference serves one query per request, handlers.go:100-176).
 
-        Each entry is a dict: ``{"word": str, "tags": list|None,
-        "lang": str, "mode": "parity"|"bm25", "k": int|None,
-        "operator": "and"|"or", "exclude_words": str,
-        "exclude_tags": list|None}`` (only ``word`` required).
+        Each entry is a dict of ``search()``'s arguments: ``{"word":
+        str, "tags": list|None, "lang": str, "mode": "parity"|"bm25",
+        "k": int|None, "operator": "and"|"or", "offset": int,
+        "exclude_words": str, "exclude_tags": list|None,
+        "search_after": (score, doc_id), "ranges": dict}``.  Only
+        ``word`` is required; ``mode`` defaults to bm25 and ``k`` to 10
+        in bm25 mode.  Any other key raises ValueError.
 
-        Physical plan: every conjunctive query's inputs (postings ∪
-        tags ∪ dl arrays ∪ must_not rows) ride ONE grouped exchange
-        keyed by (qid, shard), dispatching to the same per-query kernel
-        ``search()`` builds; disjunctive queries share a second
-        exchange into the maxscore kernel.  Both outputs union into a
-        single plan; per-query top-k is one window over the already
-        per-shard-bounded candidates, and ONE doc_store join
+        Physical plan: the query compiler (``_compile``) puts every
+        query's inputs — AND and OR, with their tags, must_not rows,
+        ranges and dl arrays — into ONE grouped exchange keyed by (qid,
+        shard), reading postings, tags and doc_len once each whatever
+        the batch width; per-query paging is one window over the
+        already per-shard-bounded candidates, and ONE doc_store join
         materializes every query's hits.  Scheduling and exchange
         overhead is therefore paid once per BATCH instead of once per
         query — at any corpus size, query throughput comes from
@@ -1730,243 +1681,41 @@ class SearchEngine:
         ``queries``), ordered (qid ASC, the query's score order,
         doc_id ASC).  Queries matching nothing contribute no rows.
         """
-        from watertower_spark.analyzers import analyze_query
-
-        from .wand import make_or_kernel
-
-        spark = self.spark
-        default_lang = self.manifest.get("default_lang") or ""
-        analyzer_lang = self.manifest.get("analyzer_lang")
-        doc_count = int(self.manifest["doc_count"])
-        avgdl = float(self.manifest["avgdl"])
-        dps = int(self.manifest["docs_per_shard"])
-
-        def _an(word, lang):
-            return analyze_query(
-                word or "", analyzer_lang or lang, default_lang
-            ) if word else {}
-
-        # -- per-query analysis + ONE combined term_stats resolution
-        qspecs = []
-        all_terms: set = set()
+        specs = []
         for qid, q in enumerate(queries):
-            tokens = _an(q.get("word"), q.get("lang") or "")
-            excl = _an(q.get("exclude_words"), q.get("lang") or "")
-            spec = dict(
-                qid=qid, tokens=tokens, excl=excl,
-                tags=list(q.get("tags") or []),
-                excl_tags=list(q.get("exclude_tags") or []),
-                mode=q.get("mode") or "bm25",
-                op=q.get("operator") or "and",
-                k=q.get("k", 10 if (q.get("mode") or "bm25") == "bm25" else None),
-            )
-            if spec["op"] == "or":
-                if spec["mode"] != "bm25":
-                    raise ValueError("operator='or' supports mode='bm25' only")
-                # an excluded term leaves the scored disjunction
-                spec["tokens"] = {t: p for t, p in spec["tokens"].items()
-                                  if t not in spec["excl"]}
-                spec["k"] = spec["k"] or 10
-            qspecs.append(spec)
-            all_terms.update(spec["tokens"])
-            all_terms.update(spec["excl"])
-        resolved = self._resolve_terms(sorted(all_terms)) if all_terms else {}
+            unknown = sorted(set(q) - set(self._ENTRY_KEYS))
+            if unknown:
+                raise ValueError(f"msearch entry {qid}: unknown key(s) "
+                                 f"{unknown}; allowed: {list(self._ENTRY_KEYS)}")
+            mode = q.get("mode") or "bm25"
+            specs.append(self._spec(**{
+                **q, "mode": mode, "operator": q.get("operator") or "and",
+                "k": q.get("k", 10 if mode == "bm25" else None)}))
+        res = self._compile(specs)
 
-        # Per-family accumulators.  The plan is assembled from BROADCAST
-        # maps instead of per-query selects: one postings scan joined to
-        # a tiny (term → qid, kind) relation duplicates each posting row
-        # into every query's (qid, shard) group — so the plan size (and
-        # the driver's py4j construction cost) is CONSTANT in the batch
-        # width, and postings/tags/doc_len are each scanned once per
-        # kernel family regardless of how many lines share them.
-        fam: dict = {
-            f: {"terms": [], "tags": [], "len_pairs": [], "shards": set(),
-                "unrestricted": False, "kernels": {}}
-            for f in ("and", "or")
-        }
-        parity_qids: list = []
-        kmap_items: list = []
-
-        for spec in qspecs:
-            qid, tokens, tags = spec["qid"], spec["tokens"], spec["tags"]
-            mode, op, k = spec["mode"], spec["op"], spec["k"]
-            if mode == "parity":
-                parity_qids.append(qid)
-            if not tokens and not tags:
-                continue
-            if set(spec["excl"]) & set(tokens) or \
-                    (set(spec["excl_tags"]) & set(tags)):
-                continue  # required ∧ excluded ⇒ empty
-            if tags and self.tags is None:
-                continue
-            terms = sorted(tokens)
-            if op == "or":
-                f = fam["or"]
-                df_global = {t: resolved[t][0] for t in terms
-                             if resolved.get(t) is not None}
-                if not df_global:
-                    continue
-                cand = set()
-                for t in df_global:
-                    cand.update(resolved[t][1])
-                f["terms"] += [(t, qid, "term") for t in sorted(df_global)]
-                f["tags"] += [(t, qid, "tag") for t in tags]
-                f["terms"] += [
-                    (t, qid, "not") for t in sorted(spec["excl"])
-                    if resolved.get(t) is not None
-                    and set(resolved[t][1]) & cand
-                ]
-                if self.tags is not None:
-                    f["tags"] += [(t, qid, "nottag")
-                                  for t in spec["excl_tags"]]
-                f["len_pairs"] += [(qid, int(s)) for s in sorted(cand)]
-                f["shards"].update(cand)
-                f["kernels"][qid] = make_or_kernel(
-                    tokens, df_global, doc_count, avgdl, k,
-                    n_tags=len(set(tags)), docs_per_shard=dps)
-                kmap_items.append((qid, int(k)))
-                continue
-            # conjunctive (AND) query — mirrors search()'s plan per qid
-            f = fam["and"]
-            df_global = {}
-            and_shards: set | None = None
-            dead = False
-            for t in terms:
-                if resolved.get(t) is None:
-                    dead = True
-                    break
-                df_global[t] = resolved[t][0]
-                s = set(resolved[t][1])
-                and_shards = s if and_shards is None else (and_shards & s)
-            if dead or (terms and not and_shards):
-                continue
-            f["terms"] += [(t, qid, "term") for t in terms]
-            f["tags"] += [(t, qid, "tag") for t in tags]
-            if and_shards is None:
-                f["unrestricted"] = True  # tags-only query: all shards
-            else:
-                f["shards"].update(and_shards)
-            has_excl = False
-            excl_present = [
-                t for t in sorted(spec["excl"])
-                if resolved.get(t) is not None
-                and (and_shards is None or set(resolved[t][1]) & and_shards)
-            ]
-            if excl_present:
-                has_excl = True
-                f["terms"] += [(t, qid, "not") for t in excl_present]
-            if spec["excl_tags"] and self.tags is not None:
-                has_excl = True
-                f["tags"] += [(t, qid, "nottag") for t in spec["excl_tags"]]
-            if mode == "bm25" and terms:
-                f["len_pairs"] += [(qid, int(s)) for s in sorted(and_shards)]
-            f["kernels"][qid] = _make_kernel(
-                tokens, df_global, doc_count, avgdl, mode,
-                k if mode == "bm25" else None, n_tags=len(set(tags)),
-                docs_per_shard=dps, has_excl=has_excl)
-            if mode == "bm25" and k is not None:
-                kmap_items.append((qid, int(k)))
-
-        _AND_BLOBS = ("tf_blob", "pos_blob", "block_off", "block_last",
-                      "block_tf_off", "block_pos_off", "block_max_tf",
-                      "block_min_dl")
-        _OR_BLOBS = ("tf_blob", "block_off", "block_max_tf", "block_min_dl")
-
-        def _family_df(f: dict, blobs):
-            nulls = [F.lit(None).cast("binary").alias(c) for c in blobs]
-            shards = None if f["unrestricted"] else sorted(
-                int(s) for s in f["shards"])
-            parts = []
-            if f["terms"]:
-                tm = spark.createDataFrame(
-                    f["terms"], "name string, tqid int, kind string")
-                sel = self.postings.where(
-                    F.col("term").isin(sorted({r[0] for r in f["terms"]})))
-                if shards is not None:
-                    sel = sel.where(F.col("shard").isin(shards))
-                parts.append(
-                    sel.join(F.broadcast(tm), sel["term"] == tm["name"])
-                    .select(F.col("tqid").alias("qid"), "kind", "name",
-                            "shard", "df", "doc_blob", *blobs))
-            if f["tags"]:
-                tg = spark.createDataFrame(
-                    f["tags"], "name string, tqid int, kind string")
-                tsel = self.tags.where(
-                    F.col("tag").isin(sorted({r[0] for r in f["tags"]})))
-                parts.append(
-                    tsel.join(F.broadcast(tg), tsel["tag"] == tg["name"])
-                    .select(F.col("tqid").alias("qid"), "kind", "name",
-                            "shard", F.col("n").alias("df"), "doc_blob",
-                            *nulls))
-            if f["len_pairs"]:
-                lp = spark.createDataFrame(
-                    f["len_pairs"], "lqid int, shard int")
-                parts.append(
-                    self.doc_len.join(F.broadcast(lp), "shard")
-                    .select(F.col("lqid").alias("qid"),
-                            F.lit("len").alias("kind"),
-                            F.lit("").alias("name"), "shard",
-                            F.col("n").alias("df"),
-                            F.col("dl_blob").alias("doc_blob"), *nulls))
-            if not parts:
-                return None
-            g = parts[0]
-            for p in parts[1:]:
-                g = g.unionByName(p)
-            return g
-
-        out_schema = "qid int, " + RESULT_SCHEMA
-
-        def _dispatch(kernels):
-            def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                qid = int(key[0])
-                out = kernels[qid]((key[1],), pdf)
-                out.insert(0, "qid", np.full(len(out), qid, dtype="int32"))
-                return out
-            return kernel
-
-        outs = []
-        for fname, blobs in (("and", _AND_BLOBS), ("or", _OR_BLOBS)):
-            f = fam[fname]
-            g = _family_df(f, blobs)
-            if g is None:
-                continue
-            outs.append(g.repartition(
-                self._kernel_partitions(), "qid", "shard"
-            ).groupBy("qid", "shard").applyInPandas(
-                _dispatch(f["kernels"]), schema=out_schema))
-        if not outs:
-            res = spark.createDataFrame([], out_schema)
-        else:
-            res = outs[0]
-            for o in outs[1:]:
-                res = res.unionByName(o)
-
-        # per-query top-k: one window over the per-shard-bounded rows
-        if kmap_items:
+        # per-query paging: one window over the per-shard-bounded rows
+        bm25 = [(q, s) for q, s in enumerate(specs) if s.mode == "bm25"]
+        lo = {q: s.offset for q, s in bm25 if s.offset}
+        hi = {q: s.offset + s.k for q, s in bm25 if s.k is not None}
+        bounds = [f"coalesce(rn {op} element_at({_sql_map(b)}, qid), true)"
+                  for op, b in ((">", lo), ("<=", hi)) if b]
+        if bounds:
             from pyspark.sql import Window
 
-            kmap = F.create_map(
-                *[F.lit(v) for pair in kmap_items for v in pair])
             w = Window.partitionBy("qid").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc())
-            res = (
-                res.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= F.coalesce(
-                    F.element_at(kmap, F.col("qid")), F.lit(1 << 30)))
-                .drop("rn")
-            )
+            res = (res.withColumn("rn", F.row_number().over(w))
+                   .where(F.expr(" AND ".join(bounds))).drop("rn"))
         if not materialize:
             return res
 
         # one materialization join for the whole batch; broadcast only
         # when every query is k-bounded (a parity query is unbounded)
-        bounded = not parity_qids
-        right = F.broadcast(res) if bounded else res
-        sortk = (
-            F.when(F.col("qid").isin(parity_qids), F.col("score"))
-            .otherwise(-F.col("score")) if parity_qids else -F.col("score")
-        )
+        parity = [q for q, s in enumerate(specs) if s.mode != "bm25"]
+        right = F.broadcast(res) if all(
+            s.mode == "bm25" and s.k is not None for s in specs) else res
+        sortk = F.expr(f"IF({_sql_in('qid', parity)}, score, -score)"
+                       if parity else "-score")
         return (
             self.doc_store.join(right, ["doc_id", "shard"])
             .select("qid", "doc_id", "url", "score", "text", "lang",

@@ -420,9 +420,9 @@ class _Handler(BaseHTTPRequestHandler):
         pairs; every batchable line's query runs in ONE Spark DAG
         (SearchEngine.msearch) — scheduling and exchange overhead paid
         once per batch, the Spark-idiomatic answer to concurrent query
-        throughput.  Lines using features outside the batch kernel
-        (prefix, aggs, highlight, from>0) fall back to the per-line
-        path; the response interleaves both in line order."""
+        throughput.  Lines using features outside the batch (prefix,
+        aggs, highlight, sort) fall back to the per-line path; the
+        response interleaves both in line order."""
         from .operators.response import msearch_response
 
         query = urllib.parse.parse_qs(parsed.query)
@@ -471,8 +471,7 @@ class _Handler(BaseHTTPRequestHandler):
                 if err:
                     self._send(400, {"message": f"line {2 * i + 1}: {err}"})
                     return
-            if (dsl["prefix"] is not None or hl or aggs or frm or after
-                    or dsl["ranges"] or dsl["sort"] is not None):
+            if dsl["prefix"] is not None or hl or aggs or dsl["sort"] is not None:
                 if dsl["ranges"] and (dsl["prefix"] is not None or hl):
                     self._send(400, {"message": f"line {2 * i + 1}: filter."
                                      "range does not compose with prefix "
@@ -495,13 +494,19 @@ class _Handler(BaseHTTPRequestHandler):
                 "mode": m, "operator": op, "k": k,
                 "exclude_words": dsl["excl_words"],
                 "exclude_tags": dsl["excl_tags"],
+                "offset": frm, "search_after": after,
+                "ranges": dsl["ranges"] or None,
             })
         resp_map: dict = {}
         batched = [(i, s) for i, s in enumerate(specs) if s is not None]
         took = 0
         if batched:
-            sub = msearch_response(eng, [s for _, s in batched],
-                                   index_name=index)
+            try:
+                sub = msearch_response(eng, [s for _, s in batched],
+                                       index_name=index)
+            except ValueError as exc:  # bad range/size/from in a line
+                self._send(400, {"message": str(exc)[:500]})
+                return
             took = sub["took"]
             for (i, _), r in zip(batched, sub["responses"]):
                 resp_map[i] = r
