@@ -332,6 +332,46 @@ def test_minhash_band_join_exchange_reuse(spark):
     cached.unpersist()
 
 
+def _final_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString().split(
+        "== Initial Plan ==")[0]
+
+
+def test_simhash_segment_join_exchange_reuse(spark):
+    """Over an uncached input, the 4 segment self-joins share the simhash
+    aggregate's doc_id exchange (3 reuses) and each segment's seg
+    exchange serves both sides (4 reuses): the input is scanned once.
+    Over a cached input nothing is reused, and both sides of all 4
+    segments scan it."""
+    rows = [(d, p, f"w{(d * 7 + p) % 50}") for d in range(40) for p in range(30)]
+    schema = "doc_id long, pos int, term string"
+    cached = spark.createDataFrame(rows, schema).persist()
+    cached.count()
+    plan = _final_plan(dedup.simhash_near_pairs(spark.createDataFrame(rows, schema)))
+    assert plan.count("ReusedExchange") == 7 and plan.count("Scan ExistingRDD") == 1, plan
+    plan = _final_plan(dedup.simhash_near_pairs(cached))
+    assert plan.count("ReusedExchange") == 0 and plan.count("InMemoryTableScan") == 8, plan
+    cached.unpersist()
+
+
+def test_embedding_lsh_join_exchange_reuse(spark):
+    """Over an uncached input, both sides of the (table, bucket) self-
+    join are one exchange, so LSH coding (the MapInPandas) runs once.
+    Over a cached input the exchange is not reused and the coding runs
+    once per side."""
+    rng = np.random.default_rng(9)
+    rows = [(i, rng.standard_normal(64).astype("float32").tolist()) for i in range(120)]
+    schema = "vec_id long, embedding array<float>"
+    cached = spark.createDataFrame(rows, schema).persist()
+    cached.count()
+    plan = _final_plan(similarity.embedding_near_dup_pairs(spark.createDataFrame(rows, schema)))
+    assert plan.count("ReusedExchange") == 1 and plan.count("MapInPandas") == 1, plan
+    plan = _final_plan(similarity.embedding_near_dup_pairs(cached))
+    assert plan.count("ReusedExchange") == 0 and plan.count("MapInPandas") == 2, plan
+    cached.unpersist()
+
+
 def test_simhash_near_pairs(token_df):
     pairs = {(r["da"], r["db"]): r["hamming"] for r in
              dedup.simhash_near_pairs(token_df, max_hamming=3).collect()}

@@ -531,9 +531,13 @@ def simhash_near_pairs(tokens: DataFrame, max_hamming: int = 3,
             cs.alias("x")
             # merge hint: the same static-broadcast trap as
             # minhash_lsh_pairs — without it each segment's build side
-            # re-runs the 64-bit-sum simhash aggregate; as sort-merge
-            # the codes subtree's doc_id exchange is computed once and
-            # reused across every segment's both sides (guide §2.4)
+            # re-runs the 64-bit-sum simhash aggregate.  As sort-merge
+            # over an uncached input, AQE computes the aggregate's
+            # doc_id exchange once for every segment, and each segment's
+            # seg exchange serves both of its sides: the input is
+            # scanned once.  Over a cached input nothing is reused, so
+            # every side of every segment scans and aggregates again
+            # (test_simhash_segment_join_exchange_reuse)
             .hint("merge")
             .join(cs.alias("y"), "seg")
             .where(F.col("x.doc_id") < F.col("y.doc_id"))

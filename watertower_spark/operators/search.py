@@ -38,6 +38,16 @@ Semantics preserved from the reference:
   with idf = ln(1+(N-df+0.5)/(df+0.5)), score DESCENDING, doc_id
   tie-break, per-shard top-k inside the kernel then global top-k.
 
+The kernel (``_make_kernel``) runs three scorers over ONE per-shard
+decode layer (``_ShardGroup``).  The layer parses the group's rows once,
+applies the AND shard veto, intersects tag and range rows, drops
+must_not docs, looks up doc lengths, and decodes each term's doc-id,
+tf and position blocks lazily, once each.  The scorers are block-max
+AND, exhaustive AND (tags, ranges, must_not, parity, k=None) and
+maxscore OR (``wand.py``).  They share one BM25 (``_bm25``, which also
+gives the block bounds), one phrase filter, one tf gather and one
+cursor + top-k merge (``_merge_topk``).
+
 Scale notes: postings are read with a pushed-down term filter (files are
 sorted by term within shard partitions → row-group pruning) and a shard
 partition filter; the kernel fans out per shard with no postings
@@ -49,12 +59,14 @@ from __future__ import annotations
 
 import dataclasses
 import functools
+import itertools
 import math
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import codec
 from .index_build import BM25_B, BM25_K1, load_manifest
 
 _WRAP = 1 << 32  # uint32 arithmetic in the reference's phrase algebra
@@ -168,17 +180,6 @@ class QuerySpec:
                            if t not in self.excl}
 
 
-def _phrase_relative_positions(doc_positions: np.ndarray, query_positions: list) -> np.ndarray:
-    """search.go:141-160 re-expressed vectorized: relative start offsets of
-    the query-word pattern inside one doc's position set."""
-    qp0 = query_positions[0]
-    ok = np.ones(doc_positions.shape, dtype=bool)
-    for qi in query_positions[1:]:
-        want = (doc_positions - qp0 + qi) % _WRAP
-        ok &= np.isin(want, doc_positions, assume_unique=True)
-    return (doc_positions[ok] - qp0) % _WRAP
-
-
 # packs (candidate index, relative position) into one int64 key for the
 # batched phrase filter: rel < 2^32 < 2^33, so the key space is exact up
 # to 2^30 candidates per shard (docs_per_shard is far below that)
@@ -186,9 +187,9 @@ _PHRASE_KEY = np.int64(1) << np.int64(33)
 
 
 def _phrase_rel_keys(pos_lists: list, query_positions: list) -> np.ndarray:
-    """Batched ``_phrase_relative_positions`` over EVERY candidate at
-    once: returns int64 keys ``cand_idx * 2^33 + rel`` for each valid
-    relative start offset of the query-word pattern, across all docs.
+    """search.go:141-160 over EVERY candidate at once: returns int64 keys
+    ``cand_idx * 2^33 + rel`` for each valid relative start offset of
+    the query-word pattern, across all docs.
 
     The r5 kernel looped per candidate doc (one tiny numpy op chain per
     doc — measured as the dominant cost of phrase queries at sf1.0:
@@ -196,8 +197,9 @@ def _phrase_rel_keys(pos_lists: list, query_positions: list) -> np.ndarray:
     position arrays are flattened once; the same-doc membership test is
     one searchsorted over the (doc, position) key stream per extra query
     position (guide §4.2: hand whole batches to vectorized numpy, never
-    loop per row).  Identical algebra, including the uint32 wraparound
-    (positions below the first query position wrap and never match)."""
+    loop per row).  Same algebra as the reference, including the uint32
+    wraparound (positions below the first query position wrap and never
+    match)."""
     n = len(pos_lists)
     lens = np.fromiter((p.size for p in pos_lists), dtype=np.int64, count=n)
     total = int(lens.sum())
@@ -218,450 +220,368 @@ def _phrase_rel_keys(pos_lists: list, query_positions: list) -> np.ndarray:
     return doc_idx[ok] * _PHRASE_KEY + (flat[ok] - qp0) % _WRAP
 
 
+def _bm25(tf, dl, idf: float, avgdl: float):
+    """BM25 term weight ``idf·(k1+1)·tf/(tf+k1·(1-b+b·dl/avgdl))``.
+
+    Evaluated at a block's (block_max_tf, block_min_dl) it is the
+    block's upper bound under the live avgdl (the weight rises in tf and
+    falls in dl, so the bound stays sound after appends or removals
+    drift avgdl).  Bound and score run the same float operations, so
+    the bound bit-equals the score of a posting that attains it: a
+    strict ``bound < kth`` prune can never drop a doc that ties the
+    kth score."""
+    return idf * (BM25_K1 + 1.0) * tf / (
+        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / max(avgdl, 1e-9)))
+
+
+_NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype="float64"))
+
+
+def _merge_topk(ids: np.ndarray, sc: np.ndarray, k: int | None,
+                after: tuple | None, top: tuple = _NO_HITS) -> tuple:
+    """Merge a scored batch into the per-shard ``top`` (ids, scores),
+    keeping the first ``k`` (all when None) under (score DESC, doc_id
+    ASC).  ``after=(score, doc_id)`` is an ES ``search_after`` cursor:
+    docs not strictly after it leave the batch BEFORE the merge, so a
+    kth-score pruning threshold only ever comes from surviving docs and
+    per-shard state stays k-bounded however deep the page.  Score
+    equality is exact: the same doc reproduces the same float64 under
+    the same arithmetic, which is how the cursor was produced."""
+    if after is not None:
+        a_s, a_d = after
+        keep = (sc < a_s) | ((sc == a_s) & (ids > a_d))
+        ids, sc = ids[keep], sc[keep]
+    if top[0].size:
+        ids, sc = np.concatenate((top[0], ids)), np.concatenate((top[1], sc))
+    if k is not None and ids.size > k:
+        sel = np.lexsort((ids, -sc))[:k]
+        ids, sc = ids[sel], sc[sel]
+    return ids, sc
+
+
+def _concat(parts: list, dtype) -> np.ndarray:
+    return np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
+
+
+class _Postings:
+    """One posting row (a scored or an excluded term) of a shard group.
+
+    Sidecars are parsed on first use (OR-query rows carry the AND-only
+    ones as NULL) and each block's doc ids, tfs and positions decode at
+    most once.  ``idf`` is the term's weight under the query's mode and
+    ``qpos`` its query positions; both are unset for excluded terms."""
+
+    def __init__(self, row, qpos=None, idf: float = 0.0, avgdl: float = 0.0):
+        self.row, self.df, self.qpos, self.idf = row, int(row.df), qpos, idf
+        self.avgdl = avgdl
+        self._ids: dict = {}
+        self._tfs: dict = {}
+        self._pos: dict = {}
+
+    @functools.cached_property
+    def last(self) -> np.ndarray:
+        """Last doc id of each block (the skip pointers)."""
+        return np.frombuffer(self.row.block_last, dtype=np.int64)
+
+    @functools.cached_property
+    def ub(self) -> np.ndarray:
+        """Per-block BM25 upper bounds under the live avgdl."""
+        bmt, bmd = (np.frombuffer(b, dtype=np.int32).astype("float64")
+                    for b in (self.row.block_max_tf, self.row.block_min_dl))
+        return _bm25(bmt, bmd, self.idf, self.avgdl)
+
+    @functools.cached_property
+    def boff(self) -> np.ndarray:
+        """Byte offset of each block in the doc-id blob."""
+        return np.frombuffer(self.row.block_off, dtype=np.int64)
+
+    def blocks_of(self, cand: np.ndarray) -> list:
+        """The blocks whose id range can hold a doc of sorted ``cand``."""
+        b = np.unique(np.searchsorted(self.last, cand))
+        return b[b < self.last.size].tolist()
+
+    def _blocks(self, cache: dict, blocks: list, decode) -> list:
+        miss = [b for b in blocks if b not in cache]
+        if miss:
+            cache.update(zip(miss, decode(miss)))
+        return [cache[b] for b in blocks]
+
+    def _size(self, b: int) -> int:
+        return min(codec.BLOCK_SIZE, self.df - b * codec.BLOCK_SIZE)
+
+    def ids(self, blocks: list | None = None) -> np.ndarray:
+        """Doc ids of the sorted, distinct ``blocks`` (every block when
+        None), concatenated."""
+        def decode(miss):
+            got, _ = codec.decode_doc_blocks(self.row.doc_blob, self.boff, self.df,
+                                             np.array(miss), codec.BLOCK_SIZE)
+            return np.split(got, np.cumsum([self._size(b) for b in miss[:-1]]))
+        if blocks is None:
+            blocks = list(range(self.boff.size))
+        return _concat(self._blocks(self._ids, blocks, decode), np.int64)
+
+    def locate(self, cand: np.ndarray) -> tuple:
+        """Sorted ``cand``, all in this list → (the blocks holding them,
+        each candidate's index into those blocks' postings)."""
+        blocks = self.blocks_of(cand)
+        return blocks, np.searchsorted(self.ids(blocks), cand)
+
+    def tf_of(self, cand: np.ndarray) -> np.ndarray:
+        """Each candidate's tf (float64); only blocks holding one decode."""
+        blocks, i = self.locate(cand)
+        tfs = self._blocks(self._tfs, blocks, lambda miss: codec.decode_tf_blocks(
+            self.row.tf_blob, np.frombuffer(self.row.block_tf_off, dtype=np.int64),
+            miss).values())
+        return _concat(tfs, np.int64)[i].astype("float64")
+
+    def positions_of(self, cand: np.ndarray) -> list:
+        """Each candidate's position array; only blocks holding one decode."""
+        blocks, i = self.locate(cand)
+        poff = np.frombuffer(self.row.block_pos_off, dtype=np.int64)
+        pend = np.append(poff[1:], len(self.row.pos_blob))
+        flat = list(itertools.chain.from_iterable(self._blocks(
+            self._pos, blocks, lambda miss: [
+                codec.decode_position_block(self.row.pos_blob, int(poff[b]),
+                                            int(pend[b]), self._size(b))
+                for b in miss])))
+        return [flat[j] for j in i.tolist()]
+
+    def postings(self) -> tuple:
+        """Every posting as (doc ids, tfs)."""
+        return codec.unpack_postings(self.row._asdict())
+
+
+class _ShardGroup:
+    """The per-shard decode layer under all three scorers: one (qid,
+    shard) group's rows — kinds term, not, tag (tags and synthetic range
+    rows), nottag and len — parsed once.  Every group row is read here
+    and nowhere else."""
+
+    def __init__(self, pdf: pd.DataFrame, query_tokens: dict, idf: dict,
+                 avgdl: float, base: int):
+        self.avgdl, self.base = avgdl, base
+        self.terms: dict = {}  # name -> _Postings, in group row order
+        self.nots: list = []
+        self.tags: list = []
+        self.nottags: list = []
+        self.dl_arr = None
+        for row in pdf.itertuples(index=False):
+            if row.kind == "term":
+                self.terms[row.name] = _Postings(
+                    row, query_tokens[row.name], idf[row.name], avgdl)
+            elif row.kind == "not":
+                self.nots.append(_Postings(row))
+            elif row.kind == "nottag":
+                self.nottags.append(row.doc_blob)
+            elif row.kind == "len":
+                self.dl_arr = np.frombuffer(row.doc_blob, dtype=np.int32)
+            else:
+                self.tags.append(row)
+
+    def dl(self, ids: np.ndarray) -> np.ndarray:
+        """BM25 doc lengths: doc ids are dense per shard, so the lookup
+        is array indexing into the shard's dl row."""
+        if self.dl_arr is None:
+            # postings without a doc_len row = an index integrity gap
+            # (interrupted wave-2 write) — score degraded but LOUDLY
+            import warnings
+
+            warnings.warn(
+                "shard has postings but no doc_len row; BM25 falls "
+                "back to dl=avgdl (run resume_build to repair)"
+            )
+            return np.full(ids.size, self.avgdl, dtype="float64")
+        return self.dl_arr[ids - self.base - 1].astype("float64")
+
+    def intersect(self, terms: list = ()):
+        """Doc ids carrying every tag/range row and every list in
+        ``terms`` (None when there are neither).  Seeded from the
+        smallest by df (int.go:8-10's smallest-first strategy); a later
+        term list decodes only the blocks that can hold a survivor."""
+        cand = None
+        for x in sorted([*terms, *self.tags], key=lambda x: int(x.df)):
+            if cand is not None and cand.size == 0:
+                break
+            if isinstance(x, _Postings):
+                ids = x.ids(None if cand is None else x.blocks_of(cand))
+            else:
+                ids = codec.decode_sorted(x.doc_blob)
+            cand = ids if cand is None else cand[np.isin(cand, ids, assume_unique=True)]
+        return cand
+
+    def excluded(self, cand: np.ndarray | None = None):
+        """The sorted doc ids carrying any must_not term or tag (ES bool
+        semantics, a flagged extension: the reference DSL is
+        conjunctive-only), or None when the group has no exclusions.
+        Excluded postings decode doc-id blocks only: those that can hold
+        one of sorted ``cand``, or all of them when ``cand`` is None
+        (OR rows carry no skip pointers).  An excluded term or tag
+        absent from this shard excludes nothing here."""
+        parts = [codec.decode_sorted(b) for b in self.nottags]
+        parts += [t.ids(None if cand is None else t.blocks_of(cand))
+                  for t in self.nots]
+        return np.unique(np.concatenate(parts)) if parts else None
+
+
+def _phrase_filter(terms: list, cand: np.ndarray) -> np.ndarray:
+    """The candidates where every term's query positions line up
+    (search.go:97-99, applied whenever the query has tokens): per term,
+    only the position blocks holding a candidate decode, and the
+    per-term relative-start key streams intersect in one vectorized
+    pass (``_phrase_rel_keys``)."""
+    keys = None
+    for t in terms:
+        tk = _phrase_rel_keys(t.positions_of(cand), t.qpos)
+        keys = tk if keys is None else keys[np.isin(keys, tk)]
+        if keys.size == 0:
+            return cand[:0]
+    return cand[np.unique(keys // _PHRASE_KEY)]
+
+
+def _blockmax_and(sh: _ShardGroup, k: int, after, phrase: bool) -> tuple:
+    """BM25 AND top-k by block-max WAND, driven by the SMALLEST list
+    (round-3 verdict #7).  Its blocks are visited in descending
+    optimistic-bound order (own block bound + Σ other terms' global
+    max bound); each is refined against the other terms' overlapping
+    blocks' bounds and skipped with NO doc/tf/position decode once no
+    remaining block can beat the kth score.  The phrase filter only
+    removes candidates, so pruning on a score bound before it is sound.
+    A one-term query has no other lists; it skips the phrase step unless
+    the term repeats in the query.  Scores sum in df order, and every
+    bound sums in that same order, so no bound sits below a score."""
+    by_df = sorted(sh.terms.values(), key=lambda t: t.df)
+    drv, others = by_df[0], by_df[1:]
+    loose = drv.ub
+    for t in others:
+        loose = loose + t.ub.max()
+    top, kth = _NO_HITS, -np.inf
+    for b in np.argsort(-loose, kind="stable").tolist():
+        # strict <: a block whose bound ties kth can hold a TYING doc
+        # with a smaller doc_id, which the tie-break contract surfaces
+        if top[0].size >= k and loose[b] < kth:
+            break
+        lo_id = int(drv.last[b - 1]) + 1 if b else 0
+        hi_id = int(drv.last[b])
+        bound = float(drv.ub[b])
+        for t in others:
+            j0 = int(np.searchsorted(t.last, lo_id))
+            if j0 == t.last.size:
+                bound = None  # no overlap ⇒ empty intersection
+                break
+            j1 = min(int(np.searchsorted(t.last, hi_id)), t.last.size - 1)
+            bound += float(t.ub[j0:j1 + 1].max())
+        if bound is None or (top[0].size >= k and bound < kth):
+            continue  # a refined bound prunes; looser blocks may follow
+        cand = drv.ids([b])
+        for t in others:
+            cand = cand[np.isin(cand, t.ids(t.blocks_of(cand)), assume_unique=True)]
+        if phrase:
+            cand = _phrase_filter(by_df, cand)
+        if cand.size == 0:
+            continue
+        dl = sh.dl(cand)
+        sc = np.zeros(cand.size, dtype="float64")
+        for t in by_df:
+            sc += _bm25(t.tf_of(cand), dl, t.idf, sh.avgdl)
+        top = _merge_topk(cand, sc, k, after, top)
+        if top[0].size >= k:
+            kth = top[1].min()
+    return top
+
+
+def _exhaustive_and(sh: _ShardGroup, terms: list, bm25: bool, k, after,
+                    phrase: bool) -> tuple:
+    """AND over every term, tag and range row, scored exhaustively:
+    intersect, drop excluded docs (before the phrase filter, scoring
+    and top-k, so no later stage can undo an exclusion), filter
+    phrases, then score.  Scores sum in query-token order."""
+    cand = sh.intersect(terms)
+    if cand is None or cand.size == 0:
+        return _NO_HITS
+    ex = sh.excluded(cand)
+    if ex is not None:
+        cand = cand[~np.isin(cand, ex, assume_unique=True)]
+    if phrase:
+        cand = _phrase_filter(terms, cand)
+    if cand.size == 0:
+        return _NO_HITS
+    scores = np.zeros(cand.size, dtype="float64")
+    dl = sh.dl(cand) if bm25 and terms else None
+    for t in terms:
+        tf = t.tf_of(cand)
+        # parity: tfIdfScore (search.go:182-188); tf>0 always here
+        scores += _bm25(tf, dl, t.idf, sh.avgdl) if bm25 else (1.0 + np.log(tf)) * t.idf
+    return _merge_topk(cand, scores, k, after)
+
+
+def _maxscore_or(sh: _ShardGroup, k: int, after) -> tuple:
+    """OR top-k: each term's postings restricted to the shard's filters
+    (tags stay CONJUNCTIVE in OR mode, as ES bool ``filter`` clauses;
+    excluded docs leave too), scored by ``wand.maxscore``.  Restricting
+    at decode time keeps the maxscore θ bootstrap a valid lower bound
+    over the FILTERED corpus."""
+    from .wand import maxscore
+
+    allowed = sh.intersect()
+    if not sh.terms or (allowed is not None and allowed.size == 0):
+        return _NO_HITS
+    excl = sh.excluded()
+    lists = []
+    for t in sh.terms.values():
+        ids, tfs = t.postings()
+        keep = np.ones(ids.size, dtype=bool)
+        if allowed is not None:
+            keep &= np.isin(ids, allowed, assume_unique=True)
+        if excl is not None:
+            keep &= ~np.isin(ids, excl, assume_unique=True)
+        lists.append((float(t.ub.max(initial=0.0)), t.idf, ids[keep], tfs[keep]))
+    return maxscore(lists, sh.dl, sh.avgdl, k, after)
+
+
 def _make_kernel(query_tokens: dict, df_global: dict, doc_count: int,
                  avgdl: float, mode: str, k: int | None, n_tags: int = 0,
                  docs_per_shard: int = 0, has_excl: bool = False,
-                 after: tuple | None = None):
-    """Per-shard candidate generation + scoring kernel.
+                 after: tuple | None = None, op: str = "and"):
+    """The per-(qid, shard) kernel: parses the group once
+    (``_ShardGroup``) and hands it to one of three scorers:
 
-    ``after=(score, doc_id)`` is an ES ``search_after`` cursor: only
-    docs strictly after the cursor in the (score DESC, doc_id ASC)
-    total order survive.  The filter is applied to every scored batch
-    BEFORE it can enter the per-shard top-k, so the kth-score pruning
-    threshold is always derived from surviving docs only — block-max
-    skipping stays sound, and per-shard state stays k-bounded no matter
-    how deep the page (unlike offset paging's offset+k).
+    - ``op='or'``: vectorized maxscore (``wand.maxscore``);
+    - BM25 AND with a ``k``, no tag/range filter and no exclusion:
+      block-max top-k (``_blockmax_and``);
+    - every other AND query, parity mode included: exhaustive scoring
+      (``_exhaustive_and``).
 
-    SINGLE grouped input: postings + tag + doc-length rows for this
-    shard ride the same exchange (kind column discriminates).  BM25 doc
-    lengths come from the shard's dense dl array ('len' row) — doc ids
-    are dense per shard, so dl lookup is array indexing and the query
-    plan needs no second cogroup input at all."""
+    SINGLE grouped input: postings, tag and doc-length rows for this
+    shard ride the same exchange (the kind column discriminates).
+    ``after`` is a ``search_after`` cursor (see ``_merge_topk``).
+    Parity mode is unbounded by contract, so it keeps every doc."""
+    if mode != "bm25":
+        k = after = None
+    idf = {t: math.log(doc_count / df) if mode == "parity"
+           else math.log(1.0 + (doc_count - df + 0.5) / (df + 0.5))
+           for t, df in df_global.items()}
+    # a single-term query whose term occurs once in the query string
+    # cannot fail the phrase filter: relative positions are non-empty
+    # iff the doc holds the term, which intersection guarantees
+    phrase = sum(map(len, query_tokens.values())) > 1
 
     def kernel(key, groups_pdf: pd.DataFrame) -> pd.DataFrame:
-        from watertower_spark.functions import codec
-
-        BS = codec.BLOCK_SIZE
         shard = int(key[0])
-        base = shard * docs_per_shard
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "shard": pd.Series(dtype="int32"),
-                              "score": pd.Series(dtype="float64")})
-        if groups_pdf.empty:
-            return empty
-
-        def after_keep(ids: np.ndarray, sc: np.ndarray) -> np.ndarray:
-            # strictly after the cursor in (score DESC, doc_id ASC):
-            # score equality is exact — the same doc reproduces the same
-            # float64 under the same arithmetic, which is how the cursor
-            # was produced
-            a_s, a_d = after
-            return (sc < a_s) | ((sc == a_s) & (ids > a_d))
-
-        term_rows: dict = {}
-        tag_blobs: list = []
-        not_rows: list = []
-        nottag_blobs: list = []
-        dl_arr = None
-        for row in groups_pdf.itertuples(index=False):
-            if row.kind == "term":
-                term_rows[row.name] = row
-            elif row.kind == "len":
-                dl_arr = np.frombuffer(row.doc_blob, dtype=np.int32)
-            elif row.kind == "not":
-                not_rows.append(row)
-            elif row.kind == "nottag":
-                nottag_blobs.append(row.doc_blob)
-            else:
-                tag_blobs.append(row.doc_blob)
-
-        def dl_of(ids: np.ndarray) -> np.ndarray:
-            if dl_arr is None:
-                # postings without a doc_len row = an index integrity gap
-                # (interrupted wave-2 write) — score degraded but LOUDLY
-                import warnings
-
-                warnings.warn(
-                    "shard has postings but no doc_len row; BM25 falls "
-                    "back to dl=avgdl (run resume_build to repair)"
-                )
-                return np.full(ids.size, avgdl, dtype="float64")
-            return dl_arr[ids - base - 1].astype("float64")
-
-        # AND semantics: every query term and every filter tag must have a
-        # group row in this shard; anything absent here vetoes the shard.
-        if len(term_rows) < len(query_tokens) or len(tag_blobs) < n_tags:
-            return empty
-
-        # Block-max top-k fast path: single-term BM25 with no tag filter
-        # and no phrase constraint — process blocks in descending
-        # upper-bound order and stop when no block can beat the kth score.
-        if (
-            mode == "bm25" and k is not None and not tag_blobs
-            and not has_excl
-            and len(query_tokens) == 1
-            and len(next(iter(query_tokens.values()))) == 1
-        ):
-            term = next(iter(query_tokens))
-            row = term_rows[term]
-            df = df_global[term]
-            idf = math.log(1.0 + (doc_count - df + 0.5) / (df + 0.5))
-            # sound per-block upper bound under the CURRENT avgdl: BM25
-            # weight is increasing in tf and decreasing in dl, so
-            # (block max_tf, block min_dl) bound every posting even after
-            # appends/removals drifted avgdl since pack time
-            bmt = np.frombuffer(row.block_max_tf, dtype=np.int32).astype("float64")
-            bmd = np.frombuffer(row.block_min_dl, dtype=np.int32).astype("float64")
-            w_ub = bmt / (bmt + BM25_K1 * (1.0 - BM25_B + BM25_B * bmd / max(avgdl, 1e-9)))
-            ub = idf * (BM25_K1 + 1.0) * w_ub
-            order_b = np.argsort(-ub, kind="stable")
-            block_off = np.frombuffer(row.block_off, dtype=np.int64)
-            tf_off = np.frombuffer(row.block_tf_off, dtype=np.int64)
-            top_ids = np.empty(0, dtype=np.int64)
-            top_sc = np.empty(0, dtype="float64")
-            kth = -np.inf
-            for b in order_b:
-                # strict <: a block with ub == kth can hold a TYING doc
-                # with a smaller doc_id, which the deterministic
-                # tie-break contract must surface
-                if top_ids.size >= k and ub[b] < kth:
-                    break
-                ids, _ = codec.decode_doc_blocks(
-                    row.doc_blob, block_off, int(row.df), np.array([b]), BS
-                )
-                tf = codec.decode_tf_blocks(row.tf_blob, tf_off, np.array([b]))[int(b)].astype("float64")
-                dl = dl_of(ids)
-                denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / max(avgdl, 1e-9))
-                sc = idf * (BM25_K1 + 1.0) * tf / denom
-                if after is not None:
-                    m = after_keep(ids, sc)
-                    ids, sc = ids[m], sc[m]
-                top_ids = np.concatenate((top_ids, ids))
-                top_sc = np.concatenate((top_sc, sc))
-                if top_ids.size > k:
-                    sel = np.lexsort((top_ids, -top_sc))[:k]
-                    top_ids, top_sc = top_ids[sel], top_sc[sel]
-                if top_ids.size >= k:
-                    kth = top_sc.min()
-            return pd.DataFrame({
-                "doc_id": top_ids,
-                "shard": np.full(top_ids.size, shard, dtype="int32"),
-                "score": top_sc,
-            })
-
-        # Multi-term conjunctive block-max top-k (round-3 verdict #7):
-        # BM25 AND with no tag filter.  Classic block-max WAND driven by
-        # the SMALLEST list: its blocks are visited in descending
-        # optimistic-bound order (own block ub + Σ other terms' global
-        # max ub), each refined against the other terms' overlapping
-        # blocks' (block_max_tf, block_min_dl) bounds, and skipped with
-        # NO doc/tf/position decode once no remaining block can beat
-        # the kth score.  The phrase filter only removes candidates, so
-        # pruning by score upper bound before it is sound for top-k;
-        # bounds derive from the same sidecars as the single-term path
-        # and stay sound under avgdl drift.
-        if (
-            mode == "bm25" and k is not None and not tag_blobs
-            and not has_excl
-            and len(query_tokens) >= 2
-        ):
-            terms_by_df = sorted(term_rows, key=lambda t: int(term_rows[t].df))
-            drv, others = terms_by_df[0], terms_by_df[1:]
-            meta: dict = {}
-            for t in terms_by_df:
-                r = term_rows[t]
-                dfg = df_global[t]
-                idf = math.log(1.0 + (doc_count - dfg + 0.5) / (dfg + 0.5))
-                bmt = np.frombuffer(r.block_max_tf, dtype=np.int32).astype("float64")
-                bmd = np.frombuffer(r.block_min_dl, dtype=np.int32).astype("float64")
-                ub = idf * (BM25_K1 + 1.0) * bmt / (
-                    bmt + BM25_K1 * (1.0 - BM25_B + BM25_B * bmd / max(avgdl, 1e-9))
-                )
-                poff = np.frombuffer(r.block_pos_off, dtype=np.int64)
-                meta[t] = dict(
-                    row=r, idf=idf, ub=ub, df=int(r.df),
-                    bl=np.frombuffer(r.block_last, dtype=np.int64),
-                    boff=np.frombuffer(r.block_off, dtype=np.int64),
-                    toff=np.frombuffer(r.block_tf_off, dtype=np.int64),
-                    poff=poff,
-                    pend=np.concatenate((poff[1:], [len(r.pos_blob)])).astype(np.int64),
-                    ids={}, tfs={}, pos={},
-                )
-
-            def _ids(t, b):
-                m = meta[t]
-                got = m["ids"].get(b)
-                if got is None:
-                    got, _ = codec.decode_doc_blocks(
-                        m["row"].doc_blob, m["boff"], m["df"], np.array([b]), BS
-                    )
-                    m["ids"][b] = got
-                return got
-
-            def _tf(t, b):
-                m = meta[t]
-                got = m["tfs"].get(b)
-                if got is None:
-                    got = codec.decode_tf_blocks(
-                        m["row"].tf_blob, m["toff"], np.array([b])
-                    )[b]
-                    m["tfs"][b] = got
-                return got
-
-            def _pos(t, b):
-                m = meta[t]
-                got = m["pos"].get(b)
-                if got is None:
-                    got = codec.decode_position_block(
-                        m["row"].pos_blob, int(m["poff"][b]), int(m["pend"][b]),
-                        min(BS, m["df"] - b * BS),
-                    )
-                    m["pos"][b] = got
-                return got
-
-            dm = meta[drv]
-            loose = dm["ub"] + sum(float(meta[t]["ub"].max()) for t in others)
-            order_b = np.argsort(-loose, kind="stable")
-            top_ids = np.empty(0, dtype=np.int64)
-            top_sc = np.empty(0, dtype="float64")
-            kth = -np.inf
-            for b in order_b:
-                b = int(b)
-                # strict <: a tying block can hold a smaller-doc_id tie
-                # the deterministic tie-break contract must surface
-                if top_ids.size >= k and loose[b] < kth:
-                    break
-                lo_id = int(dm["bl"][b - 1]) + 1 if b else 0
-                hi_id = int(dm["bl"][b])
-                bound = float(dm["ub"][b])
-                feasible = True
-                spans = []
-                for t in others:
-                    blt = meta[t]["bl"]
-                    j0 = int(np.searchsorted(blt, lo_id))
-                    if j0 >= blt.size:
-                        feasible = False  # no overlap ⇒ empty intersection
-                        break
-                    j1 = min(int(np.searchsorted(blt, hi_id)), blt.size - 1)
-                    spans.append((t, j0, j1))
-                    bound += float(meta[t]["ub"][j0:j1 + 1].max())
-                if not feasible:
-                    continue
-                if top_ids.size >= k and bound < kth:
-                    continue  # refined bound prunes; looser blocks may follow
-                cand = _ids(drv, b)
-                for t, _j0, _j1 in spans:
-                    if cand.size == 0:
-                        break
-                    blt = meta[t]["bl"]
-                    needed = np.unique(np.searchsorted(blt, cand))
-                    needed = needed[needed < blt.size]
-                    ids_t = (
-                        np.concatenate([_ids(t, int(j)) for j in needed])
-                        if needed.size else np.empty(0, dtype=np.int64)
-                    )
-                    cand = cand[np.isin(cand, ids_t, assume_unique=True)]
-                if cand.size == 0:
-                    continue
-                # phrase filter on the survivors (search.go:97-99 applies
-                # whenever the query has tokens) — batched per unique
-                # block (see _phrase_rel_keys; the per-doc loop was the
-                # dominant phrase cost)
-                keys = None
-                for t in terms_by_df:
-                    qp = query_tokens[t]
-                    m = meta[t]
-                    blocks_t = np.searchsorted(m["bl"], cand)
-                    pos_lists = [None] * cand.size
-                    for bt in np.unique(blocks_t).tolist():
-                        sel = np.nonzero(blocks_t == bt)[0]
-                        offs_b = np.searchsorted(_ids(t, bt), cand[sel])
-                        lists_b = _pos(t, bt)
-                        for s_, o_ in zip(sel.tolist(), offs_b.tolist()):
-                            pos_lists[s_] = lists_b[o_]
-                    tk = _phrase_rel_keys(pos_lists, qp)
-                    keys = tk if keys is None else keys[np.isin(keys, tk)]
-                    if keys.size == 0:
-                        break
-                if keys is None or keys.size == 0:
-                    continue
-                cand = cand[np.unique(keys // _PHRASE_KEY)]
-                dl = dl_of(cand)
-                sc = np.zeros(cand.size, dtype="float64")
-                for t in terms_by_df:
-                    m = meta[t]
-                    blocks_t = np.searchsorted(m["bl"], cand)
-                    tf = np.empty(cand.size, dtype="float64")
-                    for bt in np.unique(blocks_t).tolist():
-                        sel = blocks_t == bt
-                        tf[sel] = _tf(t, bt)[
-                            np.searchsorted(_ids(t, bt), cand[sel])
-                        ]
-                    denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / max(avgdl, 1e-9))
-                    sc += m["idf"] * (BM25_K1 + 1.0) * tf / denom
-                if after is not None:
-                    keep_a = after_keep(cand, sc)
-                    cand, sc = cand[keep_a], sc[keep_a]
-                    if cand.size == 0:
-                        continue
-                top_ids = np.concatenate((top_ids, cand))
-                top_sc = np.concatenate((top_sc, sc))
-                if top_ids.size > k:
-                    sel = np.lexsort((top_ids, -top_sc))[:k]
-                    top_ids, top_sc = top_ids[sel], top_sc[sel]
-                if top_ids.size >= k:
-                    kth = top_sc.min()
-            return pd.DataFrame({
-                "doc_id": top_ids,
-                "shard": np.full(top_ids.size, shard, dtype="int32"),
-                "score": top_sc,
-            })
-
-        # Seed candidates from the smallest AND-group (int.go:8-10's
-        # smallest-first strategy), then block-skip through the others:
-        # only blocks whose [first, block_last] range can contain a
-        # remaining candidate are decoded at all.
-        term_decoded: dict = {}  # term -> (ids, posting_idx)
-        order = sorted(
-            [("term", t, int(r.df)) for t, r in term_rows.items()]
-            + [("tag", i, 0) for i in range(len(tag_blobs))],
-            key=lambda x: x[2] if x[0] == "term" else len(tag_blobs[x[1]]),
-        )
-        cand = None
-        for kind_, name, _df in order:
-            if cand is not None and cand.size == 0:
-                return empty
-            if kind_ == "tag":
-                ids = codec.decode_sorted(tag_blobs[name])
-                cand = ids if cand is None else cand[np.isin(cand, ids, assume_unique=True)]
-                continue
-            row = term_rows[name]
-            block_off = np.frombuffer(row.block_off, dtype=np.int64)
-            if cand is None:
-                ids, pidx = codec.decode_doc_blocks(
-                    row.doc_blob, block_off, int(row.df),
-                    np.arange(block_off.size), BS,
-                )
-                cand = ids
-            else:
-                block_last = np.frombuffer(row.block_last, dtype=np.int64)
-                needed = np.unique(np.searchsorted(block_last, cand, side="left"))
-                needed = needed[needed < block_last.size]
-                ids, pidx = codec.decode_doc_blocks(
-                    row.doc_blob, block_off, int(row.df), needed, BS
-                )
-                cand = cand[np.isin(cand, ids, assume_unique=True)]
-            term_decoded[name] = (ids, pidx)
-        if cand is None or cand.size == 0:
-            return empty
-
-        # must_not exclusion (ES bool semantics, flagged extension —
-        # the reference DSL is conjunctive-only): docs carrying ANY
-        # excluded term/tag leave the candidate set before the phrase
-        # filter, scoring and top-k, so exclusion can never be undone
-        # by a later stage.  Excluded-term postings decode ONLY the
-        # blocks whose id range overlaps a surviving candidate (same
-        # block-skip as the AND intersection); an excluded term/tag
-        # absent from this shard excludes nothing here.
-        if not_rows or nottag_blobs:
-            excl_parts = [codec.decode_sorted(b) for b in nottag_blobs]
-            for r in not_rows:
-                boff = np.frombuffer(r.block_off, dtype=np.int64)
-                blast = np.frombuffer(r.block_last, dtype=np.int64)
-                needed = np.unique(np.searchsorted(blast, cand, side="left"))
-                needed = needed[needed < blast.size]
-                if needed.size == 0:
-                    continue
-                ids, _ = codec.decode_doc_blocks(
-                    r.doc_blob, boff, int(r.df), needed, BS
-                )
-                excl_parts.append(ids)
-            if excl_parts:
-                ex = np.unique(np.concatenate(excl_parts))
-                cand = cand[~np.isin(cand, ex, assume_unique=True)]
-                if cand.size == 0:
-                    return empty
-
-        def posting_locs(term, c):
-            """candidates → (block, offset-within-block) posting coords."""
-            ids, pidx = term_decoded[term]
-            gp = pidx[np.searchsorted(ids, c)]
-            return gp // BS, gp % BS
-
-        # Phrase filter (search.go:97-99: applied whenever the query has
-        # tokens): decode ONLY the position blocks holding candidates.
-        # A single-term query whose term occurs once in the query string
-        # cannot reject any candidate (relative positions are non-empty
-        # iff the doc contains the term, which intersection guarantees) —
-        # skip the position decode entirely.
-        phrase_needed = query_tokens and not (
-            len(query_tokens) == 1
-            and len(next(iter(query_tokens.values()))) == 1
-        )
-        if phrase_needed:
-            # batched phrase algebra: per term, decode only the blocks
-            # holding candidates, gather each candidate's position array
-            # (list indexing only — no per-doc numpy calls), then
-            # intersect the per-term relative-start key streams in one
-            # vectorized pass (_phrase_rel_keys)
-            keys = None
-            for term, qp in query_tokens.items():
-                row = term_rows[term]
-                blocks, offs = posting_locs(term, cand)
-                pos_off = np.frombuffer(row.block_pos_off, dtype=np.int64)
-                pos_end = np.concatenate((pos_off[1:], [len(row.pos_blob)])).astype(np.int64)
-                df_t = int(row.df)
-                cache = {
-                    int(b): codec.decode_position_block(
-                        row.pos_blob, int(pos_off[int(b)]), int(pos_end[int(b)]),
-                        min(BS, df_t - int(b) * BS),
-                    )
-                    for b in np.unique(blocks)
-                }
-                pos_lists = [
-                    cache[b][o] for b, o in zip(blocks.tolist(), offs.tolist())
-                ]
-                tk = _phrase_rel_keys(pos_lists, qp)
-                keys = tk if keys is None else keys[np.isin(keys, tk)]
-                if keys.size == 0:
-                    return empty
-            cand = cand[np.unique(keys // _PHRASE_KEY)]
-
-        # Scoring — tf decoded per needed block only
-        scores = np.zeros(cand.size, dtype="float64")
-        if query_tokens:
-            dl = dl_of(cand) if mode == "bm25" else None
-            for term in query_tokens:
-                row = term_rows[term]
-                blocks, offs = posting_locs(term, cand)
-                tf_off = np.frombuffer(row.block_tf_off, dtype=np.int64)
-                uniq, inv = np.unique(blocks, return_inverse=True)
-                tf_blocks = codec.decode_tf_blocks(row.tf_blob, tf_off, uniq)
-                # gather per unique block, not per candidate: the old
-                # per-doc genexpr was O(cand) Python iterations for a
-                # head-term query (tens of thousands per shard)
-                tf = np.empty(cand.size, dtype="float64")
-                for i, b in enumerate(uniq.tolist()):
-                    sel = inv == i
-                    tf[sel] = tf_blocks[b][offs[sel]]
-                df = df_global[term]
-                if mode == "bm25":
-                    idf = math.log(1.0 + (doc_count - df + 0.5) / (df + 0.5))
-                    denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / max(avgdl, 1e-9))
-                    scores += idf * (BM25_K1 + 1.0) * tf / denom
-                else:
-                    # tfIdfScore (search.go:182-188); tf>0 always here
-                    scores += (1.0 + np.log(tf)) * math.log(doc_count / df)
-
-        if after is not None and mode == "bm25":
-            keep_a = after_keep(cand.astype("int64"), scores)
-            cand, scores = cand[keep_a], scores[keep_a]
-        out = pd.DataFrame({"doc_id": cand.astype("int64"),
-                            "shard": np.full(cand.size, shard, dtype="int32"),
-                            "score": scores})
-        if k is not None and mode == "bm25" and len(out) > k:
-            out = out.sort_values(["score", "doc_id"], ascending=[False, True]).head(k)
-        return out
+        sh = _ShardGroup(groups_pdf, query_tokens, idf, avgdl, shard * docs_per_shard)
+        if groups_pdf.empty or len(sh.tags) < n_tags:
+            ids, sc = _NO_HITS  # every filter tag must exist in this shard
+        elif op == "or":
+            ids, sc = _maxscore_or(sh, k, after)
+        elif len(sh.terms) < len(query_tokens):
+            ids, sc = _NO_HITS  # AND: an absent term vetoes the shard
+        elif k is not None and query_tokens and not sh.tags and not has_excl:
+            ids, sc = _blockmax_and(sh, k, after, phrase)
+        else:
+            ids, sc = _exhaustive_and(sh, [sh.terms[t] for t in query_tokens],
+                                      mode == "bm25", k, after, phrase)
+        return pd.DataFrame({"doc_id": ids.astype("int64"),
+                             "shard": np.full(ids.size, shard, dtype="int32"),
+                             "score": sc})
 
     return kernel
 
@@ -856,14 +776,11 @@ class SearchEngine:
         doc_store scan whose in-range doc ids are packed per (qid,
         shard) into synthetic tag rows.  Everything unions into ONE
         grouped exchange keyed by (qid, shard) that dispatches each
-        group to its query's kernel (``_make_kernel`` for AND,
-        ``wand.make_or_kernel`` for OR).  Filters and maps are single
+        group to its query's kernel (``_make_kernel``).  Filters and maps are single
         SQL expressions, so plan size and driver cost stay flat as the
         batch grows.  A query that cannot match (k=0, an unknown
         required term, no shard holding every term, …) contributes no
         input at all."""
-        from .wand import make_or_kernel
-
         m = self.manifest
         n_docs, avgdl = int(m["doc_count"]), float(m["avgdl"])
         dps = int(m["docs_per_shard"])
@@ -919,16 +836,10 @@ class SearchEngine:
             # a factory partial pickles the factory by reference; a
             # built kernel closure pickles by value (~3 ms each), which
             # made plan construction grow with the batch width
-            kernels[qid] = (
-                functools.partial(make_or_kernel, s.tokens, df_global, n_docs,
-                                  avgdl, k, n_tags=n_tags, docs_per_shard=dps,
-                                  after=s.after)
-                if s.op == "or" else
-                functools.partial(_make_kernel, s.tokens, df_global, n_docs,
-                                  avgdl, s.mode, k, n_tags=n_tags,
-                                  docs_per_shard=dps,
-                                  has_excl=bool(excl or excl_tags),
-                                  after=s.after if s.mode == "bm25" else None))
+            kernels[qid] = functools.partial(
+                _make_kernel, s.tokens, df_global, n_docs, avgdl, s.mode, k,
+                n_tags=n_tags, docs_per_shard=dps,
+                has_excl=bool(excl or excl_tags), after=s.after, op=s.op)
         if not kernels:
             return self._empty_result()
 

@@ -115,8 +115,11 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
         sized.alias("x")
         # merge hint: as with minhash_lsh_pairs, a statically-planned
         # broadcast would recompute the whole LSH-coding pipeline for
-        # the build side; sort-merge lets both aliases reuse ONE
-        # (table, bucket) exchange (guide §2.4)
+        # the build side.  As sort-merge over an uncached input, both
+        # aliases reuse ONE (table, bucket) exchange, so LSH coding runs
+        # once.  Over a cached input that exchange is not reused and
+        # the coding runs once per side
+        # (test_embedding_lsh_join_exchange_reuse)
         .hint("merge")
         .join(sized.alias("y"), ["table", "bucket"])
         .where(F.col("x.vec_id") < F.col("y.vec_id"))

@@ -1,16 +1,14 @@
-"""Disjunctive (OR) BM25 top-k kernel: vectorized maxscore pruning.
+"""Disjunctive (OR) BM25 top-k scorer: vectorized maxscore pruning.
 
 The reference engine is conjunctive-only (int.go); a practical search
 engine also needs OR semantics.  Classic WAND/maxscore are pointer-
 chasing algorithms designed for serial CPUs; inside an Arrow batch the
 profitable formulation is vectorized **maxscore**:
 
-1. per term, a global upper bound derived from the per-block
-   (block_max_tf, block_min_dl) sidecars evaluated under the LIVE
-   avgdl: ub_t = max over blocks of idf·(k1+1)·tf_max/(tf_max +
-   k1·(1-b+b·dl_min/avgdl)) — sound under avgdl drift from appends/
-   removals (the pack-time block_max_w column is diagnostic only and
-   MUST NOT be used for pruning);
+1. per term, a global upper bound: the max over its blocks of the BM25
+   weight at (block_max_tf, block_min_dl) under the LIVE avgdl — sound
+   under avgdl drift from appends/removals (the pack-time block_max_w
+   column is diagnostic only and MUST NOT be used for pruning);
 2. bootstrap the top-k threshold θ from the highest-ub term alone
    (its kth-best single-term score is a valid lower bound on the final
    kth-best total);
@@ -20,195 +18,65 @@ profitable formulation is vectorized **maxscore**:
 4. score candidates exactly against ALL terms (sorted-array lookups),
    take the top k.
 
-Every step is a numpy array op over decoded FoR blocks — no per-doc
-Python.  Results are exact (pruning only skips docs that provably
-cannot reach the top k).
+The scorer runs over the per-shard decode layer in ``search.py``
+(``_ShardGroup``), which parses the group's rows, decodes each term's
+postings and restricts them to the shard's tag, range and must_not
+filters; this module never reads a group row.  Every step is a numpy
+array op over decoded FoR blocks — no per-doc Python.  Results are
+exact (pruning only skips docs that provably cannot reach the top k).
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
 
-from .index_build import BM25_B, BM25_K1
-
-RESULT_SCHEMA = "doc_id long, shard int, score double"
+from .search import _NO_HITS, _bm25, _merge_topk
 
 
-def _bm25(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.ndarray:
-    denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / max(avgdl, 1e-9))
-    return idf * (BM25_K1 + 1.0) * tf / denom
+def maxscore(terms: list, dl_of, avgdl: float, k: int,
+             after: tuple | None) -> tuple:
+    """One shard's OR top-k as (doc ids, scores).  ``terms`` holds one
+    (ub, idf, doc ids, tfs) per term: its global BM25 bound and its
+    filtered postings; ``dl_of`` maps doc ids to doc lengths and
+    ``after`` is a ``search_after`` cursor."""
+    terms = sorted(terms, key=lambda t: -t[0])
 
+    # bootstrap θ from the highest-ub term's own scores.  With a
+    # search_after cursor the bootstrap is UNSOUND (a doc's single-
+    # term score says nothing about whether its TOTAL score lands
+    # before or after the cursor, so the kth single-term score no
+    # longer lower-bounds the kth SURVIVING total) — deep pages run
+    # with θ=0, i.e. every term essential, exact scoring of the full
+    # union; the cursor filter then bounds the emitted set.
+    theta = 0.0
+    if after is None:
+        _, idf0, ids0, tfs0 = terms[0]
+        sc0 = _bm25(tfs0.astype("float64"), dl_of(ids0), idf0, avgdl)
+        if sc0.size > k:
+            theta = float(np.partition(sc0, -k)[-k])
 
-def make_or_kernel(query_tokens: dict, df_global: dict, doc_count: int,
-                   avgdl: float, k: int, n_tags: int = 0,
-                   docs_per_shard: int = 0, after: tuple | None = None):
-    """Per-shard single-input kernel for disjunctive BM25 top-k (the
-    shard's postings, tag sets and dense dl array all ride one grouped
-    exchange, discriminated by ``kind``).
-
-    Tags are CONJUNCTIVE filters even in OR mode (Elasticsearch bool
-    `filter` semantics, the reference's query shape in
-    webapi/restapi/handlers.go:149-155): a doc must carry every filter
-    tag; the OR disjunction applies to the scored terms only.  The tag
-    restriction is applied at posting-decode time so the maxscore θ
-    bootstrap is a valid lower bound over the FILTERED corpus."""
-
-    def kernel(key, groups_pdf: pd.DataFrame) -> pd.DataFrame:
-        from watertower_spark.functions import codec
-
-        shard = int(key[0])
-        base = shard * docs_per_shard
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "shard": pd.Series(dtype="int32"),
-                              "score": pd.Series(dtype="float64")})
-        if groups_pdf.empty:
-            return empty
-
-        tag_blobs = [row.doc_blob for row in groups_pdf.itertuples(index=False)
-                     if row.kind == "tag"]
-        # every filter tag must exist in this shard or the shard is out
-        if len(tag_blobs) < n_tags:
-            return empty
-        allowed = None
-        for blob in tag_blobs:
-            ids = codec.decode_sorted(blob)
-            allowed = ids if allowed is None else allowed[
-                np.isin(allowed, ids, assume_unique=True)
-            ]
-        if allowed is not None and allowed.size == 0:
-            return empty
-
-        # must_not exclusion (kind='not' excluded-term postings,
-        # kind='nottag' excluded-tag sets): applied at posting-decode
-        # time, like the tag restriction, so the maxscore θ bootstrap
-        # and the essential split stay exact over the EXCLUDED corpus.
-        excl_parts = []
-        for row in groups_pdf.itertuples(index=False):
-            if row.kind == "not":
-                ids, _ = codec.unpack_postings(
-                    {"doc_blob": row.doc_blob, "tf_blob": row.tf_blob,
-                     "block_off": row.block_off, "df": row.df}
-                )
-                excl_parts.append(ids)
-            elif row.kind == "nottag":
-                excl_parts.append(codec.decode_sorted(row.doc_blob))
-        excl = np.unique(np.concatenate(excl_parts)) if excl_parts else None
-
-        dl_arr = None
-        for row in groups_pdf.itertuples(index=False):
-            if row.kind == "len":
-                dl_arr = np.frombuffer(row.doc_blob, dtype=np.int32)
-                break
-
-        def dl_of(ids):
-            if dl_arr is None:
-                import warnings
-
-                warnings.warn(
-                    "shard has postings but no doc_len row; BM25 falls "
-                    "back to dl=avgdl (run resume_build to repair)"
-                )
-                return np.full(ids.size, avgdl, dtype="float64")
-            return dl_arr[ids - base - 1].astype("float64")
-
-        terms = []
-        for row in groups_pdf.itertuples(index=False):
-            if row.kind != "term":
-                continue
-            df = df_global[row.name]
-            idf = math.log(1.0 + (doc_count - df + 0.5) / (df + 0.5))
-            # upper bound from (max_tf, min_dl) under the CURRENT avgdl —
-            # sound even after incremental updates drifted avgdl
-            bmt = np.frombuffer(row.block_max_tf, dtype=np.int32).astype("float64")
-            bmd = np.frombuffer(row.block_min_dl, dtype=np.int32).astype("float64")
-            if bmt.size:
-                w_ub = bmt / (bmt + BM25_K1 * (1.0 - BM25_B + BM25_B * bmd / max(avgdl, 1e-9)))
-                ub = idf * (BM25_K1 + 1.0) * float(w_ub.max())
-            else:
-                ub = 0.0
-            terms.append((ub, idf, row))
-        if not terms:
-            return empty
-        terms.sort(key=lambda t: -t[0])
-
-        decoded: dict = {}
-
-        def decode(row):
-            if row.name not in decoded:
-                ids, tfs = codec.unpack_postings(
-                    {"doc_blob": row.doc_blob, "tf_blob": row.tf_blob,
-                     "block_off": row.block_off, "df": row.df}
-                )
-                if allowed is not None:
-                    keep = np.isin(ids, allowed, assume_unique=True)
-                    ids, tfs = ids[keep], tfs[keep]
-                if excl is not None:
-                    keep = ~np.isin(ids, excl, assume_unique=True)
-                    ids, tfs = ids[keep], tfs[keep]
-                decoded[row.name] = (ids, tfs)
-            return decoded[row.name]
-
-        # bootstrap θ from the highest-ub term's own scores.  With a
-        # search_after cursor the bootstrap is UNSOUND (a doc's single-
-        # term score says nothing about whether its TOTAL score lands
-        # before or after the cursor, so the kth single-term score no
-        # longer lower-bounds the kth SURVIVING total) — deep pages run
-        # with θ=0, i.e. every term essential, exact scoring of the full
-        # union; the cursor filter below then bounds the emitted set.
-        if after is not None:
-            theta = 0.0
-        else:
-            _, idf0, row0 = terms[0]
-            ids0, tfs0 = decode(row0)
-            sc0 = _bm25(tfs0.astype("float64"), dl_of(ids0), idf0, avgdl)
-            if sc0.size > k:
-                theta = float(np.partition(sc0, -k)[-k])
-            else:
-                theta = 0.0
-
-        # essential split: non-essential = longest ascending-ub prefix
-        # whose cumulative ub stays below θ
-        ubs = np.array([t[0] for t in terms])          # descending
-        cum_from_tail = np.cumsum(ubs[::-1])[::-1]     # Σ ub_j for j >= i
-        essential = [
-            t for i, t in enumerate(terms)
-            if i == 0 or cum_from_tail[i] >= theta
-        ]
-
-        cand = None
-        for _, _, row in essential:
-            ids, _ = decode(row)
+    # essential split: non-essential = longest ascending-ub prefix
+    # whose cumulative ub stays below θ.  Σ ub_j for j >= i adds in the
+    # scoring loop's order, so it never sits an ulp below a doc's score
+    ubs = [t[0] for t in terms]  # descending
+    cand = None
+    for i, (_, _, ids, _) in enumerate(terms):
+        if i == 0 or sum(ubs[i:]) >= theta:
             cand = ids if cand is None else np.union1d(cand, ids)
-        if cand is None or cand.size == 0:
-            return empty
+    if cand.size == 0:
+        return _NO_HITS
 
-        scores = np.zeros(cand.size, dtype="float64")
-        dl = dl_of(cand)
-        for _, idf, row in terms:
-            ids, tfs = decode(row)
-            if ids.size == 0:
-                # every posting of this term failed the tag filter in
-                # this shard (routine under prefix expansion: a rare
-                # expanded term + a selective tag) — contributes nothing
-                continue
-            idx = np.searchsorted(ids, cand)
-            idx_c = np.minimum(idx, ids.size - 1)
-            hit = ids[idx_c] == cand
-            tf = np.where(hit, tfs[idx_c], 0).astype("float64")
-            scores += np.where(hit, _bm25(tf, dl, idf, avgdl), 0.0)
-
-        if after is not None:
-            a_s, a_d = after
-            keep = (scores < a_s) | ((scores == a_s) & (cand > a_d))
-            cand, scores = cand[keep], scores[keep]
-        if cand.size > k:
-            sel = np.lexsort((cand, -scores))[:k]
-            cand, scores = cand[sel], scores[sel]
-        return pd.DataFrame({"doc_id": cand.astype("int64"),
-                             "shard": np.full(cand.size, shard, dtype="int32"),
-                             "score": scores})
-
-    return kernel
+    scores = np.zeros(cand.size, dtype="float64")
+    dl = dl_of(cand)
+    for _, idf, ids, tfs in terms:
+        if ids.size == 0:
+            # every posting of this term failed the shard's filters
+            # (routine under prefix expansion: a rare expanded term + a
+            # selective tag) — contributes nothing
+            continue
+        idx = np.searchsorted(ids, cand)
+        idx_c = np.minimum(idx, ids.size - 1)
+        hit = ids[idx_c] == cand
+        tf = np.where(hit, tfs[idx_c], 0).astype("float64")
+        scores += np.where(hit, _bm25(tf, dl, idf, avgdl), 0.0)
+    return _merge_topk(cand, scores, k, after)
