@@ -150,8 +150,7 @@ def child(cpus: int) -> None:
     # GC between the timers, symmetric at both levels, excluded from
     # both measurements.  Diagnosed from the -Xlog:gc timeline of the
     # tmpfs 16-core child (BENCH_SCALING.md round 5).
-    if os.environ.get("WT_GC_HYGIENE", "1") == "1":
-        spark.sparkContext._jvm.System.gc()
+    spark.sparkContext._jvm.System.gc()
 
     eng = SearchEngine(spark, idx)
     queries = [

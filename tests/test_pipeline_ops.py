@@ -1,10 +1,10 @@
-"""Training-data pipeline operators: dedup, similarity search, multimodal."""
+"""Training-data pipeline operators: dedup and similarity search."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from watertower_spark.operators import dedup, multimodal, similarity
+from watertower_spark.operators import dedup, similarity
 
 
 @pytest.fixture(scope="module")
@@ -53,18 +53,6 @@ def test_minhash_lsh_finds_near_dup(token_df):
     assert exact["jaccard"] == 1.0
 
 
-def test_minhash_carry_vs_fetch_equivalent(token_df):
-    """The two physical plans behind minhash_lsh_pairs (hset carried
-    through the band exchange vs candidates-then-fetch) are the SAME
-    operator: identical pairs and jaccard values."""
-    kw = dict(n_hashes=32, bands=16, threshold=0.3)
-    a = {(r["da"], r["db"]): r["jaccard"] for r in
-         dedup.minhash_lsh_pairs(token_df, carry_hsets=True, **kw).collect()}
-    b = {(r["da"], r["db"]): r["jaccard"] for r in
-         dedup.minhash_lsh_pairs(token_df, carry_hsets=False, **kw).collect()}
-    assert a == b and (3, 4) in a
-
-
 def test_minhash_verify_linear_under_boilerplate(spark):
     """Regression (VERDICT r1): a boilerplate shingle shared by 5k docs
     must not explode the exact-Jaccard verification.  Verification is
@@ -73,15 +61,17 @@ def test_minhash_verify_linear_under_boilerplate(spark):
     frequency (the r1 pair×shingle blow-up is structurally impossible)."""
     n = 5000
     boiler = 10**12  # the ONE hash shared by every doc
-    rows = [
-        (d, [boiler, d * 10 + 1, d * 10 + 2, d * 10 + 3]) for d in range(1, n + 1)
-    ]
-    hs = spark.createDataFrame(rows, "doc_id long, hset array<long>")
-    # 2500 disjoint candidate pairs (the LSH stage's output shape)
-    cand = spark.createDataFrame(
-        [(d, d + 1) for d in range(1, n, 2)], "da long, db long"
+
+    def hset(d):
+        return [boiler, d * 10 + 1, d * 10 + 2, d * 10 + 3]
+
+    # 2500 disjoint candidate pairs carrying both hsets (the shape the
+    # band self-join hands the verifier)
+    pairs = spark.createDataFrame(
+        [(d, d + 1, hset(d), hset(d + 1)) for d in range(1, n, 2)],
+        "da long, db long, ha array<long>, hb array<long>",
     )
-    verified = dedup._exact_jaccard_sets(cand, hs, threshold=0.1).collect()
+    verified = dedup._jaccard_from_arrays(pairs, threshold=0.1).collect()
     # every pair shares exactly the boilerplate shingle: j = 1/(4+4-1)
     assert len(verified) == 2500
     assert all(abs(r["jaccard"] - round(1 / 7, 4)) < 1e-9 for r in verified)
@@ -577,367 +567,6 @@ def test_embedding_near_dup_pairs(spark):
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     assert all(v >= 0.95 for v in pairs.values())
     assert (0, 2) not in pairs  # antipodal, cos = -1
-
-
-def test_multimodal_plumbing(spark):
-    media = multimodal.synthesize_media(spark, n=30)
-    feats = multimodal.extract_image_features(media, feat_dim=8).collect()
-    assert len(feats) == sum(1 for r in media.collect() if r["kind"] == "image")
-    assert all(len(r["feat"]) == 8 for r in feats)
-    assert all(r["ok"] for r in feats)  # REAL PPM decode succeeded
-    assert all(abs(sum(r["feat"]) - 1.0) < 1e-3 for r in feats)  # histogram normalized
-
-    frames = multimodal.sample_video_frames(media, every_ms=5000)
-    fr = frames.collect()
-    assert len(fr) > 0
-    assert all(r["ok"] for r in fr)  # REAL Y4M decode succeeded
-    by_media = {}
-    for r in fr:
-        by_media.setdefault(r["media_id"], []).append(r["frame_idx"])
-        # the frame payload is the decoded luma plane, not a byte slice
-        assert len(r["frame"]) == r["width"] * r["height"]
-    durations = {r["media_id"]: r["duration_ms"] for r in media.collect() if r["kind"] == "video"}
-    for mid, idxs in by_media.items():
-        assert sorted(idxs) == list(range(len(idxs)))
-        assert len(idxs) == max(1, durations[mid] // 5000)
-
-    # dirty payloads: same fan-out shape, ok=false, no task retries
-    bad = spark.createDataFrame(
-        [(999, "video", b"\x00garbage", "video/mp4", 16, 16, 12000)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    bad_rows = multimodal.sample_video_frames(bad, every_ms=5000).collect()
-    assert len(bad_rows) == 2 and not any(r["ok"] for r in bad_rows)
-    assert "YUV4MPEG2" in bad_rows[0]["err"]
-
-
-def test_multimodal_real_video_decode_roundtrip():
-    """Y4M decode is REAL: encode → decode is the identity on the luma
-    planes for both mono and 4:2:0 streams (the chroma skip must land
-    every frame offset exactly), and fps metadata survives."""
-    rng = np.random.default_rng(6)
-    frames = rng.integers(0, 256, size=(7, 12, 16), dtype=np.uint8)
-    for cs in ("Cmono", "C420jpeg"):
-        back, fps, got_cs = multimodal.decode_y4m(
-            multimodal.encode_y4m(frames, fps=(30, 1), colorspace=cs)
-        )
-        assert (back == frames).all(), cs
-        assert fps == (30, 1) and got_cs == cs
-    # header-only and truncated streams fail loudly, not silently
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        multimodal.decode_y4m(b"YUV4MPEG2 W16 H12 F30:1 Ip A1:1 Cmono\n")
-    with _pytest.raises(ValueError):
-        multimodal.decode_y4m(
-            multimodal.encode_y4m(frames, colorspace="Cmono")[:-5]
-        )
-    with _pytest.raises(ValueError):
-        multimodal.decode_y4m(b"\x00\x00not a stream")
-
-
-def test_multimodal_real_image_decode_roundtrip():
-    """PPM decode is REAL: encode → decode is the identity, and the
-    nearest-neighbor resize hits exact source pixels."""
-    rng = np.random.default_rng(5)
-    px = rng.integers(0, 256, size=(24, 17, 3), dtype=np.uint8)
-    back = multimodal.decode_image(multimodal.encode_ppm(px))
-    assert (back == px).all()
-    small = multimodal.resize_nearest(px, 8)
-    assert small.shape == (8, 8, 3)
-    assert (small[0, 0] == px[0, 0]).all()
-
-
-def test_png_roundtrip_all_filters():
-    """PNG decode is REAL: encode → decode is the identity for every
-    scanline filter type (None/Sub/Up/Average/Paeth), and the stream is
-    genuinely DEFLATE-compressed (smaller than the raw raster on
-    compressible input)."""
-    rng = np.random.default_rng(11)
-    px = rng.integers(0, 256, size=(21, 13, 3), dtype=np.uint8)
-    for ft in range(5):
-        back = multimodal.decode_png(multimodal.encode_png(px, filter_type=ft))
-        assert (back == px).all(), f"filter {ft}"
-    # decode_image dispatches on the signature
-    assert (multimodal.decode_image(multimodal.encode_png(px)) == px).all()
-    # real compression: a gradient raster shrinks well below raw size
-    grad = np.tile(np.arange(64, dtype=np.uint8)[None, :, None], (64, 1, 3))
-    assert len(multimodal.encode_png(grad, filter_type=1)) < grad.nbytes // 4
-
-
-def test_png_gray_rgba_and_split_idat():
-    """Gray broadcasts to RGB, RGBA drops alpha, and IDAT split across
-    multiple chunks (as external encoders emit) reassembles."""
-    import struct
-    import zlib
-
-    rng = np.random.default_rng(12)
-    gray = rng.integers(0, 256, size=(9, 7), dtype=np.uint8)
-    out = multimodal.decode_png(multimodal.encode_png(gray, filter_type=2))
-    assert out.shape == (9, 7, 3) and (out[:, :, 0] == gray).all() \
-        and (out == out[:, :, :1]).all()
-
-    rgba = rng.integers(0, 256, size=(6, 5, 4), dtype=np.uint8)
-    out = multimodal.decode_png(multimodal.encode_png(rgba, filter_type=4))
-    assert (out == rgba[:, :, :3]).all()
-
-    # re-chunk a valid stream so the IDAT arrives in two pieces
-    px = rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-    png = multimodal.encode_png(px)
-    sig, pos, chunks = png[:8], 8, []
-    while pos < len(png):
-        (length,) = struct.unpack(">I", png[pos:pos + 4])
-        chunks.append((png[pos + 4:pos + 8], png[pos + 8:pos + 8 + length]))
-        pos += 12 + length
-    rebuilt = sig
-    for ctype, data in chunks:
-        if ctype == b"IDAT":
-            for part in (data[: len(data) // 2], data[len(data) // 2:]):
-                rebuilt += multimodal._png_chunk(b"IDAT", part)
-        else:
-            rebuilt += multimodal._png_chunk(ctype, data)
-    assert (multimodal.decode_png(rebuilt) == px).all()
-
-
-def test_png_rejects_corruption():
-    """CRC damage, truncation, and unsupported layouts fail loudly into
-    the (ok=false, err) contract — never a garbage raster."""
-    px = np.zeros((4, 4, 3), dtype=np.uint8)
-    png = bytearray(multimodal.encode_png(px))
-    png[40] ^= 0xFF  # flip a byte inside a chunk body
-    with pytest.raises(ValueError):
-        multimodal.decode_png(bytes(png))
-    with pytest.raises(ValueError):  # cut mid-IDAT: header parses, no raster
-        multimodal.decode_png(multimodal.encode_png(px)[:40])
-    # Adam7 interlace flag set
-    import struct as _s
-    ihdr = _s.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 1)
-    bad = multimodal._PNG_SIG + multimodal._png_chunk(b"IHDR", ihdr)
-    with pytest.raises(ValueError):
-        multimodal.decode_png(bad + multimodal._png_chunk(b"IEND", b""))
-    # 16-bit depth
-    ihdr = _s.pack(">IIBBBBB", 4, 4, 16, 2, 0, 0, 0)
-    bad = multimodal._PNG_SIG + multimodal._png_chunk(b"IHDR", ihdr)
-    with pytest.raises(ValueError):
-        multimodal.decode_png(bad + multimodal._png_chunk(b"IEND", b""))
-
-
-def test_png_flows_through_image_pipeline(spark):
-    """A PNG payload rides the same mapInPandas feature/resize path as
-    PPM (synthesize_media now emits both)."""
-    rng = np.random.default_rng(13)
-    px = rng.integers(0, 256, size=(20, 20, 3), dtype=np.uint8)
-    rows = [(1, "image", multimodal.encode_png(px, filter_type=3), "image/png",
-             20, 20, 0)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    feats = multimodal.extract_image_features(media, feat_dim=8).collect()
-    assert len(feats) == 1 and feats[0]["ok"]
-    resized = multimodal.resize_images(media, side=8).collect()
-    assert resized[0]["ok"]
-    assert resized[0]["pixels"] == multimodal.resize_nearest(px, 8).tobytes()
-
-
-def _psnr(a, b):
-    mse = np.mean((a.astype(float) - b.astype(float)) ** 2)
-    return 10 * np.log10(255**2 / mse) if mse else np.inf
-
-
-def test_jpeg_roundtrip():
-    """Baseline JPEG is REAL lossy compression: flat blocks survive
-    bit-exact, smooth content round-trips at high PSNR well under raw
-    size, 4:2:0 keeps luma fidelity, gray broadcasts to RGB, and
-    decode_image dispatches on the SOI signature."""
-    from watertower_spark.operators import jpeg
-
-    flat = np.full((16, 24, 3), 130, dtype=np.uint8)
-    assert (jpeg.decode_jpeg(jpeg.encode_jpeg(flat, quality=90)) == flat).all()
-
-    yy, xx = np.mgrid[0:64, 0:96]
-    smooth = np.stack([
-        (127 + 120 * np.sin(xx / 9.0) * np.cos(yy / 7.0)),
-        (127 + 120 * np.cos(xx / 13.0)),
-        (127 + 120 * np.sin(yy / 11.0))], axis=2).clip(0, 255).astype(np.uint8)
-    enc = jpeg.encode_jpeg(smooth, quality=85)
-    assert len(enc) < smooth.nbytes // 4  # real compression
-    assert _psnr(jpeg.decode_jpeg(enc), smooth) > 40
-
-    # 4:2:0: overall PSNR drops on chroma, luma stays faithful
-    enc420 = jpeg.encode_jpeg(smooth, quality=85, subsample=True)
-    dec420 = jpeg.decode_jpeg(enc420)
-    assert len(enc420) < len(enc)
-    luma = lambda p: p.astype(float) @ np.array([0.299, 0.587, 0.114])  # noqa: E731
-    assert _psnr(luma(dec420), luma(smooth)) > 35
-
-    rng = np.random.default_rng(21)
-    g = rng.integers(0, 256, size=(17, 19), dtype=np.uint8)
-    dec = jpeg.decode_jpeg(jpeg.encode_jpeg(g, quality=95))
-    assert dec.shape == (17, 19, 3) and (dec == dec[:, :, :1]).all()
-    assert _psnr(dec[:, :, 0], g) > 30
-
-    px = rng.integers(0, 256, size=(20, 20, 3), dtype=np.uint8)
-    assert _psnr(multimodal.decode_image(jpeg.encode_jpeg(px, quality=95)), px) > 30
-
-
-def test_jpeg_rejects_non_baseline_and_corruption():
-    from watertower_spark.operators import jpeg
-
-    with pytest.raises(ValueError):
-        jpeg.decode_jpeg(b"\x00not a jpeg")
-    # progressive SOF2 refused explicitly
-    import struct
-    sof2 = b"\xff\xd8\xff\xc2" + struct.pack(">H", 8) + b"\x08\x00\x10\x00\x10\x01"
-    with pytest.raises(ValueError, match="baseline"):
-        jpeg.decode_jpeg(sof2)
-    flat = np.full((8, 8, 3), 99, dtype=np.uint8)
-    enc = jpeg.encode_jpeg(flat)
-    with pytest.raises(ValueError):
-        jpeg.decode_jpeg(enc[:30])  # truncated inside a segment
-
-
-def test_jpeg_fill_bytes_and_truncated_entropy():
-    """ADVICE r4: T.81 B.1.1.2 allows any number of 0xFF fill bytes
-    before a marker (external baseline encoders emit them) — they must
-    not be misread as a marker code with a bogus length.  And entropy
-    data cut off without a trailing marker must raise the documented
-    ValueError, never IndexError."""
-    from watertower_spark.operators import jpeg
-
-    rng = np.random.default_rng(13)
-    px = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    enc = jpeg.encode_jpeg(px, quality=90)
-    # inject fill bytes before every HEADER marker (fill inside the
-    # entropy-coded segment is a different mechanism, out of scope here)
-    sos_at = enc.find(b"\xff\xda")
-    padded, i = bytearray(enc[:2]), 2
-    while i < len(enc):
-        if i <= sos_at and enc[i] == 0xFF and enc[i + 1] != 0x00:
-            padded += b"\xff\xff\xff"
-        padded.append(enc[i])
-        i += 1
-    assert (jpeg.decode_jpeg(bytes(padded)) == jpeg.decode_jpeg(enc)).all()
-    # entropy truncation: cut after SOS, before the EOI marker
-    sos = enc.find(b"\xff\xda")
-    cut = enc[: sos + 40]
-    assert not cut.endswith(b"\xff\xd9")
-    with pytest.raises(ValueError):
-        jpeg.decode_jpeg(cut)
-
-
-def test_avi_mjpeg_roundtrip_and_dispatch():
-    """MJPEG-AVI is a REAL compressed video container: RIFF chunk walk
-    recovers frame count / fps / near-identical smooth frames, and the
-    frame-sampling dispatcher returns its luma planes."""
-    yy, xx = np.mgrid[0:24, 0:32]
-    frames = np.stack([
-        np.stack([(127 + 100 * np.sin(xx / 5.0 + t)).clip(0, 255),
-                  (127 + 100 * np.cos(yy / 4.0 - t)).clip(0, 255),
-                  np.full_like(xx, 90, dtype=float)], axis=2)
-        for t in range(6)]).astype(np.uint8)
-    avi = multimodal.encode_avi_mjpeg(frames, fps=(30, 1), quality=92)
-    assert len(avi) < frames.nbytes // 2  # compressed
-    rgb, fps = multimodal.decode_avi_mjpeg(avi)
-    assert rgb.shape == frames.shape and fps == (30, 1)
-    assert np.abs(rgb.astype(int) - frames.astype(int)).mean() < 3.0
-    luma, fps2 = multimodal.decode_video_luma(avi)
-    assert luma.shape == frames.shape[:3] and fps2 == (30, 1)
-
-    # RIFF but not AVI (a WAVE) and truncated chunks fail loudly
-    with pytest.raises(ValueError):
-        multimodal.decode_video_luma(b"RIFF\x10\x00\x00\x00WAVExxxx")
-    with pytest.raises(ValueError):
-        multimodal.decode_avi_mjpeg(avi[: len(avi) // 2])
-    # non-MJPEG vids stream refused by codec fourcc
-    bad = avi.replace(b"vidsMJPG", b"vidsH264", 1)
-    with pytest.raises(ValueError, match="codec"):
-        multimodal.decode_avi_mjpeg(bad)
-
-
-def test_avi_flows_through_frame_sampler(spark):
-    rng = np.random.default_rng(31)
-    frames = rng.integers(0, 256, size=(12, 16, 16, 3), dtype=np.uint8)
-    avi = multimodal.encode_avi_mjpeg(frames, fps=(4, 1), quality=90)
-    rows = [(5, "video", avi, "video/x-msvideo", 16, 16, 3000)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.sample_video_frames(media, every_ms=1000).collect()
-    assert len(out) == 3 and all(r["ok"] for r in out)
-    assert all(len(r["frame"]) == 256 for r in out)
-
-
-def test_multimodal_dirty_payload_error_rows(spark):
-    """Undecodable payloads become (ok=false, err) rows, never task
-    failures — the CC-scale dirty-media contract."""
-    rows = [(0, "image", b"\x89PNG not actually decodable", "image/png", 4, 4, 0)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_image_features(media, feat_dim=4).collect()
-    assert len(out) == 1 and out[0]["ok"] is False
-    assert "unsupported image format" in out[0]["err"]
-
-
-def test_multimodal_real_audio_features(spark):
-    """WAV decode is REAL (stdlib wave): duration and RMS computed from
-    the actual PCM samples of a known sine clip."""
-    rate, ms, amp = 8000, 500, 6000
-    t = np.arange(int(rate * ms / 1000))
-    sig = (amp * np.sin(2 * np.pi * 440 * t / rate)).astype(np.int16)
-    rows = [(7, "audio", multimodal.encode_wav_pcm16(sig, rate), "audio/wav", 0, 0, 0),
-            (8, "audio", b"junk", "audio/wav", 0, 0, 0)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in multimodal.extract_audio_features(media).collect()}
-    good = out[7]
-    assert good["ok"] and good["sample_rate"] == rate
-    assert good["duration_ms"] == ms
-    # sine RMS = amp/sqrt(2) within quantization error
-    assert abs(good["rms"] - amp / np.sqrt(2)) < amp * 0.01
-    assert 0.05 < good["zcr"] < 0.2  # 440 Hz at 8 kHz → ~0.11
-    assert out[8]["ok"] is False
-
-
-def test_ima_adpcm_roundtrip_and_dispatch(spark):
-    """IMA ADPCM WAV (format tag 0x0011) is a REAL 4:1 lossy codec:
-    encode → decode reconstructs the waveform within ADPCM's known
-    error envelope, payload is ~4× smaller than PCM16, and decode_wav
-    dispatches to it so the audio feature pipeline just works."""
-    rate, ms, amp = 8000, 500, 6000
-    t = np.arange(int(rate * ms / 1000))
-    sig = (amp * np.sin(2 * np.pi * 440 * t / rate)).astype(np.int16)
-    payload = multimodal.encode_wav_ima_adpcm(sig, rate)
-    # real compression: ~4:1 vs 2-byte PCM (block headers cost a bit)
-    assert len(payload) < len(sig) * 2 / 3.5
-    back, got_rate = multimodal.decode_wav_ima_adpcm(payload)
-    assert got_rate == rate and len(back) == len(sig)
-    # ADPCM tracks a 440 Hz sine closely once the step size adapts
-    err = np.abs(back[64:].astype(np.int64) - sig[64:].astype(np.int64))
-    assert float(err.mean()) < amp * 0.05
-    # dispatch: decode_wav tries PCM then falls through to ADPCM
-    via_dispatch, r2 = multimodal.decode_wav(payload)
-    assert r2 == rate and (via_dispatch == back).all()
-    # feature pipeline end-to-end over the compressed payload
-    rows = [(11, "audio", payload, "audio/wav", 0, 0, 0)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    (row,) = multimodal.extract_audio_features(media).collect()
-    assert row["ok"] and row["sample_rate"] == rate
-    assert row["duration_ms"] == ms
-    assert abs(row["rms"] - amp / np.sqrt(2)) < amp * 0.05
-
-
-def test_ima_adpcm_truncation_rejected():
-    sig = (3000 * np.sin(np.arange(4000) / 5)).astype(np.int16)
-    payload = multimodal.encode_wav_ima_adpcm(sig, 16000)
-    with pytest.raises(ValueError):
-        multimodal.decode_wav_ima_adpcm(payload[:30])
-    with pytest.raises(ValueError):
-        multimodal.decode_wav_ima_adpcm(b"RIFF\x00\x00\x00\x00JUNK")
-    with pytest.raises(ValueError):
-        # PCM16 header but ADPCM decoder asked directly
-        multimodal.decode_wav_ima_adpcm(
-            multimodal.encode_wav_pcm16(sig[:100], 8000))
-
-
-def test_multimodal_resize_images(spark):
-    media = multimodal.synthesize_media(spark, n=9)
-    out = multimodal.resize_images(media, side=16).collect()
-    assert len(out) == 3 and all(r["ok"] for r in out)
-    assert all(len(r["pixels"]) == 16 * 16 * 3 for r in out)
 
 
 def test_ivf_knn_recall(spark):

@@ -72,23 +72,14 @@ def _shingle_sets(tokens: DataFrame, k: int = 3) -> DataFrame:
     ).where(F.size("hset") > 0)
 
 
-def minhash_signatures(tokens: DataFrame, n_hashes: int = 32, k: int = 3, seed: int = 7) -> DataFrame:
-    """(doc_id, sig array<long>): MinHash over k-token shingles.
+def _signatures_from_sets(hs: DataFrame, n_hashes: int, seed: int) -> DataFrame:
+    """(doc_id, hset, sig): MinHash over a (doc_id, hset) relation.
 
-    h_i(x) = (a_i * xxhash64(x) + b_i) mod 4294967311 (the smallest prime
-    above 2^32; base hashes are folded into [0, 2^32) first so the affine
-    products stay under 2^62 — see HASH_PRIME/_COEF_MAX above) — one base
-    hash per shingle, n permutations as cheap affine maps, all JVM-side
-    columnar.
-    """
-    return _signatures_from_sets(_shingle_sets(tokens, k), n_hashes, seed)
-
-
-def _signatures_from_sets(
-    hs: DataFrame, n_hashes: int, seed: int, keep_hset: bool = False
-) -> DataFrame:
-    """(doc_id[, hset], sig) from a (doc_id, hset) relation — pure map
-    stage (array_min over the affine-permuted hash array), no shuffle."""
+    h_i(x) = (a_i * x + b_i) mod 4294967311 (the smallest prime above
+    2^32; base hashes are folded into [0, 2^32) first so the affine
+    products stay under 2^62 — see HASH_PRIME/_COEF_MAX above) — n
+    permutations as cheap affine maps, a pure map stage (array_min over
+    the permuted hash array), no shuffle."""
     import random
 
     rnd = random.Random(seed)
@@ -108,8 +99,7 @@ def _signatures_from_sets(
         f"array_min(transform(hx, x -> pmod({a[i]} * x + {b[i]}, {HASH_PRIME})))"
         for i in range(n_hashes)
     )
-    keep = ["hset"] if keep_hset else []
-    return hx.select("doc_id", *keep, F.expr(f"array({mins})").alias("sig"))
+    return hx.select("doc_id", "hset", F.expr(f"array({mins})").alias("sig"))
 
 
 def minhash_lsh_pairs(
@@ -120,7 +110,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     max_bucket: int = 1000,
     seed: int = 7,
-    carry_hsets: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (da, db, jaccard) with jaccard >= threshold.
 
@@ -133,7 +122,7 @@ def minhash_lsh_pairs(
     The per-doc hset array computed by ``_shingle_sets`` rides THROUGH
     the banding self-join, so every candidate pair emerges with both
     shingle sets attached and verification is a columnar
-    ``array_intersect`` after a (da, db) dedup — three narrow shuffles
+    ``array_intersect`` before the (da, db) dedup — three narrow shuffles
     (doc groupBy, band-bucket exchange, pair dedup), with NO
     pair×shingle expansion anywhere (the r1 boilerplate-explosion class
     of failure is structurally impossible).  Both join sides are the
@@ -142,15 +131,9 @@ def minhash_lsh_pairs(
     derived TWICE, because AQE does not reuse an exchange that sits
     above a cached-table scan (its TableCacheQueryStage is never
     shared), so each side re-reads and re-shingles the input.
-    The band exchange carries each doc's hset once per band
-    (``carry_hsets=True``, the default); at CC scale that is bands× the
-    shingle bytes, the trade for eliminating two verification joins
-    against a second token-stream pass.  ``carry_hsets=False`` selects
-    the candidates-then-fetch plan instead: the band exchange ships
-    only (doc_id, band, bucket) and the deduped candidate pairs fetch
-    both hsets via two joins (``_exact_jaccard_sets``) — cheaper on the
-    exchange, one extra token-stream derivation.  Same pairs, same
-    jaccard values, measured head-to-head in bench_minhash_ab.py.
+    The band exchange carries each doc's hset once per band; at CC
+    scale that is bands× the shingle bytes, the trade for needing no
+    verification joins against a second token-stream pass.
     """
     if not 1 <= bands <= n_hashes or n_hashes % bands:
         raise ValueError(
@@ -160,19 +143,17 @@ def minhash_lsh_pairs(
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must lie in (0, 1]; got {threshold}")
     rows_per_band = n_hashes // bands
-    hs = _shingle_sets(tokens, k)
-    sig = _signatures_from_sets(hs, n_hashes, seed, keep_hset=carry_hsets)
+    sig = _signatures_from_sets(_shingle_sets(tokens, k), n_hashes, seed)
     band_cols = F.array(
         *[
             F.hash(F.slice("sig", i * rows_per_band + 1, rows_per_band))
             for i in range(bands)
         ]
     )
-    # one exploded (doc_id[, hset], band, bucket) relation → ONE
+    # one exploded (doc_id, hset, band, bucket) relation → ONE
     # self-join on (band, bucket) replaces a join per band (fewer
     # stages, same pairs)
-    carry = ["hset"] if carry_hsets else []
-    banded = sig.select("doc_id", *carry, F.posexplode(band_cols).alias("band", "bucket"))
+    banded = sig.select("doc_id", "hset", F.posexplode(band_cols).alias("band", "bucket"))
     sized = banded.withColumn(
         "bsz", F.count("*").over(Window.partitionBy("band", "bucket"))
     ).where(F.col("bsz") <= max_bucket).drop("bsz")
@@ -194,11 +175,6 @@ def minhash_lsh_pairs(
         .join(sized.alias("y"), ["band", "bucket"])
         .where(F.col("x.doc_id") < F.col("y.doc_id"))
     )
-    if not carry_hsets:
-        cand = joined.select(
-            F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db")
-        ).distinct()  # a pair can collide in several bands
-        return _exact_jaccard_sets(cand, hs, threshold)
     # verify FIRST, dedup SECOND: jaccard is computed map-side straight
     # off the join output and the per-band duplicate collisions are
     # deduped on the narrow (da, db, jaccard) rows — the dedup exchange
@@ -228,23 +204,6 @@ def _jaccard_from_arrays(pairs: DataFrame, threshold: float) -> DataFrame:
         .where(F.col("jaccard") >= threshold)
         .select("da", "db", "jaccard")
     )
-
-
-def _exact_jaccard_sets(cand: DataFrame, hs: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard for externally-supplied candidate pairs: two joins
-    attach the per-doc arrays, then the columnar verifier — one output
-    row per candidate, no explosion.  merge hints for the same reason
-    as the banding self-join: a statically-chosen broadcast of the hs
-    side would RE-DERIVE the shingle pipeline per join instead of
-    reusing its exchange."""
-    pairs = cand.join(
-        hs.select(F.col("doc_id").alias("da"), F.col("hset").alias("ha"))
-        .hint("merge"), "da"
-    ).join(
-        hs.select(F.col("doc_id").alias("db"), F.col("hset").alias("hb"))
-        .hint("merge"), "db"
-    )
-    return _jaccard_from_arrays(pairs, threshold)
 
 
 def winnow_fingerprints(tokens: DataFrame, k: int = 4, w: int = 4) -> DataFrame:
@@ -282,9 +241,7 @@ def winnow_fingerprints(tokens: DataFrame, k: int = 4, w: int = 4) -> DataFrame:
     )
 
 
-def duplicate_spans(
-    tokens: DataFrame, L: int = 8, persist_windows: bool = False
-) -> DataFrame:
+def duplicate_spans(tokens: DataFrame, L: int = 8) -> DataFrame:
     """(doc_id, span_start, span_end, n_windows) — maximal token spans
     whose every L-token window also occurs earlier in the corpus.
 
@@ -317,9 +274,7 @@ def duplicate_spans(
     handles hot boilerplate hashes) and one doc_id exchange for the
     island merge — no cross join, no Python.  The window relation
     feeds BOTH join sides, so Catalyst re-derives it twice from the
-    token stream (a narrow, map-only recompute); pass
-    ``persist_windows=True`` to trade executor memory for the second
-    pass on very wide corpora.
+    token stream (a narrow, map-only recompute).
     """
     pw = Window.partitionBy("doc_id").orderBy("pos")
     cols = [F.col("term")] + [F.lead("term", i).over(pw).alias(f"t{i}") for i in range(1, L)]
@@ -334,8 +289,6 @@ def duplicate_spans(
             ).alias("wh"),
         )
     )
-    if persist_windows:
-        wins = wins.persist()
     dup = (
         wins.groupBy("wh")
         .agg(F.count("*").alias("cnt"), F.min(F.struct("doc_id", "pos")).alias("keep"))

@@ -61,13 +61,13 @@ FORMAT_VERSION = 6
 
 # Parquet codec for every index table write (build + mutations).  Not a
 # format change: parquet files self-describe their codec, so readers and
-# existing indexes are unaffected.  Measured (bench_codec_ab.py, 1M
-# docs, 16 pinned cores, interleaved best-of-3): zstd writes 37% fewer
-# bytes than snappy (529 -> 334 MB; doc_store -38%, postings -34%) at
-# identical build wall-clock (41.6 vs 41.8 s best) — and bytes on
-# disk/network are the scarce resource at crawl scale, as the round-5
-# scaling tally showed (the disk-bound doc_tables phase absorbs every
-# degraded-window loss).
+# existing indexes are unaffected.  Measured (BENCH_SCALING.md, round-5
+# codec A/B: 1M docs, 16 pinned cores, interleaved best-of-3): zstd
+# writes 37% fewer bytes than snappy (529 -> 334 MB; doc_store -38%,
+# postings -34%) at identical build wall-clock (41.6 vs 41.8 s best) —
+# and bytes on disk/network are the scarce resource at crawl scale, as
+# the round-5 scaling tally showed (the disk-bound doc_tables phase
+# absorbs every degraded-window loss).
 PARQUET_CODEC = "zstd"
 
 # term_stats bucket count.  Sized so one bucket of a 10^9-term

@@ -36,8 +36,8 @@ Extraction contract (documented, deterministic):
 
 Malformed UTF-8 in a binary payload decodes with U+FFFD replacement
 (cast + ``make_valid_utf8``; Spark 4's ANSI ``decode`` would raise) —
-dirty rows never fail the job, the same contract as multimodal's
-(ok, err) rows and weburl's null host.
+dirty rows never fail the job: a bad row yields a defined value, never
+an exception (the same contract as weburl's null host).
 """
 
 from __future__ import annotations

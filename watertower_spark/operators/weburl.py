@@ -18,8 +18,8 @@ host statistics at any scale:
 - empty path → ``/``.
 
 Non-URL strings (no ``scheme://``) pass through unchanged with a null
-host, so dirty rows never fail the job (the CC dirty-data contract,
-same as multimodal's (ok, err) rows).
+host, so dirty rows never fail the job (the CC dirty-data contract: a
+bad row yields a defined value, never an exception).
 """
 
 from __future__ import annotations

@@ -71,15 +71,12 @@ def get_spark(
         # heap residency climbing 8.5 -> 20 GB across a post-build query
         # set, with multi-second young pauses).  Cap the UI stores and
         # run the cleaner GC often; both are invisible to job results.
+        .config("spark.ui.retainedJobs", "200")
+        .config("spark.ui.retainedStages", "200")
+        .config("spark.ui.retainedTasks", "10000")
+        .config("spark.sql.ui.retainedExecutions", "50")
+        .config("spark.cleaner.periodicGC.interval", "2min")
     )
-    if os.environ.get("WT_GC_HYGIENE", "1") == "1":  # A/B hook, default on
-        builder = (
-            builder.config("spark.ui.retainedJobs", "200")
-            .config("spark.ui.retainedStages", "200")
-            .config("spark.ui.retainedTasks", "10000")
-            .config("spark.sql.ui.retainedExecutions", "50")
-            .config("spark.cleaner.periodicGC.interval", "2min")
-        )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
