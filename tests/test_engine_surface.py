@@ -681,6 +681,8 @@ def test_zero_doc_index_loads_and_serves_empty(spark, tmp_index_root):
     assert eng.find_by_key("nope://x").count() == 0
     assert eng.get_docs([1, 2]).count() == 0
     assert eng.count("anything") == 0
+    assert eng.search_prefix("any").count() == 0
+    assert eng.search_fuzzy("anything").count() == 0
     # grows into a normal index
     rows = corpus.fixture_rows(("searchdata",))[:3]
     d2 = spark.createDataFrame(

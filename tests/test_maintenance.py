@@ -745,3 +745,183 @@ def test_delete_by_query_differential(spark, tmp_index_root):
              eng2.search(q, None, "en", mode="bm25", k=20).collect()}
         assert a == b, q
     assert eng1.search("post", None, "en").count() == 0
+
+
+def _index_view(spark, idx):
+    """Everything a mutation writes, keyed by url instead of doc id (a
+    fresh build numbers the same corpus differently)."""
+    import numpy as np
+
+    from watertower_spark.functions import codec
+    from watertower_spark.operators.index_build import table_path
+
+    m = load_manifest(idx)
+    dps = m["docs_per_shard"]
+    url_of = {r["doc_id"]: r["url"] for r in
+              spark.read.parquet(table_path(idx, m, "doc_map")).collect()}
+    stats = {url_of[r["doc_id"]]: (r["wc"], r["twc"]) for r in
+             spark.read.parquet(f"{idx}/doc_stats").collect()}
+    dl = {}
+    for r in spark.read.parquet(f"{idx}/doc_len").collect():
+        arr = np.frombuffer(r["dl_blob"], dtype=np.int32)
+        for d, u in url_of.items():
+            if (d - 1) // dps == r["shard"]:
+                dl[u] = int(arr[d - r["shard"] * dps - 1])
+    postings = {}
+    for r in spark.read.parquet(f"{idx}/postings").collect():
+        ids, tfs = codec.unpack_postings(r.asDict())
+        pos = codec.unpack_position_lists(r["pos_blob"], len(ids))
+        for d, tf, p in zip(ids, tfs, pos):
+            postings[(r["term"], url_of[int(d)])] = (int(tf), tuple(p.tolist()))
+    ts = {(r["term"], r["df"], r["cf"]) for r in
+          spark.read.parquet(table_path(idx, m, "term_stats")).collect()}
+    return m, ts, stats, dl, postings
+
+
+def test_mutations_equal_fresh_build(spark, tmp_index_root):
+    """build → append → remove (one whole shard and one doc of another)
+    → upsert (one changed, one unchanged body) leaves exactly what a
+    fresh build over the final corpus writes: term statistics, doc
+    lengths, decoded postings with positions, manifest Σwc/avgdl and
+    search results, compared by url."""
+    import math
+
+    rows = corpus.fixture_rows(("searchdata",))
+    idx = f"{tmp_index_root}/mut_vs_fresh"
+    shutil.rmtree(idx, ignore_errors=True)
+    docs, tags = _mkdocs(spark, rows[:5])
+    build_index(docs, tags, idx, docs_per_shard=2)  # shards 0,1: 2 docs; 2: 1
+    docs2, tags2 = _mkdocs(spark, rows[5:])
+    append_documents(spark, idx, docs2, tags2)      # shard 3
+    gone = [r["url"] for r in rows[1:4]]            # shard 1 whole + one of 0
+    remove_documents(spark, idx, spark.createDataFrame([(u,) for u in gone], "url string"))
+    changed = {**rows[0], "text": "100 Continue\n\nxylophone zebra request response."}
+    docs_u, tags_u = _mkdocs(spark, [changed, rows[5]])
+    upsert_documents(spark, idx, docs_u, tags_u)
+
+    final = [changed] + [r for r in rows[4:]]
+    ref = f"{tmp_index_root}/mut_vs_fresh_ref"
+    shutil.rmtree(ref, ignore_errors=True)
+    docs_f, tags_f = _mkdocs(spark, final)
+    build_index(docs_f, tags_f, ref, docs_per_shard=2)
+
+    m, ts, stats, dl, postings = _index_view(spark, idx)
+    m_ref, ts_ref, stats_ref, dl_ref, postings_ref = _index_view(spark, ref)
+    assert ts == ts_ref
+    assert stats == stats_ref and len(stats) == len(final)
+    assert dl == dl_ref and dl == {u: wc for u, (wc, _twc) in stats.items()}
+    assert postings == postings_ref
+    assert m["doc_count"] == m_ref["doc_count"] == len(final)
+    assert m["sum_wc"] == m_ref["sum_wc"]
+    assert math.isclose(m["avgdl"], m_ref["avgdl"])
+
+    eng, eng_ref = SearchEngine(spark, idx), SearchEngine(spark, ref)
+    for q in ("request", "xylophone"):
+        for mode in ("bm25", "parity"):
+            got = {(r["url"], round(r["score"], 9)) for r in
+                   eng.search(q, None, "en", mode=mode, k=10).collect()}
+            want = {(r["url"], round(r["score"], 9)) for r in
+                    eng_ref.search(q, None, "en", mode=mode, k=10).collect()}
+            assert got == want, (q, mode)
+
+
+def test_resume_reproduces_build_byte_for_byte(spark, tmp_index_root):
+    """Resume rewrites a shard that lost its postings and another that
+    lost its doc_len through the build's own segment stage: every
+    postings column (block_max_w included) and every doc_len blob equals
+    the uninterrupted build's, row for row."""
+    import json
+
+    rows = corpus.fixture_rows(("searchdata",))
+    docs, tags = _mkdocs(spark, rows)
+    idx = f"{tmp_index_root}/resume_bytes"
+    shutil.rmtree(idx, ignore_errors=True)
+    build_index(docs, tags, idx, docs_per_shard=2)  # 4 shards
+
+    def table(name, order):
+        df = spark.read.parquet(f"{idx}/{name}")
+        return [tuple(r) for r in df.select(sorted(df.columns)).orderBy(*order).collect()]
+
+    postings0 = table("postings", ("shard", "term"))
+    doc_len0 = table("doc_len", ("shard",))
+    shutil.rmtree(f"{idx}/postings/shard=0")
+    shutil.rmtree(f"{idx}/doc_len/shard=2")
+    m = load_manifest(idx)
+    m["phase"] = "docs_done"
+    with open(f"{idx}/_meta/manifest.json", "w") as f:
+        json.dump(m, f)
+
+    assert resume_build(spark, docs, tags, idx)["phase"] == "committed"
+    assert table("postings", ("shard", "term")) == postings0
+    assert table("doc_len", ("shard",)) == doc_len0
+
+
+def test_duplicate_url_in_batch_fails_loudly(spark, base_index, tmp_index_root):
+    """A url twice in one batch used to join into n² rows (an append
+    counted 4 docs for 2 copies).  The segment kernel now meets the
+    doc_id twice and raises before any table or the manifest is
+    written; the index is untouched and the session keeps its confs."""
+    idx, rows = base_index
+    manifest = f"{idx}/_meta/manifest.json"
+    with open(manifest) as f:
+        before_m = f.read()
+
+    def hits():
+        return sorted((r["url"], r["score"]) for r in SearchEngine(spark, idx)
+                      .search("request", None, "en", mode="bm25", k=10).collect())
+
+    before = hits()
+    docs2, tags2 = _mkdocs(spark, [rows[5], rows[5], rows[6]])
+    with pytest.raises(Exception, match="more than once"):
+        append_documents(spark, idx, docs2, tags2)
+    docs_u, tags_u = _mkdocs(spark, [rows[0], rows[0]])
+    with pytest.raises(Exception, match="more than once"):
+        upsert_documents(spark, idx, docs_u, tags_u)
+    with open(manifest) as f:
+        assert f.read() == before_m
+    assert load_manifest(idx)["doc_count"] == 5
+    assert hits() == before
+    assert not os.path.exists(f"{idx}/_meta/_mutation_lock")
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    conf_before = spark.conf.get(key, None)
+    ref = f"{tmp_index_root}/dup_build"
+    shutil.rmtree(ref, ignore_errors=True)
+    docs_d, tags_d = _mkdocs(spark, rows[:3] + rows[:1])
+    with pytest.raises(Exception, match="more than once"):
+        build_index(docs_d, tags_d, ref, docs_per_shard=2)
+    assert not os.path.exists(f"{ref}/_meta/manifest.json")
+    assert spark.conf.get(key, None) == conf_before
+
+
+def test_mutations_reject_stale_format(spark, base_index):
+    """Only SearchEngine used to check format_version; a mutation would
+    write current-format shards into a stale index.  Every mutation
+    entry point now rejects it and leaves the manifest as it was."""
+    import json
+
+    from watertower_spark.operators.maintenance import compact_index
+
+    idx, rows = base_index
+    path = f"{idx}/_meta/manifest.json"
+    m = load_manifest(idx)
+    m["format_version"] = 5
+    with open(path, "w") as f:
+        json.dump(m, f)
+    with open(path) as f:
+        before = f.read()
+    docs2, tags2 = _mkdocs(spark, rows[5:])
+    victims = spark.createDataFrame([(rows[0]["url"],)], "url string")
+    for call in (
+        lambda: append_documents(spark, idx, docs2, tags2),
+        lambda: remove_documents(spark, idx, victims),
+        lambda: upsert_documents(spark, idx, docs2, tags2),
+        lambda: compact_index(spark, idx),
+        lambda: resume_build(spark, docs2, tags2, idx),
+    ):
+        with pytest.raises(ValueError, match="format_version=5"):
+            call()
+    with open(path) as f:
+        assert f.read() == before
+    with pytest.raises(ValueError, match="format_version=5"):
+        SearchEngine(spark, idx)

@@ -1,85 +1,14 @@
-"""Document analysis operator: documents → per-(doc, term) posting rows.
+"""Corpus-prep text normalization: ``nfkc_fold``.
 
-The Spark-side wrapper around ``watertower_spark.analyzers`` — one
-``mapInPandas`` pass (Arrow-batched, no per-row Python round trips)
-emitting one row per distinct (doc_id, term) with delta+varint-packed
-positions, plus the per-doc word counts needed for doc_stats.
-
-Replaces the reference's row-at-a-time PostDocument analysis
-(/root/reference/database.go:23-58, 158-205) with a batch dataflow.
+Document analysis itself runs inside the index build's segment kernel
+(``index_build._segment_kernel``), which analyzes and packs in one
+Python task so the exploded (doc, term) stream never crosses the
+Python/JVM boundary.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
-
-TERM_ROW_SCHEMA = (
-    "doc_id long, term string, tf int, positions binary, wc int, twc int"
-)
-
-
-def analyze_to_terms(docs_with_ids, default_lang: str = "", analyzer_lang: str | None = None):
-    """(doc_id, text, lang) rows → TERM_ROW_SCHEMA rows.
-
-    ``analyzer_lang`` forces a single analyzer for every row (e.g. the
-    SQL-expressible 'simple' analyzer); otherwise the row's ``lang``
-    column dispatches, with the reference's empty-language n-gram
-    fallback.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # imports inside the UDF: executed on executors
-        from watertower_spark.analyzers import (
-            analyze_document,
-            find_analyzer,
-            split_title_body,
-        )
-        from watertower_spark.functions.codec import encode_position_list
-
-        def resolve(lang: str) -> str:
-            # A real web corpus carries languages with no registered
-            # analyzer; the reference errors there (nlp/tokenizer.go:19-25),
-            # which is unusable at CC scale — we degrade to the whitespace
-            # analyzer instead (divergence documented in SURVEY §2.2/A1).
-            if not lang:
-                return lang
-            try:
-                find_analyzer(lang)
-                return lang
-            except KeyError:
-                return "simple"
-
-        for pdf in batches:
-            out_doc, out_term, out_tf, out_pos, out_wc, out_twc = [], [], [], [], [], []
-            for doc_id, text, lang in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
-                title, body = split_title_body(text or "")
-                use_lang = analyzer_lang if analyzer_lang is not None else resolve(lang or "")
-                tokens, wc, twc = analyze_document(title, body, use_lang, default_lang)
-                for term, positions in tokens.items():
-                    out_doc.append(doc_id)
-                    out_term.append(term)
-                    out_tf.append(len(positions))
-                    # self-delimiting blob: the pack kernel concatenates
-                    # these byte-wise, no decode round trip
-                    out_pos.append(encode_position_list(positions))
-                    out_wc.append(wc)
-                    out_twc.append(twc)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_doc, dtype="int64"),
-                    "term": pd.Series(out_term, dtype="object"),
-                    "tf": pd.Series(out_tf, dtype="int32"),
-                    "positions": pd.Series(out_pos, dtype="object"),
-                    "wc": pd.Series(out_wc, dtype="int32"),
-                    "twc": pd.Series(out_twc, dtype="int32"),
-                }
-            )
-
-    return docs_with_ids.select("doc_id", "text", "lang").mapInPandas(
-        run, schema=TERM_ROW_SCHEMA
-    )
 
 
 def nfkc_fold(col):

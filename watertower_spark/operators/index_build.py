@@ -3,11 +3,18 @@
 Pipeline (SURVEY.md §3.2 rewrite of the reference's PostDocument path,
 /root/reference/database.go:23-58):
 
-    documents ─ assign_doc_ids ─ analyze (mapInPandas)
-        ├─ doc_stats  (doc_id, wc, twc, dl)
-        ├─ postings   groupBy(term, shard) → packed FoR blocks
-        ├─ tags       groupBy(tag, shard)  → packed docID sets
-        └─ doc_store  (materialization table)
+    documents ─ assign_doc_ids ─ segment_stage:
+        repartitionByRange(shard) → _segment_kernel (mapInPandas,
+        analyze + pack inside one task per shard)
+            ├─ postings   packed FoR blocks, one row per (term, shard)
+            ├─ doc_stats  (doc_id, shard, wc, twc)
+            └─ doc_len    one dense dl array per shard
+    + tags       groupBy(shard) → packed docID sets (write_tags)
+    + doc_store  (materialization table)
+
+The segment stage and the tags writer are the ONLY producers of these
+tables: the mutations in ``maintenance`` (append, remove, upsert,
+resume) write their touched shards through the same two functions.
 
 Scale design decisions (the parts that must survive 1000 executors /
 10^12 docs):
@@ -24,24 +31,21 @@ Scale design decisions (the parts that must survive 1000 executors /
   compute a url-ordered dense numbering with a seeded-sample range
   partitioner + per-range offsets (two cheap jobs over urls only), not
   a single-partition row_number window.
-- **Sorted by construction.** Postings arrive grouped per (term, shard)
-  and are sorted by doc_id inside the pack kernel — the reference's
+- **Sorted by construction.** The segment kernel sorts each (term,
+  shard) posting list by doc_id as it packs — the reference's
   insert-time re-sort (database.go:414-416) disappears.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
-import os
 import time
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-from .analyze import analyze_to_terms  # noqa: F401 (re-exported for maintenance)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -247,61 +251,10 @@ def derive_docs_per_shard(doc_count: int, avg_doc_bytes: float,
     return int(min(max(min_dps, min(by_mem, by_par)), max_dps))
 
 
-# ------------------------------------------------------------ packing
+# ------------------------------------------------------------ tags
 
-def _pack_postings_kernel(avgdl: float):
-    """applyInPandas kernel over one (shard, term_bucket) group.
-
-    Grouping key granularity matters: per-(term,shard) groups would mean
-    one Arrow exchange per term (millions of tiny groups); per-(shard,
-    bucket) groups keep every term's postings together while amortizing
-    the per-group overhead over ~group_size/buckets terms.
-    """
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        from watertower_spark.functions import codec
-
-        out = []
-        if not pdf.empty:
-            # one global sort instead of a per-group sort_values
-            pdf = pdf.sort_values(["term", "shard", "doc_id"], kind="mergesort")
-            for (term, shard), g in pdf.groupby(["term", "shard"], sort=False):
-                doc_ids = g["doc_id"].to_numpy()
-                tfs = g["tf"].to_numpy().astype("int64")
-                dls = g["wc"].to_numpy().astype("float64")
-                # BM25 weight modulo idf*(k1+1): tf / (tf + k1*(1-b+b*dl/avgdl))
-                weights = tfs / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls / max(avgdl, 1e-9)))
-                row = codec.pack_postings(doc_ids, tfs, weights, dls=dls)
-                # positions arrive self-delimiting from the analyzer —
-                # byte-concatenate, zero decode; record per-block byte
-                # offsets so the query kernel can seek to one block
-                pos_parts = list(g["positions"])
-                lens = np.fromiter((len(p) for p in pos_parts), dtype=np.int64)
-                cum = np.concatenate(([0], np.cumsum(lens)))
-                block_pos_off = cum[:: codec.BLOCK_SIZE][: (len(pos_parts) + codec.BLOCK_SIZE - 1) // codec.BLOCK_SIZE]
-                pos_blob = b"".join(pos_parts)
-                out.append(
-                    (
-                        term, int(shard), row["df"], int(tfs.sum()), row["max_tf"],
-                        row["doc_blob"], row["tf_blob"], pos_blob,
-                        row["block_last"], row["block_off"], row["block_tf_off"],
-                        block_pos_off.tobytes(), row["block_max_tf"], row["block_max_w"],
-                        row["block_min_dl"],
-                        len(row["doc_blob"]) + len(row["tf_blob"]) + len(pos_blob),
-                    )
-                )
-        return pd.DataFrame(
-            out,
-            columns=[
-                "term", "shard", "df", "cf", "max_tf",
-                "doc_blob", "tf_blob", "pos_blob",
-                "block_last", "block_off", "block_tf_off",
-                "block_pos_off", "block_max_tf", "block_max_w",
-                "block_min_dl", "bytes",
-            ],
-        )
-
-    return pack
+def shard_col(docs_per_shard: int):
+    return ((F.col("doc_id") - 1) / docs_per_shard).cast("int").alias("shard")
 
 
 def _pack_tags_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -314,22 +267,40 @@ def _pack_tags_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["tag", "shard", "n", "doc_blob"])
 
 
+def write_tags(tag_rows: DataFrame, index_dir: str, docs_per_shard: int,
+               mode: str = "overwrite") -> None:
+    """(doc_id, tags[]) rows → the packed tags partitions of their
+    shards (the one tags writer of the build and every mutation)."""
+    (
+        tag_rows.select(F.explode("tags").alias("tag"), "doc_id")
+        .withColumn("shard", shard_col(docs_per_shard))
+        .groupBy("shard")
+        .applyInPandas(_pack_tags_kernel, schema=TAG_SCHEMA)
+        .write.mode(mode)
+        .partitionBy("shard")
+        .parquet(f"{index_dir}/tags")
+    )
+
+
 # ------------------------------------------------- segment build kernel
 
 SEGMENT_SCHEMA = POSTING_SCHEMA + ", kind string, doc_id long, wc int, twc int"
 
 
-def _segment_kernel(avgdl: float, default_lang: str, analyzer_lang: str | None,
+def _segment_kernel(default_lang: str, analyzer_lang: str | None,
                     docs_per_shard: int):
     """One-pass analyze+pack over a shard-partitioned docs stream.
 
     This is the Lucene-segment pattern: each task receives whole shards
-    of documents (doc ids are dense, so hash-partitioning by shard
-    co-locates a shard's docs), analyzes them, and emits fully packed
-    posting rows plus doc-stat rows — the 50M-row exploded term stream
-    never crosses the Python/JVM boundary and never shuffles.  That
-    stream was the scaling bottleneck of the naive two-stage build
-    (Arrow transfer + distinct dominated; cores didn't help).
+    of documents (range-partitioning by shard co-locates a shard's
+    docs), analyzes them, and emits fully packed posting rows plus
+    doc-stat rows — the 50M-row exploded term stream never crosses the
+    Python/JVM boundary and never shuffles.  That stream was the
+    scaling bottleneck of the naive two-stage build (Arrow transfer +
+    distinct dominated; cores didn't help).
+
+    A doc_id met twice raises: the input joined a url that appears more
+    than once, and packing it would double-count the document.
     """
 
     def run(batches):
@@ -341,6 +312,9 @@ def _segment_kernel(avgdl: float, default_lang: str, analyzer_lang: str | None,
         from watertower_spark.functions import codec
 
         def resolve(lang: str) -> str:
+            # a language with no registered analyzer degrades to the
+            # whitespace analyzer instead of failing the build (the
+            # reference errors, nlp/tokenizer.go:19-25; SURVEY §2.2/A1)
             if not lang:
                 return lang
             try:
@@ -354,6 +328,11 @@ def _segment_kernel(avgdl: float, default_lang: str, analyzer_lang: str | None,
         dls: dict = {}
         for pdf in batches:
             for doc_id, text, lang in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
+                if int(doc_id) in dls:
+                    raise ValueError(
+                        f"doc_id {int(doc_id)} appears more than once in the "
+                        f"segment input: the input holds a url more than once"
+                    )
                 title, body = split_title_body(text or "")
                 use_lang = analyzer_lang if analyzer_lang is not None else resolve(lang or "")
                 tokens, wc, twc = analyze_document(title, body, use_lang, default_lang)
@@ -377,8 +356,16 @@ def _segment_kernel(avgdl: float, default_lang: str, analyzer_lang: str | None,
             ids, tfs_a = ids[order], tfs_a[order]
             blobs = [blobs[i] for i in order]
             dl = np.fromiter((dls[int(d)] for d in ids), dtype="float64", count=ids.size)
-            weights = tfs_a / (tfs_a + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / max(avgdl, 1e-9)))
+            # avgdl is not known until this very pass ends; the kernel
+            # uses it only for the DIAGNOSTIC block_max_w sidecar
+            # (query-time pruning bounds come from block_max_tf/min_dl
+            # against the live avgdl), so a fixed reference length keeps
+            # every writer's output deterministic
+            weights = tfs_a / (tfs_a + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / _DIAG_AVGDL))
             row = codec.pack_postings(ids, tfs_a, weights, dls=dl)
+            # positions arrive self-delimiting from the analyzer —
+            # byte-concatenate, zero decode; per-block byte offsets let
+            # the query kernel seek to one block
             lens = np.fromiter((len(p) for p in blobs), dtype=np.int64)
             cum = np.concatenate(([0], np.cumsum(lens)))
             bpo = cum[:: codec.BLOCK_SIZE][: (len(blobs) + codec.BLOCK_SIZE - 1) // codec.BLOCK_SIZE]
@@ -430,6 +417,57 @@ def _segment_kernel(avgdl: float, default_lang: str, analyzer_lang: str | None,
     return run
 
 
+class Segment:
+    """A persisted segment-kernel output and its three table
+    projections (postings, doc_stats, doc_len)."""
+
+    def __init__(self, seg: DataFrame):
+        self.seg = seg
+        self.postings = seg.where(F.col("kind") == "p").drop("kind", "doc_id", "wc", "twc")
+        self.doc_stats = seg.where(F.col("kind") == "s").select("doc_id", "shard", "wc", "twc")
+        self.doc_len = seg.where(F.col("kind") == "l").select(
+            "shard", F.col("wc").alias("n"), F.col("doc_blob").alias("dl_blob")
+        )
+
+    def write(self, index_dir: str, table: str, mode: str = "overwrite") -> None:
+        """Write one projection into its shard partitions.  Each seg
+        partition holds whole shards (the range repartition), so the
+        write is shuffle-free: partitionBy routes each task's rows
+        straight into its shard directories."""
+        df = getattr(self, table)
+        if table == "postings":
+            # term-ordered files → parquet row-group pruning for the
+            # pushed-down In(term, …) query filter
+            df = df.sortWithinPartitions("term")
+        df.write.mode(mode).partitionBy("shard").parquet(f"{index_dir}/{table}")
+
+    def unpersist(self) -> None:
+        self.seg.unpersist(blocking=True)
+
+
+def segment_stage(docs: DataFrame, n_parts: int, docs_per_shard: int,
+                  default_lang: str, analyzer_lang: str | None) -> Segment:
+    """(doc_id, text, lang) rows → the persisted :class:`Segment` of
+    their shards: co-locate each shard's docs, then analyze+pack inside
+    the task (see _segment_kernel).  The only big shuffle is this
+    repartition of the raw documents.  The build and every mutation
+    produce postings, doc_stats and doc_len through here."""
+    seg = (
+        docs.select("doc_id", "text", "lang")
+        .withColumn("shard", shard_col(docs_per_shard))
+        # range partitioning maps shards 1:1 onto partitions — hash
+        # partitioning leaves ~1/e of partitions empty and piles 2-3
+        # shards on others, so the slowest task bounds the stage
+        .repartitionByRange(n_parts, "shard")
+        .mapInPandas(
+            _segment_kernel(default_lang, analyzer_lang, docs_per_shard),
+            schema=SEGMENT_SCHEMA,
+        )
+    )
+    seg.persist()
+    return Segment(seg)
+
+
 # ------------------------------------------------------------ build
 
 def build_index(
@@ -465,21 +503,24 @@ def build_index(
     (SHARD_METRICS_INLINE_MAX) and each doc_len row grows to
     docs_per_shard*4 bytes.
     """
+    # AQE coalescing sizes partitions by BYTES; the analysis/pack stages
+    # are Python-CPU-bound with tiny byte footprints, so coalescing would
+    # collapse them to a handful of tasks.  Pin it off for the build.
+    with session_conf(docs.sparkSession, {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.parquet.compression.codec": PARQUET_CODEC,
+    }):
+        return _build_index(docs, tags, index_dir, default_lang, analyzer_lang,
+                            docs_per_shard, num_id_ranges, build_id)
+
+
+def _build_index(docs, tags, index_dir, default_lang, analyzer_lang,
+                 docs_per_shard, num_id_ranges, build_id) -> dict:
     spark = docs.sparkSession
     t0 = time.time()
     from watertower_spark.session import ensure_executors_can_import
 
     ensure_executors_can_import(spark)
-
-    # AQE coalescing sizes partitions by BYTES; the analysis/pack stages
-    # are Python-CPU-bound with tiny byte footprints, so coalescing would
-    # collapse them to a handful of tasks.  Pin it off for the build.
-    aqe_coalesce_prev = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.enabled", "true"
-    )
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    codec_prev = spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
-    spark.conf.set("spark.sql.parquet.compression.codec", PARQUET_CODEC)
     par = spark.sparkContext.defaultParallelism
 
     phases: dict = {}
@@ -521,41 +562,12 @@ def build_index(
             doc_count, avg_bytes_box.get("b") or 2048.0, par
         )
     n_shards = max(1, math.ceil(doc_count / docs_per_shard)) if doc_count else 1
-    doc_map.persist()  # reused by terms, doc_store, tags — compute once
+    doc_map.persist()  # reused by the segment, doc_store, tags — compute once
     docs_w = docs.join(doc_map, "url")
-    shard_col = ((F.col("doc_id") - 1) / docs_per_shard).cast("int").alias("shard")
     mark("assign_ids")
 
-    # one-pass segment build: co-locate each shard's docs, analyze+pack
-    # inside the task (see _segment_kernel) — the only big shuffle in the
-    # whole build is this repartition of the raw documents.
-    seg = (
-        docs_w.select("doc_id", "text", "lang")
-        .withColumn("shard", shard_col)
-        # range partitioning maps shards 1:1 onto partitions — hash
-        # partitioning leaves ~1/e of partitions empty and piles 2-3
-        # shards on others, so the slowest task bounds the stage
-        .repartitionByRange(n_shards, "shard")
-        .mapInPandas(
-            # avgdl isn't known yet (it comes from this very pass); the
-            # kernel uses it only for the DIAGNOSTIC block_max_w sidecar
-            # (query-time pruning bounds come from block_max_tf/min_dl
-            # against the live avgdl), so a fixed reference length is
-            # passed for determinism
-            _segment_kernel(_DIAG_AVGDL, default_lang, analyzer_lang,
-                            docs_per_shard),
-            schema=SEGMENT_SCHEMA,
-        )
-    )
-    seg.persist()
-    # each seg partition holds exactly one shard (the repartitionByRange
-    # above), so every downstream write is shuffle-free: partitionBy
-    # routes each task's rows straight into its shard directory.
-    postings = seg.where(F.col("kind") == "p").drop("kind", "doc_id", "wc", "twc")
-    doc_stats = seg.where(F.col("kind") == "s").select("doc_id", "shard", "wc", "twc")
-    doc_len = seg.where(F.col("kind") == "l").select(
-        "shard", F.col("wc").alias("n"), F.col("doc_blob").alias("dl_blob")
-    )
+    seg = segment_stage(docs_w, n_shards, docs_per_shard, default_lang,
+                        analyzer_lang)
 
     # Independent table writes run on concurrent driver threads (Spark
     # schedules jobs from multiple threads concurrently).  Wave 1 = doc
@@ -567,9 +579,7 @@ def build_index(
     from concurrent.futures import ThreadPoolExecutor
 
     def w_doc_stats():
-        doc_stats.write.mode("overwrite").partitionBy("shard").parquet(
-            f"{index_dir}/doc_stats"
-        )
+        seg.write(index_dir, "doc_stats")
 
     def w_doc_map():
         doc_map.write.mode("overwrite").parquet(f"{index_dir}/doc_map")
@@ -581,7 +591,7 @@ def build_index(
         # columns — metadata, updated_at — pass through untouched.)
         (
             docs_w.drop("html")
-            .withColumn("shard", shard_col)
+            .withColumn("shard", shard_col(docs_per_shard))
             .repartitionByRange(n_shards, "shard")  # one file per shard dir
             .write.mode("overwrite").partitionBy("shard").parquet(f"{index_dir}/doc_store")
         )
@@ -620,31 +630,11 @@ def build_index(
     # columns of the already-cached segment output, replacing the two
     # full postings-table re-reads the old pipeline did after the write.
     def w_postings():
-        # no repartition: seg partitions already are the shards; the
-        # within-partition term sort gives term-ordered files → parquet
-        # row-group pruning for the pushed-down In(term, …) query filter
-        (
-            postings.sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(f"{index_dir}/postings")
-        )
+        seg.write(index_dir, "postings")
 
     def w_tags():
-        if tags is None:
-            return
-        tag_rows = (
-            tags.join(doc_map, "url")
-            .select(F.explode("tags").alias("tag"), "doc_id")
-            .withColumn("shard", ((F.col("doc_id") - 1) / docs_per_shard).cast("int"))
-        )
-        (
-            tag_rows.groupBy("shard")
-            .applyInPandas(_pack_tags_kernel, schema=TAG_SCHEMA)
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(f"{index_dir}/tags")
-        )
+        if tags is not None:
+            write_tags(tags.join(doc_map, "url"), index_dir, docs_per_shard)
 
     def w_term_stats():
         # global term statistics: the query engine resolves df/idf and
@@ -653,7 +643,7 @@ def build_index(
         # mutations rewrite only touched buckets (maintenance); the
         # repartition keeps it to one file per bucket dir.
         (
-            postings.groupBy("term")
+            seg.postings.groupBy("term")
             .agg(
                 F.sum("df").alias("df"),
                 F.sum("cf").alias("cf"),
@@ -672,9 +662,7 @@ def build_index(
         )
 
     def w_doc_len():
-        doc_len.write.mode("overwrite").partitionBy("shard").parquet(
-            f"{index_dir}/doc_len"
-        )
+        seg.write(index_dir, "doc_len")
 
     metrics_box: dict = {}
 
@@ -683,7 +671,7 @@ def build_index(
         # lineage and postings/byte-count metrics).  Small shard counts
         # collect inline into the manifest; huge ones write a parquet
         # table + keep only totals driver-side.
-        mdf = postings.groupBy("shard").agg(
+        mdf = seg.postings.groupBy("shard").agg(
             F.count("*").alias("n_terms"),
             F.sum("df").alias("n_postings"),
             F.sum("bytes").alias("bytes"),
@@ -715,7 +703,7 @@ def build_index(
         # rows; no extra pass over the corpus.  Σwc goes into the
         # manifest as a running total so incremental mutations update
         # avgdl from their own delta (maintenance) without a re-scan.
-        sum_wc = float(doc_stats.agg(F.sum("wc")).collect()[0][0] or 0.0)
+        sum_wc = float(seg.doc_stats.agg(F.sum("wc")).collect()[0][0] or 0.0)
         avgdl = sum_wc / doc_count if doc_count else 0.0
         skeleton = make_skeleton(sum_wc, avgdl)
         wave2 = [pool.submit(w) for w in (w_postings, w_tags, w_term_stats,
@@ -765,17 +753,48 @@ def build_index(
     # unpersist leaves them resident until some later GC notices, and GC
     # barely runs in a large heap (measured: 8.5 GB live post-build,
     # multi-second young pauses through the following query set)
-    seg.unpersist(blocking=True)
+    seg.unpersist()
     doc_map.unpersist(blocking=True)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe_coalesce_prev)
-    spark.conf.set("spark.sql.parquet.compression.codec", codec_prev)
     return manifest
+
+
+@contextlib.contextmanager
+def session_conf(spark, settings: dict):
+    """Pin Spark SQL confs for the duration of a block; the session's
+    previous values come back on exit, on error too (a failed build or
+    mutation must not leave its settings in the caller's session)."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def load_manifest(index_dir: str) -> dict:
     from watertower_spark.functions import fsio
 
     return fsio.read_json(f"{index_dir}/_meta/manifest.json")
+
+
+def load_current_manifest(index_dir: str) -> dict:
+    """The manifest of an index in THIS code's on-disk format.  Readers
+    and mutations both load through here: a stale index must be
+    rebuilt, never read mid-kernel or extended with current-format
+    shards."""
+    m = load_manifest(index_dir)
+    got = m.get("format_version")
+    if got != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {index_dir} has format_version={got}, "
+            f"engine expects {FORMAT_VERSION} — rebuild the index"
+        )
+    return m
 
 
 def table_path(index_dir: str, manifest: dict, name: str) -> str:

@@ -13,9 +13,18 @@ the checkpoint/lineage unit (north_rule):
   files are untouched.  This is the I4/I5 diff + I6-I10 posting/tag
   update semantics expressed as partition-local recompute instead of
   read-modify-write.
-- resume_build — re-issues a build skipping shards the manifest records
-  as committed (per-partition lineage): an interrupted 10^12-doc build
-  restarts where it stopped.
+- resume_build — rewrites only the shards an interrupted build left
+  without postings or doc_len (per-partition lineage): an interrupted
+  10^12-doc build restarts where it stopped.
+
+Every one of them writes its shards through ``_write_shards``: the
+build's own segment stage (``index_build.segment_stage``, analyze+pack
+fused in one task per shard) and tags writer
+(``index_build.write_tags``), so a rewritten shard holds exactly the
+rows the build writes for the same (doc_id, text, lang) input.
+Statistics then fold in incrementally: avgdl from the Σwc delta,
+term_stats from the touched buckets only, both read path-scoped from
+the touched shards.
 
 Note on scoring: pruning upper bounds are computed at QUERY time from
 the per-block (max_tf, min_dl) sidecars and the current avgdl — BM25
@@ -46,15 +55,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .analyze import analyze_to_terms
 from .index_build import (
-    DOC_LEN_SCHEMA,
-    POSTING_SCHEMA,
-    TAG_SCHEMA,
-    _pack_postings_kernel,
-    _pack_tags_kernel,
+    PARQUET_CODEC,
     assign_doc_ids,
-    load_manifest,
+    load_current_manifest,
+    segment_stage,
+    session_conf,
+    shard_col,
+    table_path,
+    write_tags,
 )
 
 
@@ -91,68 +100,22 @@ def _mutation_lock(index_dir: str):
         fsio.delete_file(lock)
 
 
-def _restores_overwrite_mode(fn):
-    """Mutation paths flip spark.sql.sources.partitionOverwriteMode to
-    'dynamic' mid-flight; restore the session's previous value on exit
-    so the setting doesn't leak into subsequent user writes (ADVICE r3).
-    Also pins the index parquet codec (index_build.PARQUET_CODEC) for
-    the mutation's duration so rewritten shards/tables keep the build's
-    codec, restoring the session value on exit the same way.
-    Wrapped functions must take the SparkSession as their first arg."""
+def _mutation_session(fn):
+    """Pin the session for one mutation: dynamic partition overwrite
+    (a rewrite replaces only the shard/bucket partitions it writes) and
+    the index parquet codec (index_build.PARQUET_CODEC), restoring the
+    session's values on exit so they don't leak into later user writes
+    (ADVICE r3).  Wrapped functions take the SparkSession first."""
 
     @functools.wraps(fn)
     def wrapper(spark, *args, **kwargs):
-        from .index_build import PARQUET_CODEC
-
-        key = "spark.sql.sources.partitionOverwriteMode"
-        ckey = "spark.sql.parquet.compression.codec"
-        try:
-            prev = spark.conf.get(key)
-        except Exception:
-            prev = None
-        codec_prev = spark.conf.get(ckey, "snappy")
-        spark.conf.set(ckey, PARQUET_CODEC)
-        try:
+        with session_conf(spark, {
+            "spark.sql.sources.partitionOverwriteMode": "dynamic",
+            "spark.sql.parquet.compression.codec": PARQUET_CODEC,
+        }):
             return fn(spark, *args, **kwargs)
-        finally:
-            spark.conf.set(ckey, codec_prev)
-            if prev is None:
-                with contextlib.suppress(Exception):
-                    spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
 
     return wrapper
-
-
-def _pack_doc_len_kernel(dps: int):
-    """(doc_id, shard, wc) rows of one shard → its dense dl-array row
-    (see index_build.DOC_LEN_SCHEMA)."""
-
-    def pack(key, pdf):
-        import numpy as np
-        import pandas as pd
-
-        shard = int(key[0])
-        offs = (pdf["doc_id"].to_numpy() - shard * dps - 1).astype("int64")
-        ws = pdf["wc"].to_numpy().astype("int32")
-        arr = np.zeros(int(offs.max()) + 1, dtype=np.int32)
-        arr[offs] = ws
-        return pd.DataFrame(
-            {"shard": [shard], "n": [arr.size], "dl_blob": [arr.tobytes()]}
-        )
-
-    return pack
-
-
-def _write_doc_len(doc_stats, index_dir: str, dps: int, write_mode: str) -> None:
-    (
-        doc_stats.select("doc_id", "shard", "wc")
-        .groupBy("shard")
-        .applyInPandas(_pack_doc_len_kernel(dps), schema=DOC_LEN_SCHEMA)
-        .write.mode(write_mode).partitionBy("shard")
-        .parquet(f"{index_dir}/doc_len")
-    )
 
 
 def _save_manifest(index_dir: str, manifest: dict, op: str = "update") -> None:
@@ -179,66 +142,36 @@ def _publish_table(index_dir: str, manifest: dict, name: str, write_fn) -> str:
     return f"{index_dir}/{cur}"
 
 
-def _manifest_sum_wc(m: dict) -> float:
-    """Running Σwc (kept in the manifest since r3 so mutations never
-    re-scan doc_stats for avgdl); derived for pre-r3 manifests."""
-    v = m.get("sum_wc")
-    if v is not None:
-        return float(v)
-    return float(m.get("avgdl", 0.0)) * float(m.get("doc_count", 0))
+def _apply_wc_delta(m: dict, delta_wc: float) -> None:
+    """Fold a mutation's Σwc delta into the manifest's running Σwc and
+    avgdl — never a doc_stats re-scan (incremental-avgdl invariant)."""
+    m["sum_wc"] = m["sum_wc"] + delta_wc
+    m["avgdl"] = m["sum_wc"] / m["doc_count"] if m["doc_count"] else 0.0
 
 
-def _shard_col(docs_per_shard: int):
-    return ((F.col("doc_id") - 1) / docs_per_shard).cast("int").alias("shard")
+def _write_shards(index_dir: str, m: dict, docs: DataFrame,
+                  tag_rows: DataFrame | None, n_shards: int, mode: str) -> float:
+    """Write the shards of ``docs`` (doc_id, text, lang) through the
+    build's segment stage — postings, doc_stats and doc_len — plus their
+    tags from ``tag_rows`` (doc_id, tags[]) on a tagged index.  Mode
+    'append' adds new shard partitions; 'overwrite' replaces only the
+    partitions written (dynamic overwrite).  Returns the docs' Σwc."""
+    dps = m["docs_per_shard"]
+    seg = segment_stage(docs, n_shards, dps, m.get("default_lang") or "",
+                        m.get("analyzer_lang"))
+    # the doc_stats write materializes the segment, so a kernel error (a
+    # url twice in the input) aborts before any other table is written
+    seg.write(index_dir, "doc_stats", mode)
+    sum_wc = float(seg.doc_stats.agg(F.sum("wc")).collect()[0][0] or 0.0)
+    seg.write(index_dir, "postings", mode)
+    seg.write(index_dir, "doc_len", mode)
+    if tag_rows is not None and m.get("has_tags"):
+        write_tags(tag_rows, index_dir, dps, mode)
+    seg.unpersist()
+    return sum_wc
 
 
-def _build_shard_tables(spark, docs_w: DataFrame, tags: DataFrame | None,
-                        manifest: dict, index_dir: str, mode: str,
-                        replace_shards: list | None = None) -> None:
-    """Analyze docs_w (doc_id, text, lang [+url]) and write postings/tags/
-    doc_stats rows for their shards. mode='append' adds new shard
-    partitions; mode='overwrite_partitions' replaces only touched shards."""
-    dps = manifest["docs_per_shard"]
-    avgdl = manifest["avgdl"]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    write_mode = "append" if mode == "append" else "overwrite"
-
-    terms = analyze_to_terms(docs_w, manifest.get("default_lang") or "",
-                             manifest.get("analyzer_lang"))
-    terms = terms.withColumn("shard", ((F.col("doc_id") - 1) / dps).cast("int"))
-    terms.persist()
-
-    doc_stats = (
-        docs_w.select("doc_id").withColumn("shard", _shard_col(dps))
-        .join(terms.select("doc_id", "wc", "twc").distinct(), "doc_id", "left")
-        .fillna({"wc": 0, "twc": 0})
-    )
-
-    postings = (
-        terms.withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(64)))
-        .groupBy("shard", "tb")
-        .applyInPandas(_pack_postings_kernel(avgdl), schema=POSTING_SCHEMA)
-    )
-    (
-        postings.repartitionByRange("shard").sortWithinPartitions("term")
-        .write.mode(write_mode).partitionBy("shard").parquet(f"{index_dir}/postings")
-    )
-    # NOTE: doc_stats (returned, lazy) depends on the cached `terms`;
-    # callers must write it BEFORE calling the returned unpersist thunk,
-    # else the append re-analyzes every document a second time.
-    if tags is not None and manifest.get("has_tags"):
-        tag_rows = (
-            tags.select(F.explode("tags").alias("tag"), "doc_id")
-            .withColumn("shard", _shard_col(dps))
-        )
-        (
-            tag_rows.groupBy("shard").applyInPandas(_pack_tags_kernel, schema=TAG_SCHEMA)
-            .write.mode(write_mode).partitionBy("shard").parquet(f"{index_dir}/tags")
-        )
-    return doc_stats, terms.unpersist
-
-
-@_restores_overwrite_mode
+@_mutation_session
 def append_documents(spark: SparkSession, index_dir: str,
                      new_docs: DataFrame, new_tags: DataFrame | None = None) -> dict:
     """Incrementally add documents.  New ids start at the next shard
@@ -248,9 +181,7 @@ def append_documents(spark: SparkSession, index_dir: str,
 
 
 def _append_documents(spark, index_dir, new_docs, new_tags=None):
-    from .index_build import table_path
-
-    m = load_manifest(index_dir)
+    m = load_current_manifest(index_dir)
     dps = m["docs_per_shard"]
     base = m["n_shards"] * dps  # ids base (0-based) → first id = base+1
 
@@ -267,31 +198,25 @@ def _append_documents(spark, index_dir, new_docs, new_tags=None):
         return m
 
     tags_w = new_tags.join(ids, "url") if new_tags is not None else None
-    doc_stats, release_terms = _build_shard_tables(spark, docs_w, tags_w, m, index_dir, "append")
-    doc_stats.write.mode("append").partitionBy("shard").parquet(f"{index_dir}/doc_stats")
-    _write_doc_len(doc_stats, index_dir, dps, "append")
-    # Σwc of the appended batch only — from the cached analysis, not a
-    # doc_stats table scan (incremental-avgdl invariant)
-    delta_wc = float(doc_stats.agg(F.sum("wc")).collect()[0][0] or 0.0)
-    release_terms()
+    # Σwc of the appended batch only — from the segment's stat rows, as
+    # the build's sum_wc, never a doc_stats table scan
+    delta_wc = _write_shards(index_dir, m, docs_w, tags_w,
+                             math.ceil(n_new / dps), "append")
     ids.write.mode("append").parquet(doc_map_dir)
     # raw html is NOT copied into the index (matches build_index's
     # doc_store schema — appended shard files must not reintroduce the
     # crawl's heaviest column, nor make schema inference file-dependent)
-    docs_w.drop("html").withColumn("shard", _shard_col(dps)) \
+    docs_w.drop("html").withColumn("shard", shard_col(dps)) \
         .write.mode("append").partitionBy("shard").parquet(f"{index_dir}/doc_store")
 
-    total = m["doc_count"] + n_new
     new_n_shards = max(m["n_shards"], math.ceil((base + n_new) / dps))
     new_shards = list(range(m["n_shards"], new_n_shards))
-    sum_wc = _manifest_sum_wc(m) + delta_wc
     m.update(
-        doc_count=total,
-        sum_wc=sum_wc,
-        avgdl=sum_wc / total if total else 0.0,
+        doc_count=m["doc_count"] + n_new,
         n_shards=new_n_shards,
         build_id=m["build_id"] + "+a",
     )
+    _apply_wc_delta(m, delta_wc)
     # appended shards are brand new (ids start at the next shard
     # boundary) → nothing to subtract; only their stats fold in
     gc = _apply_stats_delta(spark, index_dir, m, new_shards,
@@ -301,7 +226,7 @@ def _append_documents(spark, index_dir, new_docs, new_tags=None):
     return m
 
 
-@_restores_overwrite_mode
+@_mutation_session
 def remove_documents(spark: SparkSession, index_dir: str, urls: DataFrame) -> dict:
     """Remove documents by url: rewrite doc_map/doc_stats/doc_store minus
     the victims, rebuild ONLY the affected shard partitions (I10)."""
@@ -312,9 +237,7 @@ def remove_documents(spark: SparkSession, index_dir: str, urls: DataFrame) -> di
 def _remove_documents(spark, index_dir, urls):
     from watertower_spark.functions import fsio
 
-    from .index_build import table_path
-
-    m = load_manifest(index_dir)
+    m = load_current_manifest(index_dir)
     dps = m["docs_per_shard"]
     doc_map = spark.read.parquet(table_path(index_dir, m, "doc_map"))
     # materialize the victim set to break lineage: later rewrites replace
@@ -324,7 +247,7 @@ def _remove_documents(spark, index_dir, urls):
     tmp_victims = f"{index_dir}/_tmp_victims_{_staging_suffix()}"
     doc_map.join(urls.select("url"), "url").write.mode("overwrite").parquet(tmp_victims)
     victims = spark.read.parquet(tmp_victims)
-    shards = [r["shard"] for r in victims.select(_shard_col(dps)).distinct().collect()]
+    shards = [r["shard"] for r in victims.select(shard_col(dps)).distinct().collect()]
     if not shards:
         fsio.delete_dir(tmp_victims)
         return m
@@ -351,11 +274,10 @@ def _remove_documents(spark, index_dir, urls):
         # reconstruct tag rows of the affected shards from the tags table
         tag_src = _tags_as_rows(spark, index_dir, shards, kept_small)
 
-    # rebuilds postings + doc_stats (+tags) of the affected shards from
-    # the kept docs' re-analysis
-    _rewrite_shards(spark, index_dir, m,
-                    kept_small.select("doc_id", "url", "text", "lang"),
-                    tag_src, shards)
+    # rebuild the affected shards' postings, doc_stats, doc_len (+tags)
+    # from the kept docs' re-analysis
+    new_wc = _write_shards(index_dir, m, kept_small, tag_src, len(shards),
+                           "overwrite")
 
     # publish the replacement doc_map into a fresh versioned dir (no
     # rename/rmtree of the live table — object-store safe)
@@ -364,7 +286,6 @@ def _remove_documents(spark, index_dir, urls):
         lambda path: doc_map.join(victims.select("doc_id"), "doc_id", "left_anti")
         .write.mode("overwrite").parquet(path),
     )]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     kept_small.write.mode("overwrite").partitionBy("shard") \
         .parquet(f"{index_dir}/doc_store")
     # dynamic partition overwrite only touches partitions PRESENT in the
@@ -372,7 +293,7 @@ def _remove_documents(spark, index_dir, urls):
     # rows, leaving its old files alive — delete those partitions
     # explicitly or removed docs stay searchable
     surviving = {
-        r["shard"] for r in kept_small.select(_shard_col(dps)).distinct().collect()
+        r["shard"] for r in kept_small.select(shard_col(dps)).distinct().collect()
     }
     for s in shards:
         if s not in surviving:
@@ -381,13 +302,9 @@ def _remove_documents(spark, index_dir, urls):
     kept_small.unpersist()
 
     m.update(doc_count=m["doc_count"] - n_removed, build_id=m["build_id"] + "+r")
-    # AFTER the rewrite: the affected shards' NEW Σwc (fully-removed
-    # shard dirs are gone and skipped) — avgdl updates from the delta,
-    # never a full doc_stats scan
-    new_wc = _wc_sum(spark, index_dir, shards)
-    sum_wc = _manifest_sum_wc(m) - old_wc + new_wc
-    m["sum_wc"] = sum_wc
-    m["avgdl"] = sum_wc / m["doc_count"] if m["doc_count"] else 0.0
+    # avgdl follows the affected shards' Σwc delta (kept docs' Σwc from
+    # the segment), never a full doc_stats scan
+    _apply_wc_delta(m, new_wc - old_wc)
     gc += _apply_stats_delta(spark, index_dir, m, shards,
                              old_term_contrib=old_contrib)
     _save_manifest(index_dir, m, "remove")
@@ -396,7 +313,7 @@ def _remove_documents(spark, index_dir, urls):
     return m
 
 
-@_restores_overwrite_mode
+@_mutation_session
 def upsert_documents(spark: SparkSession, index_dir: str,
                      docs: DataFrame, tags: DataFrame | None = None) -> dict:
     """PostDocument semantics (I1): existing urls keep their doc_id and get
@@ -406,15 +323,13 @@ def upsert_documents(spark: SparkSession, index_dir: str,
 
 
 def _upsert_documents(spark, index_dir, docs, tags=None):
-    from .index_build import table_path
-
-    m = load_manifest(index_dir)
+    m = load_current_manifest(index_dir)
     dps = m["docs_per_shard"]
     doc_map = spark.read.parquet(table_path(index_dir, m, "doc_map"))
     updated = docs.join(doc_map, "url")  # (url, ..., doc_id) — keeps old id
     n_upd = updated.count()
     if n_upd:
-        shards = [r["shard"] for r in updated.select(_shard_col(dps)).distinct().collect()]
+        shards = [r["shard"] for r in updated.select(shard_col(dps)).distinct().collect()]
         # pre-rewrite stats contribution of the affected shards only
         old_contrib, old_contrib_dir = _snapshot_old_contrib(spark, index_dir, shards)
         old_wc = _wc_sum(spark, index_dir, shards)
@@ -437,33 +352,32 @@ def _upsert_documents(spark, index_dir, docs, tags=None):
                     new_tag_rows.select("doc_id"), "doc_id", "left_anti"
                 ).unionByName(new_tag_rows)
             tag_src = old_tag_rows
-        # rebuilds postings + doc_stats (+tags) of the affected shards
-        # from the merged (updated ∪ untouched) re-analysis — doc_stats
-        # must track the new bodies or BM25 scores with stale lengths
-        _rewrite_shards(spark, index_dir, m, merged, tag_src, shards)
+        # rebuild the affected shards' postings, doc_stats, doc_len
+        # (+tags) from the merged (updated ∪ untouched) re-analysis —
+        # doc_stats must track the new bodies or BM25 scores with stale
+        # lengths
+        new_wc = _write_shards(index_dir, m, merged, tag_src, len(shards),
+                               "overwrite")
         # refresh doc_store rows for these shards.  Materialize the new
         # rows BEFORE the overwrite: the plan joins columns read from the
         # same doc_store files the write replaces.
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         carried = [c for c in store.columns
                    if c not in ("doc_id", "url", "text", "lang", "shard")]
         new_store = (
-            merged.withColumn("shard", _shard_col(dps))
+            merged.withColumn("shard", shard_col(dps))
             .join(store.select("doc_id", *carried), "doc_id", "left")
             .select(*store.columns)
             .persist()
         )
         new_store.count()
+        merged.unpersist()
         new_store.write.mode("overwrite").partitionBy("shard") \
             .parquet(f"{index_dir}/doc_store")
         new_store.unpersist()
         m["build_id"] = m["build_id"] + "+u"
         # re-analysis changed document lengths → avgdl must follow,
         # via the affected shards' Σwc delta (no full doc_stats scan)
-        new_wc = _wc_sum(spark, index_dir, shards)
-        sum_wc = _manifest_sum_wc(m) - old_wc + new_wc
-        m["sum_wc"] = sum_wc
-        m["avgdl"] = sum_wc / m["doc_count"] if m["doc_count"] else 0.0
+        _apply_wc_delta(m, new_wc - old_wc)
         gc = _apply_stats_delta(spark, index_dir, m, shards,
                                 old_term_contrib=old_contrib)
         _save_manifest(index_dir, m, "upsert")
@@ -499,68 +413,22 @@ def _tags_as_rows(spark, index_dir, shards, docs_small):
     return rows.groupBy("doc_id").agg(F.collect_list("tag").alias("tags"))
 
 
-def _rewrite_shards(spark, index_dir, manifest, docs_small, tag_rows, shards):
-    """Rebuild postings + doc_stats (+tags) partitions for the given
-    shards only.  doc_stats is derived from the SAME analysis pass as the
-    postings so BM25 document lengths always track the bodies actually
-    indexed (an earlier version left stale wc rows behind on upsert —
-    the flagship scorer then used wrong lengths; ADVICE r1)."""
-    dps = manifest["docs_per_shard"]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    terms = analyze_to_terms(docs_small, manifest.get("default_lang") or "",
-                             manifest.get("analyzer_lang"))
-    terms = terms.withColumn("shard", ((F.col("doc_id") - 1) / dps).cast("int"))
-    terms.persist()
-    postings = (
-        terms.withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(64)))
-        .groupBy("shard", "tb")
-        .applyInPandas(_pack_postings_kernel(manifest["avgdl"]), schema=POSTING_SCHEMA)
-    )
-    (
-        postings.repartitionByRange("shard").sortWithinPartitions("term")
-        .write.mode("overwrite").partitionBy("shard").parquet(f"{index_dir}/postings")
-    )
-    doc_stats = (
-        docs_small.select("doc_id").withColumn("shard", _shard_col(dps))
-        .join(terms.select("doc_id", "wc", "twc").distinct(), "doc_id", "left")
-        .fillna({"wc": 0, "twc": 0})
-    )
-    doc_stats.write.mode("overwrite").partitionBy("shard").parquet(
-        f"{index_dir}/doc_stats"
-    )
-    _write_doc_len(doc_stats, index_dir, dps, "overwrite")
-    if tag_rows is not None and manifest.get("has_tags"):
-        # tag_rows may be decoded from the very tags files this write
-        # replaces (_tags_as_rows) — materialize before overwriting
-        rows = tag_rows.select(F.explode("tags").alias("tag"), "doc_id") \
-            .withColumn("shard", _shard_col(dps)).persist()
-        rows.count()
-        (
-            rows.groupBy("shard").applyInPandas(_pack_tags_kernel, schema=TAG_SCHEMA)
-            .write.mode("overwrite").partitionBy("shard").parquet(f"{index_dir}/tags")
-        )
-        rows.unpersist()
-    terms.unpersist()
-
-
 def resume_build(spark: SparkSession, docs: DataFrame, tags: DataFrame | None,
                  index_dir: str, **build_kwargs) -> dict:
     """Resume an interrupted build from its last durable phase.
 
     - no manifest on disk → fresh full build;
-    - phase 'docs_done' (doc_map/doc_stats/doc_store committed, postings
-      phase interrupted) → rebuild ONLY shards whose postings partition
-      directory is absent/incomplete, from doc_store — the per-partition
-      lineage makes the 10^12-doc restart cost proportional to what is
-      actually missing;
+    - phase 'docs_done' (doc_map/doc_stats/doc_store committed, wave 2
+      interrupted) → rewrite ONLY the shards that lack a postings or a
+      doc_len partition directory, from doc_store, through the build's
+      segment stage — the per-partition lineage makes the 10^12-doc
+      restart cost proportional to what is actually missing;
     - phase 'committed' → no-op.
     """
-    from watertower_spark.functions import fsio
-
-    from .index_build import build_index, table_path
+    from .index_build import build_index
 
     try:
-        m = load_manifest(index_dir)
+        m = load_current_manifest(index_dir)
     except FileNotFoundError:
         return build_index(docs, tags, index_dir, **build_kwargs)
     if m.get("phase") == "committed":
@@ -569,39 +437,26 @@ def resume_build(spark: SparkSession, docs: DataFrame, tags: DataFrame | None,
         return _resume_build(spark, docs, tags, index_dir, m)
 
 
-@_restores_overwrite_mode
+@_mutation_session
 def _resume_build(spark, docs, tags, index_dir, m):
     from watertower_spark.functions import fsio
 
-    from .index_build import table_path
-
-    present = set(fsio.list_shard_dirs(f"{index_dir}/postings"))
-    missing = sorted(set(range(m["n_shards"])) - present)
+    # postings and doc_len are both wave-2 tables: a crash can leave
+    # either one without a shard's partition (a shard with postings but
+    # no doc_len would score BM25 with dl=avgdl under phase=committed)
+    have = set(fsio.list_shard_dirs(f"{index_dir}/postings")) \
+        & set(fsio.list_shard_dirs(f"{index_dir}/doc_len"))
+    missing = sorted(set(range(m["n_shards"])) - have)
     if missing:
-        dps = m["docs_per_shard"]
-        store = spark.read.parquet(f"{index_dir}/doc_store")
-        todo = store.where(F.col("shard").isin(missing)).select(
-            "doc_id", "url", "text", "lang"
-        )
+        todo = spark.read.parquet(f"{index_dir}/doc_store") \
+            .where(F.col("shard").isin(missing))
         tag_rows = None
-        if tags is not None and m.get("has_tags"):
+        if tags is not None:
             doc_map = spark.read.parquet(table_path(index_dir, m, "doc_map"))
             tag_rows = tags.join(doc_map, "url").select("doc_id", "tags").join(
                 todo.select("doc_id"), "doc_id"
             )
-        _rewrite_shards(spark, index_dir, m, todo, tag_rows, missing)
-    # doc_len is a wave-2 table: a crash after the postings wave finished
-    # but before w_doc_len leaves all postings shards present (missing =
-    # []) with doc_len absent/partial — the BM25 kernels would then fall
-    # back to dl=avgdl and score WRONG with phase=committed.  Regenerate
-    # any still-missing doc_len shards from the durable doc_stats table.
-    have_len = set(fsio.list_shard_dirs(f"{index_dir}/doc_len"))
-    need_len = sorted(set(range(m["n_shards"])) - have_len)
-    if need_len:
-        stats = spark.read.parquet(f"{index_dir}/doc_stats") \
-            .where(F.col("shard").isin(need_len))
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        _write_doc_len(stats, index_dir, m["docs_per_shard"], "overwrite")
+        _write_shards(index_dir, m, todo, tag_rows, len(missing), "overwrite")
     m["phase"] = "committed"
     m["build_id"] = m["build_id"] + "+res"
     gc = _refresh_shard_metrics(spark, index_dir, m)
@@ -698,6 +553,7 @@ def vacuum_index(index_dir: str, remove_stale_lease: bool = False) -> dict:
     return {"removed": removed, "lease_removed": lease_removed}
 
 
+@_mutation_session
 def compact_index(spark: SparkSession, index_dir: str,
                   min_fill: float = 0.5,
                   max_shards_per_pass: int = 256) -> dict:
@@ -736,7 +592,7 @@ def compact_index(spark: SparkSession, index_dir: str,
     from watertower_spark.functions import fsio
 
     with _mutation_lock(index_dir):
-        m = load_manifest(index_dir)
+        m = load_current_manifest(index_dir)
         dps = m["docs_per_shard"]
         counts = (
             spark.read.parquet(f"{index_dir}/doc_stats")
@@ -881,7 +737,7 @@ def _apply_stats_delta(spark, index_dir: str, manifest: dict,
 
     Returns superseded/staging dirs for the caller to GC after the
     manifest commit."""
-    from .index_build import SHARD_METRICS_INLINE_MAX, table_path
+    from .index_build import SHARD_METRICS_INLINE_MAX
 
     new_postings = _read_shard_table(spark, index_dir, "postings", affected_shards)
     ts_dir = table_path(index_dir, manifest, "term_stats")
@@ -967,7 +823,6 @@ def _apply_stats_delta(spark, index_dir: str, manifest: dict,
             .write.mode("overwrite").parquet(stage)
         gc.append(stage)
         staged = spark.read.parquet(stage)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # keep each published bucket file term-sorted (row-group min/max
         # pruning for prefix/fuzzy dictionary scans, round-5 verdict #5)
         staged.sortWithinPartitions("tb", "term") \
@@ -1083,8 +938,6 @@ def _refresh_shard_metrics(spark, index_dir, manifest) -> list:
     else:
         # huge shard counts: refresh the external metrics table (its own
         # versioned publish) and keep only totals inline
-        from .index_build import table_path
-
         old_metrics = _publish_table(
             index_dir, manifest, "shard_metrics",
             lambda path: (

@@ -67,7 +67,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import codec
-from .index_build import BM25_B, BM25_K1, load_manifest
+from .index_build import BM25_B, BM25_K1, load_current_manifest
 
 _WRAP = 1 << 32  # uint32 arithmetic in the reference's phrase algebra
 
@@ -600,15 +600,7 @@ class SearchEngine:
         ensure_executors_can_import(spark)
         self.spark = spark
         self.index_dir = index_dir
-        self.manifest = load_manifest(index_dir)
-        from .index_build import FORMAT_VERSION
-
-        got = self.manifest.get("format_version")
-        if got != FORMAT_VERSION:
-            raise ValueError(
-                f"index at {index_dir} has format_version={got}, "
-                f"engine expects {FORMAT_VERSION} — rebuild the index"
-            )
+        self.manifest = load_current_manifest(index_dir)
         from watertower_spark.functions import fsio
 
         from .index_build import table_path
@@ -646,11 +638,9 @@ class SearchEngine:
         )
         # replaced tables resolve through the manifest's versioned
         # pointers (object-store-safe publish; see maintenance)
-        ts_path = table_path(index_dir, self.manifest, "term_stats")
-        self.term_stats = (
-            _read_tbl(ts_path, "term string, df long, cf long, "
-                               "shards array<int>, tb int")
-            if fsio.exists(ts_path) else None
+        self.term_stats = _read_tbl(
+            table_path(index_dir, self.manifest, "term_stats"),
+            "term string, df long, cf long, shards array<int>, tb int",
         )
         self._doc_map_path = table_path(index_dir, self.manifest, "doc_map")
         self._stats_cache: dict = {}
@@ -714,19 +704,10 @@ class SearchEngine:
 
     def _resolve_terms(self, terms: list) -> dict:
         """term → (df, shard list) from the global term_stats table,
-        memoized driver-side (absent terms cached as None).  Falls back
-        to a per-query aggregation for pre-term_stats indexes."""
+        memoized driver-side (absent terms cached as None)."""
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
-            if self.term_stats is not None:
-                rows = self.term_stats.where(F.col("term").isin(missing)).collect()
-            else:
-                rows = (
-                    self.postings.where(F.col("term").isin(missing))
-                    .groupBy("term")
-                    .agg(F.sum("df").alias("df"), F.collect_set("shard").alias("shards"))
-                    .collect()
-                )
+            rows = self.term_stats.where(F.col("term").isin(missing)).collect()
             found = {r["term"]: (int(r["df"]), list(r["shards"])) for r in rows}
             for t in missing:
                 self._stats_cache[t] = found.get(t)
@@ -1166,15 +1147,8 @@ class SearchEngine:
         prefix = (prefix or "").strip().lower().rstrip("*")
         if not prefix:
             return self._top(spec, materialize)
-        if self.term_stats is not None:
-            dic = self.term_stats
-        else:  # pre-term_stats index: derive the dictionary per query
-            dic = (
-                self.postings.groupBy("term")
-                .agg(F.sum("df").alias("df"), F.collect_set("shard").alias("shards"))
-            )
         rows = (
-            dic.where(F.col("term").startswith(prefix))
+            self.term_stats.where(F.col("term").startswith(prefix))
             .orderBy(F.col("df").desc(), F.col("term").asc())
             .limit(max_expansions)
             .collect()
@@ -1218,16 +1192,9 @@ class SearchEngine:
         word = (word or "").strip().lower()
         if not word:
             return self._top(spec, materialize)
-        if self.term_stats is not None:
-            dic = self.term_stats
-        else:  # pre-term_stats index: derive the dictionary per query
-            dic = (
-                self.postings.groupBy("term")
-                .agg(F.sum("df").alias("df"), F.collect_set("shard").alias("shards"))
-            )
         lit = F.lit(word)
         rows = (
-            dic.where(
+            self.term_stats.where(
                 (F.abs(F.length("term") - F.length(lit)) <= max_edits)
                 & (F.levenshtein("term", lit) <= max_edits)
             )
