@@ -877,6 +877,8 @@ def test_duplicate_url_in_batch_fails_loudly(spark, base_index, tmp_index_root):
     docs_u, tags_u = _mkdocs(spark, [rows[0], rows[0]])
     with pytest.raises(Exception, match="more than once"):
         upsert_documents(spark, idx, docs_u, tags_u)
+    # the rejected upsert leaves no staging dir behind
+    assert not [d for d in os.listdir(idx) if d.startswith("_tmp_")]
     with open(manifest) as f:
         assert f.read() == before_m
     assert load_manifest(idx)["doc_count"] == 5

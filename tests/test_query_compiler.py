@@ -3,6 +3,7 @@ place (``SearchEngine._compile``), so ``msearch`` entries mean exactly
 what ``search`` arguments mean, page arguments are validated once, and
 the compiled plan's shape does not grow with the batch width."""
 
+import contextlib
 import datetime as dt
 import re
 import shutil
@@ -44,6 +45,32 @@ def qc_index(spark, tmp_index_root):
 @pytest.fixture(scope="module")
 def eng(spark, qc_index):
     return SearchEngine(spark, qc_index)
+
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextlib.contextmanager
+def _threshold(spark, value: str):
+    """``_compile`` gathers a kernel input into the driver only while
+    its bound is within ``spark.sql.autoBroadcastJoinThreshold``; -1
+    means never (the distributed path)."""
+    before = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD, before)
+
+
+def _path(spark, path: str):
+    return _threshold(spark, "-1" if path == "distributed" else "10MB")
+
+
+@pytest.fixture
+def distributed(spark):
+    with _path(spark, "distributed"):
+        yield
 
 
 def _rows(df):
@@ -93,18 +120,38 @@ def query_specs(draw):
     return q
 
 
+def _exact(df):
+    """Every column of every row, in order; floats by their bits."""
+    return [tuple(v.hex() if isinstance(v, float) else v for v in r)
+            for r in df.collect()]
+
+
+PATHS = ("local", "distributed")
+
+
 @settings(max_examples=8, deadline=None)
 @given(query_specs())
-def test_msearch_of_one_equals_search(eng, q):
-    assert _msearch_rows(eng, [q]).get(0, []) == _rows(_search(eng, q))
+def test_msearch_of_one_equals_search(spark, eng, q):
+    exact = {}
+    for path in PATHS:
+        with _path(spark, path):
+            df = _search(eng, q)
+            assert _msearch_rows(eng, [q]).get(0, []) == _rows(df), path
+            exact[path] = _exact(df)
+    assert exact["local"] == exact["distributed"]
 
 
 @settings(max_examples=3, deadline=None)
 @given(st.lists(query_specs(), min_size=2, max_size=4))
-def test_msearch_batch_equals_per_query_searches(eng, batch):
-    got = _msearch_rows(eng, batch)
-    for qid, q in enumerate(batch):
-        assert got.get(qid, []) == _rows(_search(eng, q)), f"qid {qid}: {q}"
+def test_msearch_batch_equals_per_query_searches(spark, eng, batch):
+    exact = {}
+    for path in PATHS:
+        with _path(spark, path):
+            got = _msearch_rows(eng, batch)
+            for qid, q in enumerate(batch):
+                assert got.get(qid, []) == _rows(_search(eng, q)), f"{path} qid {qid}: {q}"
+            exact[path] = _exact(eng.msearch(batch))
+    assert exact["local"] == exact["distributed"]
 
 
 def test_page_arguments_are_validated_once(eng):
@@ -155,11 +202,11 @@ def _plan(df) -> str:
     return "\n".join(out)
 
 
-def test_single_query_plan_shape(eng):
+def test_single_query_plan_shape(eng, distributed):
     p = _plan(eng.search("alpha beta", mode="bm25", k=5))
-    # kernel exchange, broadcast of the top-k, final order: as before
-    # the compiler
-    assert len(re.findall(r"Exchange ", p)) == 3
+    # kernel exchange and broadcast of the top-k; the final order is a
+    # top-k over the 1:1 doc_store join, with no exchange of its own
+    assert len(re.findall(r"Exchange ", p)) == 2
     post = [ln for ln in p.splitlines() if "/postings" in ln and "FileScan" in ln]
     assert len(post) == 1
     assert "PushedFilters: [In(term, [alpha,beta])" in post[0]
@@ -178,14 +225,112 @@ def _mixed(width: int) -> list:
     return [pattern[i % len(pattern)] for i in range(width)]
 
 
-def test_msearch_plan_shape(eng):
+def test_msearch_plan_shape(eng, distributed):
     p = _plan(eng.msearch(_mixed(6), materialize=False))
     assert p.count("FlatMapGroupsInPandas") == 1
     assert len([ln for ln in p.splitlines()
                 if "FileScan" in ln and "/postings" in ln]) == 1
     assert "BroadcastHashJoin" not in p
-    # materialized: the doc_store join is the only broadcast join
-    assert _plan(eng.msearch(_mixed(6))).count("BroadcastHashJoin") == 1
+    # materialized: the doc_store join is the only broadcast join, and
+    # only a batch of top-k entries is hinted to broadcast (a parity
+    # entry is unbounded; the fixture turns Spark's own size-based
+    # broadcast choice off)
+    assert _plan(eng.msearch(_mixed(6))).count("BroadcastHashJoin") == 0
+    topk = [e for e in _mixed(6) if e.get("mode") != "parity"]
+    assert _plan(eng.msearch(topk)).count("BroadcastHashJoin") == 1
     # the plan does not grow with the batch
     n8, n32 = (len(_plan(eng.msearch(_mixed(w))).splitlines()) for w in (8, 32))
     assert n8 == n32
+
+
+def test_bounded_materialize_is_a_top_k(eng, distributed):
+    """A bm25 top-k's doc_store join ends in ``limit(k)``: one top-k,
+    no range-partitioned global sort (its sampling job).  Parity
+    results are unbounded and keep their global sort."""
+    p = _plan(eng.search("alpha beta", mode="bm25", k=5))
+    assert p.splitlines()[1].lstrip(" +-").startswith("TakeOrderedAndProject(limit=5,")
+    assert "rangepartitioning" not in p
+    p = _plan(eng.search("alpha beta", mode="parity"))
+    assert "TakeOrderedAndProject" not in p and "rangepartitioning(" in p
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def test_small_bm25_query_runs_two_jobs_and_no_python_stage(spark, eng, monkeypatch):
+    from pyspark.sql.group import GroupedData
+
+    q = dict(word="alpha beta", k=5)
+    want = _exact(_search(eng, q))  # also memoizes the terms' stats
+    grouped = []
+    real = GroupedData.applyInPandas
+    monkeypatch.setattr(GroupedData, "applyInPandas",
+                        lambda self, *a, **kw: grouped.append(a) or real(self, *a, **kw))
+    df, n_jobs = _jobs(spark, lambda: _search(eng, q))
+    rows, n_collect = _jobs(spark, lambda: _exact(df))
+    # one collect of the kernel input, one doc_store fetch; the result
+    # is local rows, so collecting it runs nothing
+    assert (n_jobs, n_collect, grouped) == (2, 0, [])
+    assert rows == want and len(rows) == 5
+    assert "LocalTableScan" in _plan(df) and "FlatMapGroupsInPandas" not in _plan(df)
+
+
+# every kind of kernel input and finishing step: tag, must_not, range,
+# OR, offset, parity and search_after
+KINDS = [
+    {"word": "alpha", "tags": ["naïve"], "exclude_words": "delta",
+     "exclude_tags": ["it's"], "k": 3},
+    {"word": "alpha beta", "ranges": {"warc_ts": {"gte": "2020-01-10"}}, "k": 5},
+    {"word": "alpha gamma", "operator": "or", "k": 4, "offset": 2},
+    {"word": "beta gamma", "mode": "parity"},
+    {"word": "gamma", "k": 3, "search_after": (1.0, 10)},
+]
+
+
+def _input_bytes(pdf) -> int:
+    """The raw bytes of a collected kernel input: fixed-width columns
+    plus every string and binary value."""
+    return sum(int(pdf[c].to_numpy().nbytes) if pdf[c].dtype != object
+               else sum(len(v.encode() if isinstance(v, str) else v)
+                        for v in pdf[c] if v is not None)
+               for c in pdf.columns)
+
+
+def test_lowered_threshold_takes_the_exchange(spark, eng, monkeypatch):
+    """Below a query's input bound the compiler takes the distributed
+    exchange; both paths return the same rows (score bits included) and
+    the same schema, materialized or not.  The bound covers the input
+    the local path actually collects."""
+    import watertower_spark.operators.search as S
+
+    seen = []  # (bound, collected bytes) of each local run
+    real_bound, real_run = S._input_bound, S._run_groups
+
+    def bound(*a):
+        seen.append([real_bound(*a)])
+        return seen[-1][0]
+
+    def run(pdf, dispatch):
+        seen[-1].append(_input_bytes(pdf))
+        return real_run(pdf, dispatch)
+
+    monkeypatch.setattr(S, "_input_bound", bound)
+    monkeypatch.setattr(S, "_run_groups", run)
+    for q in KINDS:
+        local = [_search(eng, {**q, "materialize": m}) for m in (False, True)]
+        assert "FlatMapGroupsInPandas" not in _plan(local[0])
+        with _threshold(spark, "1"):  # positive, and below every bound
+            dist = [_search(eng, {**q, "materialize": m}) for m in (False, True)]
+            assert "FlatMapGroupsInPandas" in _plan(dist[0])
+            for a, b in zip(local, dist):
+                assert a.schema == b.schema, q
+                assert _exact(a) == _exact(b), q
+        assert _exact(local[1]), q
+    runs = [s for s in seen if len(s) == 2]
+    assert len(runs) == 2 * len(KINDS)
+    assert all(0 < n <= b for b, n in runs), runs

@@ -323,6 +323,8 @@ def upsert_documents(spark: SparkSession, index_dir: str,
 
 
 def _upsert_documents(spark, index_dir, docs, tags=None):
+    from watertower_spark.functions import fsio
+
     m = load_current_manifest(index_dir)
     dps = m["docs_per_shard"]
     doc_map = spark.read.parquet(table_path(index_dir, m, "doc_map"))
@@ -332,55 +334,61 @@ def _upsert_documents(spark, index_dir, docs, tags=None):
         shards = [r["shard"] for r in updated.select(shard_col(dps)).distinct().collect()]
         # pre-rewrite stats contribution of the affected shards only
         old_contrib, old_contrib_dir = _snapshot_old_contrib(spark, index_dir, shards)
-        old_wc = _wc_sum(spark, index_dir, shards)
-        store = spark.read.parquet(f"{index_dir}/doc_store")
-        untouched = (
-            store.where(F.col("shard").isin(shards))
-            .join(updated.select("doc_id"), "doc_id", "left_anti")
-            .select("doc_id", "url", "text", "lang")
-        )
-        merged = untouched.unionByName(updated.select("doc_id", "url", "text", "lang"))
-        merged = merged.persist()
-        merged.count()
-        tag_src = None
-        if m.get("has_tags"):
-            old_tag_rows = _tags_as_rows(spark, index_dir, shards, untouched)
-            if tags is not None:
-                new_tag_rows = tags.join(updated.select("url", "doc_id"), "url") \
-                    .select("doc_id", "tags")
-                old_tag_rows = old_tag_rows.join(
-                    new_tag_rows.select("doc_id"), "doc_id", "left_anti"
-                ).unionByName(new_tag_rows)
-            tag_src = old_tag_rows
-        # rebuild the affected shards' postings, doc_stats, doc_len
-        # (+tags) from the merged (updated ∪ untouched) re-analysis —
-        # doc_stats must track the new bodies or BM25 scores with stale
-        # lengths
-        new_wc = _write_shards(index_dir, m, merged, tag_src, len(shards),
-                               "overwrite")
-        # refresh doc_store rows for these shards.  Materialize the new
-        # rows BEFORE the overwrite: the plan joins columns read from the
-        # same doc_store files the write replaces.
-        carried = [c for c in store.columns
-                   if c not in ("doc_id", "url", "text", "lang", "shard")]
-        new_store = (
-            merged.withColumn("shard", shard_col(dps))
-            .join(store.select("doc_id", *carried), "doc_id", "left")
-            .select(*store.columns)
-            .persist()
-        )
-        new_store.count()
-        merged.unpersist()
-        new_store.write.mode("overwrite").partitionBy("shard") \
-            .parquet(f"{index_dir}/doc_store")
-        new_store.unpersist()
-        m["build_id"] = m["build_id"] + "+u"
-        # re-analysis changed document lengths → avgdl must follow,
-        # via the affected shards' Σwc delta (no full doc_stats scan)
-        _apply_wc_delta(m, new_wc - old_wc)
-        gc = _apply_stats_delta(spark, index_dir, m, shards,
-                                old_term_contrib=old_contrib)
-        _save_manifest(index_dir, m, "upsert")
+        try:
+            old_wc = _wc_sum(spark, index_dir, shards)
+            store = spark.read.parquet(f"{index_dir}/doc_store")
+            untouched = (
+                store.where(F.col("shard").isin(shards))
+                .join(updated.select("doc_id"), "doc_id", "left_anti")
+                .select("doc_id", "url", "text", "lang")
+            )
+            merged = untouched.unionByName(updated.select("doc_id", "url", "text", "lang"))
+            merged = merged.persist()
+            merged.count()
+            tag_src = None
+            if m.get("has_tags"):
+                old_tag_rows = _tags_as_rows(spark, index_dir, shards, untouched)
+                if tags is not None:
+                    new_tag_rows = tags.join(updated.select("url", "doc_id"), "url") \
+                        .select("doc_id", "tags")
+                    old_tag_rows = old_tag_rows.join(
+                        new_tag_rows.select("doc_id"), "doc_id", "left_anti"
+                    ).unionByName(new_tag_rows)
+                tag_src = old_tag_rows
+            # rebuild the affected shards' postings, doc_stats, doc_len
+            # (+tags) from the merged (updated ∪ untouched) re-analysis —
+            # doc_stats must track the new bodies or BM25 scores with stale
+            # lengths
+            new_wc = _write_shards(index_dir, m, merged, tag_src, len(shards),
+                                   "overwrite")
+            # refresh doc_store rows for these shards.  Materialize the new
+            # rows BEFORE the overwrite: the plan joins columns read from the
+            # same doc_store files the write replaces.
+            carried = [c for c in store.columns
+                       if c not in ("doc_id", "url", "text", "lang", "shard")]
+            new_store = (
+                merged.withColumn("shard", shard_col(dps))
+                .join(store.select("doc_id", *carried), "doc_id", "left")
+                .select(*store.columns)
+                .persist()
+            )
+            new_store.count()
+            merged.unpersist()
+            new_store.write.mode("overwrite").partitionBy("shard") \
+                .parquet(f"{index_dir}/doc_store")
+            new_store.unpersist()
+            m["build_id"] = m["build_id"] + "+u"
+            # re-analysis changed document lengths → avgdl must follow,
+            # via the affected shards' Σwc delta (no full doc_stats scan)
+            _apply_wc_delta(m, new_wc - old_wc)
+            gc = _apply_stats_delta(spark, index_dir, m, shards,
+                                    old_term_contrib=old_contrib)
+            _save_manifest(index_dir, m, "upsert")
+        except BaseException:
+            # a rejected batch (a url twice, say) must not strand its
+            # snapshot until vacuum_index
+            fsio.delete_dir(old_contrib_dir)
+            raise
         gc.append(old_contrib_dir)
         _gc_dirs(gc)
 

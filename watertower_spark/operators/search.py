@@ -50,9 +50,25 @@ cursor + top-k merge (``_merge_topk``).
 
 Scale notes: postings are read with a pushed-down term filter (files are
 sorted by term within shard partitions → row-group pruning) and a shard
-partition filter; the kernel fans out per shard with no postings
-shuffle; the final materialization broadcasts the (small) result set
-against the shard-partitioned doc_store.
+partition filter.  What happens next depends on a conservative bound on
+the kernel input's bytes (``_input_bound``, from the driver's term
+statistics) against ``spark.sql.autoBroadcastJoinThreshold``, Spark's
+own bound for "small enough to gather in one place":
+
+- within it (most queries: rare and mid-frequency terms), the input is
+  collected ONCE and the same kernel runs in the driver, one call per
+  (qid, shard) group; the finishing step runs in pandas and the hits
+  are fetched from doc_store by key (``shard IN`` + ``doc_id IN``), as
+  the reference does (search.go:37-111, database.go:540-558).  A
+  single bm25 query costs 2 Spark jobs and no Python worker stage, and
+  the result is a DataFrame over local rows;
+- above it (head terms at crawl scale, a head-term
+  ``delete_by_query``), the kernel fans out per shard through the
+  grouped exchange with no postings shuffle, and the final
+  materialization broadcasts the (small) top-k result set against the
+  shard-partitioned doc_store — a distributed plan end to end.
+
+A threshold <= 0 always takes the exchange.
 """
 
 from __future__ import annotations
@@ -64,6 +80,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import codec
@@ -127,6 +144,80 @@ def _sql_map(entries: dict, key=str, value=str) -> str:
     """A literal SQL ``map(…)`` of ``entries`` (never empty)."""
     return "map(" + ", ".join(f"{key(k)}, {value(v)}"
                               for k, v in entries.items()) + ")"
+
+
+def _term_stat(row) -> tuple:
+    """A term_stats row as the engine memoizes it: (df, shards, cf)."""
+    return int(row["df"]), list(row["shards"]), int(row["cf"])
+
+
+# ------------------------------------------------- driver-side execution
+
+# the compiled result with no rows, as the local path returns it
+_NO_ROWS = pd.DataFrame({"qid": pd.Series([], dtype="int32"),
+                         "doc_id": pd.Series([], dtype="int64"),
+                         "shard": pd.Series([], dtype="int32"),
+                         "score": pd.Series([], dtype="float64")})
+# worst-case bytes of one varint (a 64-bit doc id, tf, gap or count) and
+# of one kernel-input row's fixed-width columns, offsets and validity
+_VARINT = codec._MAX_VARINT_BYTES
+_ROW_BYTES = 128
+
+
+def _input_bound(post: dict, tagm: dict, lens: dict, rng: list, stats: dict,
+                 n_cand, dps: int) -> int:
+    """A conservative upper bound on the bytes of ``_compile``'s kernel
+    input, from statistics the driver already holds.  Each posting copy
+    (a term's rows for one (qid, kind)) counts every row of the term at
+    the codec's worst case: ``_VARINT`` bytes per doc id and tf, plus
+    per position and per position-list count on AND rows, plus the
+    per-block sidecars.  Each doc_len row counts ``4·dps`` bytes; each
+    tag and range copy counts a row holding every doc of the shard, in
+    each of its query's ``n_cand(qid)`` candidate shards."""
+    total = 0
+    for term, copies in post.items():
+        df, shards, cf = stats[term]
+        blocks = df // codec.BLOCK_SIZE + len(shards)
+        row = len(shards) * (_ROW_BYTES + len(term.encode("utf-8")))
+        for _, _, wide in copies:
+            # doc ids, tfs; block_off, block_max_tf, block_min_dl
+            total += row + 2 * df * _VARINT + 16 * blocks
+            if wide:  # positions; block_last, block_tf_off, block_pos_off
+                total += (df + cf) * _VARINT + 24 * blocks
+    for tag, copies in tagm.items():
+        row = _ROW_BYTES + len(tag.encode("utf-8")) + dps * _VARINT
+        total += sum(n_cand(q) for q, _, _ in copies) * row
+    total += sum(map(len, lens.values())) * (_ROW_BYTES + 4 * dps)
+    total += sum(n_cand(q) for q, _ in rng) * (_ROW_BYTES + dps * _VARINT)
+    return total
+
+
+def _run_groups(pdf: pd.DataFrame, dispatch) -> pd.DataFrame:
+    """``dispatch`` over each (qid, shard) group of the collected kernel
+    input, in the driver: the same group frames ``applyInPandas`` hands
+    a Python worker (all columns, a fresh index, rows in input order)."""
+    outs = [dispatch(key, g.reset_index(drop=True))
+            for key, g in pdf.groupby(["qid", "shard"], sort=True)]
+    outs = [o for o in outs if len(o)]
+    return pd.concat(outs, ignore_index=True) if outs else _NO_ROWS
+
+
+def _page(res: pd.DataFrame, specs: list) -> pd.DataFrame:
+    """The local finishing step, under the same order contracts as the
+    distributed one: each query's rows by qid, then its mode's order
+    (bm25 score DESC, parity score ASC; doc_id ASC), bm25 queries cut
+    to their ``[offset, offset + k)`` window (parity is unbounded)."""
+    q = res["qid"].to_numpy()
+    bm25 = np.array([s.mode == "bm25" for s in specs])
+    sc = res["score"].to_numpy()
+    order = np.lexsort((res["doc_id"].to_numpy(), np.where(bm25[q], -sc, sc), q))
+    res = res.iloc[order].reset_index(drop=True)
+    q = res["qid"].to_numpy()
+    rank = np.arange(q.size) - np.searchsorted(q, q)  # within each qid
+    lo = np.array([s.offset if s.mode == "bm25" else 0 for s in specs])
+    hi = np.array([lo[i] + s.k if s.mode == "bm25" and s.k is not None
+                   else q.size for i, s in enumerate(specs)])
+    return res[(rank >= lo[q]) & (rank < hi[q])].reset_index(drop=True)
 
 
 @dataclasses.dataclass
@@ -676,15 +767,52 @@ class SearchEngine:
             cols = cache[key] = builder()
         return cols
 
-    def _empty_result(self) -> DataFrame:
-        """Memoized empty (qid, doc_id, shard, score) frame — the
-        compiled result when no query can match; DataFrames are
-        immutable, so one instance serves every query this engine
-        answers."""
-        e = self.__dict__.get("_empty_df")
-        if e is None:
-            e = self._empty_df = self.spark.createDataFrame([], QID_RESULT_SCHEMA)
-        return e
+    def _local_limit(self) -> int:
+        """The largest kernel input, in bytes, that ``_compile`` gathers
+        into the driver and scores there: Spark's own bound for "small
+        enough to gather in one place",
+        ``spark.sql.autoBroadcastJoinThreshold`` (<= 0: never)."""
+        return int(self.spark._jsparkSession.sessionState().conf()
+                   .autoBroadcastJoinThreshold())
+
+    def _local_df(self, table, schema) -> DataFrame:
+        """A DataFrame over driver-held rows (a ``LocalRelation``: its
+        ``collect()`` runs no Spark job)."""
+        if isinstance(table, pd.DataFrame):
+            table = pa.Table.from_pandas(table, preserve_index=False)
+        return self.spark.createDataFrame(table, schema)
+
+    def _fetch(self, hits: pd.DataFrame, qid: bool = False) -> DataFrame:
+        """Materialize locally finished ``hits`` (Q9, database.go:540-558,
+        as the reference batch-gets them): ONE doc_store read pruned by
+        ``shard IN`` and ``doc_id IN``, joined to the hits in the driver
+        in the hits' order — the schema of ``_materialize`` (and of
+        ``msearch``'s join, with ``qid``)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+        cols = ["doc_id", "url", "text", "lang", *self._extra_doc_cols()]
+        src = self.doc_store.schema
+        schema = StructType(
+            ([StructField("qid", IntegerType())] if qid else [])
+            + [src[c] for c in cols[:2]] + [StructField("score", DoubleType())]
+            + [src[c] for c in cols[2:]])
+        if hits.empty:
+            return self._local_df(to_arrow_schema(schema).empty_table(), schema)
+        docs = self.doc_store.where(F.expr(
+            f"{_sql_in('shard', set(hits['shard']))} AND "
+            f"{_sql_in('doc_id', set(hits['doc_id']))}")).select(*cols).toArrow()
+        # doc ids are unique index-wide (each names its shard), so the
+        # (doc_id, shard) join is a lookup by doc_id; a hit with no
+        # doc_store row drops out, as in the inner join
+        at = pd.Index(docs.column("doc_id").to_numpy()).get_indexer(hits["doc_id"])
+        docs, hits = docs.take(at[at >= 0]), hits[at >= 0]
+        out = {c: docs.column(c) for c in cols}
+        out["score"] = hits["score"].to_numpy()
+        if qid:
+            out["qid"] = hits["qid"].to_numpy()
+        return self._local_df(pa.table([out[c] for c in schema.names],
+                                        names=schema.names), schema)
 
     def _kernel_partitions(self, n_groups: int | None = None) -> int:
         """Explicit partition count for a grouped kernel exchange of
@@ -703,12 +831,12 @@ class SearchEngine:
         return max(1, min(int(n), self.spark.sparkContext.defaultParallelism))
 
     def _resolve_terms(self, terms: list) -> dict:
-        """term → (df, shard list) from the global term_stats table,
+        """term → (df, shard list, cf) from the global term_stats table,
         memoized driver-side (absent terms cached as None)."""
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
             rows = self.term_stats.where(F.col("term").isin(missing)).collect()
-            found = {r["term"]: (int(r["df"]), list(r["shards"])) for r in rows}
+            found = {r["term"]: _term_stat(r) for r in rows}
             for t in missing:
                 self._stats_cache[t] = found.get(t)
         return {t: self._stats_cache[t] for t in terms}
@@ -741,12 +869,19 @@ class SearchEngine:
             mode=mode, op=operator, k=k, offset=offset or 0,
             after=search_after)
 
-    def _compile(self, specs: list) -> DataFrame:
+    def _compile(self, specs: list) -> DataFrame | pd.DataFrame:
         """The one query compiler: ``specs`` → (qid, doc_id, shard,
         score) rows, qid = position in ``specs``, each query's rows
         bounded per shard by its kernel (top ``k + offset`` in bm25).
         Every search entry point runs through here; only the finishing
         step (global sort/limit, or a per-qid window) is theirs.
+
+        Returns a pandas frame when the input's bound (``_input_bound``)
+        is within ``_local_limit()``: the input is collected once and
+        each group runs through the same ``dispatch`` in the driver —
+        the same kernels on the same group frames, so both paths give
+        the same rows, score bits included.  Otherwise it returns the
+        distributed plan below.
 
         Plan: postings, tags and doc_len are each scanned ONCE with
         pushed term/tag IN and shard IN filters over every query's
@@ -761,7 +896,8 @@ class SearchEngine:
         SQL expressions, so plan size and driver cost stay flat as the
         batch grows.  A query that cannot match (k=0, an unknown
         required term, no shard holding every term, …) contributes no
-        input at all."""
+        input at all; a batch with no input is the empty pandas frame
+        on either path."""
         m = self.manifest
         n_docs, avgdl = int(m["doc_count"]), float(m["avgdl"])
         dps = int(m["docs_per_shard"])
@@ -821,8 +957,8 @@ class SearchEngine:
                 _make_kernel, s.tokens, df_global, n_docs, avgdl, s.mode, k,
                 n_tags=n_tags, docs_per_shard=dps,
                 has_excl=bool(excl or excl_tags), after=s.after, op=s.op)
-        if not kernels:
-            return self._empty_result()
+        if not kernels:  # no input to gather or distribute
+            return _NO_ROWS
 
         def shard_filter(qids) -> str:
             """A scan's shard IN over the union of ``qids``' shards."""
@@ -860,9 +996,12 @@ class SearchEngine:
                     f"x -> named_struct('qid', x.qid, 'kind', x.kind{copy})))"),
                     *cols))
 
-        n_part = self._kernel_partitions(sum(
-            len(sh) if sh is not None else int(m.get("n_shards") or 1)
-            for sh in shards.values()))
+        def n_cand(qid: int) -> int:
+            """How many shards ``qid``'s input can come from."""
+            sh = shards[qid]
+            return len(sh) if sh is not None else int(m.get("n_shards") or 1)
+
+        n_part = self._kernel_partitions(sum(map(n_cand, shards)))
 
         parts = []
         if post:
@@ -915,13 +1054,24 @@ class SearchEngine:
             out.insert(0, "qid", np.full(len(out), qid, dtype="int32"))
             return out
 
+        local = self._local_limit()
+        if local > 0 and _input_bound(post, tagm, lens, rng, resolved,
+                                      n_cand, dps) <= local:
+            return _run_groups(groups.toPandas(), dispatch)
         return groups.repartition(n_part, "qid", "shard").groupBy(
             "qid", "shard").applyInPandas(dispatch, schema=QID_RESULT_SCHEMA)
 
     def _top(self, spec: QuerySpec, materialize: bool) -> DataFrame:
         """Finish ONE compiled query: the global order of its mode, then
-        offset and limit (bm25), then optionally the doc_store join."""
+        offset and limit (bm25), then optionally the doc_store join —
+        in the driver (``_page``, ``_fetch``) when ``_compile`` ran it
+        there."""
         res = self._compile([spec])
+        if isinstance(res, pd.DataFrame):
+            hits = _page(res, [spec])
+            if materialize:
+                return self._fetch(hits)
+            return self._local_df(hits.drop(columns="qid"), RESULT_SCHEMA)
         if spec.mode == "bm25":
             res = res.orderBy(*self._const_cols("o_bm25", lambda: [
                 F.col("score").desc(), F.col("doc_id").asc()]))
@@ -934,7 +1084,7 @@ class SearchEngine:
                 F.col("score").asc(), F.col("doc_id").asc()]))
         if not materialize:
             return res.drop("qid")
-        return self._materialize(res, spec.mode, bounded=spec.k is not None)
+        return self._materialize(res, spec.mode, spec.k)
 
     # ------------------------------------------------------------- search
 
@@ -959,6 +1109,12 @@ class SearchEngine:
         filter tags stay conjunctive.  Returns a DataFrame ordered by
         the mode's contract.  ``k=0`` returns the empty result; a
         negative ``k`` or ``offset`` raises ValueError.
+
+        A small query (its kernel input within
+        ``spark.sql.autoBroadcastJoinThreshold``, see the module
+        notes) executes at call time, in the driver, and returns a
+        DataFrame over local rows: collecting it runs no Spark job.  A
+        larger one returns the lazy distributed plan.
 
         ``offset`` pages BM25 results ES-style (``from``/``size``):
         page n of size k is ``k=k, offset=n*k``.  The per-shard kernels
@@ -1100,12 +1256,15 @@ class SearchEngine:
         must_not exclusion — becomes the victim relation of ONE
         ``remove_documents`` mutation: (doc_id, shard) results join
         doc_map for urls and flow straight into the mutation's victim
-        snapshot write, so the match set NEVER materializes on the
-        driver (a head-term delete over a 10^12-doc corpus stays a
-        distributed plan end to end).  Returns the number of documents
-        removed; an empty query (no words, no tags) matches nothing and
-        deletes nothing.  Takes the index's single-writer lease like
-        every mutation (IndexLockedError when held elsewhere)."""
+        snapshot write.  Above ``spark.sql.autoBroadcastJoinThreshold``
+        (module notes) the match set NEVER materializes on the driver (a
+        head-term delete over a 10^12-doc corpus stays a distributed
+        plan end to end); below it the match set is already local rows
+        and the join reads them from the driver.  Returns the number of
+        documents removed; an empty query (no words, no tags) matches
+        nothing and deletes nothing.  Takes the index's single-writer
+        lease like every mutation (IndexLockedError when held
+        elsewhere)."""
         from .maintenance import remove_documents
 
         res = self.search(search_word, tags, lang=lang, mode="parity",
@@ -1160,7 +1319,7 @@ class SearchEngine:
         """Score term-dictionary expansion ``rows`` (term, df, shards) as
         the disjunctive ``spec``; no rows is the empty result."""
         for r in rows:  # expansion rows double as warm term-stat cache
-            self._stats_cache.setdefault(r["term"], (int(r["df"]), list(r["shards"])))
+            self._stats_cache.setdefault(r["term"], _term_stat(r))
         spec = dataclasses.replace(spec, tokens={r["term"]: [0] for r in rows})
         return self._top(spec, materialize)
 
@@ -1212,8 +1371,10 @@ class SearchEngine:
         """Number of documents matching the conjunctive(+phrase) query —
         the ES ``_count`` API.  Runs the parity kernel WITHOUT
         materialization or ordering (no doc_store join, no sort), so the
-        cost is candidate generation alone; the count aggregate is
-        map-side-combinable per shard.  ``exclude_words``/``exclude_tags``
+        cost is candidate generation alone.  A small match set is
+        counted over the local rows ``search`` returns for it (module
+        notes); a large one by a count aggregate, map-side-combinable
+        per shard.  ``exclude_words``/``exclude_tags``
         apply ES ``bool.must_not`` exclusion, ``ranges`` the ES range
         filter, before counting."""
         res = self.search(search_word, tags, lang, mode="parity",
@@ -1553,7 +1714,12 @@ class SearchEngine:
         materializes every query's hits.  Scheduling and exchange
         overhead is therefore paid once per BATCH instead of once per
         query — at any corpus size, query throughput comes from
-        batching, not from threading one driver process.
+        batching, not from threading one driver process.  A batch whose
+        kernel input is small (within
+        ``spark.sql.autoBroadcastJoinThreshold``, see the module notes)
+        runs the same kernels in the driver at call time: one collect of
+        the input, a pandas window, one doc_store read by key, and a
+        DataFrame over local rows.
 
         Returns rows with a leading ``qid`` column (position in
         ``queries``), ordered (qid ASC, the query's score order,
@@ -1570,6 +1736,11 @@ class SearchEngine:
                 **q, "mode": mode, "operator": q.get("operator") or "and",
                 "k": q.get("k", 10 if mode == "bm25" else None)}))
         res = self._compile(specs)
+        if isinstance(res, pd.DataFrame):
+            hits = _page(res, specs)
+            if materialize:
+                return self._fetch(hits, qid=True)
+            return self._local_df(hits, QID_RESULT_SCHEMA)
 
         # per-query paging: one window over the per-shard-bounded rows
         bm25 = [(q, s) for q, s in enumerate(specs) if s.mode == "bm25"]
@@ -1602,26 +1773,29 @@ class SearchEngine:
         )
 
     def _materialize(self, results: DataFrame, mode: str,
-                     bounded: bool = False) -> DataFrame:
+                     k: int | None = None) -> DataFrame:
         """Join the result set to doc_store — Q9/materialization
-        (database.go:540-558).  When the result set is bounded (top-k),
-        broadcasting it keeps the big table shuffle-free and the shard
-        column prunes doc_store partitions; parity mode has NO limit
+        (database.go:540-558).  When the result set is bounded (a ``k``
+        is given), broadcasting it keeps the big table shuffle-free and
+        the shard column prunes doc_store partitions; a bm25 top ``k``
+        also ends the 1:1 join's order in ``limit(k)`` (a top-k, no
+        range-partition sampling job).  Parity mode has NO limit
         (reference Q8 returns all matches), so a head-term query over a
-        big corpus must shuffle-join instead of broadcasting an unbounded
-        set through the driver."""
+        big corpus must shuffle-join instead of broadcasting an
+        unbounded set through the driver."""
         order = (
             [F.col("score").desc(), F.col("doc_id").asc()]
             if mode == "bm25"
             else [F.col("score").asc(), F.col("doc_id").asc()]
         )
-        right = F.broadcast(results) if bounded else results
-        return (
+        right = F.broadcast(results) if k is not None else results
+        out = (
             self.doc_store.join(right, ["doc_id", "shard"])
             .select("doc_id", "url", "score", "text", "lang",
                     *self._extra_doc_cols())
             .orderBy(*order)
         )
+        return out.limit(k) if mode == "bm25" and k is not None else out
 
     def _extra_doc_cols(self) -> list:
         """Document passthrough columns beyond the core shape — the
