@@ -26,3 +26,13 @@ def tmp_index_root():
     d = tempfile.mkdtemp(prefix="wt_idx_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Every query through the distributed exchange: no kernel input is
+    small enough to score in the driver (``_LOCAL_INPUT_BYTES``), which
+    the small test indexes otherwise always are."""
+    from watertower_spark.operators import search
+
+    monkeypatch.setattr(search, "_LOCAL_INPUT_BYTES", -1)

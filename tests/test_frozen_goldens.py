@@ -52,6 +52,16 @@ def test_frozen_bm25_ranks(engine):
         with open(GOLDEN_PATH, "w") as f:
             json.dump(got, f, indent=1, ensure_ascii=False)
         pytest.skip("goldens frozen on first run — rerun to verify")
+    _check(got)
+
+
+def test_frozen_bm25_ranks_distributed(engine, distributed):
+    """The goldens again, through the distributed exchange (the frozen
+    index is small, so the test above scores in the driver)."""
+    _check(_ranks(engine))
+
+
+def _check(got):
     with open(GOLDEN_PATH) as f:
         want = json.load(f)
     assert set(got) == set(want)

@@ -79,3 +79,17 @@ def _all_query_names():
 @pytest.mark.parametrize("name", _all_query_names())
 def test_gate_query(spark, duck, gate_queries, name):
     _run_one(spark, duck, gate_queries, name)
+
+
+def _engine_query_names():
+    """The gate queries answered by the search engine."""
+    return [n for n in _all_query_names()
+            if n.startswith(("engine_", "facet_")) or n == "wc_histogram"]
+
+
+@pytest.mark.parametrize("name", _engine_query_names())
+def test_engine_gate_query_distributed(spark, duck, gate_queries, distributed, name):
+    """The engine's gate queries once more, through the distributed
+    exchange: the gate index is small, so ``test_gate_query`` scores
+    them all in the driver."""
+    _run_one(spark, duck, gate_queries, name)

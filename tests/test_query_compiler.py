@@ -3,16 +3,17 @@ place (``SearchEngine._compile``), so ``msearch`` entries mean exactly
 what ``search`` arguments mean, page arguments are validated once, and
 the compiled plan's shape does not grow with the batch width."""
 
-import contextlib
 import datetime as dt
 import re
 import shutil
+from unittest import mock
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from watertower_spark.operators.index_build import build_index
+from watertower_spark.operators import search as S
 from watertower_spark.operators.search import SearchEngine
 
 VOCAB = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
@@ -47,30 +48,15 @@ def eng(spark, qc_index):
     return SearchEngine(spark, qc_index)
 
 
-THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+def _cutoff(n_bytes: int):
+    """``_compile`` scores a kernel input in the driver only while its
+    bound is within ``_LOCAL_INPUT_BYTES``; -1 means never (the
+    distributed path)."""
+    return mock.patch.object(S, "_LOCAL_INPUT_BYTES", n_bytes)
 
 
-@contextlib.contextmanager
-def _threshold(spark, value: str):
-    """``_compile`` gathers a kernel input into the driver only while
-    its bound is within ``spark.sql.autoBroadcastJoinThreshold``; -1
-    means never (the distributed path)."""
-    before = spark.conf.get(THRESHOLD)
-    spark.conf.set(THRESHOLD, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(THRESHOLD, before)
-
-
-def _path(spark, path: str):
-    return _threshold(spark, "-1" if path == "distributed" else "10MB")
-
-
-@pytest.fixture
-def distributed(spark):
-    with _path(spark, "distributed"):
-        yield
+def _path(path: str):
+    return _cutoff(-1 if path == "distributed" else 1 << 40)
 
 
 def _rows(df):
@@ -131,10 +117,10 @@ PATHS = ("local", "distributed")
 
 @settings(max_examples=8, deadline=None)
 @given(query_specs())
-def test_msearch_of_one_equals_search(spark, eng, q):
+def test_msearch_of_one_equals_search(eng, q):
     exact = {}
     for path in PATHS:
-        with _path(spark, path):
+        with _path(path):
             df = _search(eng, q)
             assert _msearch_rows(eng, [q]).get(0, []) == _rows(df), path
             exact[path] = _exact(df)
@@ -143,10 +129,10 @@ def test_msearch_of_one_equals_search(spark, eng, q):
 
 @settings(max_examples=3, deadline=None)
 @given(st.lists(query_specs(), min_size=2, max_size=4))
-def test_msearch_batch_equals_per_query_searches(spark, eng, batch):
+def test_msearch_batch_equals_per_query_searches(eng, batch):
     exact = {}
     for path in PATHS:
-        with _path(spark, path):
+        with _path(path):
             got = _msearch_rows(eng, batch)
             for qid, q in enumerate(batch):
                 assert got.get(qid, []) == _rows(_search(eng, q)), f"{path} qid {qid}: {q}"
@@ -231,13 +217,8 @@ def test_msearch_plan_shape(eng, distributed):
     assert len([ln for ln in p.splitlines()
                 if "FileScan" in ln and "/postings" in ln]) == 1
     assert "BroadcastHashJoin" not in p
-    # materialized: the doc_store join is the only broadcast join, and
-    # only a batch of top-k entries is hinted to broadcast (a parity
-    # entry is unbounded; the fixture turns Spark's own size-based
-    # broadcast choice off)
-    assert _plan(eng.msearch(_mixed(6))).count("BroadcastHashJoin") == 0
-    topk = [e for e in _mixed(6) if e.get("mode") != "parity"]
-    assert _plan(eng.msearch(topk)).count("BroadcastHashJoin") == 1
+    # materialized: the doc_store join is the only broadcast join
+    assert _plan(eng.msearch(_mixed(6))).count("BroadcastHashJoin") == 1
     # the plan does not grow with the batch
     n8, n32 = (len(_plan(eng.msearch(_mixed(w))).splitlines()) for w in (8, 32))
     assert n8 == n32
@@ -262,7 +243,7 @@ def _jobs(spark, fn):
     return out, len(set(tracker.getJobIdsForGroup(None)) - before)
 
 
-def test_small_bm25_query_runs_two_jobs_and_no_python_stage(spark, eng, monkeypatch):
+def test_small_bm25_query_has_no_python_stage(spark, eng, monkeypatch):
     from pyspark.sql.group import GroupedData
 
     q = dict(word="alpha beta", k=5)
@@ -273,9 +254,9 @@ def test_small_bm25_query_runs_two_jobs_and_no_python_stage(spark, eng, monkeypa
                         lambda self, *a, **kw: grouped.append(a) or real(self, *a, **kw))
     df, n_jobs = _jobs(spark, lambda: _search(eng, q))
     rows, n_collect = _jobs(spark, lambda: _exact(df))
-    # one collect of the kernel input, one doc_store fetch; the result
-    # is local rows, so collecting it runs nothing
-    assert (n_jobs, n_collect, grouped) == (2, 0, [])
+    # one collect of the kernel input when the query is built; the
+    # finishing plan over the local rows when it is collected
+    assert (n_jobs, n_collect, grouped) == (1, 2, []), (n_jobs, n_collect)
     assert rows == want and len(rows) == 5
     assert "LocalTableScan" in _plan(df) and "FlatMapGroupsInPandas" not in _plan(df)
 
@@ -306,8 +287,6 @@ def test_lowered_threshold_takes_the_exchange(spark, eng, monkeypatch):
     exchange; both paths return the same rows (score bits included) and
     the same schema, materialized or not.  The bound covers the input
     the local path actually collects."""
-    import watertower_spark.operators.search as S
-
     seen = []  # (bound, collected bytes) of each local run
     real_bound, real_run = S._input_bound, S._run_groups
 
@@ -324,7 +303,7 @@ def test_lowered_threshold_takes_the_exchange(spark, eng, monkeypatch):
     for q in KINDS:
         local = [_search(eng, {**q, "materialize": m}) for m in (False, True)]
         assert "FlatMapGroupsInPandas" not in _plan(local[0])
-        with _threshold(spark, "1"):  # positive, and below every bound
+        with _cutoff(1):  # positive, and below every bound
             dist = [_search(eng, {**q, "materialize": m}) for m in (False, True)]
             assert "FlatMapGroupsInPandas" in _plan(dist[0])
             for a, b in zip(local, dist):

@@ -177,3 +177,38 @@ def test_random_or_queries_match_python_oracle(rnd_setup):
         if want:
             checked_nonempty += 1
     assert checked_nonempty >= 10
+
+
+def test_random_queries_distributed_batch(rnd_setup, distributed):
+    """Both seeded query sets above once more, through the distributed
+    exchange (the 120-doc index otherwise scores every query in the
+    driver), as ONE msearch batch: the same oracle answers per qid."""
+    eng, oracle = rnd_setup
+    entries, wants = [], []
+    rng = random.Random(99)
+    for _ in range(40):
+        n_words = rng.randint(1, 3)
+        q = " ".join(rng.choices(WORDS, k=n_words))
+        tag = f"g{rng.randint(0, 3)}" if rng.random() < 0.3 else None
+        mode = "parity" if rng.random() < 0.5 else "bm25"
+        entries.append(dict(word=q, tags=[tag] if tag else None, lang="en",
+                            mode=mode, k=None))
+        wants.append(oracle.search(q, tag, mode))
+    rng = random.Random(7)
+    for _ in range(25):
+        q = " ".join(rng.choices(WORDS, k=rng.randint(1, 3)))
+        tag = f"g{rng.randint(0, 3)}" if rng.random() < 0.4 else None
+        entries.append(dict(word=q, tags=[tag] if tag else None, lang="en",
+                            mode="bm25", operator="or", k=10))
+        wants.append(oracle.search_or(q, tag, k=10))
+    df = eng.msearch(entries)
+    assert "FlatMapGroupsInPandas" in df._jdf.queryExecution().executedPlan().toString()
+    got = {}
+    for r in df.collect():
+        got.setdefault(r["qid"], []).append((r["url"], r["score"]))
+    for qid, want in enumerate(wants):
+        rows = got.get(qid, [])
+        assert [u for u, _ in rows] == [u for u, _ in want], entries[qid]
+        for (gu, gs), (_, ws) in zip(rows, want):
+            assert abs(gs - ws) < 1e-9, f"{entries[qid]}: {gu} score {gs} vs {ws}"
+    assert sum(1 for w in wants if w) >= 20

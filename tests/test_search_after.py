@@ -61,8 +61,16 @@ def _walk(eng, page, **kw):
 
 
 def test_search_after_tiles_every_kernel(spark, sa_index):
-    eng = SearchEngine(spark, sa_index)
+    _check_tiles(SearchEngine(spark, sa_index))
 
+
+def test_search_after_tiles_every_kernel_distributed(spark, sa_index, distributed):
+    """The same walks through the distributed exchange (the test index
+    is small, so the test above scores in the driver)."""
+    _check_tiles(SearchEngine(spark, sa_index))
+
+
+def _check_tiles(eng):
     # single-term block-max fast path
     full = [(r["doc_id"], r["score"]) for r in
             eng.search("shared", mode="bm25", k=16).collect()]

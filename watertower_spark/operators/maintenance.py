@@ -150,18 +150,25 @@ def _apply_wc_delta(m: dict, delta_wc: float) -> None:
 
 
 def _write_shards(index_dir: str, m: dict, docs: DataFrame,
-                  tag_rows: DataFrame | None, n_shards: int, mode: str) -> float:
+                  tag_rows: DataFrame | None, n_shards: int, mode: str,
+                  staging: tuple = ()) -> float:
     """Write the shards of ``docs`` (doc_id, text, lang) through the
     build's segment stage — postings, doc_stats and doc_len — plus their
     tags from ``tag_rows`` (doc_id, tags[]) on a tagged index.  Mode
     'append' adds new shard partitions; 'overwrite' replaces only the
-    partitions written (dynamic overwrite).  Returns the docs' Σwc."""
+    partitions written (dynamic overwrite).  Returns the docs' Σwc.
+    The ``staging`` dirs are deleted when the segment rejects ``docs``:
+    nothing has been written then, so nothing needs them."""
     dps = m["docs_per_shard"]
     seg = segment_stage(docs, n_shards, dps, m.get("default_lang") or "",
                         m.get("analyzer_lang"))
     # the doc_stats write materializes the segment, so a kernel error (a
     # url twice in the input) aborts before any other table is written
-    seg.write(index_dir, "doc_stats", mode)
+    try:
+        seg.write(index_dir, "doc_stats", mode)
+    except Exception:
+        _gc_dirs(staging)
+        raise
     sum_wc = float(seg.doc_stats.agg(F.sum("wc")).collect()[0][0] or 0.0)
     seg.write(index_dir, "postings", mode)
     seg.write(index_dir, "doc_len", mode)
@@ -323,8 +330,6 @@ def upsert_documents(spark: SparkSession, index_dir: str,
 
 
 def _upsert_documents(spark, index_dir, docs, tags=None):
-    from watertower_spark.functions import fsio
-
     m = load_current_manifest(index_dir)
     dps = m["docs_per_shard"]
     doc_map = spark.read.parquet(table_path(index_dir, m, "doc_map"))
@@ -334,61 +339,55 @@ def _upsert_documents(spark, index_dir, docs, tags=None):
         shards = [r["shard"] for r in updated.select(shard_col(dps)).distinct().collect()]
         # pre-rewrite stats contribution of the affected shards only
         old_contrib, old_contrib_dir = _snapshot_old_contrib(spark, index_dir, shards)
-        try:
-            old_wc = _wc_sum(spark, index_dir, shards)
-            store = spark.read.parquet(f"{index_dir}/doc_store")
-            untouched = (
-                store.where(F.col("shard").isin(shards))
-                .join(updated.select("doc_id"), "doc_id", "left_anti")
-                .select("doc_id", "url", "text", "lang")
-            )
-            merged = untouched.unionByName(updated.select("doc_id", "url", "text", "lang"))
-            merged = merged.persist()
-            merged.count()
-            tag_src = None
-            if m.get("has_tags"):
-                old_tag_rows = _tags_as_rows(spark, index_dir, shards, untouched)
-                if tags is not None:
-                    new_tag_rows = tags.join(updated.select("url", "doc_id"), "url") \
-                        .select("doc_id", "tags")
-                    old_tag_rows = old_tag_rows.join(
-                        new_tag_rows.select("doc_id"), "doc_id", "left_anti"
-                    ).unionByName(new_tag_rows)
-                tag_src = old_tag_rows
-            # rebuild the affected shards' postings, doc_stats, doc_len
-            # (+tags) from the merged (updated ∪ untouched) re-analysis —
-            # doc_stats must track the new bodies or BM25 scores with stale
-            # lengths
-            new_wc = _write_shards(index_dir, m, merged, tag_src, len(shards),
-                                   "overwrite")
-            # refresh doc_store rows for these shards.  Materialize the new
-            # rows BEFORE the overwrite: the plan joins columns read from the
-            # same doc_store files the write replaces.
-            carried = [c for c in store.columns
-                       if c not in ("doc_id", "url", "text", "lang", "shard")]
-            new_store = (
-                merged.withColumn("shard", shard_col(dps))
-                .join(store.select("doc_id", *carried), "doc_id", "left")
-                .select(*store.columns)
-                .persist()
-            )
-            new_store.count()
-            merged.unpersist()
-            new_store.write.mode("overwrite").partitionBy("shard") \
-                .parquet(f"{index_dir}/doc_store")
-            new_store.unpersist()
-            m["build_id"] = m["build_id"] + "+u"
-            # re-analysis changed document lengths → avgdl must follow,
-            # via the affected shards' Σwc delta (no full doc_stats scan)
-            _apply_wc_delta(m, new_wc - old_wc)
-            gc = _apply_stats_delta(spark, index_dir, m, shards,
-                                    old_term_contrib=old_contrib)
-            _save_manifest(index_dir, m, "upsert")
-        except BaseException:
-            # a rejected batch (a url twice, say) must not strand its
-            # snapshot until vacuum_index
-            fsio.delete_dir(old_contrib_dir)
-            raise
+        old_wc = _wc_sum(spark, index_dir, shards)
+        store = spark.read.parquet(f"{index_dir}/doc_store")
+        untouched = (
+            store.where(F.col("shard").isin(shards))
+            .join(updated.select("doc_id"), "doc_id", "left_anti")
+            .select("doc_id", "url", "text", "lang")
+        )
+        merged = untouched.unionByName(updated.select("doc_id", "url", "text", "lang"))
+        merged = merged.persist()
+        merged.count()
+        tag_src = None
+        if m.get("has_tags"):
+            old_tag_rows = _tags_as_rows(spark, index_dir, shards, untouched)
+            if tags is not None:
+                new_tag_rows = tags.join(updated.select("url", "doc_id"), "url") \
+                    .select("doc_id", "tags")
+                old_tag_rows = old_tag_rows.join(
+                    new_tag_rows.select("doc_id"), "doc_id", "left_anti"
+                ).unionByName(new_tag_rows)
+            tag_src = old_tag_rows
+        # rebuild the affected shards' postings, doc_stats, doc_len
+        # (+tags) from the merged (updated ∪ untouched) re-analysis —
+        # doc_stats must track the new bodies or BM25 scores with stale
+        # lengths
+        new_wc = _write_shards(index_dir, m, merged, tag_src, len(shards),
+                               "overwrite", staging=(old_contrib_dir,))
+        # refresh doc_store rows for these shards.  Materialize the new
+        # rows BEFORE the overwrite: the plan joins columns read from the
+        # same doc_store files the write replaces.
+        carried = [c for c in store.columns
+                   if c not in ("doc_id", "url", "text", "lang", "shard")]
+        new_store = (
+            merged.withColumn("shard", shard_col(dps))
+            .join(store.select("doc_id", *carried), "doc_id", "left")
+            .select(*store.columns)
+            .persist()
+        )
+        new_store.count()
+        merged.unpersist()
+        new_store.write.mode("overwrite").partitionBy("shard") \
+            .parquet(f"{index_dir}/doc_store")
+        new_store.unpersist()
+        m["build_id"] = m["build_id"] + "+u"
+        # re-analysis changed document lengths → avgdl must follow,
+        # via the affected shards' Σwc delta (no full doc_stats scan)
+        _apply_wc_delta(m, new_wc - old_wc)
+        gc = _apply_stats_delta(spark, index_dir, m, shards,
+                                old_term_contrib=old_contrib)
+        _save_manifest(index_dir, m, "upsert")
         gc.append(old_contrib_dir)
         _gc_dirs(gc)
 

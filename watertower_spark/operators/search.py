@@ -50,25 +50,25 @@ cursor + top-k merge (``_merge_topk``).
 
 Scale notes: postings are read with a pushed-down term filter (files are
 sorted by term within shard partitions → row-group pruning) and a shard
-partition filter.  What happens next depends on a conservative bound on
-the kernel input's bytes (``_input_bound``, from the driver's term
-statistics) against ``spark.sql.autoBroadcastJoinThreshold``, Spark's
-own bound for "small enough to gather in one place":
+partition filter.  Where the kernel runs depends on a conservative
+bound on its input's bytes (``_input_bound``, from the driver's term
+statistics) against ``_LOCAL_INPUT_BYTES``, the measured size below
+which scoring in the driver beats a Python worker stage:
 
 - within it (most queries: rare and mid-frequency terms), the input is
-  collected ONCE and the same kernel runs in the driver, one call per
-  (qid, shard) group; the finishing step runs in pandas and the hits
-  are fetched from doc_store by key (``shard IN`` + ``doc_id IN``), as
-  the reference does (search.go:37-111, database.go:540-558).  A
-  single bm25 query costs 2 Spark jobs and no Python worker stage, and
-  the result is a DataFrame over local rows;
+  collected ONCE when the query is built and the same kernel runs in
+  the driver, one call per (qid, shard) group, as the reference scores
+  in-process (search.go:37-111).  The kernel's rows become a local
+  relation, so a query pays no Python worker stage and no kernel
+  exchange;
 - above it (head terms at crawl scale, a head-term
   ``delete_by_query``), the kernel fans out per shard through the
-  grouped exchange with no postings shuffle, and the final
-  materialization broadcasts the (small) top-k result set against the
-  shard-partitioned doc_store — a distributed plan end to end.
+  grouped exchange with no postings shuffle — a distributed plan end
+  to end.
 
-A threshold <= 0 always takes the exchange.
+Either way the same finishing plan follows: the global order (or
+msearch's per-qid window), and a materialization that broadcasts the
+(small) top-k result set against the shard-partitioned doc_store.
 """
 
 from __future__ import annotations
@@ -153,11 +153,13 @@ def _term_stat(row) -> tuple:
 
 # ------------------------------------------------- driver-side execution
 
-# the compiled result with no rows, as the local path returns it
-_NO_ROWS = pd.DataFrame({"qid": pd.Series([], dtype="int32"),
-                         "doc_id": pd.Series([], dtype="int64"),
-                         "shard": pd.Series([], dtype="int32"),
-                         "score": pd.Series([], dtype="float64")})
+# the largest kernel-input bound, in bytes, that ``_compile`` gathers
+# into the driver and scores there.  On a 4-core host over a 50,000-doc
+# index, scoring in the driver beat the exchange on every query bound
+# up to 3.2 MB, tied at 3.3 MB and lost from 6 MB (two-term AND, whose
+# positions it decodes); 4 concurrent clients got more queries/s from
+# it over bounds of 1.2-3.3 MB and fewer over 3.3-6 MB
+_LOCAL_INPUT_BYTES = 2 << 20
 # worst-case bytes of one varint (a 64-bit doc id, tf, gap or count) and
 # of one kernel-input row's fixed-width columns, offsets and validity
 _VARINT = codec._MAX_VARINT_BYTES
@@ -192,32 +194,14 @@ def _input_bound(post: dict, tagm: dict, lens: dict, rng: list, stats: dict,
     return total
 
 
-def _run_groups(pdf: pd.DataFrame, dispatch) -> pd.DataFrame:
+def _run_groups(pdf: pd.DataFrame, dispatch) -> list:
     """``dispatch`` over each (qid, shard) group of the collected kernel
     input, in the driver: the same group frames ``applyInPandas`` hands
-    a Python worker (all columns, a fresh index, rows in input order)."""
+    a Python worker (all columns, a fresh index, rows in input order).
+    Returns the non-empty outputs."""
     outs = [dispatch(key, g.reset_index(drop=True))
             for key, g in pdf.groupby(["qid", "shard"], sort=True)]
-    outs = [o for o in outs if len(o)]
-    return pd.concat(outs, ignore_index=True) if outs else _NO_ROWS
-
-
-def _page(res: pd.DataFrame, specs: list) -> pd.DataFrame:
-    """The local finishing step, under the same order contracts as the
-    distributed one: each query's rows by qid, then its mode's order
-    (bm25 score DESC, parity score ASC; doc_id ASC), bm25 queries cut
-    to their ``[offset, offset + k)`` window (parity is unbounded)."""
-    q = res["qid"].to_numpy()
-    bm25 = np.array([s.mode == "bm25" for s in specs])
-    sc = res["score"].to_numpy()
-    order = np.lexsort((res["doc_id"].to_numpy(), np.where(bm25[q], -sc, sc), q))
-    res = res.iloc[order].reset_index(drop=True)
-    q = res["qid"].to_numpy()
-    rank = np.arange(q.size) - np.searchsorted(q, q)  # within each qid
-    lo = np.array([s.offset if s.mode == "bm25" else 0 for s in specs])
-    hi = np.array([lo[i] + s.k if s.mode == "bm25" and s.k is not None
-                   else q.size for i, s in enumerate(specs)])
-    return res[(rank >= lo[q]) & (rank < hi[q])].reset_index(drop=True)
+    return [o for o in outs if len(o)]
 
 
 @dataclasses.dataclass
@@ -767,52 +751,15 @@ class SearchEngine:
             cols = cache[key] = builder()
         return cols
 
-    def _local_limit(self) -> int:
-        """The largest kernel input, in bytes, that ``_compile`` gathers
-        into the driver and scores there: Spark's own bound for "small
-        enough to gather in one place",
-        ``spark.sql.autoBroadcastJoinThreshold`` (<= 0: never)."""
-        return int(self.spark._jsparkSession.sessionState().conf()
-                   .autoBroadcastJoinThreshold())
-
-    def _local_df(self, table, schema) -> DataFrame:
-        """A DataFrame over driver-held rows (a ``LocalRelation``: its
-        ``collect()`` runs no Spark job)."""
-        if isinstance(table, pd.DataFrame):
-            table = pa.Table.from_pandas(table, preserve_index=False)
-        return self.spark.createDataFrame(table, schema)
-
-    def _fetch(self, hits: pd.DataFrame, qid: bool = False) -> DataFrame:
-        """Materialize locally finished ``hits`` (Q9, database.go:540-558,
-        as the reference batch-gets them): ONE doc_store read pruned by
-        ``shard IN`` and ``doc_id IN``, joined to the hits in the driver
-        in the hits' order — the schema of ``_materialize`` (and of
-        ``msearch``'s join, with ``qid``)."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-        cols = ["doc_id", "url", "text", "lang", *self._extra_doc_cols()]
-        src = self.doc_store.schema
-        schema = StructType(
-            ([StructField("qid", IntegerType())] if qid else [])
-            + [src[c] for c in cols[:2]] + [StructField("score", DoubleType())]
-            + [src[c] for c in cols[2:]])
-        if hits.empty:
-            return self._local_df(to_arrow_schema(schema).empty_table(), schema)
-        docs = self.doc_store.where(F.expr(
-            f"{_sql_in('shard', set(hits['shard']))} AND "
-            f"{_sql_in('doc_id', set(hits['doc_id']))}")).select(*cols).toArrow()
-        # doc ids are unique index-wide (each names its shard), so the
-        # (doc_id, shard) join is a lookup by doc_id; a hit with no
-        # doc_store row drops out, as in the inner join
-        at = pd.Index(docs.column("doc_id").to_numpy()).get_indexer(hits["doc_id"])
-        docs, hits = docs.take(at[at >= 0]), hits[at >= 0]
-        out = {c: docs.column(c) for c in cols}
-        out["score"] = hits["score"].to_numpy()
-        if qid:
-            out["qid"] = hits["qid"].to_numpy()
-        return self._local_df(pa.table([out[c] for c in schema.names],
-                                        names=schema.names), schema)
+    def _empty_result(self) -> DataFrame:
+        """Memoized empty (qid, doc_id, shard, score) frame — the
+        compiled result when no query can match; DataFrames are
+        immutable, so one instance serves every query this engine
+        answers."""
+        e = self.__dict__.get("_empty_df")
+        if e is None:
+            e = self._empty_df = self.spark.createDataFrame([], QID_RESULT_SCHEMA)
+        return e
 
     def _kernel_partitions(self, n_groups: int | None = None) -> int:
         """Explicit partition count for a grouped kernel exchange of
@@ -869,18 +816,19 @@ class SearchEngine:
             mode=mode, op=operator, k=k, offset=offset or 0,
             after=search_after)
 
-    def _compile(self, specs: list) -> DataFrame | pd.DataFrame:
+    def _compile(self, specs: list) -> DataFrame:
         """The one query compiler: ``specs`` → (qid, doc_id, shard,
         score) rows, qid = position in ``specs``, each query's rows
         bounded per shard by its kernel (top ``k + offset`` in bm25).
         Every search entry point runs through here; only the finishing
         step (global sort/limit, or a per-qid window) is theirs.
 
-        Returns a pandas frame when the input's bound (``_input_bound``)
-        is within ``_local_limit()``: the input is collected once and
-        each group runs through the same ``dispatch`` in the driver —
-        the same kernels on the same group frames, so both paths give
-        the same rows, score bits included.  Otherwise it returns the
+        When the input's bound (``_input_bound``) is within
+        ``_LOCAL_INPUT_BYTES``, the input is collected once and each
+        group runs through the same ``dispatch`` in the driver — the
+        same kernels on the same group frames, so both paths give the
+        same rows, score bits included — and the result is a
+        DataFrame over those local rows.  Otherwise it is the
         distributed plan below.
 
         Plan: postings, tags and doc_len are each scanned ONCE with
@@ -896,8 +844,7 @@ class SearchEngine:
         SQL expressions, so plan size and driver cost stay flat as the
         batch grows.  A query that cannot match (k=0, an unknown
         required term, no shard holding every term, …) contributes no
-        input at all; a batch with no input is the empty pandas frame
-        on either path."""
+        input at all."""
         m = self.manifest
         n_docs, avgdl = int(m["doc_count"]), float(m["avgdl"])
         dps = int(m["docs_per_shard"])
@@ -957,8 +904,8 @@ class SearchEngine:
                 _make_kernel, s.tokens, df_global, n_docs, avgdl, s.mode, k,
                 n_tags=n_tags, docs_per_shard=dps,
                 has_excl=bool(excl or excl_tags), after=s.after, op=s.op)
-        if not kernels:  # no input to gather or distribute
-            return _NO_ROWS
+        if not kernels:
+            return self._empty_result()
 
         def shard_filter(qids) -> str:
             """A scan's shard IN over the union of ``qids``' shards."""
@@ -1054,24 +1001,21 @@ class SearchEngine:
             out.insert(0, "qid", np.full(len(out), qid, dtype="int32"))
             return out
 
-        local = self._local_limit()
-        if local > 0 and _input_bound(post, tagm, lens, rng, resolved,
-                                      n_cand, dps) <= local:
-            return _run_groups(groups.toPandas(), dispatch)
+        if _input_bound(post, tagm, lens, rng, resolved, n_cand,
+                        dps) <= _LOCAL_INPUT_BYTES:
+            outs = _run_groups(groups.toPandas(), dispatch)
+            if not outs:
+                return self._empty_result()
+            return self.spark.createDataFrame(pa.Table.from_pandas(
+                pd.concat(outs, ignore_index=True), preserve_index=False),
+                QID_RESULT_SCHEMA)
         return groups.repartition(n_part, "qid", "shard").groupBy(
             "qid", "shard").applyInPandas(dispatch, schema=QID_RESULT_SCHEMA)
 
     def _top(self, spec: QuerySpec, materialize: bool) -> DataFrame:
         """Finish ONE compiled query: the global order of its mode, then
-        offset and limit (bm25), then optionally the doc_store join —
-        in the driver (``_page``, ``_fetch``) when ``_compile`` ran it
-        there."""
+        offset and limit (bm25), then optionally the doc_store join."""
         res = self._compile([spec])
-        if isinstance(res, pd.DataFrame):
-            hits = _page(res, [spec])
-            if materialize:
-                return self._fetch(hits)
-            return self._local_df(hits.drop(columns="qid"), RESULT_SCHEMA)
         if spec.mode == "bm25":
             res = res.orderBy(*self._const_cols("o_bm25", lambda: [
                 F.col("score").desc(), F.col("doc_id").asc()]))
@@ -1110,11 +1054,11 @@ class SearchEngine:
         the mode's contract.  ``k=0`` returns the empty result; a
         negative ``k`` or ``offset`` raises ValueError.
 
-        A small query (its kernel input within
-        ``spark.sql.autoBroadcastJoinThreshold``, see the module
-        notes) executes at call time, in the driver, and returns a
-        DataFrame over local rows: collecting it runs no Spark job.  A
-        larger one returns the lazy distributed plan.
+        A small query (its kernel input within ``_LOCAL_INPUT_BYTES``,
+        see the module notes) is scored at call time, in the driver;
+        the DataFrame returned finishes those local rows (order, limit,
+        doc_store join) when collected.  A larger one is scored by the
+        distributed plan when collected.
 
         ``offset`` pages BM25 results ES-style (``from``/``size``):
         page n of size k is ``k=k, offset=n*k``.  The per-shard kernels
@@ -1256,11 +1200,11 @@ class SearchEngine:
         must_not exclusion — becomes the victim relation of ONE
         ``remove_documents`` mutation: (doc_id, shard) results join
         doc_map for urls and flow straight into the mutation's victim
-        snapshot write.  Above ``spark.sql.autoBroadcastJoinThreshold``
-        (module notes) the match set NEVER materializes on the driver (a
-        head-term delete over a 10^12-doc corpus stays a distributed
-        plan end to end); below it the match set is already local rows
-        and the join reads them from the driver.  Returns the number of
+        snapshot write.  Above ``_LOCAL_INPUT_BYTES`` (module notes)
+        the match set NEVER materializes on the driver (a head-term
+        delete over a 10^12-doc corpus stays a distributed plan end to
+        end); below it the kernel ran in the driver and the match set
+        is already a local relation there.  Returns the number of
         documents removed; an empty query (no words, no tags) matches
         nothing and deletes nothing.  Takes the index's single-writer
         lease like every mutation (IndexLockedError when held
@@ -1371,12 +1315,11 @@ class SearchEngine:
         """Number of documents matching the conjunctive(+phrase) query —
         the ES ``_count`` API.  Runs the parity kernel WITHOUT
         materialization or ordering (no doc_store join, no sort), so the
-        cost is candidate generation alone.  A small match set is
-        counted over the local rows ``search`` returns for it (module
-        notes); a large one by a count aggregate, map-side-combinable
-        per shard.  ``exclude_words``/``exclude_tags``
-        apply ES ``bool.must_not`` exclusion, ``ranges`` the ES range
-        filter, before counting."""
+        cost is candidate generation alone; the count aggregate is
+        map-side-combinable per shard (over a local relation when the
+        kernel ran in the driver, module notes).
+        ``exclude_words``/``exclude_tags`` apply ES ``bool.must_not``
+        exclusion, ``ranges`` the ES range filter, before counting."""
         res = self.search(search_word, tags, lang, mode="parity",
                           materialize=False, exclude_words=exclude_words,
                           exclude_tags=exclude_tags, ranges=ranges)
@@ -1715,11 +1658,10 @@ class SearchEngine:
         overhead is therefore paid once per BATCH instead of once per
         query — at any corpus size, query throughput comes from
         batching, not from threading one driver process.  A batch whose
-        kernel input is small (within
-        ``spark.sql.autoBroadcastJoinThreshold``, see the module notes)
-        runs the same kernels in the driver at call time: one collect of
-        the input, a pandas window, one doc_store read by key, and a
-        DataFrame over local rows.
+        kernel input is small (within ``_LOCAL_INPUT_BYTES``, see the
+        module notes) runs the same kernels in the driver at call time,
+        after one collect of their input; the window and the doc_store
+        join below then run over those local rows.
 
         Returns rows with a leading ``qid`` column (position in
         ``queries``), ordered (qid ASC, the query's score order,
@@ -1736,11 +1678,6 @@ class SearchEngine:
                 **q, "mode": mode, "operator": q.get("operator") or "and",
                 "k": q.get("k", 10 if mode == "bm25" else None)}))
         res = self._compile(specs)
-        if isinstance(res, pd.DataFrame):
-            hits = _page(res, specs)
-            if materialize:
-                return self._fetch(hits, qid=True)
-            return self._local_df(hits, QID_RESULT_SCHEMA)
 
         # per-query paging: one window over the per-shard-bounded rows
         bm25 = [(q, s) for q, s in enumerate(specs) if s.mode == "bm25"]
