@@ -161,6 +161,9 @@ def test_page_arguments_are_validated_once(eng):
 def test_msearch_honours_every_entry_key(eng):
     empty_range = {"warc_ts": {"gte": "2031-01-01"}}
     assert eng.search("alpha", mode="bm25", k=10, ranges=empty_range).count() == 0
+    # a range-only query whose range keeps no doc: no kernel input at all
+    assert eng.search("", mode="bm25", k=10, ranges=empty_range).count() == 0
+    assert eng.count("", ranges=empty_range) == 0
     entries = [
         {"word": "alpha", "ranges": empty_range},
         {"word": "alpha", "k": 3, "offset": 2},
@@ -224,6 +227,19 @@ def test_msearch_plan_shape(eng, distributed):
     assert n8 == n32
 
 
+def test_bounded_msearch_materialize_is_a_top_k(eng, distributed):
+    """An all-top-k batch's doc_store join ends in ``limit(Σ(offset +
+    k))`` (the join is 1:1, so no row changes): a top-k, no
+    range-partitioned sort.  A batch with a parity entry keeps it."""
+    top_k = [q for q in _mixed(6) if q.get("mode") != "parity"]
+    n = sum(q.get("offset", 0) + q["k"] for q in top_k)
+    p = _plan(eng.msearch(top_k))
+    assert p.splitlines()[1].lstrip(" +-").startswith(f"TakeOrderedAndProject(limit={n},")
+    assert "rangepartitioning" not in p
+    p = _plan(eng.msearch(_mixed(6)))
+    assert "TakeOrderedAndProject" not in p and "rangepartitioning(" in p
+
+
 def test_bounded_materialize_is_a_top_k(eng, distributed):
     """A bm25 top-k's doc_store join ends in ``limit(k)``: one top-k,
     no range-partitioned global sort (its sampling job).  Parity
@@ -254,11 +270,52 @@ def test_small_bm25_query_has_no_python_stage(spark, eng, monkeypatch):
                         lambda self, *a, **kw: grouped.append(a) or real(self, *a, **kw))
     df, n_jobs = _jobs(spark, lambda: _search(eng, q))
     rows, n_collect = _jobs(spark, lambda: _exact(df))
-    # one collect of the kernel input when the query is built; the
-    # finishing plan over the local rows when it is collected
-    assert (n_jobs, n_collect, grouped) == (1, 2, []), (n_jobs, n_collect)
+    # the input is read by key and the top-k finished in the driver:
+    # the query is a local relation of its hits
+    assert (n_jobs, n_collect, grouped) == (0, 0, []), (n_jobs, n_collect)
     assert rows == want and len(rows) == 5
     assert "LocalTableScan" in _plan(df) and "FlatMapGroupsInPandas" not in _plan(df)
+
+
+def test_top_k_queries_run_no_spark_job(spark, eng):
+    """A warm bm25 query, a prefix expansion once its term_stats job has
+    run, and an all-top-k msearch each run no Spark job, built or
+    collected, and give the distributed path's rows."""
+    rows = eng.term_stats.where("term LIKE 'al%'").collect()
+    spec = S.QuerySpec({}, [], op="or", k=4)
+    batch = [{"word": "alpha", "k": 3}, {"word": "beta gamma", "operator": "or", "k": 2},
+             {"word": "gamma", "k": 2, "offset": 1, "exclude_words": "alpha"},
+             {"word": "delta", "tags": ["naïve"], "k": 2}]
+    cases = {"search": lambda: _search(eng, {"word": "alpha beta", "k": 3, "offset": 1}),
+             "prefix": lambda: eng._top_expanded(spec, rows, True),
+             "msearch": lambda: eng.msearch(batch)}
+    for name, build in cases.items():
+        want = _exact(build())  # warm: term stats memoized
+        df, n_built = _jobs(spark, build)
+        got, n_collected = _jobs(spark, lambda: _exact(df))
+        assert (n_built, n_collected) == (0, 0), name
+        with _path("distributed"):
+            dist = build()
+            assert got == want == _exact(dist) and df.schema == dist.schema, name
+        assert got, name
+    # the whole prefix query: its expansion is its one job
+    df, n_built = _jobs(spark, lambda: eng.search_prefix("al", k=4))
+    assert n_built == 1 and _jobs(spark, df.collect)[1] == 0
+
+
+def test_count_runs_no_spark_job(spark, eng):
+    """``count`` on the local path is the number of parity rows the
+    kernel produced in the driver: no Spark job, and the distributed
+    path's count."""
+    cases = [("alpha", {}), ("beta gamma", {"exclude_words": "delta"}),
+             ("alpha", {"tags": ["naïve"], "exclude_tags": ["it's"]}), ("nosuchword", {})]
+    for word, kw in cases:
+        eng.count(word, **kw)  # warm: term stats memoized
+        n, n_jobs = _jobs(spark, lambda: eng.count(word, **kw))
+        assert n_jobs == 0, (word, kw)
+        with _path("distributed"):
+            assert eng.count(word, **kw) == n, (word, kw)
+    assert eng.count("alpha") > 0
 
 
 # every kind of kernel input and finishing step: tag, must_not, range,
@@ -313,3 +370,70 @@ def test_lowered_threshold_takes_the_exchange(spark, eng, monkeypatch):
     runs = [s for s in seen if len(s) == 2]
     assert len(runs) == 2 * len(KINDS)
     assert all(0 < n <= b for b, n in runs), runs
+
+
+def test_local_reader_equals_the_spark_groups(eng):
+    """The by-key reader gives exactly the frame the Spark plan collects:
+    the same rows, per-group row order, dtypes and NULL sidecars, for a
+    batch holding every entry of KINDS, OR with must_not and tags with
+    a quote and non-ASCII characters."""
+    batch = KINDS + [
+        {"word": "alpha beta", "operator": "or", "k": 5, "exclude_words": "gamma"},
+        {"word": "beta", "tags": ["q'\\x", "日本"], "k": 4},
+        {"word": "", "tags": ["it's"], "exclude_tags": ["naïve"], "mode": "parity"},
+    ]
+    b = eng._batch([eng._spec(**{**q, "mode": q.get("mode") or "bm25",
+                                 "k": q.get("k", 10 if q.get("mode") != "parity" else None)})
+                    for q in batch])
+    local = eng._local_groups(b)
+    spark = eng._spark_groups(b, 4).toPandas()
+    assert sorted(local.columns) == sorted(spark.columns)
+    spark = spark[list(local.columns)]
+    assert local.dtypes.equals(spark.dtypes)
+    key = ["qid", "shard"]
+    groups = [(k, g.reset_index(drop=True)) for k, g in local.groupby(key, sort=True)]
+    want = [(k, g.reset_index(drop=True)) for k, g in spark.groupby(key, sort=True)]
+    assert [k for k, _ in groups] == [k for k, _ in want]
+    for (k, g), (_, w) in zip(groups, want):
+        assert g.equals(w), k  # rows, their order, values and NULLs
+    assert {q for (q, _), _ in groups} == set(b.kernels)
+    assert set(local["kind"]) == {"term", "not", "tag", "nottag", "len"}
+    assert (local["name"] == S._RANGE_NAME).any()
+    assert local.loc[local["kind"] == "term", "pos_blob"].isna().any()
+
+
+def test_unresolvable_filesystem_takes_the_exchange(spark, qc_index, monkeypatch):
+    """An index whose scheme pyarrow cannot open (``s3a://``) sends every
+    query down the distributed plan, with the same rows."""
+    from pyarrow import fs as pafs
+
+    assert S._arrow_filesystem("s3a://bucket/index") is None
+
+    real = pafs.FileSystem
+
+    class Unresolvable:
+        @staticmethod
+        def from_uri(uri):  # pyarrow on the index as an s3a:// path
+            return real.from_uri("s3a://bucket" + uri)
+
+    want = {}
+    for q in KINDS:
+        want[str(q)] = _exact(_search(SearchEngine(spark, qc_index), q))
+    monkeypatch.setattr(S.pafs, "FileSystem", Unresolvable)
+    eng = SearchEngine(spark, qc_index)
+    for q in KINDS:
+        df = _search(eng, q)
+        assert "FlatMapGroupsInPandas" in _plan(df), q
+        assert _exact(df) == want[str(q)], q
+
+
+def test_local_parity_broadcasts_to_doc_store(eng, distributed):
+    """Rows scored in the driver are already in its memory: a local
+    parity query broadcasts them to doc_store, with the rows of the
+    distributed path's shuffle join."""
+    want = _exact(eng.search("beta gamma", mode="parity"))
+    with _path("local"):
+        df = eng.search("beta gamma", mode="parity")
+        p = _plan(df)
+        assert "BroadcastHashJoin" in p and "LocalTableScan" in p
+        assert _exact(df) == want and want

@@ -55,20 +55,32 @@ bound on its input's bytes (``_input_bound``, from the driver's term
 statistics) against ``_LOCAL_INPUT_BYTES``, the measured size below
 which scoring in the driver beats a Python worker stage:
 
-- within it (most queries: rare and mid-frequency terms), the input is
-  collected ONCE when the query is built and the same kernel runs in
-  the driver, one call per (qid, shard) group, as the reference scores
-  in-process (search.go:37-111).  The kernel's rows become a local
-  relation, so a query pays no Python worker stage and no kernel
-  exchange;
+- within it (most queries: rare and mid-frequency terms), the driver
+  reads the input by key, as the reference gets its entities
+  (search.go:37-111): pyarrow reads the candidate shards' postings,
+  tags and doc_len files with the same term/tag filters
+  (``_local_groups``), and the same kernel runs per (qid, shard) group
+  in the driver.  A k-bounded bm25 result (``search``,
+  ``search_prefix``/``search_fuzzy``, an all-top-k ``msearch``) also
+  finishes there: top-k, then its hits' doc_store rows read by (shard,
+  doc_id), as a local relation — no Spark job, built or collected.
+  Other results (parity, mixed batches, ``materialize=False``) become
+  a local relation under the finishing plan below, broadcast to
+  doc_store.  A range filter is a Spark predicate, so it costs one
+  Spark job that collects its in-range doc ids;
 - above it (head terms at crawl scale, a head-term
   ``delete_by_query``), the kernel fans out per shard through the
   grouped exchange with no postings shuffle — a distributed plan end
-  to end.
+  to end.  So does every query on an index whose scheme pyarrow cannot
+  open (``s3a://`` is Hadoop's; ``pyarrow.fs.FileSystem.from_uri``
+  resolves local and ``file://`` paths, and the object-store schemes
+  the installed pyarrow was built with).
 
-Either way the same finishing plan follows: the global order (or
-msearch's per-qid window), and a materialization that broadcasts the
-(small) top-k result set against the shard-partitioned doc_store.
+The driver lists each shard's files once per engine, on the first query
+that reads the shard: like the Spark tables' file index, a snapshot.
+The finishing plan is the global order (or msearch's per-qid window),
+and a materialization that broadcasts a bounded or driver-side result
+set against the shard-partitioned doc_store.
 """
 
 from __future__ import annotations
@@ -77,11 +89,17 @@ import dataclasses
 import functools
 import itertools
 import math
+import os
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from ..functions import codec
 from .index_build import BM25_B, BM25_K1, load_current_manifest
@@ -95,6 +113,10 @@ QID_RESULT_SCHEMA = "qid int, " + RESULT_SCHEMA
 # them as NULL, so no position data crosses the exchange for OR queries
 _AND_ONLY_BLOBS = ("pos_blob", "block_last", "block_tf_off", "block_pos_off")
 _SHARED_BLOBS = ("tf_blob", "block_off", "block_max_tf", "block_min_dl")
+# the name of the synthetic tag row that carries a range filter
+_RANGE_NAME = "\x00range"
+# the tables' shard=N directories, typed as Spark infers them
+_SHARD_DIRS = ds.partitioning(pa.schema([("shard", pa.int32())]), flavor="hive")
 
 
 def _kernel_cols(generated: tuple = (), **src) -> list:
@@ -195,13 +217,73 @@ def _input_bound(post: dict, tagm: dict, lens: dict, rng: list, stats: dict,
 
 
 def _run_groups(pdf: pd.DataFrame, dispatch) -> list:
-    """``dispatch`` over each (qid, shard) group of the collected kernel
-    input, in the driver: the same group frames ``applyInPandas`` hands
-    a Python worker (all columns, a fresh index, rows in input order).
-    Returns the non-empty outputs."""
+    """``dispatch`` over each (qid, shard) group of the kernel input, in
+    the driver: the same group frames ``applyInPandas`` hands a Python
+    worker (all columns, a fresh index, rows in input order).  Returns
+    the non-empty outputs."""
     outs = [dispatch(key, g.reset_index(drop=True))
             for key, g in pdf.groupby(["qid", "shard"], sort=True)]
     return [o for o in outs if len(o)]
+
+
+def _arrow_filesystem(index_dir: str):
+    """(pyarrow FileSystem, path on it) of ``index_dir``, or None when
+    pyarrow cannot open its scheme (``s3a://`` is Hadoop's alone)."""
+    uri = index_dir if "://" in index_dir else os.path.abspath(index_dir)
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except (pa.ArrowException, OSError, ValueError):
+        return None
+
+
+def _fan_rows(tbl: pa.Table, key: str, fan: dict, shards: dict):
+    """Each row of ``tbl`` once per (qid, kind) copy of ``fan[row's
+    key]`` whose query can use the row's shard, in row order and then
+    copy order (the order ``inline`` generates them in): the taken rows
+    and the copies' qid, kind and wide lists."""
+    idx, qid, kind, wide = [], [], [], []
+    for i, (k, sh) in enumerate(zip(tbl.column(key).to_pylist(),
+                                    tbl.column("shard").to_pylist())):
+        for q, kd, w in fan[k]:
+            if shards[q] is None or sh in shards[q]:
+                idx.append(i), qid.append(q), kind.append(kd), wide.append(w)
+    return tbl.take(pa.array(idx, pa.int64())), qid, kind, wide
+
+
+def _kernel_table(qid: list, kind: list, name, shard, df, blobs: dict) -> pa.Table:
+    """Kernel-input rows in ``_kernel_cols`` order and types (lists or
+    Arrow columns); sidecars absent from ``blobs`` are NULL."""
+    def col(v, t):
+        return pa.chunked_array([v], t) if isinstance(v, list) else v.cast(t)
+    cols = {"qid": col(qid, pa.int32()), "kind": col(kind, pa.string()),
+            "name": col(name, pa.string()), "shard": col(shard, pa.int32()),
+            "df": col(df, pa.int32())}
+    for c in ("doc_blob",) + _SHARED_BLOBS + _AND_ONLY_BLOBS:
+        cols[c] = col(blobs.get(c, [None] * len(qid)), pa.binary())
+    return pa.table(cols)
+
+
+def _fan_qids(fan: dict) -> set:
+    """The queries with a copy in fan-out map ``fan``."""
+    return {q for entries in fan.values() for q, _, _ in entries}
+
+
+def _no_rows() -> pd.DataFrame:
+    """No kernel output rows (QID_RESULT_SCHEMA's pandas types)."""
+    return pd.DataFrame({"qid": np.empty(0, np.int32), "doc_id": np.empty(0, np.int64),
+                         "shard": np.empty(0, np.int32), "score": np.empty(0, np.float64)})
+
+
+def _dispatcher(kernels: dict):
+    """The grouped function of both paths: a (qid, shard) group through
+    its query's kernel, output rows tagged with the qid.  Only
+    ``kernels`` is pickled with it."""
+    def dispatch(key, pdf):
+        qid = int(key[0])
+        out = kernels[qid]()((key[1],), pdf)
+        out.insert(0, "qid", np.full(len(out), qid, dtype="int32"))
+        return out
+    return dispatch
 
 
 @dataclasses.dataclass
@@ -253,6 +335,48 @@ class QuerySpec:
             # never contribute
             self.tokens = {t: p for t, p in self.tokens.items()
                            if t not in self.excl}
+
+
+@dataclasses.dataclass
+class _Batch:
+    """A compiled query batch (``SearchEngine._batch``): each query's
+    kernel and candidate shards, and for each input key the queries'
+    copies of its rows.  Both kernel-input producers read these maps."""
+
+    stats: dict      # term -> (df, shards, cf), from term_stats
+    n_shards: int
+    dps: int
+    kernels: dict = dataclasses.field(default_factory=dict)  # qid -> kernel factory
+    shards: dict = dataclasses.field(default_factory=dict)   # qid -> shard set (None: all)
+    post: dict = dataclasses.field(default_factory=dict)     # term -> [(qid, kind, wide)]
+    tagm: dict = dataclasses.field(default_factory=dict)     # tag -> [(qid, kind, wide)]
+    lens: dict = dataclasses.field(default_factory=dict)     # shard -> [qid] needing its dl
+    rng: list = dataclasses.field(default_factory=list)      # (qid, range predicate)
+
+    def n_cand(self, qid: int) -> int:
+        """How many shards ``qid``'s input can come from."""
+        sh = self.shards[qid]
+        return len(sh) if sh is not None else self.n_shards
+
+    def shard_union(self, qids):
+        """The union of ``qids``' candidate shards; None when one of
+        them may use every shard."""
+        sets = [self.shards[q] for q in qids]
+        return None if any(x is None for x in sets) else set().union(*sets)
+
+    def shard_filter(self, qids) -> str:
+        """A scan's SQL shard IN over the union of ``qids``' shards."""
+        sh = self.shard_union(qids)
+        return "true" if sh is None else _sql_in("shard", sh)
+
+    def own_shards(self, qid: str) -> str:
+        """SQL keeping a row only in its query's (``qid``, an
+        expression) own candidate shards."""
+        restricted = {q: sh for q, sh in self.shards.items() if sh is not None}
+        if not restricted:
+            return "true"
+        qmap = _sql_map(restricted, value=lambda sh: f"array({', '.join(map(str, sorted(sh)))})")
+        return f"coalesce(array_contains(element_at({qmap}, {qid}), shard), true)"
 
 
 # packs (candidate index, relative position) into one int64 key for the
@@ -719,6 +843,7 @@ class SearchEngine:
         )
         self._doc_map_path = table_path(index_dir, self.manifest, "doc_map")
         self._stats_cache: dict = {}
+        self._listings: dict = {}  # (table dir, shard) -> files, on first use
         # LOUD integrity check at load, DRIVER-side (round-3 verdict #4 /
         # ADVICE: the executor-kernel warning lands in Python-worker
         # stderr a user never reads while results silently mis-score).
@@ -741,10 +866,10 @@ class SearchEngine:
             )
 
     def _const_cols(self, key: str, builder) -> list:
-        """Memoized constant Column lists (the kernel-input projections
-        and sort orders are identical for every query this engine
-        answers; Columns are immutable, so building them once removes
-        ~30 py4j round trips per part per query)."""
+        """Memoized constants: Column lists (the kernel-input
+        projections and sort orders are identical for every query this
+        engine answers; Columns are immutable, so building them once
+        removes ~30 py4j round trips per part per query) and schemas."""
         cache = self.__dict__.setdefault("_cc", {})
         cols = cache.get(key)
         if cols is None:
@@ -816,47 +941,18 @@ class SearchEngine:
             mode=mode, op=operator, k=k, offset=offset or 0,
             after=search_after)
 
-    def _compile(self, specs: list) -> DataFrame:
-        """The one query compiler: ``specs`` → (qid, doc_id, shard,
-        score) rows, qid = position in ``specs``, each query's rows
-        bounded per shard by its kernel (top ``k + offset`` in bm25).
-        Every search entry point runs through here; only the finishing
-        step (global sort/limit, or a per-qid window) is theirs.
-
-        When the input's bound (``_input_bound``) is within
-        ``_LOCAL_INPUT_BYTES``, the input is collected once and each
-        group runs through the same ``dispatch`` in the driver — the
-        same kernels on the same group frames, so both paths give the
-        same rows, score bits included — and the result is a
-        DataFrame over those local rows.  Otherwise it is the
-        distributed plan below.
-
-        Plan: postings, tags and doc_len are each scanned ONCE with
-        pushed term/tag IN and shard IN filters over every query's
-        inputs, and each row fans out to its (qid, kind) with
-        ``inline(element_at(<literal map>, term))`` — no broadcast
-        join, no driver-side DataFrame.  A per-qid shard filter keeps
-        each query to its own candidate shards.  Range filters add one
-        doc_store scan whose in-range doc ids are packed per (qid,
-        shard) into synthetic tag rows.  Everything unions into ONE
-        grouped exchange keyed by (qid, shard) that dispatches each
-        group to its query's kernel (``_make_kernel``).  Filters and maps are single
-        SQL expressions, so plan size and driver cost stay flat as the
-        batch grows.  A query that cannot match (k=0, an unknown
-        required term, no shard holding every term, …) contributes no
-        input at all."""
+    def _batch(self, specs: list) -> _Batch:
+        """Reduce ``specs`` to one ``_Batch``: each query that can match
+        gets its kernel and candidate shards, and its terms, tags, dl
+        arrays and ranges join the batch's fan-out maps.  A query that
+        cannot match (k=0, an unknown required term, no shard holding
+        every term, …) contributes nothing."""
         m = self.manifest
         n_docs, avgdl = int(m["doc_count"]), float(m["avgdl"])
         dps = int(m["docs_per_shard"])
         terms = sorted({t for s in specs for t in (*s.tokens, *s.excl)})
         resolved = self._resolve_terms(terms) if terms else {}
-
-        kernels: dict = {}  # qid -> kernel factory with its arguments
-        shards: dict = {}   # qid -> candidate shard set (None: every shard)
-        post: dict = {}     # term -> [(qid, kind, wide)]
-        tagm: dict = {}     # tag -> [(qid, kind, wide)]
-        lens: dict = {}     # shard -> [qid] needing its dl array
-        rng: list = []      # (qid, range predicate)
+        b = _Batch(stats=resolved, n_shards=int(m.get("n_shards") or 1), dps=dps)
         for qid, s in enumerate(specs):
             if s.k == 0 or (s.tags and self.tags is None) \
                     or set(s.tags) & set(s.excl_tags):
@@ -883,45 +979,69 @@ class SearchEngine:
                     and (cand is None or cand & set(resolved[t][1]))]
             excl_tags = s.excl_tags if self.tags is not None else []
             wide = s.op == "and"
-            for fan, keys, kind in ((post, req, "term"), (post, excl, "not"),
-                                    (tagm, s.tags, "tag"),
-                                    (tagm, excl_tags, "nottag")):
+            for fan, keys, kind in ((b.post, req, "term"), (b.post, excl, "not"),
+                                    (b.tagm, s.tags, "tag"),
+                                    (b.tagm, excl_tags, "nottag")):
                 for key in dict.fromkeys(keys):
                     fan.setdefault(key, []).append((qid, kind, wide))
             if s.ranges is not None:
-                rng.append((qid, s.ranges))
+                b.rng.append((qid, s.ranges))
             if req and (s.op == "or" or s.mode == "bm25"):
                 for sh in cand:
-                    lens.setdefault(int(sh), []).append(qid)
-            shards[qid] = cand
+                    b.lens.setdefault(int(sh), []).append(qid)
+            b.shards[qid] = cand
             df_global = {t: resolved[t][0] for t in req}
             n_tags = len(set(s.tags)) + (s.ranges is not None)
             k = None if s.k is None else s.k + s.offset
             # a factory partial pickles the factory by reference; a
             # built kernel closure pickles by value (~3 ms each), which
             # made plan construction grow with the batch width
-            kernels[qid] = functools.partial(
+            b.kernels[qid] = functools.partial(
                 _make_kernel, s.tokens, df_global, n_docs, avgdl, s.mode, k,
                 n_tags=n_tags, docs_per_shard=dps,
                 has_excl=bool(excl or excl_tags), after=s.after, op=s.op)
-        if not kernels:
-            return self._empty_result()
+        return b
 
-        def shard_filter(qids) -> str:
-            """A scan's shard IN over the union of ``qids``' shards."""
-            sets = [shards[q] for q in qids]
-            if any(x is None for x in sets):
-                return "true"
-            return _sql_in("shard", set().union(*sets))
+    def _compile(self, specs: list):
+        """The one query compiler: ``specs`` → (qid, doc_id, shard,
+        score) rows, qid = position in ``specs``, each query's rows
+        bounded per shard by its kernel (top ``k + offset`` in bm25).
+        Every search entry point runs through here; only the finishing
+        step (global sort/limit, or a per-qid window) is theirs.
 
-        restricted = {q: sh for q, sh in shards.items() if sh is not None}
+        When the input's bound (``_input_bound``) is within
+        ``_LOCAL_INPUT_BYTES`` and pyarrow can open the index, the rows
+        come back as a pandas frame scored in the driver: the input is
+        read by key (``_local_groups``) and each group runs through the
+        same ``dispatch`` — the same kernels on the same group frames,
+        so both paths give the same rows, score bits included.
+        Otherwise they are the distributed plan: ``_spark_groups`` into
+        ONE grouped exchange keyed by (qid, shard) that dispatches each
+        group to its query's kernel (``_make_kernel``)."""
+        b = self._batch(specs)
+        local = _input_bound(b.post, b.tagm, b.lens, b.rng, b.stats, b.n_cand,
+                             b.dps) <= _LOCAL_INPUT_BYTES
+        if not b.kernels:
+            return _no_rows() if local else self._empty_result()
+        dispatch = _dispatcher(b.kernels)
+        if local and self._arrow_root is not None:
+            outs = _run_groups(self._local_groups(b), dispatch)
+            return pd.concat(outs, ignore_index=True) if outs else _no_rows()
+        n_part = self._kernel_partitions(sum(map(b.n_cand, b.shards)))
+        return self._spark_groups(b, n_part).repartition(n_part, "qid", "shard").groupBy(
+            "qid", "shard").applyInPandas(dispatch, schema=QID_RESULT_SCHEMA)
 
-        def own_shards(qid: str) -> str:
-            """Keep a row only in its query's own candidate shards."""
-            if not restricted:
-                return "true"
-            qmap = _sql_map(restricted, value=lambda sh: f"array({', '.join(map(str, sorted(sh)))})")
-            return f"coalesce(array_contains(element_at({qmap}, {qid}), shard), true)"
+    def _spark_groups(self, b: _Batch, n_part: int) -> DataFrame:
+        """The kernel input as one Spark plan.  Postings, tags and
+        doc_len are each scanned ONCE with pushed term/tag IN and shard
+        IN filters over every query's inputs, and each row fans out to
+        its (qid, kind) with ``inline(element_at(<literal map>, term))``
+        — no broadcast join, no driver-side DataFrame.  A per-qid shard
+        filter keeps each query to its own candidate shards.  Range
+        filters add one doc_store scan whose in-range doc ids are packed
+        per (qid, shard) into synthetic tag rows.  Filters and maps are
+        single SQL expressions, so plan size and driver cost stay flat
+        as the batch grows."""
 
         def fan_out(table: DataFrame, col: str, fan: dict, per_copy: tuple,
                     cols: list) -> DataFrame:
@@ -929,93 +1049,216 @@ class SearchEngine:
             row one copy per (qid, kind) that asked for its key: the
             generator yields qid, kind and the ``per_copy`` columns (x is
             the copy's map entry), ``cols`` the rest of the row."""
-            qids = {q for entries in fan.values() for q, _, _ in entries}
             fmap = _sql_map(fan, key=_sql_str, value=lambda es: "array(" + ", ".join(
                 f"named_struct('qid', {q}, 'kind', '{kind}', 'wide', {str(w).lower()})"
                 for q, kind, w in es) + ")")
             copy = "".join(f", '{c}', {sql}" for c, sql in per_copy)
             return (
                 table.where(F.expr(f"{col} IN ({', '.join(map(_sql_str, fan))}) "
-                                   f"AND {shard_filter(qids)}"))
+                                   f"AND {b.shard_filter(_fan_qids(fan))}"))
                 .select(F.expr(
                     f"inline(transform(filter(element_at({fmap}, {col}), "
-                    f"x -> {own_shards('x.qid')}), "
+                    f"x -> {b.own_shards('x.qid')}), "
                     f"x -> named_struct('qid', x.qid, 'kind', x.kind{copy})))"),
                     *cols))
 
-        def n_cand(qid: int) -> int:
-            """How many shards ``qid``'s input can come from."""
-            sh = shards[qid]
-            return len(sh) if sh is not None else int(m.get("n_shards") or 1)
-
-        n_part = self._kernel_partitions(sum(map(n_cand, shards)))
-
         parts = []
-        if post:
+        if b.post:
             parts.append(fan_out(
-                self.postings, "term", post,
+                self.postings, "term", b.post,
                 tuple((c, f"IF(x.wide, {c}, NULL)") for c in _AND_ONLY_BLOBS),
                 self._const_cols("k_post", lambda: _kernel_cols(
                     ("qid", "kind") + _AND_ONLY_BLOBS, name=F.col("term"),
                     **{c: F.col(c) for c in _SHARED_BLOBS}))))
-        if tagm:
+        if b.tagm:
             parts.append(fan_out(
-                self.tags, "tag", tagm, (),
+                self.tags, "tag", b.tagm, (),
                 self._const_cols("k_tag", lambda: _kernel_cols(
                     ("qid", "kind"), name=F.col("tag"), df=F.col("n")))))
-        if lens:
+        if b.lens:
             parts.append(
-                self.doc_len.where(F.expr(_sql_in("shard", lens)))
+                self.doc_len.where(F.expr(_sql_in("shard", b.lens)))
                 .select(F.expr("explode(element_at(" + _sql_map(
-                    lens, value=lambda qs: f"array({', '.join(map(str, qs))})")
+                    b.lens, value=lambda qs: f"array({', '.join(map(str, qs))})")
                     + ", shard)) AS qid"),
                     *self._const_cols("k_len", lambda: _kernel_cols(
                         ("qid",), kind=F.lit("len"), name=F.lit(""),
                         df=F.col("n"), doc_blob=F.col("dl_blob")))))
-        if rng:
+        if b.rng:
             # the in-range doc set rides the exchange as ONE synthetic
             # tag row per (qid, shard) — the kernels' conjunctive tag
             # intersection (and shard veto for shards with no in-range
             # docs) applies unchanged
-            pred = rng[0][1]
-            for _, p in rng[1:]:
-                pred = pred | p
-            hits = F.filter(F.array(*[F.when(p, F.lit(q)) for q, p in rng]),
-                            lambda x: x.isNotNull())
             parts.append(
-                self.doc_store.where(F.expr(shard_filter([q for q, _ in rng])) & pred)
-                .select("shard", "doc_id", F.explode(hits).alias("qid"))
-                .where(F.expr(own_shards("qid")))
+                self._range_rows(b)
                 .repartition(n_part, "qid", "shard").groupBy("qid", "shard")
                 .applyInPandas(_pack_range, "qid int, shard int, n int, doc_blob binary")
                 .select(*self._const_cols("k_range", lambda: _kernel_cols(
-                    kind=F.lit("tag"), name=F.lit("\x00range"),
+                    kind=F.lit("tag"), name=F.lit(_RANGE_NAME),
                     df=F.col("n")))))
         groups = parts[0]
         for p in parts[1:]:
             groups = groups.unionByName(p)
+        return groups
 
-        def dispatch(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = int(key[0])
-            out = kernels[qid]()((key[1],), pdf)
-            out.insert(0, "qid", np.full(len(out), qid, dtype="int32"))
-            return out
+    def _range_rows(self, b: _Batch) -> DataFrame:
+        """(shard, doc_id, qid) of each doc in a range query's own
+        candidate shards that its range predicate keeps."""
+        pred = b.rng[0][1]
+        for _, p in b.rng[1:]:
+            pred = pred | p
+        hits = F.filter(F.array(*[F.when(p, F.lit(q)) for q, p in b.rng]),
+                        lambda x: x.isNotNull())
+        return (self.doc_store.where(F.expr(b.shard_filter([q for q, _ in b.rng])) & pred)
+                .select("shard", "doc_id", F.explode(hits).alias("qid"))
+                .where(F.expr(b.own_shards("qid"))))
 
-        if _input_bound(post, tagm, lens, rng, resolved, n_cand,
-                        dps) <= _LOCAL_INPUT_BYTES:
-            outs = _run_groups(groups.toPandas(), dispatch)
-            if not outs:
-                return self._empty_result()
-            return self.spark.createDataFrame(pa.Table.from_pandas(
-                pd.concat(outs, ignore_index=True), preserve_index=False),
-                QID_RESULT_SCHEMA)
-        return groups.repartition(n_part, "qid", "shard").groupBy(
-            "qid", "shard").applyInPandas(dispatch, schema=QID_RESULT_SCHEMA)
+    def _local_groups(self, b: _Batch) -> pd.DataFrame:
+        """What ``_spark_groups(b).toPandas()`` gives, read by key in
+        the driver: postings by ``term IN``, tags by ``tag IN`` and the
+        dl rows straight from the candidate shards' parquet files
+        (``_scan``), fanned out to their (qid, kind) copies from the
+        same maps and with the same per-shard filter.  A group's rows
+        keep that order — postings, tags, dl rows, range rows; file
+        order within each table — which ``_blockmax_and``'s stable df
+        sort breaks ties by.  A range predicate is a Spark Column, so
+        its in-range rows are collected by one Spark job and packed by
+        ``_pack_range`` here."""
+        parts = []
+        if b.post:
+            wide = any(w for es in b.post.values() for _, _, w in es)
+            t, qid, kind, w = _fan_rows(self._scan(
+                "postings", b.shard_union(_fan_qids(b.post)), ds.field("term").isin(list(b.post)),
+                ["term", "shard", "df", "doc_blob", *_SHARED_BLOBS,
+                 *(_AND_ONLY_BLOBS if wide else ())]), "term", b.post, b.shards)
+            blobs = {c: t[c] for c in ("doc_blob",) + _SHARED_BLOBS}
+            if wide:  # OR copies carry the AND-only sidecars as NULL
+                w = pa.array(w, pa.bool_())
+                blobs.update({c: pc.if_else(w, t[c], pa.scalar(None, pa.binary()))
+                              for c in _AND_ONLY_BLOBS})
+            parts.append(_kernel_table(qid, kind, t["term"], t["shard"], t["df"], blobs))
+        if b.tagm:
+            t, qid, kind, _ = _fan_rows(self._scan(
+                "tags", b.shard_union(_fan_qids(b.tagm)), ds.field("tag").isin(list(b.tagm)),
+                ["tag", "shard", "n", "doc_blob"]), "tag", b.tagm, b.shards)
+            parts.append(_kernel_table(qid, kind, t["tag"], t["shard"], t["n"],
+                                       {"doc_blob": t["doc_blob"]}))
+        if b.lens:
+            t, qid, kind, _ = _fan_rows(
+                self._scan("doc_len", b.lens, None, ["shard", "n", "dl_blob"]), "shard",
+                {sh: [(q, "len", False) for q in qs] for sh, qs in b.lens.items()},
+                b.shards)
+            parts.append(_kernel_table(qid, kind, [""] * len(qid), t["shard"], t["n"],
+                                       {"doc_blob": t["dl_blob"]}))
+        if b.rng:
+            rows = self._range_rows(b).toPandas()
+            if len(rows):
+                r = pd.concat([_pack_range(g) for _, g in
+                               rows.groupby(["qid", "shard"], sort=True)])
+                parts.append(_kernel_table(
+                    r["qid"].tolist(), ["tag"] * len(r), [_RANGE_NAME] * len(r),
+                    r["shard"].tolist(), r["n"].tolist(),
+                    {"doc_blob": r["doc_blob"].tolist()}))
+        # a range-only batch with no doc in range has no input rows
+        return pa.concat_tables(parts or [_kernel_table([], [], [], [], [], {})]).to_pandas()
+
+    def _scan(self, table: str, shards, where, columns: list) -> pa.Table:
+        """``columns`` of ``table``'s rows that pass ``where`` in
+        ``shards`` (None: every shard), read with pyarrow in file order:
+        only those shards' files, only row groups whose statistics can
+        hold a match.  Types are those of the engine's Spark table."""
+        fs, root = self._arrow_root
+        base = f"{root}/{table}"
+        if shards is None:
+            shards = self._listed(base, None)
+        files = [f for sh in sorted(shards) for f in self._listed(base, sh)]
+        schema = self._const_cols(f"a_{table}", lambda: to_arrow_schema(
+            getattr(self, table).schema))
+        return ds.dataset(files, schema=schema, format="parquet", filesystem=fs,
+                          partitioning=_SHARD_DIRS, partition_base_dir=base,
+                          ).to_table(columns=columns, filter=where)
+
+    def _listed(self, base: str, shard) -> list:
+        """The data files of ``base``'s ``shard=N`` directory, sorted
+        (shard None: the shard ids with a directory).  Listed on the
+        first query that needs them, then kept: like the Spark tables'
+        file index, a snapshot of the index as this engine found it.
+        Concurrent queries may both list a directory; they store the
+        same list."""
+        got = self._listings.get((base, shard))
+        if got is None:
+            fs, _ = self._arrow_root
+            infos = fs.get_file_info(pafs.FileSelector(
+                base if shard is None else f"{base}/shard={shard}",
+                allow_not_found=True))
+            if shard is None:
+                got = sorted(int(i.base_name[6:]) for i in infos
+                             if i.type == pafs.FileType.Directory
+                             and i.base_name.startswith("shard="))
+            else:  # Spark's rule: names starting with _ or . are not data
+                got = sorted(i.path for i in infos if i.type == pafs.FileType.File
+                             and not i.base_name.startswith(("_", ".")))
+            self._listings[(base, shard)] = got
+        return got
+
+    @functools.cached_property
+    def _arrow_root(self):
+        """(pyarrow FileSystem, index path on it), or None when pyarrow
+        cannot open the index's scheme: every query then takes the
+        distributed plan."""
+        return _arrow_filesystem(self.index_dir)
+
+    def _local_relation(self, rows: pd.DataFrame) -> DataFrame:
+        """Kernel rows scored in the driver as a local relation."""
+        if rows.empty:
+            return self._empty_result()
+        return self.spark.createDataFrame(
+            pa.Table.from_pandas(rows, preserve_index=False), QID_RESULT_SCHEMA)
+
+    def _finish_local(self, rows: pd.DataFrame, specs: list, qid: bool) -> DataFrame:
+        """Finish the driver-scored rows of k-bounded bm25 ``specs`` in
+        the driver: each query's (score DESC, doc_id ASC) order, offset
+        and ``k``, then the hits' doc_store rows read by (shard, doc_id)
+        and joined to them in Arrow.  The result is ``_materialize``'s
+        rows and schema (msearch's, with ``qid``) as a local relation,
+        so neither building nor collecting it runs a Spark job."""
+        rows = rows.sort_values(["qid", "score", "doc_id"],
+                                ascending=[True, False, True])
+        q = rows["qid"].to_numpy()
+        lo = np.array([s.offset for s in specs])[q]
+        rank = rows.groupby("qid").cumcount().to_numpy()
+        hits = rows[(rank >= lo) & (rank < lo + np.array([s.k for s in specs])[q])]
+        extra = self._extra_doc_cols()
+        docs = self._scan("doc_store", set(hits["shard"].tolist()),
+                          ds.field("doc_id").isin(hits["doc_id"].tolist()),
+                          ["doc_id", "url", "text", "lang", *extra])
+        at = pc.index_in(pa.array(hits["doc_id"].to_numpy()),
+                         value_set=docs["doc_id"].combine_chunks())
+        hits = hits[pc.is_valid(at).to_numpy(zero_copy_only=False)]
+        docs = docs.take(pc.drop_null(at))
+        cols = {"qid": pa.array(hits["qid"].to_numpy())} if qid else {}
+        cols.update(doc_id=docs["doc_id"], url=docs["url"],
+                    score=pa.array(hits["score"].to_numpy()), text=docs["text"],
+                    lang=docs["lang"], **{c: docs[c] for c in extra})
+        schema = self._const_cols(f"s_hits_{qid}", lambda: StructType(
+            ([StructField("qid", IntegerType())] if qid else [])
+            + [self.doc_store.schema[c] for c in ("doc_id", "url")]
+            + [StructField("score", DoubleType())]
+            + [self.doc_store.schema[c] for c in ("text", "lang", *extra)]))
+        return self.spark.createDataFrame(pa.table(cols), schema)
 
     def _top(self, spec: QuerySpec, materialize: bool) -> DataFrame:
         """Finish ONE compiled query: the global order of its mode, then
-        offset and limit (bm25), then optionally the doc_store join."""
+        offset and limit (bm25), then optionally the doc_store join.  A
+        k-bounded bm25 result scored in the driver finishes there
+        (``_finish_local``); other driver-scored rows finish as a local
+        relation."""
         res = self._compile([spec])
+        local = isinstance(res, pd.DataFrame)
+        if local:
+            if materialize and spec.mode == "bm25" and spec.k is not None:
+                return self._finish_local(res, [spec], qid=False)
+            res = self._local_relation(res)
         if spec.mode == "bm25":
             res = res.orderBy(*self._const_cols("o_bm25", lambda: [
                 F.col("score").desc(), F.col("doc_id").asc()]))
@@ -1028,7 +1271,7 @@ class SearchEngine:
                 F.col("score").asc(), F.col("doc_id").asc()]))
         if not materialize:
             return res.drop("qid")
-        return self._materialize(res, spec.mode, spec.k)
+        return self._materialize(res, spec.mode, spec.k, local)
 
     # ------------------------------------------------------------- search
 
@@ -1055,9 +1298,12 @@ class SearchEngine:
         negative ``k`` or ``offset`` raises ValueError.
 
         A small query (its kernel input within ``_LOCAL_INPUT_BYTES``,
-        see the module notes) is scored at call time, in the driver;
-        the DataFrame returned finishes those local rows (order, limit,
-        doc_store join) when collected.  A larger one is scored by the
+        see the module notes) is read by key and scored at call time,
+        in the driver.  With a ``k`` in bm25 mode it is finished there
+        too: the DataFrame returned is a local relation of its hits, and
+        neither call nor collect runs a Spark job.  Its other results
+        are local rows that the returned DataFrame orders and joins to
+        doc_store when collected.  A larger query is scored by the
         distributed plan when collected.
 
         ``offset`` pages BM25 results ES-style (``from``/``size``):
@@ -1097,12 +1343,12 @@ class SearchEngine:
         columns (``warc_ts``, ``url``, ``lang``, passthrough extras).
         Non-scoring ES filter semantics: a doc outside EVERY range
         leaves the match set before phrase filtering, scoring and
-        top-k.  Physically the in-range doc set rides the SAME grouped
-        exchange as a synthetic per-shard tag row (the kernel's
-        conjunctive tag intersection applies unchanged), so the filter
-        costs one predicate-pushed doc_store column scan restricted to
-        candidate shards — never a second cogroup or a driver
-        round-trip.
+        top-k.  Physically the in-range doc set joins the kernel input
+        as a synthetic per-shard tag row (the kernel's conjunctive tag
+        intersection applies unchanged), so the filter costs one
+        predicate-pushed doc_store column scan restricted to candidate
+        shards — never a second cogroup.  On the local path that scan
+        is the query's one Spark job.
         """
         if search_word and search_word.startswith("unique_key:"):
             return self.find_by_key(search_word[len("unique_key:"):])
@@ -1203,10 +1449,10 @@ class SearchEngine:
         snapshot write.  Above ``_LOCAL_INPUT_BYTES`` (module notes)
         the match set NEVER materializes on the driver (a head-term
         delete over a 10^12-doc corpus stays a distributed plan end to
-        end); below it the kernel ran in the driver and the match set
-        is already a local relation there.  Returns the number of
-        documents removed; an empty query (no words, no tags) matches
-        nothing and deletes nothing.  Takes the index's single-writer
+        end); below it the driver read the input by key and ran the
+        kernel, and the match set is a local relation there.  Returns
+        the number of documents removed; an empty query (no words, no
+        tags) matches nothing and deletes nothing.  Takes the index's single-writer
         lease like every mutation (IndexLockedError when held
         elsewhere)."""
         from .maintenance import remove_documents
@@ -1315,15 +1561,18 @@ class SearchEngine:
         """Number of documents matching the conjunctive(+phrase) query —
         the ES ``_count`` API.  Runs the parity kernel WITHOUT
         materialization or ordering (no doc_store join, no sort), so the
-        cost is candidate generation alone; the count aggregate is
-        map-side-combinable per shard (over a local relation when the
-        kernel ran in the driver, module notes).
+        cost is candidate generation alone.  When the kernel ran in the
+        driver (module notes) the count is its number of rows, with no
+        Spark job (a range filter still costs its one); otherwise it is
+        a map-side-combinable count aggregate per shard.
         ``exclude_words``/``exclude_tags`` apply ES ``bool.must_not``
         exclusion, ``ranges`` the ES range filter, before counting."""
-        res = self.search(search_word, tags, lang, mode="parity",
-                          materialize=False, exclude_words=exclude_words,
-                          exclude_tags=exclude_tags, ranges=ranges)
-        return res.count()
+        if search_word and search_word.startswith("unique_key:"):
+            return self.search(search_word).count()
+        res = self._compile([self._spec(search_word, tags, lang, "parity", None,
+                                        exclude_words=exclude_words,
+                                        exclude_tags=exclude_tags, ranges=ranges)])
+        return len(res) if isinstance(res, pd.DataFrame) else res.count()
 
     _RANGE_OPS = ("gte", "gt", "lte", "lt")
 
@@ -1659,9 +1908,13 @@ class SearchEngine:
         query — at any corpus size, query throughput comes from
         batching, not from threading one driver process.  A batch whose
         kernel input is small (within ``_LOCAL_INPUT_BYTES``, see the
-        module notes) runs the same kernels in the driver at call time,
-        after one collect of their input; the window and the doc_store
-        join below then run over those local rows.
+        module notes) is read by key and runs the same kernels in the
+        driver at call time.  When every entry is k-bounded bm25 and
+        ``materialize`` is on, the driver also pages it and fetches its
+        hits, so the batch runs no Spark job; otherwise the window and
+        the doc_store join below run over those local rows.  A
+        distributed all-top-k batch ends its join's order in a limit of
+        Σ(offset + k) rows.
 
         Returns rows with a leading ``qid`` column (position in
         ``queries``), ordered (qid ASC, the query's score order,
@@ -1678,6 +1931,12 @@ class SearchEngine:
                 **q, "mode": mode, "operator": q.get("operator") or "and",
                 "k": q.get("k", 10 if mode == "bm25" else None)}))
         res = self._compile(specs)
+        bounded = all(s.mode == "bm25" and s.k is not None for s in specs)
+        local = isinstance(res, pd.DataFrame)
+        if local:
+            if materialize and bounded:
+                return self._finish_local(res, specs, qid=True)
+            res = self._local_relation(res)
 
         # per-query paging: one window over the per-shard-bounded rows
         bm25 = [(q, s) for q, s in enumerate(specs) if s.mode == "bm25"]
@@ -1695,37 +1954,40 @@ class SearchEngine:
         if not materialize:
             return res
 
-        # one materialization join for the whole batch; broadcast only
-        # when every query is k-bounded (a parity query is unbounded)
+        # one materialization join for the whole batch; broadcast when
+        # every query is k-bounded (a parity query is unbounded) or the
+        # rows are already in the driver.  A bounded batch has at most
+        # Σ(offset + k) rows, so its 1:1 join's order ends in that limit
         parity = [q for q, s in enumerate(specs) if s.mode != "bm25"]
-        right = F.broadcast(res) if all(
-            s.mode == "bm25" and s.k is not None for s in specs) else res
+        right = F.broadcast(res) if bounded or local else res
         sortk = F.expr(f"IF({_sql_in('qid', parity)}, score, -score)"
                        if parity else "-score")
-        return (
+        out = (
             self.doc_store.join(right, ["doc_id", "shard"])
             .select("qid", "doc_id", "url", "score", "text", "lang",
                     *self._extra_doc_cols())
             .orderBy(F.col("qid").asc(), sortk.asc(), F.col("doc_id").asc())
         )
+        return out.limit(sum(s.offset + s.k for s in specs)) if bounded else out
 
     def _materialize(self, results: DataFrame, mode: str,
-                     k: int | None = None) -> DataFrame:
+                     k: int | None = None, local: bool = False) -> DataFrame:
         """Join the result set to doc_store — Q9/materialization
         (database.go:540-558).  When the result set is bounded (a ``k``
-        is given), broadcasting it keeps the big table shuffle-free and
-        the shard column prunes doc_store partitions; a bm25 top ``k``
-        also ends the 1:1 join's order in ``limit(k)`` (a top-k, no
-        range-partition sampling job).  Parity mode has NO limit
-        (reference Q8 returns all matches), so a head-term query over a
-        big corpus must shuffle-join instead of broadcasting an
-        unbounded set through the driver."""
+        is given) or ``local`` (rows scored in the driver, already in
+        its memory), broadcasting it keeps the big table shuffle-free
+        and the shard column prunes doc_store partitions; a bm25 top
+        ``k`` also ends the 1:1 join's order in ``limit(k)`` (a top-k,
+        no range-partition sampling job).  Parity mode has NO limit
+        (reference Q8 returns all matches), so a distributed head-term
+        query over a big corpus must shuffle-join instead of
+        broadcasting an unbounded set through the driver."""
         order = (
             [F.col("score").desc(), F.col("doc_id").asc()]
             if mode == "bm25"
             else [F.col("score").asc(), F.col("doc_id").asc()]
         )
-        right = F.broadcast(results) if k is not None else results
+        right = F.broadcast(results) if k is not None or local else results
         out = (
             self.doc_store.join(right, ["doc_id", "shard"])
             .select("doc_id", "url", "score", "text", "lang",
