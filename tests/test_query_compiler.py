@@ -427,13 +427,54 @@ def test_unresolvable_filesystem_takes_the_exchange(spark, qc_index, monkeypatch
         assert _exact(df) == want[str(q)], q
 
 
-def test_local_parity_broadcasts_to_doc_store(eng, distributed):
-    """Rows scored in the driver are already in its memory: a local
-    parity query broadcasts them to doc_store, with the rows of the
-    distributed path's shuffle join."""
-    want = _exact(eng.search("beta gamma", mode="parity"))
-    with _path("local"):
-        df = eng.search("beta gamma", mode="parity")
+def test_large_hit_fetch_takes_the_broadcast_join(spark, eng, monkeypatch):
+    """A driver-scored top-k whose hit shards' doc_store files exceed
+    ``_LOCAL_FETCH_BYTES`` fetches its hits through the broadcast join
+    on the executors, with the rows of the driver's fetch."""
+    batch = [{"word": "alpha", "k": 3}, {"word": "beta gamma", "operator": "or", "k": 2}]
+    cases = {"search": lambda: _search(eng, {"word": "alpha beta", "k": 3, "offset": 1}),
+             "msearch": lambda: eng.msearch(batch)}
+    want = {name: build() for name, build in cases.items()}
+    monkeypatch.setattr(S, "_LOCAL_FETCH_BYTES", 0)
+    for name, build in cases.items():
+        df, n_built = _jobs(spark, build)
         p = _plan(df)
-        assert "BroadcastHashJoin" in p and "LocalTableScan" in p
-        assert _exact(df) == want and want
+        assert n_built == 0 and "BroadcastHashJoin" in p and "LocalTableScan" in p, name
+        assert "BroadcastHashJoin" not in _plan(want[name]), name
+        assert _exact(df) == _exact(want[name]) and df.schema == want[name].schema, name
+        assert _exact(df), name
+
+
+def _fails_on_missing_files(fn):
+    with pytest.raises(Exception) as e:
+        fn()
+    assert isinstance(e.value, FileNotFoundError) or re.search(
+        r"FileNotFound|does not exist", str(e.value)), e.value
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_rewritten_shard_fails_loudly(spark, qc_index, tmp_path, path):
+    """Both paths read the files Spark listed when the engine opened.  A
+    shard rewritten since then (a dynamic partition overwrite gives its
+    files new names) or whose directory is briefly missing fails the
+    engine's query loudly: it is never scored against the engine's old
+    term statistics, nor read as an empty shard."""
+    idx = str(tmp_path / "idx")
+    shutil.copytree(qc_index, idx)
+    q = {"word": "alpha", "k": 5}
+    with _path(path):
+        want = _exact(_search(SearchEngine(spark, idx), q))
+        for table in ("postings", "doc_store"):
+            shards = sorted(tmp_path.glob(f"idx/{table}/shard=*"))
+            eng = SearchEngine(spark, idx)
+            for f in [f for d in shards for f in d.glob("*.parquet")]:
+                f.rename(f.with_name("new-" + f.name))
+            _fails_on_missing_files(lambda: _exact(_search(eng, q)))
+            assert _exact(_search(SearchEngine(spark, idx), q)) == want
+            eng = SearchEngine(spark, idx)
+            for d in shards:
+                d.rename(d.with_name("moved-" + d.name))
+            _fails_on_missing_files(lambda: _exact(_search(eng, q)))
+            for d in shards:
+                d.with_name("moved-" + d.name).rename(d)
+            assert _exact(_search(eng, q)) == want

@@ -63,11 +63,12 @@ which scoring in the driver beats a Python worker stage:
   in the driver.  A k-bounded bm25 result (``search``,
   ``search_prefix``/``search_fuzzy``, an all-top-k ``msearch``) also
   finishes there: top-k, then its hits' doc_store rows read by (shard,
-  doc_id), as a local relation — no Spark job, built or collected.
-  Other results (parity, mixed batches, ``materialize=False``) become
-  a local relation under the finishing plan below, broadcast to
-  doc_store.  A range filter is a Spark predicate, so it costs one
-  Spark job that collects its in-range doc ids;
+  doc_id), as a local relation — no Spark job, built or collected —
+  unless those hits' doc_store files hold more than
+  ``_LOCAL_FETCH_BYTES``.  Such a top-k and the other results (parity,
+  mixed batches, ``materialize=False``) become a local relation under
+  the finishing plan below.  A range filter is a Spark predicate, so
+  it costs one Spark job that collects its in-range doc ids;
 - above it (head terms at crawl scale, a head-term
   ``delete_by_query``), the kernel fans out per shard through the
   grouped exchange with no postings shuffle — a distributed plan end
@@ -76,11 +77,11 @@ which scoring in the driver beats a Python worker stage:
   resolves local and ``file://`` paths, and the object-store schemes
   the installed pyarrow was built with).
 
-The driver lists each shard's files once per engine, on the first query
-that reads the shard: like the Spark tables' file index, a snapshot.
-The finishing plan is the global order (or msearch's per-qid window),
-and a materialization that broadcasts a bounded or driver-side result
-set against the shard-partitioned doc_store.
+The driver reads the files Spark listed for each table when the engine
+opened, so both paths read one snapshot of the index.  The finishing
+plan is the global order (or msearch's per-qid window), and a
+materialization that broadcasts a bounded result set against the
+shard-partitioned doc_store.
 """
 
 from __future__ import annotations
@@ -90,6 +91,7 @@ import functools
 import itertools
 import math
 import os
+from urllib.parse import unquote
 
 import numpy as np
 import pandas as pd
@@ -182,6 +184,13 @@ def _term_stat(row) -> tuple:
 # positions it decodes); 4 concurrent clients got more queries/s from
 # it over bounds of 1.2-3.3 MB and fewer over 3.3-6 MB
 _LOCAL_INPUT_BYTES = 2 << 20
+# the most doc_store bytes a driver-finished top-k reads to fetch its
+# hits (the hit shards' files: each is one row group, so ``doc_id IN``
+# prunes nothing inside it).  pyarrow reads such files at 160-190 MiB/s
+# on a 4-core host (zstd, 1.3-5.2 MiB files), so 16 MiB is ~100 ms,
+# below the ~160 ms of the broadcast join's two Spark jobs that finish
+# a larger fetch instead
+_LOCAL_FETCH_BYTES = 16 << 20
 # worst-case bytes of one varint (a 64-bit doc id, tf, gap or count) and
 # of one kernel-input row's fixed-width columns, offsets and validity
 _VARINT = codec._MAX_VARINT_BYTES
@@ -843,7 +852,8 @@ class SearchEngine:
         )
         self._doc_map_path = table_path(index_dir, self.manifest, "doc_map")
         self._stats_cache: dict = {}
-        self._listings: dict = {}  # (table dir, shard) -> files, on first use
+        self._listings: dict = {}  # table -> {shard: files}, on first use
+        self._store_bytes: dict = {}  # shard -> its doc_store files' bytes
         # LOUD integrity check at load, DRIVER-side (round-3 verdict #4 /
         # ADVICE: the executor-kernel warning lands in Python-worker
         # stderr a user never reads while results silently mis-score).
@@ -1168,38 +1178,49 @@ class SearchEngine:
         only those shards' files, only row groups whose statistics can
         hold a match.  Types are those of the engine's Spark table."""
         fs, root = self._arrow_root
-        base = f"{root}/{table}"
-        if shards is None:
-            shards = self._listed(base, None)
-        files = [f for sh in sorted(shards) for f in self._listed(base, sh)]
+        listed = self._files(table)
+        files = [f for sh in sorted(listed if shards is None else shards)
+                 for f in listed.get(sh, ())]
         schema = self._const_cols(f"a_{table}", lambda: to_arrow_schema(
             getattr(self, table).schema))
         return ds.dataset(files, schema=schema, format="parquet", filesystem=fs,
-                          partitioning=_SHARD_DIRS, partition_base_dir=base,
+                          partitioning=_SHARD_DIRS, partition_base_dir=f"{root}/{table}",
                           ).to_table(columns=columns, filter=where)
 
-    def _listed(self, base: str, shard) -> list:
-        """The data files of ``base``'s ``shard=N`` directory, sorted
-        (shard None: the shard ids with a directory).  Listed on the
-        first query that needs them, then kept: like the Spark tables'
-        file index, a snapshot of the index as this engine found it.
-        Concurrent queries may both list a directory; they store the
-        same list."""
-        got = self._listings.get((base, shard))
+    def _files(self, table: str) -> dict:
+        """shard -> ``table``'s data files in its ``shard=N`` directory,
+        sorted, as paths on the pyarrow filesystem.  They are the files
+        Spark listed for the table when the engine opened
+        (``DataFrame.inputFiles``, a cached listing), fetched on the
+        first query that reads the table.  So both paths read the one
+        snapshot the distributed plan reads: a shard rewritten since the
+        engine opened fails loudly on either (its files are gone)
+        instead of scoring new postings against the engine's term
+        statistics."""
+        got = self._listings.get(table)
         if got is None:
-            fs, _ = self._arrow_root
-            infos = fs.get_file_info(pafs.FileSelector(
-                base if shard is None else f"{base}/shard={shard}",
-                allow_not_found=True))
-            if shard is None:
-                got = sorted(int(i.base_name[6:]) for i in infos
-                             if i.type == pafs.FileType.Directory
-                             and i.base_name.startswith("shard="))
-            else:  # Spark's rule: names starting with _ or . are not data
-                got = sorted(i.path for i in infos if i.type == pafs.FileType.File
-                             and not i.base_name.startswith(("_", ".")))
-            self._listings[(base, shard)] = got
+            _, root = self._arrow_root
+            got = {}
+            for uri in getattr(self, table).inputFiles():
+                d, name = map(unquote, uri.rsplit("/", 2)[1:])
+                got.setdefault(int(d[len("shard="):]), []).append(f"{root}/{table}/{d}/{name}")
+            for files in got.values():
+                files.sort()
+            self._listings[table] = got
         return got
+
+    def _fetch_bytes(self, shards: set) -> int:
+        """The bytes of ``shards``' doc_store files, each shard's looked
+        up once per engine; a file gone since the engine opened raises."""
+        fs, _ = self._arrow_root
+        for sh in shards - self._store_bytes.keys():
+            infos = fs.get_file_info(self._files("doc_store").get(sh, []))
+            gone = [i.path for i in infos if i.type != pafs.FileType.File]
+            if gone:
+                raise FileNotFoundError(f"index files changed since the engine "
+                                        f"opened: {gone}")
+            self._store_bytes[sh] = sum(i.size for i in infos)
+        return sum(self._store_bytes[sh] for sh in shards)
 
     @functools.cached_property
     def _arrow_root(self):
@@ -1215,21 +1236,27 @@ class SearchEngine:
         return self.spark.createDataFrame(
             pa.Table.from_pandas(rows, preserve_index=False), QID_RESULT_SCHEMA)
 
-    def _finish_local(self, rows: pd.DataFrame, specs: list, qid: bool) -> DataFrame:
+    def _finish_local(self, rows: pd.DataFrame, specs: list, qid: bool) -> DataFrame | None:
         """Finish the driver-scored rows of k-bounded bm25 ``specs`` in
         the driver: each query's (score DESC, doc_id ASC) order, offset
         and ``k``, then the hits' doc_store rows read by (shard, doc_id)
         and joined to them in Arrow.  The result is ``_materialize``'s
         rows and schema (msearch's, with ``qid``) as a local relation,
-        so neither building nor collecting it runs a Spark job."""
+        so neither building nor collecting it runs a Spark job.  None
+        when the hit shards' doc_store files hold more than
+        ``_LOCAL_FETCH_BYTES``: the caller's broadcast join fetches
+        those hits on the executors."""
         rows = rows.sort_values(["qid", "score", "doc_id"],
                                 ascending=[True, False, True])
         q = rows["qid"].to_numpy()
         lo = np.array([s.offset for s in specs])[q]
         rank = rows.groupby("qid").cumcount().to_numpy()
         hits = rows[(rank >= lo) & (rank < lo + np.array([s.k for s in specs])[q])]
+        shards = set(hits["shard"].tolist())
+        if self._fetch_bytes(shards) > _LOCAL_FETCH_BYTES:
+            return None
         extra = self._extra_doc_cols()
-        docs = self._scan("doc_store", set(hits["shard"].tolist()),
+        docs = self._scan("doc_store", shards,
                           ds.field("doc_id").isin(hits["doc_id"].tolist()),
                           ["doc_id", "url", "text", "lang", *extra])
         at = pc.index_in(pa.array(hits["doc_id"].to_numpy()),
@@ -1251,13 +1278,13 @@ class SearchEngine:
         """Finish ONE compiled query: the global order of its mode, then
         offset and limit (bm25), then optionally the doc_store join.  A
         k-bounded bm25 result scored in the driver finishes there
-        (``_finish_local``); other driver-scored rows finish as a local
-        relation."""
+        (``_finish_local``) unless its hits' doc_store files are too big;
+        other driver-scored rows finish as a local relation."""
         res = self._compile([spec])
-        local = isinstance(res, pd.DataFrame)
-        if local:
-            if materialize and spec.mode == "bm25" and spec.k is not None:
-                return self._finish_local(res, [spec], qid=False)
+        if isinstance(res, pd.DataFrame):
+            if materialize and spec.mode == "bm25" and spec.k is not None \
+                    and (out := self._finish_local(res, [spec], qid=False)) is not None:
+                return out
             res = self._local_relation(res)
         if spec.mode == "bm25":
             res = res.orderBy(*self._const_cols("o_bm25", lambda: [
@@ -1271,7 +1298,7 @@ class SearchEngine:
                 F.col("score").asc(), F.col("doc_id").asc()]))
         if not materialize:
             return res.drop("qid")
-        return self._materialize(res, spec.mode, spec.k, local)
+        return self._materialize(res, spec.mode, spec.k)
 
     # ------------------------------------------------------------- search
 
@@ -1301,9 +1328,10 @@ class SearchEngine:
         see the module notes) is read by key and scored at call time,
         in the driver.  With a ``k`` in bm25 mode it is finished there
         too: the DataFrame returned is a local relation of its hits, and
-        neither call nor collect runs a Spark job.  Its other results
-        are local rows that the returned DataFrame orders and joins to
-        doc_store when collected.  A larger query is scored by the
+        neither call nor collect runs a Spark job (unless its hits' shard
+        files hold more than ``_LOCAL_FETCH_BYTES`` of doc_store).  Its
+        other results are local rows that the returned DataFrame orders
+        and joins to doc_store when collected.  A larger query is scored by the
         distributed plan when collected.
 
         ``offset`` pages BM25 results ES-style (``from``/``size``):
@@ -1932,10 +1960,10 @@ class SearchEngine:
                 "k": q.get("k", 10 if mode == "bm25" else None)}))
         res = self._compile(specs)
         bounded = all(s.mode == "bm25" and s.k is not None for s in specs)
-        local = isinstance(res, pd.DataFrame)
-        if local:
-            if materialize and bounded:
-                return self._finish_local(res, specs, qid=True)
+        if isinstance(res, pd.DataFrame):
+            if materialize and bounded \
+                    and (out := self._finish_local(res, specs, qid=True)) is not None:
+                return out
             res = self._local_relation(res)
 
         # per-query paging: one window over the per-shard-bounded rows
@@ -1955,11 +1983,11 @@ class SearchEngine:
             return res
 
         # one materialization join for the whole batch; broadcast when
-        # every query is k-bounded (a parity query is unbounded) or the
-        # rows are already in the driver.  A bounded batch has at most
-        # Σ(offset + k) rows, so its 1:1 join's order ends in that limit
+        # every query is k-bounded (a parity query is unbounded).  A
+        # bounded batch has at most Σ(offset + k) rows, so its 1:1
+        # join's order ends in that limit
         parity = [q for q, s in enumerate(specs) if s.mode != "bm25"]
-        right = F.broadcast(res) if bounded or local else res
+        right = F.broadcast(res) if bounded else res
         sortk = F.expr(f"IF({_sql_in('qid', parity)}, score, -score)"
                        if parity else "-score")
         out = (
@@ -1971,23 +1999,22 @@ class SearchEngine:
         return out.limit(sum(s.offset + s.k for s in specs)) if bounded else out
 
     def _materialize(self, results: DataFrame, mode: str,
-                     k: int | None = None, local: bool = False) -> DataFrame:
+                     k: int | None = None) -> DataFrame:
         """Join the result set to doc_store — Q9/materialization
         (database.go:540-558).  When the result set is bounded (a ``k``
-        is given) or ``local`` (rows scored in the driver, already in
-        its memory), broadcasting it keeps the big table shuffle-free
-        and the shard column prunes doc_store partitions; a bm25 top
-        ``k`` also ends the 1:1 join's order in ``limit(k)`` (a top-k,
-        no range-partition sampling job).  Parity mode has NO limit
-        (reference Q8 returns all matches), so a distributed head-term
-        query over a big corpus must shuffle-join instead of
-        broadcasting an unbounded set through the driver."""
+        is given), broadcasting it keeps the big table shuffle-free and
+        the shard column prunes doc_store partitions; a bm25 top ``k``
+        also ends the 1:1 join's order in ``limit(k)`` (a top-k, no
+        range-partition sampling job).  Parity mode has NO limit
+        (reference Q8 returns all matches), so a head-term query over a
+        big corpus must shuffle-join instead of broadcasting an
+        unbounded set through the driver."""
         order = (
             [F.col("score").desc(), F.col("doc_id").asc()]
             if mode == "bm25"
             else [F.col("score").asc(), F.col("doc_id").asc()]
         )
-        right = F.broadcast(results) if k is not None or local else results
+        right = F.broadcast(results) if k is not None else results
         out = (
             self.doc_store.join(right, ["doc_id", "shard"])
             .select("doc_id", "url", "score", "text", "lang",
