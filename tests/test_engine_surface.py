@@ -489,9 +489,14 @@ def test_get_docs_batch(spark, tagged_index):
         eng.get_docs(["x42"])
     # empty id list → empty frame, same schema, no job surprises
     assert eng.get_docs([]).count() == 0
-    # the scan prunes doc_store partitions on the shard column: the
-    # physical plan carries a shard PartitionFilter (inputFiles() lists
-    # pre-pruning files, so pin the plan instead)
+    # the driver reads the ids by key: a local relation, no scan
+    plan = eng.get_docs(ids)._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "FileScan" not in plan
+    # on an index pyarrow cannot open, the scan prunes doc_store
+    # partitions on the shard column: the physical plan carries a shard
+    # PartitionFilter (inputFiles() lists pre-pruning files, so pin the
+    # plan instead)
+    eng.__dict__["_arrow_root"] = None
     plan = (eng.get_docs(ids)._jdf.queryExecution()
             .executedPlan().toString())
     assert "PartitionFilters" in plan
@@ -715,6 +720,37 @@ def test_delete_by_query_to_empty_then_reload(spark, tmp_index_root):
     assert int(eng2.manifest["doc_count"]) == 0
     assert eng2.search("the", None, "en").count() == 0
     assert eng2.search("the", None, "en", mode="bm25", k=5).count() == 0
+
+
+def test_term_buckets_are_term_ranges(spark, rich_index):
+    """term_stats's bucket of a term is its range under the manifest's
+    term_bounds: the Spark column (``term_bucket_col``) the writers use
+    equals Python's ``bisect_right`` the reader uses, for every term of
+    the index, for the boundaries themselves and for strings outside
+    and between them (empty, non-ASCII, an astral-plane character).
+    UTF-8 byte order, Spark's string order, is code-point order."""
+    import bisect
+
+    from watertower_spark.operators.index_build import (
+        load_manifest,
+        table_path,
+        term_bucket_col,
+    )
+
+    m = load_manifest(rich_index)
+    bounds = m["term_bounds"]
+    assert bounds == sorted(bounds) and len(bounds) > 1
+    ts = spark.read.parquet(table_path(rich_index, m, "term_stats"))
+    stored = {r["term"]: r["tb"] for r in ts.select("term", "tb").collect()}
+    assert {t: bisect.bisect_right(bounds, t) for t in stored} == stored
+    edge = ["", "\x00", "naïve", "日本語", "\U0001d11e", "\uffff\U0010ffff", "zzz",
+            bounds[0][:-1], bounds[-1] + "\U0010ffff", *bounds,
+            *(b + "é" for b in bounds)]
+    got = (spark.createDataFrame([(t,) for t in edge], "term string")
+           .select("term", term_bucket_col(spark, bounds)).collect())
+    assert [(r["term"], r["tb"]) for r in got] == [
+        (t, bisect.bisect_right(bounds, t)) for t in edge]
+    assert {bisect.bisect_right(bounds, t) for t in edge} >= {0, len(bounds)}
 
 
 def test_term_stats_buckets_sorted_by_term(spark, rich_index):

@@ -30,7 +30,9 @@ def qc_index(spark, tmp_index_root):
     rows, tag_rows = [], []
     for i in range(40):
         words = [VOCAB[(i * 7 + j * j) % (3 + j % 6)] for j in range(6 + i % 9)]
-        url = f"qc://{i:03d}"
+        # one url holds a quote and a %: key lookups take it verbatim
+        # (it sorts where qc://013 would, so doc ids are unchanged)
+        url = f"qc://{i:03d}" + ("'%" if i == 13 else "")
         rows.append((url, EPOCH + dt.timedelta(days=i), None,
                      f"t{i}\n\n" + " ".join(words), "en"))
         tag_rows.append((url, [t for j, t in enumerate(TAGS) if (i + j) % 3 == 0]))
@@ -278,16 +280,14 @@ def test_small_bm25_query_has_no_python_stage(spark, eng, monkeypatch):
 
 
 def test_top_k_queries_run_no_spark_job(spark, eng):
-    """A warm bm25 query, a prefix expansion once its term_stats job has
-    run, and an all-top-k msearch each run no Spark job, built or
-    collected, and give the distributed path's rows."""
-    rows = eng.term_stats.where("term LIKE 'al%'").collect()
-    spec = S.QuerySpec({}, [], op="or", k=4)
+    """A warm bm25 query, a prefix query and an all-top-k msearch each
+    run no Spark job, built or collected, and give the distributed
+    path's rows."""
     batch = [{"word": "alpha", "k": 3}, {"word": "beta gamma", "operator": "or", "k": 2},
              {"word": "gamma", "k": 2, "offset": 1, "exclude_words": "alpha"},
              {"word": "delta", "tags": ["naïve"], "k": 2}]
     cases = {"search": lambda: _search(eng, {"word": "alpha beta", "k": 3, "offset": 1}),
-             "prefix": lambda: eng._top_expanded(spec, rows, True),
+             "prefix": lambda: eng.search_prefix("al", k=4),
              "msearch": lambda: eng.msearch(batch)}
     for name, build in cases.items():
         want = _exact(build())  # warm: term stats memoized
@@ -298,9 +298,73 @@ def test_top_k_queries_run_no_spark_job(spark, eng):
             dist = build()
             assert got == want == _exact(dist) and df.schema == dist.schema, name
         assert got, name
-    # the whole prefix query: its expansion is its one job
+    # the whole prefix query, its expansion read by key in the driver
     df, n_built = _jobs(spark, lambda: eng.search_prefix("al", k=4))
-    assert n_built == 1 and _jobs(spark, df.collect)[1] == 0
+    assert n_built == 0 and _jobs(spark, df.collect)[1] == 0
+
+
+def _spark_reads(spark, idx):
+    """An engine on ``idx`` whose reads by key are Spark jobs, as on an
+    index pyarrow cannot open (``s3a://``)."""
+    e = SearchEngine(spark, idx)
+    e.__dict__["_arrow_root"] = None
+    return e
+
+
+# reads by key: a cold term's statistics, a prefix's dictionary
+# expansion, doc_map then doc_store for a key, doc_store for doc ids
+BY_KEY = {
+    "cold term": lambda e: e.search("beta gamma", mode="bm25", k=3),
+    "prefix": lambda e: e.search_prefix("ga", k=4),
+    "key hit": lambda e: e.find_by_key("qc://013'%"),
+    "key via search": lambda e: e.search("unique_key:qc://013'%"),
+    "key miss": lambda e: e.find_by_key("qc://013'%x"),
+    "get_doc": lambda e: e.get_doc("d7"),
+    "get_docs": lambda e: e.get_docs([1, 7, 22, 23, 999]),
+}
+
+
+def test_reads_by_key_run_no_spark_job(spark, qc_index):
+    """On an engine whose files are listed, cold-term resolution, prefix
+    expansion, key lookups and doc id fetches read by key in the driver:
+    no Spark job built or collected, and the rows (score bits
+    included) and schema of the Spark reads.  ``get_docs`` rows come in
+    no particular order."""
+    ref = _spark_reads(spark, qc_index)
+    eng = SearchEngine(spark, qc_index)
+    _exact(eng.search("alpha", mode="bm25", k=1))  # lists the tables
+    _exact(eng.find_by_key("qc://001"))
+    for name, build in BY_KEY.items():  # the cold term first
+        df, n_built = _jobs(spark, lambda: build(eng))
+        got, n_collected = _jobs(spark, lambda: _exact(df))
+        assert (n_built, n_collected) == (0, 0), name
+        want = build(ref)
+        assert sorted(got) == sorted(_exact(want)) and df.schema == want.schema, name
+        assert "LocalTableScan" in _plan(df), name
+    assert len(_exact(BY_KEY["get_docs"](ref))) == 4
+    for key, n in (("qc://013'%", 1), ("qc://013'%x", 0)):
+        got, n_jobs = _jobs(spark, lambda: eng.count("unique_key:" + key))
+        assert (got, n_jobs) == (n, 0) and ref.count("unique_key:" + key) == n, key
+
+
+def test_prefix_reads_only_its_buckets(spark, eng, monkeypatch):
+    """A prefix expansion hands ``_scan`` only the term_stats buckets
+    from the prefix's own to the last one holding one of its terms."""
+    import bisect
+
+    bounds = eng.manifest["term_bounds"]
+    terms = [r["term"] for r in eng.term_stats.select("term").collect()]
+    seen = []
+    real = SearchEngine._scan
+    monkeypatch.setattr(SearchEngine, "_scan", lambda self, table, parts, *a: seen.append(
+        (table, sorted(parts))) or real(self, table, parts, *a))
+    for prefix in ("al", "gam", "t3", "zz"):
+        eng.search_prefix(prefix, k=2)
+        first = bisect.bisect_right(bounds, prefix)
+        last = max((bisect.bisect_right(bounds, t) for t in terms if t.startswith(prefix)),
+                   default=first)
+        assert [p for t, p in seen if t == "term_stats"] == [list(range(first, last + 1))], prefix
+        seen.clear()
 
 
 def test_count_runs_no_spark_job(spark, eng):
@@ -450,6 +514,33 @@ def _fails_on_missing_files(fn):
         fn()
     assert isinstance(e.value, FileNotFoundError) or re.search(
         r"FileNotFound|does not exist", str(e.value)), e.value
+
+
+@pytest.mark.parametrize("reads", ("by_key", "spark"))
+def test_rewritten_dictionary_fails_loudly(spark, qc_index, tmp_path, reads):
+    """term_stats and doc_map are read from the files Spark listed too:
+    a term_stats bucket rewritten after the engine opened fails a cold
+    term's resolution, a doc_map rewritten after a key lookup opened it
+    fails the next lookup, on both kinds of read."""
+    idx = str(tmp_path / "idx")
+    shutil.copytree(qc_index, idx)
+
+    def engine():
+        return SearchEngine(spark, idx) if reads == "by_key" else _spark_reads(spark, idx)
+
+    def rename(table):
+        for f in tmp_path.glob(f"idx/{table}/**/*.parquet"):
+            f.rename(f.with_name("new-" + f.name))
+
+    eng = engine()
+    rename("term_stats")
+    _fails_on_missing_files(lambda: eng.search("alpha", mode="bm25", k=3))
+    assert _exact(engine().search("alpha", mode="bm25", k=3))
+    eng = engine()
+    assert _exact(eng.find_by_key("qc://001"))
+    rename("doc_map")
+    _fails_on_missing_files(lambda: _exact(eng.find_by_key("qc://002")))
+    assert _exact(engine().find_by_key("qc://002"))
 
 
 @pytest.mark.parametrize("path", PATHS)

@@ -77,15 +77,28 @@ which scoring in the driver beats a Python worker stage:
   resolves local and ``file://`` paths, and the object-store schemes
   the installed pyarrow was built with).
 
+The term dictionary and the key lookups are read by key too, on any
+index pyarrow can open, as the reference's key gets (database.go:
+501-583).  term_stats is bucketed by term range (the manifest's
+``term_bounds``), so a term not yet in the engine's cache
+(``_resolve_terms``) or a prefix (``search_prefix``) reads only the
+buckets that can hold it; ``find_by_key`` reads doc_map by url, then
+the document's doc_store shard, and ``get_doc(s)`` that shard alone
+(``_fetch_docs``, bounded by ``_LOCAL_FETCH_BYTES`` like the hit
+fetch).  None of them runs a Spark job.  ``search_fuzzy``'s expansion
+stays a Spark job: no term range bounds an edit distance.
+
 The driver reads the files Spark listed for each table when the engine
-opened, so both paths read one snapshot of the index.  The finishing
-plan is the global order (or msearch's per-qid window), and a
-materialization that broadcasts a bounded result set against the
-shard-partitioned doc_store.
+opened (doc_map's when a key lookup first opened it), so both paths
+read one snapshot of the index.  The finishing plan is the global
+order (or msearch's per-qid window), and a materialization that
+broadcasts a bounded result set against the shard-partitioned
+doc_store.
 """
 
 from __future__ import annotations
 
+import bisect
 import dataclasses
 import functools
 import itertools
@@ -104,7 +117,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from ..functions import codec
-from .index_build import BM25_B, BM25_K1, load_current_manifest
+from .index_build import BM25_B, BM25_K1, load_current_manifest, table_path
 
 _WRAP = 1 << 32  # uint32 arithmetic in the reference's phrase algebra
 
@@ -117,8 +130,11 @@ _AND_ONLY_BLOBS = ("pos_blob", "block_last", "block_tf_off", "block_pos_off")
 _SHARED_BLOBS = ("tf_blob", "block_off", "block_max_tf", "block_min_dl")
 # the name of the synthetic tag row that carries a range filter
 _RANGE_NAME = "\x00range"
-# the tables' shard=N directories, typed as Spark infers them
-_SHARD_DIRS = ds.partitioning(pa.schema([("shard", pa.int32())]), flavor="hive")
+# each table's partition column, typed int as Spark infers it from the
+# directory names: shard=N, term_stats's term range tb=N; doc_map has none
+_PART_COLS = {"term_stats": "tb", "doc_map": None}
+# the term_stats columns the engine reads
+_TERM_COLS = ("term", "df", "cf", "shards")
 
 
 def _kernel_cols(generated: tuple = (), **src) -> list:
@@ -173,6 +189,26 @@ def _sql_map(entries: dict, key=str, value=str) -> str:
 def _term_stat(row) -> tuple:
     """A term_stats row as the engine memoizes it: (df, shards, cf)."""
     return int(row["df"]), list(row["shards"]), int(row["cf"])
+
+
+def _prefix_end(prefix: str) -> str | None:
+    """The least string above every string that starts with ``prefix``
+    (so those strings are exactly ``[prefix, end)``): its last
+    character incremented once trailing U+10FFFF are dropped, skipping
+    the surrogates no string holds.  None when there is none."""
+    p = prefix.rstrip("\U0010ffff")
+    if not p:
+        return None
+    c = ord(p[-1]) + 1
+    return p[:-1] + chr(0xE000 if 0xD800 <= c <= 0xDFFF else c)
+
+
+def _prefix_buckets(bounds: list, prefix: str, end: str | None) -> range:
+    """The term_stats buckets (ranges under ``bounds``, see
+    ``index_build.term_bucket_col``) that can hold a term in ``[prefix,
+    end)``."""
+    last = len(bounds) if end is None else bisect.bisect_left(bounds, end)
+    return range(bisect.bisect_right(bounds, prefix), last + 1)
 
 
 # ------------------------------------------------- driver-side execution
@@ -811,8 +847,6 @@ class SearchEngine:
         self.manifest = load_current_manifest(index_dir)
         from watertower_spark.functions import fsio
 
-        from .index_build import table_path
-
         from .index_build import DOC_LEN_SCHEMA, POSTING_SCHEMA, TAG_SCHEMA
 
         def _read_tbl(path: str, schema: str):
@@ -914,10 +948,19 @@ class SearchEngine:
 
     def _resolve_terms(self, terms: list) -> dict:
         """term → (df, shard list, cf) from the global term_stats table,
-        memoized driver-side (absent terms cached as None)."""
+        memoized driver-side (absent terms cached as None).  Terms not
+        yet cached are read by key: pyarrow reads only their term-range
+        buckets' files (``_scan``), with no Spark job; on an index
+        pyarrow cannot open, one Spark job filters term_stats."""
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
-            rows = self.term_stats.where(F.col("term").isin(missing)).collect()
+            if self._arrow_root is None:
+                rows = self.term_stats.where(F.col("term").isin(missing)).collect()
+            else:
+                bounds = self.manifest["term_bounds"]
+                rows = self._scan(
+                    "term_stats", {bisect.bisect_right(bounds, t) for t in missing},
+                    ds.field("term").isin(missing), list(_TERM_COLS)).to_pylist()
             found = {r["term"]: _term_stat(r) for r in rows}
             for t in missing:
                 self._stats_cache[t] = found.get(t)
@@ -1172,38 +1215,45 @@ class SearchEngine:
         # a range-only batch with no doc in range has no input rows
         return pa.concat_tables(parts or [_kernel_table([], [], [], [], [], {})]).to_pandas()
 
-    def _scan(self, table: str, shards, where, columns: list) -> pa.Table:
+    def _scan(self, table: str, parts, where, columns: list) -> pa.Table:
         """``columns`` of ``table``'s rows that pass ``where`` in
-        ``shards`` (None: every shard), read with pyarrow in file order:
-        only those shards' files, only row groups whose statistics can
-        hold a match.  Types are those of the engine's Spark table."""
+        partitions ``parts`` (shards; term_stats's buckets; None: all),
+        read with pyarrow in file order: only those partitions' files,
+        only row groups whose statistics can hold a match.  Types are
+        those of the engine's Spark table."""
         fs, root = self._arrow_root
         listed = self._files(table)
-        files = [f for sh in sorted(listed if shards is None else shards)
-                 for f in listed.get(sh, ())]
+        files = [f for p in sorted(listed if parts is None else parts)
+                 for f in listed.get(p, ())]
         schema = self._const_cols(f"a_{table}", lambda: to_arrow_schema(
             getattr(self, table).schema))
+        col = _PART_COLS.get(table, "shard")
+        dirs = col and ds.partitioning(pa.schema([(col, pa.int32())]), flavor="hive")
         return ds.dataset(files, schema=schema, format="parquet", filesystem=fs,
-                          partitioning=_SHARD_DIRS, partition_base_dir=f"{root}/{table}",
+                          partitioning=dirs,
+                          partition_base_dir=table_path(root, self.manifest, table),
                           ).to_table(columns=columns, filter=where)
 
     def _files(self, table: str) -> dict:
-        """shard -> ``table``'s data files in its ``shard=N`` directory,
-        sorted, as paths on the pyarrow filesystem.  They are the files
-        Spark listed for the table when the engine opened
-        (``DataFrame.inputFiles``, a cached listing), fetched on the
-        first query that reads the table.  So both paths read the one
-        snapshot the distributed plan reads: a shard rewritten since the
-        engine opened fails loudly on either (its files are gone)
-        instead of scoring new postings against the engine's term
-        statistics."""
+        """partition -> ``table``'s data files in its ``shard=N`` (or
+        ``tb=N``) directory, sorted, as paths on the pyarrow filesystem;
+        doc_map's files under the key None.  They are the files Spark
+        listed for the table when the engine opened
+        (``DataFrame.inputFiles``, a cached listing; doc_map's when a
+        key lookup first opened it), fetched on the first query that
+        reads the table.  So both paths read the one snapshot the
+        distributed plan reads: a shard or bucket rewritten since then
+        fails loudly on either (its files are gone) instead of scoring
+        new postings against the engine's term statistics."""
         got = self._listings.get(table)
         if got is None:
-            _, root = self._arrow_root
+            base = table_path(self._arrow_root[1], self.manifest, table)
+            col = _PART_COLS.get(table, "shard")
             got = {}
             for uri in getattr(self, table).inputFiles():
                 d, name = map(unquote, uri.rsplit("/", 2)[1:])
-                got.setdefault(int(d[len("shard="):]), []).append(f"{root}/{table}/{d}/{name}")
+                path = f"{base}/{d + '/' if col else ''}{name}"
+                got.setdefault(col and int(d[len(col) + 1:]), []).append(path)
             for files in got.values():
                 files.sort()
             self._listings[table] = got
@@ -1221,6 +1271,12 @@ class SearchEngine:
                                         f"opened: {gone}")
             self._store_bytes[sh] = sum(i.size for i in infos)
         return sum(self._store_bytes[sh] for sh in shards)
+
+    @functools.cached_property
+    def doc_map(self) -> DataFrame:
+        """The (url, doc_id) table, opened on the first key lookup (its
+        schema given, so opening it runs no inference job)."""
+        return self.spark.read.schema("url string, doc_id long").parquet(self._doc_map_path)
 
     @functools.cached_property
     def _arrow_root(self):
@@ -1252,27 +1308,45 @@ class SearchEngine:
         lo = np.array([s.offset for s in specs])[q]
         rank = rows.groupby("qid").cumcount().to_numpy()
         hits = rows[(rank >= lo) & (rank < lo + np.array([s.k for s in specs])[q])]
-        shards = set(hits["shard"].tolist())
-        if self._fetch_bytes(shards) > _LOCAL_FETCH_BYTES:
+        docs = self._fetch_docs(set(hits["shard"].tolist()), hits["doc_id"].tolist())
+        if docs is None:
             return None
-        extra = self._extra_doc_cols()
-        docs = self._scan("doc_store", shards,
-                          ds.field("doc_id").isin(hits["doc_id"].tolist()),
-                          ["doc_id", "url", "text", "lang", *extra])
         at = pc.index_in(pa.array(hits["doc_id"].to_numpy()),
                          value_set=docs["doc_id"].combine_chunks())
         hits = hits[pc.is_valid(at).to_numpy(zero_copy_only=False)]
-        docs = docs.take(pc.drop_null(at))
-        cols = {"qid": pa.array(hits["qid"].to_numpy())} if qid else {}
-        cols.update(doc_id=docs["doc_id"], url=docs["url"],
-                    score=pa.array(hits["score"].to_numpy()), text=docs["text"],
-                    lang=docs["lang"], **{c: docs[c] for c in extra})
         schema = self._const_cols(f"s_hits_{qid}", lambda: StructType(
             ([StructField("qid", IntegerType())] if qid else [])
             + [self.doc_store.schema[c] for c in ("doc_id", "url")]
             + [StructField("score", DoubleType())]
-            + [self.doc_store.schema[c] for c in ("text", "lang", *extra)]))
-        return self.spark.createDataFrame(pa.table(cols), schema)
+            + [self.doc_store.schema[c] for c in ("text", "lang", *self._extra_doc_cols())]))
+        return self._doc_relation(docs.take(pc.drop_null(at)),
+                                  pa.array(hits["score"].to_numpy()), schema,
+                                  pa.array(hits["qid"].to_numpy()) if qid else None)
+
+    def _fetch_docs(self, shards: set, ids: list) -> pa.Table | None:
+        """The doc_store rows (doc_id, url, text, lang, extras) of doc
+        ``ids`` in ``shards``, read by (shard, doc_id) in the driver, in
+        file order.  None when pyarrow cannot open the index or those
+        shards' doc_store files hold more than ``_LOCAL_FETCH_BYTES``:
+        the caller's Spark plan fetches them on the executors."""
+        if self._arrow_root is None or self._fetch_bytes(shards) > _LOCAL_FETCH_BYTES:
+            return None
+        return self._scan("doc_store", shards, ds.field("doc_id").isin(ids),
+                          ["doc_id", "url", "text", "lang", *self._extra_doc_cols()])
+
+    def _doc_relation(self, docs: pa.Table, score, schema: StructType,
+                      qid=None) -> DataFrame:
+        """doc_store rows ``docs`` with their ``score`` (and ``qid``)
+        as a local relation of ``schema``: the materialized result's
+        columns, whose building and collecting run no Spark job."""
+        cols = {"qid": qid} if qid is not None else {}
+        cols.update(doc_id=docs["doc_id"], url=docs["url"], score=score,
+                    text=docs["text"], lang=docs["lang"],
+                    **{c: docs[c] for c in self._extra_doc_cols()})
+        t = pa.table(cols)
+        # a scan that read no file gives columns of no chunk, which
+        # createDataFrame fails to convert for some column types
+        return self.spark.createDataFrame(t if t.num_rows else t.schema.empty_table(), schema)
 
     def _top(self, spec: QuerySpec, materialize: bool) -> DataFrame:
         """Finish ONE compiled query: the global order of its mode, then
@@ -1388,61 +1462,46 @@ class SearchEngine:
         """Exact unique-key lookup (Q10; FindDocumentByKey,
         database.go:561-583): url → the one document, or empty.
 
-        KV-get shape, not a join: resolve doc_id from doc_map (driver-side
-        point filter — parquet min/max row-group pruning applies since
-        doc_map files are written in url-ranged groups), then read ONE
-        doc_store shard partition pruned by both shard and doc_id.
-        Returns the materialized result schema with score 0.0 (the
-        reference path carries no score)."""
-        spark = self.spark
-        dps = int(self.manifest["docs_per_shard"])
-        hit = (
-            spark.read.parquet(self._doc_map_path)
-            .where(F.col("url") == url).limit(1).collect()
-        )
-        if not hit:
-            return self.doc_store.where(F.lit(False)).select(
-                "doc_id", "url", F.lit(0.0).alias("score"), "text", "lang",
-                *self._extra_doc_cols()
-            )
-        doc_id = int(hit[0]["doc_id"])
-        shard = (doc_id - 1) // dps
-        return (
-            self.doc_store
-            .where((F.col("shard") == shard) & (F.col("doc_id") == doc_id))
-            .select("doc_id", "url", F.lit(0.0).alias("score"), "text", "lang",
-                    *self._extra_doc_cols())
-        )
+        KV-get shape, not a join: two reads by key, as the reference's
+        two gets.  The driver reads doc_map's rows with ``url ==`` (row
+        groups pruned by their url statistics), then the document's
+        ONE doc_store shard by doc_id (``get_docs``), so a lookup runs
+        no Spark job.  On an index pyarrow cannot open, the doc_map
+        point filter is one Spark job and the doc_store read a
+        shard-pruned plan.  Returns the materialized result schema
+        with score 0.0 (the reference path carries no score)."""
+        return self._docs_by_id(self._key_ids(url))
+
+    def _key_ids(self, url: str) -> list:
+        """doc_map's doc id for ``url``: [id], or [] when it is absent."""
+        if self._arrow_root is None:
+            rows = self.doc_map.where(F.col("url") == url).limit(1).collect()
+            return [int(r["doc_id"]) for r in rows]
+        return self._scan("doc_map", None, ds.field("url") == url,
+                          ["doc_id"])["doc_id"].to_pylist()[:1]
 
     def get_doc(self, doc_id: int | str) -> DataFrame:
         """Fetch one document by docID — the reference's
         GET /indexes/{index}/_doc/{id} (webapi/restapi/handlers.go:24-56),
         where ids are rendered `d` + lowercase hex (entity.go:26-33);
         both the int and the `d<hex>` string form are accepted.  One
-        shard-pruned doc_store read, no analysis, score 0."""
-        if isinstance(doc_id, str):
-            if not doc_id.startswith("d"):
-                raise ValueError(f"document id {doc_id!r} must be 'd' + hex")
-            doc_id = int(doc_id[1:], 16)
-        doc_id = int(doc_id)
-        dps = int(self.manifest["docs_per_shard"])
-        shard = (doc_id - 1) // dps
-        return (
-            self.doc_store
-            .where((F.col("shard") == shard) & (F.col("doc_id") == doc_id))
-            .select("doc_id", "url", F.lit(0.0).alias("score"), "text", "lang",
-                    *self._extra_doc_cols())
-        )
+        read of the id's doc_store shard, as ``get_docs``; no analysis,
+        score 0."""
+        return self.get_docs([doc_id])
 
     def get_docs(self, doc_ids: list) -> DataFrame:
         """Batch fetch by docID — ES ``_mget`` (flagged extension; the
         reference serves one GET ``_doc/{id}`` per request,
-        handlers.go:16-56).  N ids resolve in ONE shard-pruned doc_store
-        read: ids map to shards arithmetically (dense per-shard
-        allocation), so the scan prunes to exactly the touched shard
-        partitions and the isin filter pushes into parquet — never one
-        job per id.  Accepts int or ``d<hex>`` forms; missing ids simply
-        produce no row (the HTTP layer restores request order and emits
+        handlers.go:16-56).  N ids resolve in ONE read: ids map to
+        shards arithmetically (dense per-shard allocation), so only the
+        touched shards' doc_store files are read, with ``doc_id IN``
+        pushed into them — never one job per id.  The driver reads them
+        (``_fetch_docs``) and returns a local relation, with no Spark
+        job, unless pyarrow cannot open the index or those files hold
+        more than ``_LOCAL_FETCH_BYTES``; then it is a shard-pruned
+        doc_store scan.  Accepts int or ``d<hex>`` forms; missing ids
+        simply produce no row, and rows come in no particular order
+        (the HTTP layer restores request order and emits
         found=false)."""
         ids = []
         for d in doc_ids:
@@ -1451,18 +1510,31 @@ class SearchEngine:
                     raise ValueError(f"document id {d!r} must be 'd' + hex")
                 d = int(d[1:], 16)
             ids.append(int(d))
+        return self._docs_by_id(ids)
+
+    def _docs_by_id(self, ids: list) -> DataFrame:
+        """The doc_store rows of doc ``ids`` in the materialized result
+        schema with score 0.0 (``get_docs``)."""
         if not ids:
-            return self.doc_store.where(F.lit(False)).select(
-                "doc_id", "url", F.lit(0.0).alias("score"), "text", "lang",
-                *self._extra_doc_cols())
+            return self._const_cols("no_docs", lambda: self._doc_rows(F.lit(False)))
+        shards = self._shards_of(ids)
+        docs = self._fetch_docs(shards, ids)
+        if docs is None:
+            return self._doc_rows(F.col("shard").isin(sorted(shards)) & F.col("doc_id").isin(ids))
+        return self._doc_relation(docs, pa.array(np.zeros(docs.num_rows)),
+                                  self._docs_by_id([]).schema)
+
+    def _shards_of(self, ids: list) -> set:
+        """The shards doc ``ids`` are allocated to (dense per shard)."""
         dps = int(self.manifest["docs_per_shard"])
-        shards = sorted({(i - 1) // dps for i in ids})
-        return (
-            self.doc_store
-            .where(F.col("shard").isin(shards) & F.col("doc_id").isin(ids))
-            .select("doc_id", "url", F.lit(0.0).alias("score"), "text", "lang",
-                    *self._extra_doc_cols())
-        )
+        return {(i - 1) // dps for i in ids}
+
+    def _doc_rows(self, pred) -> DataFrame:
+        """doc_store's rows that pass ``pred`` with score 0.0, as a
+        Spark plan."""
+        return self.doc_store.where(pred).select(
+            "doc_id", "url", F.lit(0.0).alias("score"), "text", "lang",
+            *self._extra_doc_cols())
 
     def delete_by_query(self, search_word: str, tags: list | None = None,
                         lang: str = "", exclude_words: str = "",
@@ -1502,34 +1574,48 @@ class SearchEngine:
         wildcard path (int.go is exact-term conjunctive only), so this is
         a flagged extension using the same posting machinery.
 
-        Expansion happens against the TERM DICTIONARY, never the corpus:
-        term_stats holds one row per distinct term (tiny vs postings), so
-        the prefix scan is a narrow filter over it, capped at
-        ``max_expansions`` terms by (df DESC, term ASC) — deterministic,
-        preferring the terms that match the most documents, like ES's
-        ``top_terms_N`` rewrite.  The expanded set then runs through the
-        disjunctive maxscore kernel exactly as ``operator='or'`` (each
-        matched doc scored by BM25 over the expanded terms it contains;
-        filter tags stay conjunctive).
+        Expansion happens against the TERM DICTIONARY, never the corpus,
+        capped at ``max_expansions`` terms by (df DESC, term ASC) —
+        deterministic, preferring the terms that match the most
+        documents, like ES's ``top_terms_N`` rewrite.  term_stats is
+        bucketed by term range, so the terms starting with the prefix
+        (exactly ``[prefix, _prefix_end(prefix))``) live in known
+        buckets: the driver reads only those buckets' files, with that
+        range pushed into their row-group statistics, and runs no Spark
+        job (on an index pyarrow cannot open, one Spark job filters
+        term_stats with ``startswith``).  The expanded set then runs
+        through the disjunctive maxscore kernel exactly as
+        ``operator='or'`` (each matched doc scored by BM25 over the
+        expanded terms it contains; filter tags stay conjunctive).
 
         Following the Lucene convention, the prefix is lowercased but NOT
         stemmed/analyzed (a stemmed prefix would miss surface forms the
         index never stemmed — multi-term queries skip analysis).  The cap
         trades recall on pathological prefixes (single letters over a web
         vocabulary) for a bounded driver expansion list and a bounded
-        kernel fan-in; at 100 TB the dictionary scan stays a metadata-
-        sized job and no step depends on corpus row count.
+        kernel fan-in; no step depends on corpus row count.
         """
         spec = QuerySpec({}, list(tags or []), op="or", k=k, offset=offset)
         prefix = (prefix or "").strip().lower().rstrip("*")
         if not prefix:
             return self._top(spec, materialize)
-        rows = (
-            self.term_stats.where(F.col("term").startswith(prefix))
-            .orderBy(F.col("df").desc(), F.col("term").asc())
-            .limit(max_expansions)
-            .collect()
-        )
+        if self._arrow_root is None:
+            rows = (
+                self.term_stats.where(F.col("term").startswith(prefix))
+                .orderBy(F.col("df").desc(), F.col("term").asc())
+                .limit(max_expansions)
+                .collect()
+            )
+        else:
+            end = _prefix_end(prefix)
+            where = ds.field("term") >= prefix
+            if end is not None:
+                where &= ds.field("term") < end
+            rows = self._scan(
+                "term_stats", _prefix_buckets(self.manifest["term_bounds"], prefix, end),
+                where, list(_TERM_COLS),
+            ).sort_by([("df", "descending"), ("term", "ascending")]).slice(
+                0, max_expansions).to_pylist()
         return self._top_expanded(spec, rows, materialize)
 
     def _top_expanded(self, spec: QuerySpec, rows: list,
@@ -1562,8 +1648,10 @@ class SearchEngine:
         reproduce scores bit-exactly; filter tags stay conjunctive).
 
         Following the Lucene convention for multi-term queries the word
-        is lowercased but NOT stemmed.  At 100 TB the dictionary scan is
-        metadata-sized and the fan-in stays bounded by the cap.
+        is lowercased but NOT stemmed.  The expansion is one Spark job
+        that scans every term_stats bucket (an edit can change any
+        character, so no term range bounds it); the fan-in stays
+        bounded by the cap.
         """
         spec = QuerySpec({}, list(tags or []), op="or", k=k, offset=offset)
         word = (word or "").strip().lower()
@@ -1594,9 +1682,16 @@ class SearchEngine:
         Spark job (a range filter still costs its one); otherwise it is
         a map-side-combinable count aggregate per shard.
         ``exclude_words``/``exclude_tags`` apply ES ``bool.must_not``
-        exclusion, ``ranges`` the ES range filter, before counting."""
+        exclusion, ``ranges`` the ES range filter, before counting.  A
+        ``unique_key:`` count is the number of rows the key lookup read
+        in the driver (no Spark job)."""
         if search_word and search_word.startswith("unique_key:"):
-            return self.search(search_word).count()
+            # the lookup's rows are known in the driver when it read them
+            ids = self._key_ids(search_word[len("unique_key:"):])
+            if not ids:
+                return 0
+            docs = self._fetch_docs(self._shards_of(ids), ids)
+            return docs.num_rows if docs is not None else self._docs_by_id(ids).count()
         res = self._compile([self._spec(search_word, tags, lang, "parity", None,
                                         exclude_words=exclude_words,
                                         exclude_tags=exclude_tags, ranges=ranges)])
@@ -1884,8 +1979,6 @@ class SearchEngine:
         already loaded and byte totals are one LIST per table
         (fsio.dir_size); no Spark job, no row scan."""
         from watertower_spark.functions import fsio
-
-        from .index_build import table_path
 
         m = self.manifest
         tables: dict = {}
