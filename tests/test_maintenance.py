@@ -963,6 +963,79 @@ def test_appended_terms_outside_the_sampled_range(spark, base_index):
             assert [r["url"] for r in got] == [url], (by_key, prefix)
 
 
+def _term_buckets(spark, idx):
+    """term -> tb of the published term_stats, and the manifest."""
+    from watertower_spark.operators.index_build import table_path
+
+    m = load_manifest(idx)
+    ts = spark.read.parquet(table_path(idx, m, "term_stats"))
+    return {r["term"]: r["tb"] for r in ts.select("term", "tb").collect()}, m
+
+
+def test_append_to_an_empty_index_spreads_its_terms(spark, tmp_index_root):
+    """An index built from no documents samples no term_bounds; its
+    first append re-samples them from the terms it brings, so they
+    spread over the buckets instead of all landing in bucket 0."""
+    import bisect
+
+    idx = f"{tmp_index_root}/maint_empty_append"
+    shutil.rmtree(idx, ignore_errors=True)
+    docs0 = spark.createDataFrame([], corpus.DOC_SCHEMA)
+    tags0 = spark.createDataFrame([], corpus.TAG_SCHEMA)
+    assert build_index(docs0, tags0, idx, docs_per_shard=3)["term_bounds"] == []
+    docs, tags = _mkdocs(spark, corpus.fixture_rows(("searchdata",)))
+    append_documents(spark, idx, docs, tags)
+    tb, m = _term_buckets(spark, idx)
+    assert len(set(tb.values())) > 1
+    assert all(b == bisect.bisect_right(m["term_bounds"], t) for t, b in tb.items())
+    assert _ts_published(spark, idx) == _ts_recomputed(spark, idx)
+    term = min(tb)
+    got = SearchEngine(spark, idx).search(term, None, "en", mode="bm25", k=3).collect()
+    assert got
+
+
+def test_skewed_append_resamples_the_term_bounds(spark, base_index, tmp_index_root):
+    """Terms that sort past the last sampled boundary (another script)
+    all land in the last bucket; once it outgrows its share of the
+    table the mutation re-samples the boundaries from the whole
+    vocabulary, as a fresh build over the same documents samples them,
+    and a fresh engine reads the new layout by key and through Spark."""
+    import bisect
+    import random
+
+    idx, rows = base_index
+    _, m0 = _term_buckets(spark, idx)
+    rng = random.Random(7)
+    wide = set()
+    while len(wide) < 4096:  # fullwidth "ｚ" + 5 fullwidth letters
+        wide.add("ｚ" + "".join(chr(0xFF41 + rng.randrange(26)) for _ in range(5)))
+    words = " ".join(sorted(wide))
+    new = [dict(rows[5], url="new://wide", text="Wide\n\n" + words)]
+    docs2, tags2 = _mkdocs(spark, new)
+    m = append_documents(spark, idx, docs2, tags2)
+    tb, _ = _term_buckets(spark, idx)
+    assert wide <= set(tb)
+    wide = sorted(wide)
+    assert all(bisect.bisect_right(m0["term_bounds"], t) == len(m0["term_bounds"])
+               for t in wide)  # all past the build's last boundary
+    assert m["term_bounds"] != m0["term_bounds"]
+    assert len({tb[t] for t in wide}) > 1
+    assert all(b == bisect.bisect_right(m["term_bounds"], t) for t, b in tb.items())
+    assert _ts_published(spark, idx) == _ts_recomputed(spark, idx)
+    ref = f"{tmp_index_root}/maint_skew_ref"
+    shutil.rmtree(ref, ignore_errors=True)
+    docs_f, tags_f = _mkdocs(spark, rows[:5] + new)
+    assert build_index(docs_f, tags_f, ref, docs_per_shard=3)["term_bounds"] == m["term_bounds"]
+    for by_key in (True, False):
+        eng = SearchEngine(spark, idx)
+        if not by_key:
+            eng.__dict__["_arrow_root"] = None
+        got = eng.search(wide[123], None, "en", mode="bm25", k=5).collect()
+        assert [r["url"] for r in got] == ["new://wide"], by_key
+        got = eng.search_prefix("ｚ", k=5).collect()
+        assert [r["url"] for r in got] == ["new://wide"], by_key
+
+
 def test_resume_samples_the_builds_term_bounds(spark, base_index):
     """A build interrupted before its commit has no term_bounds in its
     manifest; resume samples them from the same vocabulary with the

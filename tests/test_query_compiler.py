@@ -347,6 +347,35 @@ def test_reads_by_key_run_no_spark_job(spark, qc_index):
         assert (got, n_jobs) == (n, 0) and ref.count("unique_key:" + key) == n, key
 
 
+def test_large_reads_by_key_take_spark_jobs(spark, qc_index, monkeypatch):
+    """A read by key whose files hold more than ``_LOCAL_FETCH_BYTES``
+    (a term_stats bucket, doc_map or a doc_store shard at crawl scale)
+    runs the Spark plan instead, with the rows and schema of the
+    driver's read."""
+    eng = SearchEngine(spark, qc_index)
+    want = {name: build(eng) for name, build in BY_KEY.items()}
+    monkeypatch.setattr(S, "_LOCAL_FETCH_BYTES", 0)
+    eng = SearchEngine(spark, qc_index)
+    for name, build in BY_KEY.items():
+        df, n_built = _jobs(spark, lambda: build(eng))
+        got, n_collected = _jobs(spark, lambda: _exact(df))
+        assert n_built + n_collected > 0, name
+        assert sorted(got) == sorted(_exact(want[name])), name
+        assert df.schema == want[name].schema, name
+
+
+def test_doc_ids_past_the_last_shard_read_nothing(spark, qc_index):
+    """Doc ids come from clients (``_mget``): ids far past the last
+    shard open no file and leave no per-shard state in the engine."""
+    eng = SearchEngine(spark, qc_index)
+    shards = set(eng._files("doc_store"))
+    far = [7] + [10 ** 6 * i for i in range(1, 200)] + [2 ** 62]
+    df, n_jobs = _jobs(spark, lambda: eng.get_docs(far))
+    assert n_jobs == 0 and [r["doc_id"] for r in df.collect()] == [7]
+    assert set(eng._part_bytes["doc_store"]) <= shards
+    assert _exact(df) == _exact(_spark_reads(spark, qc_index).get_docs(far))
+
+
 def test_prefix_reads_only_its_buckets(spark, eng, monkeypatch):
     """A prefix expansion hands ``_scan`` only the term_stats buckets
     from the prefix's own to the last one holding one of its terms."""

@@ -296,34 +296,29 @@ def term_bucket_col(spark, bounds: list):
     return range_col(spark, "term", bounds).alias("tb")
 
 
-def write_term_stats(postings: DataFrame, path: str,
-                     bounds: list | None = None) -> list:
-    """Aggregate ``postings`` into the term_stats table at ``path``:
-    (term, df, cf, shards), partitioned by term range ``tb``, one
-    term-sorted file per bucket dir.  ``bounds`` None samples the
-    boundaries from the vocabulary with :func:`bottom_k`, so the same
-    postings always give the same buckets (resume reproduces the
-    build).  Returns the boundaries written, for the manifest."""
-    spark = postings.sparkSession
-    ts = term_contrib(postings)
-    if bounds is None:
-        ts = ts.persist()
-        sample = [r[0] for r in bottom_k(ts, "term", _TERM_SAMPLE).collect()]
-        bounds = range_bounds(sample, TS_BUCKETS)
-    try:
-        (
-            ts.select("term", "df", "cf", "shards", term_bucket_col(spark, bounds))
-            .repartition(TS_BUCKETS, "tb")
-            # term-sorted within each bucket file: parquet row-group
-            # min/max statistics prune a term or prefix read inside
-            # its bucket
-            .sortWithinPartitions("tb", "term")
-            .write.mode("overwrite").partitionBy("tb")
-            .parquet(path)
-        )
-    finally:
-        ts.unpersist()
-    return bounds
+def sample_term_bounds(terms: DataFrame) -> list:
+    """term_stats's range boundaries for the distinct values of
+    ``terms``'s ``term`` column: :func:`range_bounds` over their
+    :func:`bottom_k` sample, so the same vocabulary always gives the
+    same boundaries (resume reproduces the build).  One Spark job."""
+    sample = bottom_k(terms.select("term").distinct(), "term", _TERM_SAMPLE)
+    return range_bounds([r[0] for r in sample.collect()], TS_BUCKETS)
+
+
+def write_term_stats(ts: DataFrame, path: str, bounds: list) -> None:
+    """Write term_stats rows ``ts`` (term, df, cf, shards) at ``path``,
+    partitioned by their term range ``tb`` under ``bounds``, one
+    term-sorted file per bucket dir.  One Spark job."""
+    (
+        ts.select("term", "df", "cf", "shards", term_bucket_col(ts.sparkSession, bounds))
+        .repartition(TS_BUCKETS, "tb")
+        # term-sorted within each bucket file: parquet row-group
+        # min/max statistics prune a term or prefix read inside
+        # its bucket
+        .sortWithinPartitions("tb", "term")
+        .write.mode("overwrite").partitionBy("tb")
+        .parquet(path)
+    )
 
 
 # ------------------------------------------------------------ tags
@@ -718,9 +713,12 @@ def _build_index(docs, tags, index_dir, default_lang, analyzer_lang,
         # candidate shards from this table (memoized driver-side)
         # instead of re-aggregating per query.  Bucketed by term range
         # so mutations rewrite only touched buckets (maintenance) and
-        # the engine reads a term's or a prefix's buckets by key; the
-        # sampled boundaries go into the manifest.
-        bounds_box["b"] = write_term_stats(seg.postings, f"{index_dir}/term_stats")
+        # the engine reads a term's or a prefix's buckets by key.  The
+        # boundaries are sampled before wave 2 starts, so the write is
+        # one job that does not queue behind the postings write a
+        # second time; they go into the manifest.
+        write_term_stats(term_contrib(seg.postings), f"{index_dir}/term_stats",
+                         bounds_box["b"])
 
     def w_doc_len():
         seg.write(index_dir, "doc_len")
@@ -759,6 +757,7 @@ def _build_index(docs, tags, index_dir, default_lang, analyzer_lang,
         # moment it lands, every wave-2 job can run off the cache,
         # overlapping the doc_map/doc_store write tails
         f_stats.result()
+        f_bounds = pool.submit(sample_term_bounds, seg.postings)
         # avgdl = average analyzed document length — the exact quantity
         # the BM25 scorer divides by.  One tiny agg over the cached stat
         # rows; no extra pass over the corpus.  Σwc goes into the
@@ -767,6 +766,7 @@ def _build_index(docs, tags, index_dir, default_lang, analyzer_lang,
         sum_wc = float(seg.doc_stats.agg(F.sum("wc")).collect()[0][0] or 0.0)
         avgdl = sum_wc / doc_count if doc_count else 0.0
         skeleton = make_skeleton(sum_wc, avgdl)
+        bounds_box["b"] = f_bounds.result()
         wave2 = [pool.submit(w) for w in (w_postings, w_tags, w_term_stats,
                                           w_doc_len, w_metrics)]
         f_map.result()

@@ -57,8 +57,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .index_build import (
     PARQUET_CODEC,
+    TS_BUCKETS,
     assign_doc_ids,
     load_current_manifest,
+    sample_term_bounds,
     segment_stage,
     session_conf,
     shard_col,
@@ -711,6 +713,30 @@ def _read_ts_buckets(spark, ts_dir: str, buckets) -> "DataFrame | None":
     return spark.read.option("basePath", ts_dir).parquet(*existing)
 
 
+# a mutation re-samples term_stats's boundaries when a bucket it wrote
+# holds more than this many times its even share (1/TS_BUCKETS) of the
+# table's bytes: terms that sort outside the sampled ranges (an index
+# built from no documents, an append in another script) pile into one
+# bucket, which every later mutation and term read would open whole.
+# After a re-sample (64 sampled terms per bucket) each bucket holds
+# about its share again, so the whole-table rewrite this costs recurs
+# only once the vocabulary has grown unevenly again
+_TS_SKEW = 4
+
+
+def _resample_term_stats(spark, index_dir: str, manifest: dict, ts) -> str:
+    """Rewrite the whole term_stats table ``ts`` (term, df, cf, shards)
+    as a new table version under boundaries sampled from its own terms,
+    which go into ``manifest``.  Returns the superseded dir."""
+    ts = ts.persist()
+    try:
+        bounds = manifest["term_bounds"] = sample_term_bounds(ts)
+        return _publish_table(index_dir, manifest, "term_stats",
+                              lambda path: write_term_stats(ts, path, bounds))
+    finally:
+        ts.unpersist()
+
+
 def _apply_stats_delta(spark, index_dir: str, manifest: dict,
                        affected_shards: list,
                        old_term_contrib=None) -> list:
@@ -722,8 +748,10 @@ def _apply_stats_delta(spark, index_dir: str, manifest: dict,
     mutation is a heavyweight job at a 10^9-term web vocabulary; now a
     one-shard append touches at most |changed terms| of the TS_BUCKETS
     term-range buckets and leaves every other bucket's files
-    byte-identical).  Buckets come from the manifest's ``term_bounds``,
-    never re-sampled: a new term lands in the range it sorts into.
+    byte-identical).  Buckets come from the manifest's ``term_bounds``:
+    a new term lands in the range it sorts into.  Only when a written
+    bucket has grown past ``_TS_SKEW`` times its share of the table are
+    the boundaries re-sampled and the whole table rewritten.
 
     ``old_term_contrib`` is the affected shards' per-term contribution
     MATERIALIZED BEFORE the rewrite (None for pure appends, whose
@@ -835,6 +863,10 @@ def _apply_stats_delta(spark, index_dir: str, manifest: dict,
         for b in buckets:
             if b not in still:
                 fsio.delete_dir(f"{ts_dir}/tb={int(b)}")
+        grown = max((fsio.dir_size(f"{ts_dir}/tb={int(b)}") for b in still), default=0)
+        if grown * TS_BUCKETS > _TS_SKEW * fsio.dir_size(ts_dir):
+            gc.append(_resample_term_stats(spark, index_dir, manifest,
+                                           spark.read.parquet(ts_dir).drop("tb")))
 
     # ---- shard metrics: patch ONLY affected entries ----
     new_rows = _shard_contrib_rows(new_postings) if new_postings is not None else []
@@ -897,16 +929,14 @@ def _refresh_shard_metrics(spark, index_dir, manifest) -> list:
     # both aggregates touch only NARROW columns (term/shard/df/cf/bytes)
     # — parquet column pruning means the posting blobs are never read.
     # The manifest's term_bounds are kept; a build interrupted before
-    # its commit has none, and write_term_stats samples the ones the
-    # build would have.  Returns superseded table dirs for the caller
-    # to delete AFTER the manifest commit.
+    # its commit has none, and they are sampled as the build would have
+    # sampled them.  Returns superseded table dirs for the caller to
+    # delete AFTER the manifest commit.
     postings = spark.read.parquet(f"{index_dir}/postings")
-
-    def write(path):
-        manifest["term_bounds"] = write_term_stats(
-            postings, path, manifest.get("term_bounds"))
-
-    old = _publish_table(index_dir, manifest, "term_stats", write)
+    if manifest.get("term_bounds") is None:
+        manifest["term_bounds"] = sample_term_bounds(postings)
+    old = _publish_table(index_dir, manifest, "term_stats", lambda path: write_term_stats(
+        term_contrib(postings), path, manifest["term_bounds"]))
     from .index_build import SHARD_METRICS_INLINE_MAX
 
     mdf = postings.groupBy("shard").agg(
