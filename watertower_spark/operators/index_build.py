@@ -714,9 +714,11 @@ def _build_index(docs, tags, index_dir, default_lang, analyzer_lang,
         # instead of re-aggregating per query.  Bucketed by term range
         # so mutations rewrite only touched buckets (maintenance) and
         # the engine reads a term's or a prefix's buckets by key.  The
-        # boundaries are sampled before wave 2 starts, so the write is
-        # one job that does not queue behind the postings write a
-        # second time; they go into the manifest.
+        # boundary sample reads the distinct terms of the cached
+        # postings, with no persisted aggregate; this writer is
+        # submitted first in wave 2 so the sample queues ahead of the
+        # postings write.  The boundaries go into the manifest.
+        bounds_box["b"] = sample_term_bounds(seg.postings)
         write_term_stats(term_contrib(seg.postings), f"{index_dir}/term_stats",
                          bounds_box["b"])
 
@@ -757,7 +759,6 @@ def _build_index(docs, tags, index_dir, default_lang, analyzer_lang,
         # moment it lands, every wave-2 job can run off the cache,
         # overlapping the doc_map/doc_store write tails
         f_stats.result()
-        f_bounds = pool.submit(sample_term_bounds, seg.postings)
         # avgdl = average analyzed document length — the exact quantity
         # the BM25 scorer divides by.  One tiny agg over the cached stat
         # rows; no extra pass over the corpus.  Σwc goes into the
@@ -766,8 +767,7 @@ def _build_index(docs, tags, index_dir, default_lang, analyzer_lang,
         sum_wc = float(seg.doc_stats.agg(F.sum("wc")).collect()[0][0] or 0.0)
         avgdl = sum_wc / doc_count if doc_count else 0.0
         skeleton = make_skeleton(sum_wc, avgdl)
-        bounds_box["b"] = f_bounds.result()
-        wave2 = [pool.submit(w) for w in (w_postings, w_tags, w_term_stats,
+        wave2 = [pool.submit(w) for w in (w_term_stats, w_postings, w_tags,
                                           w_doc_len, w_metrics)]
         f_map.result()
         f_store.result()
